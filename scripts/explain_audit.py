@@ -657,6 +657,25 @@ def main() -> None:
     sections.append(("hyperball round — edges ⋈ counters + premerge + "
                      "merge_partials", p, checks))
 
+    # 36. rolling merge over a stored per-(lang, day) sketch table: one
+    # shuffle of blobs into one Python fold pass — no explode of contributions
+    # and no broadcast join against the anchors
+    from sketchlib.spark.aggregate import rolling_merge
+
+    daily = sketch_agg(pages.withColumn("d", F.dayofyear("day")), "url",
+                       ["lang", "d"], spec).localCheckpoint(eager=True)
+    p = plan_of(rolling_merge(daily, "d", 3, spec, ["lang"]))
+    checks = [("exactly one Exchange (repartition by the group columns)",
+               n_shuffles(p) == 1),
+              ("no Generate (contributions are not exploded)",
+               "Generate" not in p),
+              ("no BroadcastHashJoin (no anchor semi-join)",
+               "BroadcastHashJoin" not in p),
+              ("exactly one MapInArrow (the window fold)",
+               len(re.findall(r"\(\d+\) MapInArrow\b", p)) == 1)]
+    sections.append(("rolling_merge(daily[lang, d], d, window=3, [lang])",
+                     p, checks))
+
     out = ["# BENCH/PLANS — physical-plan audit",
            "",
            "Generated by `python scripts/explain_audit.py`. Each section is "

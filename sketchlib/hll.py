@@ -478,120 +478,291 @@ def hll_from_values(values, p: int = 14, hash_name: str = "murmur3",
     return sketch
 
 
-def fold_blobs(blobs) -> bytes:
-    """Fold-merge a list of serialized sketches straight at the wire level —
-    bit-identical to sequentially ``from_bytes`` + ``merge`` + ``to_bytes``
-    (property-pinned in tests/test_hll_core.py), but with no sketch objects
-    and no per-blob branch cascade: headers are struct-peeked, payloads go
-    through ``np.frombuffer``, registers fold with one vectorized max per
-    blob.  This is the grouped-merge hot path (merge_blobs_udf): iterative
-    operators like HyperBall fold O(|E|) blobs per round, where the object
-    path's per-blob constant dominated the round wall.
+
+
+# -- batch wire kernel ---------------------------------------------------------
+
+#: fixed v3.1 blob header: u16 major, u16 minor, i32 bitsPerIndex, u8 flags,
+#: i32 payload count (CardinalityEstimatorSerializer.cs:125-165)
+_HEADER = np.dtype([("major", "<u2"), ("minor", "<u2"), ("p", "<i4"),
+                    ("flags", "u1"), ("n", "<i4")])
+_HEADER_BYTES = _HEADER.itemsize
+_ENTRY = np.dtype([("idx", "<u2"), ("rank", "u1")])  # one sparse register
+_DIRECT, _SPARSE, _DENSE = 0, 1, 2
+_PAYLOAD_ITEM = np.array([8, 3, 1], dtype=np.int64)  # bytes per count, by kind
+#: register-matrix bytes per fold chunk: bounds worker memory when thousands
+#: of segments leave direct mode in one call
+_REGISTER_BUDGET = 1 << 24
+
+
+def concat_ranges(starts, lengths) -> np.ndarray:
+    """Concatenated ``arange(s, s + n)`` for every (s, n) pair — the gather
+    index of many variable-length slices, with no per-slice Python."""
+    starts = np.asarray(starts, dtype=np.int64)
+    lengths = np.broadcast_to(np.asarray(lengths, dtype=np.int64), starts.shape)
+    shift = starts - (np.cumsum(lengths) - lengths)
+    return np.arange(int(lengths.sum()), dtype=np.int64) + np.repeat(shift, lengths)
+
+
+def _sparse_max(p):
+    """Sparse-representation bound per precision (CardinalityEstimator.cs:290)."""
+    return np.maximum(0, np.left_shift(1, p) // 15 - 10)
+
+
+def _peek(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """Vectorized header parse of the blobs ``buf[starts:starts + lens]``.
+
+    Returns ``(p, kind, n, ok, adds)`` per blob. ``ok`` marks a v3.>=1 blob
+    that passes every check :meth:`HllSketch.from_bytes` makes short of the
+    sparse index bound (which needs the payload): header and payload
+    length, 4 <= p <= 16, and the direct/sparse/dense count. The fields of
+    a blob that is not ``ok`` are meaningless."""
+    if buf.shape[0] == 0:
+        buf = np.zeros(1, dtype=np.uint8)
+    last = buf.shape[0] - 1
+    pos = np.minimum(starts[:, None] + np.arange(_HEADER_BYTES), last)
+    h = buf[pos].view(_HEADER)[:, 0]
+    p = h["p"].astype(np.int64)
+    n = h["n"].astype(np.int64)
+    kind = np.where(h["flags"] & 1, _DIRECT,
+                    np.where(h["flags"] & 2, _SPARSE, _DENSE))
+    m = np.left_shift(1, np.clip(p, 4, 16))
+    ok = ((lens >= _HEADER_BYTES) & (h["major"] == WIRE_MAJOR)
+          & (h["minor"] >= 1) & (p >= 4) & (p <= 16))
+    ok &= np.where(kind == _DIRECT, (n >= 0) & (n <= DIRECT_COUNTER_MAX_ELEMENTS),
+                   np.where(kind == _SPARSE, (n >= 0) & (n <= m), n == m))
+    tail = _HEADER_BYTES + np.where(ok, n * _PAYLOAD_ITEM[kind], 0)
+    ok &= lens >= tail + 8
+    pos = np.minimum((starts + tail)[:, None] + np.arange(8), last)
+    adds = buf[pos].view("<u8")[:, 0]
+    return p, kind, n, ok, adds
+
+
+def _run_heads(*keys: np.ndarray) -> np.ndarray:
+    """Mask of the first element of every run of equal key tuples."""
+    heads = np.zeros(keys[0].shape[0], dtype=bool)
+    heads[:1] = True
+    for k in keys:
+        heads[1:] |= k[1:] != k[:-1]
+    return heads
+
+
+def _emit(p, flags, n, payload: np.ndarray, payload_lens, adds) -> list[bytes]:
+    """Serialize many v3.1 blobs at once from per-blob header fields,
+    count_additions and their payloads concatenated in blob order."""
+    k = adds.shape[0]
+    if k == 0:
+        return []
+    sizes = _HEADER_BYTES + np.broadcast_to(payload_lens, (k,)) + 8
+    ends = np.cumsum(sizes)
+    starts = ends - sizes
+    hdr = np.empty(k, dtype=_HEADER)
+    hdr["major"], hdr["minor"] = WIRE_MAJOR, WIRE_MINOR
+    hdr["p"], hdr["flags"], hdr["n"] = p, flags, n
+    out = np.empty(int(ends[-1]), dtype=np.uint8)
+    out[concat_ranges(starts, _HEADER_BYTES)] = hdr.view(np.uint8)
+    out[concat_ranges(starts + _HEADER_BYTES, payload_lens)] = payload
+    out[concat_ranges(ends - 8, 8)] = adds.astype("<u8").view(np.uint8)
+    raw = out.tobytes()
+    return [raw[a:b] for a, b in zip(starts.tolist(), ends.tolist())]
+
+
+def _register_chunks(buf, starts, kind, n, ref_row, sparse_entries, p: int,
+                     n_rows: int):
+    """Fold the blobs of register-path segments into (rows x m) register
+    matrices, at most ``_REGISTER_BUDGET`` bytes at a time. ``ref_row`` maps
+    each blob reference to its segment's row (-1: not folded here); refs
+    are in segment order, so every per-ref and per-entry array below is
+    sorted by row and a chunk is a ``searchsorted`` slice of it."""
+    m = 1 << p
+    bits = 64 - p
+    cap = max(1, _REGISTER_BUDGET // m)
+    d = np.flatnonzero((ref_row >= 0) & (kind == _DIRECT))
+    hashes = buf[concat_ranges(starts[d] + _HEADER_BYTES, 8 * n[d])].view("<u8")
+    h_row = np.repeat(ref_row[d], n[d])
+    e_ref, e_idx, e_rank = sparse_entries
+    live = ref_row[e_ref] >= 0
+    e_row, e_idx, e_rank = ref_row[e_ref[live]], e_idx[live], e_rank[live]
+    dn = np.flatnonzero((ref_row >= 0) & (kind == _DENSE))
+    dn_row = ref_row[dn]
+    for c0 in range(0, n_rows, cap):
+        c1 = min(c0 + cap, n_rows)
+        regs = np.zeros((c1 - c0, m), dtype=np.uint8)
+        flat = regs.reshape(-1)
+        a, b = np.searchsorted(h_row, [c0, c1])
+        h = hashes[a:b]
+        np.maximum.at(flat, (h_row[a:b] - c0) * m
+                      + (h >> np.uint64(bits)).astype(np.int64),
+                      get_sigma_batch(h, bits))
+        a, b = np.searchsorted(e_row, [c0, c1])
+        np.maximum.at(flat, (e_row[a:b] - c0) * m + e_idx[a:b], e_rank[a:b])
+        a, b = np.searchsorted(dn_row, [c0, c1])
+        for k0 in range(a, b, cap):  # dense payloads, <= cap at a time
+            k1 = min(k0 + cap, b)
+            rows = dn_row[k0:k1] - c0
+            payload = buf[(starts[dn[k0:k1]] + _HEADER_BYTES)[:, None]
+                          + np.arange(m)]
+            head = np.flatnonzero(_run_heads(rows))
+            regs[rows[head]] = np.maximum(
+                regs[rows[head]], np.maximum.reduceat(payload, head, axis=0))
+        yield c0, regs
+
+
+def fold_segments(data, offsets, seg_ptr, blob_idx, estimate: bool = False):
+    """Fold many groups ("segments") of serialized sketches in one call.
+
+    Blob ``i`` is ``data[offsets[i]:offsets[i + 1]]`` — an Arrow binary
+    array's value and offset buffers — and segment ``s`` folds the blobs
+    ``blob_idx[seg_ptr[s]:seg_ptr[s + 1]]``, so one blob may sit in several
+    segments (rolling windows). Returns one canonical v3.1 blob per segment,
+    or with ``estimate`` the int64 array of their ``count()``; each is
+    bit-identical to sequential ``from_bytes`` + ``merge`` + ``to_bytes``
+    (property-pinned in tests/test_hll_core.py).
+
+    Every header is parsed and validated with numpy. Then, per segment:
+
+    * all blobs direct and the union <= 100 hashes: the result stays
+      direct; every such segment is unioned by one lexsort over
+      (segment, hash);
+    * otherwise the blobs fold into a (segments x m) register matrix with
+      ``np.maximum.at``; the result is dense iff an input was dense or the
+      final non-zero count exceeds the sparse bound (which also covers an
+      over-full sparse input: ``from_bytes`` promotes it, and its registers
+      are part of the final count);
+    * ``count_additions`` is summed mod 2^64.
 
     Order-free equivalence argument: union size is monotone under folding,
     so "stays direct" == "all inputs direct and the full union <= 100"; the
-    sparse flag is AND-monotone (one dense input makes every subsequent
-    merge dense, and from_bytes promotes an over-full sparse input on
-    parse), so "dense" == "any parsed input dense OR final nnz over the
-    sparse bound"; registers are an elementwise max (commutative); and
-    count_additions is a sum.  Exactly the decision set of
+    sparse flag is AND-monotone; registers are an elementwise max
+    (commutative); additions are a sum — exactly the decision set of
     :meth:`HllSketch.merge`, evaluated once instead of n-1 times.
 
-    Blobs that are not v3.>=1 (legacy v1/v2 inputs) fall back to the object
-    path for the whole group.
-    """
+    A segment holding a legacy (not v3.>=1) or malformed blob, or blobs of
+    different precision, takes the object path, which raises the same
+    ``ValueError`` sequential merging raises."""
+    buf = np.frombuffer(data, dtype=np.uint8)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    seg_ptr = np.asarray(seg_ptr, dtype=np.int64)
+    blob_idx = np.asarray(blob_idx, dtype=np.int64)
+    n_seg = seg_ptr.shape[0] - 1
+    seg_len = np.diff(seg_ptr)
+    if (seg_len <= 0).any():
+        raise ValueError("fold_segments needs at least one blob per segment")
+    out = np.zeros(n_seg, dtype=np.int64) if estimate else [None] * n_seg
+    if n_seg == 0:
+        return out
+    first = seg_ptr[:-1]
+    seg = np.repeat(np.arange(n_seg), seg_len)
+    starts = offsets[blob_idx]
+    p, kind, n, ok, adds = _peek(buf, starts, offsets[blob_idx + 1] - starts)
+
+    sp = np.flatnonzero(ok & (kind == _SPARSE))
+    entries = buf[concat_ranges(starts[sp] + _HEADER_BYTES, 3 * n[sp])].view(_ENTRY)
+    e_ref = np.repeat(sp, n[sp])
+    e_idx = entries["idx"].astype(np.int64)
+    e_rank = entries["rank"]
+    ok[e_ref[e_idx >= np.left_shift(1, p[e_ref])]] = False
+
+    seg_p = p[first]
+    obj = np.logical_or.reduceat(~ok | (p != seg_p[seg]), first)
+    dense_in = np.logical_or.reduceat(kind == _DENSE, first)
+    all_direct = ~np.logical_or.reduceat(kind != _DIRECT, first)
+    seg_adds = np.add.reduceat(adds, first)
+
+    # all-direct segments: one lexsort-dedup over (segment, hash)
+    cand = ~obj & all_direct
+    d = np.flatnonzero(cand[seg])
+    h = buf[concat_ranges(starts[d] + _HEADER_BYTES, 8 * n[d])].view("<u8")
+    h_seg = np.repeat(seg[d], n[d])
+    order = np.lexsort((h, h_seg))
+    h, h_seg = h[order], h_seg[order]
+    keep = _run_heads(h, h_seg)
+    h, h_seg = h[keep], h_seg[keep]
+    size = np.bincount(h_seg, minlength=n_seg)
+    direct = cand & (size <= DIRECT_COUNTER_MAX_ELEMENTS)
+    ds = np.flatnonzero(direct)
+    if estimate:
+        out[ds] = size[ds]
+    elif ds.shape[0]:
+        stay = direct[h_seg]
+        h, h_seg = h[stay], h_seg[stay]
+        # the sparse flag of a direct sketch is its replayed register count
+        # (distinct top-p bits of the sorted union) against the sparse bound
+        reg_idx = h >> (64 - seg_p[h_seg]).astype(np.uint64)
+        nnz = np.bincount(h_seg[_run_heads(reg_idx, h_seg)], minlength=n_seg)[ds]
+        smax = _sparse_max(seg_p[ds])
+        flags = 1 | np.where((smax > 0) & (nnz <= smax), 2, 0)
+        blobs = _emit(seg_p[ds], flags, size[ds], h.view(np.uint8), 8 * size[ds],
+                      seg_adds[ds])
+        for s, b in zip(ds.tolist(), blobs):
+            out[s] = b
+
+    reg = ~obj & ~direct
+    for pv in np.unique(seg_p[reg]).tolist():
+        rs = np.flatnonzero(reg & (seg_p == pv))
+        row = np.full(n_seg, -1, dtype=np.int64)
+        row[rs] = np.arange(rs.shape[0])
+        smax = int(_sparse_max(pv))
+        for c0, regs in _register_chunks(buf, starts, kind, n, row[seg],
+                                         (e_ref, e_idx, e_rank), pv,
+                                         rs.shape[0]):
+            segs = rs[c0:c0 + regs.shape[0]]
+            if estimate:
+                out[segs] = [HllSketch(p=pv, use_direct_counting=False,
+                                       registers=r).count() for r in regs]
+                continue
+            nnz = np.count_nonzero(regs, axis=1)
+            sparse = (smax > 0) & ~dense_in[segs] & (nnz <= smax)
+            sr = regs[sparse]
+            rr, cc = np.nonzero(sr)
+            ent = np.empty(cc.shape[0], dtype=_ENTRY)
+            ent["idx"], ent["rank"] = cc, sr[rr, cc]
+            blobs = (_emit(pv, 2, nnz[sparse], ent.view(np.uint8), 3 * nnz[sparse],
+                           seg_adds[segs[sparse]])
+                     + _emit(pv, 0, 1 << pv, regs[~sparse].reshape(-1), 1 << pv,
+                             seg_adds[segs[~sparse]]))
+            for s, b in zip(np.r_[segs[sparse], segs[~sparse]].tolist(), blobs):
+                out[s] = b
+
+    for s in np.flatnonzero(obj).tolist():
+        merged = None
+        for i in blob_idx[seg_ptr[s]:seg_ptr[s + 1]].tolist():
+            sk = HllSketch.from_bytes(buf[offsets[i]:offsets[i + 1]].tobytes())
+            if merged is None:
+                merged = sk
+            else:
+                merged.merge(sk)
+        out[s] = merged.count() if estimate else merged.to_bytes()
+    return out
+
+
+def fold_blobs(blobs) -> bytes:
+    """Fold-merge a list of serialized sketches at the wire level — the
+    one-segment call of :func:`fold_segments`."""
     if not blobs:
         raise ValueError("fold_blobs needs at least one blob")
-    p = None
-    direct_parts: list[np.ndarray] = []
-    sparse_parts: list[np.ndarray] = []
-    dense_parts: list[np.ndarray] = []
-    any_dense = False
-    count_total = 0
-    for b in blobs:
-        if len(b) < 9:
-            raise ValueError(f"truncated HLL blob: {len(b)} bytes")
-        major, minor, bp, flags = struct.unpack_from("<HHiB", b, 0)
-        if major != WIRE_MAJOR or minor < 1:
-            # legacy wire: take the object path for the whole group
-            merged = None
-            for bb in blobs:
-                sk = HllSketch.from_bytes(bb)
-                if merged is None:
-                    merged = sk
-                else:
-                    merged.merge(sk)
-            return merged.to_bytes()
-        if not 4 <= bp <= 16:
-            raise ValueError(f"invalid bitsPerIndex {bp}")
-        if p is None:
-            p = bp
-        elif bp != p:
-            raise ValueError("cannot merge sketches with different precision")
-        m = 1 << bp
-        (n,) = unpack("<i", b, 9, "HLL")
-        off = 13
-        if flags & 1:  # direct
-            if not 0 <= n <= DIRECT_COUNTER_MAX_ELEMENTS:
-                raise ValueError(f"invalid direct count {n}")
-            direct_parts.append(read_array(b, "<u8", n, off, "HLL"))
-            off += 8 * n
-        elif flags & 2:  # sparse
-            if not 0 <= n <= m:
-                raise ValueError(f"invalid sparse count {n}")
-            entries = read_array(b, [("idx", "<u2"), ("rank", "u1")], n, off,
-                                 "HLL")
-            if n and int(entries["idx"].max()) >= m:
-                raise ValueError("sparse index out of range")
-            sparse_parts.append(entries)
-            off += 3 * n
-            # from_bytes promotes an over-full sparse payload on parse; the
-            # nnz of a canonical sparse blob is its entry count, but tolerate
-            # duplicate/zero entries like the object path does
-            nnz = np.unique(entries["idx"][entries["rank"] > 0]).shape[0]
-            if nnz > max(0, m // 15 - 10):
-                any_dense = True
-        else:  # dense
-            if n != m:
-                raise ValueError(f"dense length {n} != m {m}")
-            dense_parts.append(read_array(b, np.uint8, n, off, "HLL"))
-            any_dense = True
-            off += n
-        (ca,) = unpack("<Q", b, off, "HLL")
-        count_total += int(ca)
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    return fold_segments(b"".join(blobs), offsets, [0, len(blobs)],
+                         np.arange(len(blobs)))[0]
 
-    count_total &= (1 << 64) - 1
-    sparse_max = max(0, (1 << p) // 15 - 10)
 
-    if not sparse_parts and not dense_parts:
-        union = (np.unique(np.concatenate(direct_parts).astype(np.uint64))
-                 if direct_parts else np.zeros(0, dtype=np.uint64))
-        if union.shape[0] <= DIRECT_COUNTER_MAX_ELEMENTS:
-            if union.shape[0] <= sparse_max:
-                # bounded direct set proves sparseness -> direct_blob's
-                # hardcoded sparse flag matches to_bytes
-                return direct_blob(p, union, count_total)
-            # small p: the direct set may exceed the sparse bound, and
-            # to_bytes then derives the flag from replayed-register nnz —
-            # go through the object for flag parity
-            sk = HllSketch(p=p, direct=union, count_additions=count_total)
-            return sk.to_bytes()
-
-    m = 1 << p
-    regs = np.zeros(m, dtype=np.uint8)
-    if direct_parts:
-        h = np.concatenate(direct_parts).astype(np.uint64)
-        if h.shape[0]:
-            bits = 64 - p
-            idx = (h >> np.uint64(bits)).astype(np.int64)
-            np.maximum.at(regs, idx, get_sigma_batch(h, bits))
-    for entries in sparse_parts:
-        np.maximum.at(regs, entries["idx"].astype(np.int64), entries["rank"])
-    for d in dense_parts:
-        np.maximum(regs, d, out=regs)
-
-    is_sparse = (sparse_max > 0 and not any_dense
-                 and int(np.count_nonzero(regs)) <= sparse_max)
-    sk = HllSketch(p=p, use_direct_counting=False, registers=regs,
-                   is_sparse=is_sparse, count_additions=count_total)
-    return sk.to_bytes()
+def estimate_blobs(data, offsets) -> np.ndarray:
+    """``HllSketch.from_bytes(blob).count()`` of every blob in an Arrow
+    binary buffer pair, as int64. A canonical direct blob (hashes strictly
+    increasing) reports its header count; every other blob goes through the
+    object."""
+    buf = np.frombuffer(data, dtype=np.uint8)
+    offsets = np.asarray(offsets, dtype=np.int64)
+    starts = offsets[:-1]
+    _p, kind, n, ok, _adds = _peek(buf, starts, np.diff(offsets))
+    d = np.flatnonzero(ok & (kind == _DIRECT))
+    h = buf[concat_ranges(starts[d] + _HEADER_BYTES, 8 * n[d])].view("<u8")
+    h_ref = np.repeat(d, n[d])
+    canonical = np.zeros(starts.shape[0], dtype=bool)
+    canonical[d] = True
+    canonical[h_ref[1:][(h[1:] <= h[:-1]) & (h_ref[1:] == h_ref[:-1])]] = False
+    est = np.where(canonical, n, 0)
+    for i in np.flatnonzero(~canonical).tolist():
+        est[i] = HllSketch.from_bytes(buf[starts[i]:offsets[i + 1]].tobytes()).count()
+    return est

@@ -13,9 +13,11 @@ two-phase aggregation explicitly (SURVEY.md §4):
   a hot group contributes at most one partial per partition.
 * **stage 2 — final merge**: JVM-side ``groupBy().agg(collect_list(sketch))``
   (map-side partial aggregation + one exchange of blobs) followed by ONE
-  vectorized pandas UDF that fold-merges each group's blobs (register-wise
-  max — associative & commutative, so any merge order yields bit-identical
-  canonical bytes; a lone partial passes through untouched).
+  vectorized UDF that fold-merges each group's blobs (register-wise max —
+  associative & commutative, so any merge order yields bit-identical
+  canonical bytes; a lone partial passes through untouched). For HLL it is
+  an Arrow UDF whose whole batch of groups folds in one call of the wire
+  kernel :func:`sketchlib.hll.fold_segments`.
 
 This is the DataFrame-native equivalent of the reference's build-then-Merge
 pipeline (``CardinalityEstimator.cs:704-730``, ``CardinalityEstimatorExtensions.cs:87-103``)
@@ -33,13 +35,16 @@ from typing import Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..encoding import encode_binary_series, encode_numeric_batch, encode_string_series
+from .. import hll
+from ..encoding import (arrow_flat_bytes, encode_binary_series, encode_numeric_batch,
+                        encode_string_series)
 from ..hashing import HASHES
-from ..hll import HllSketch
+from ..hll import HllSketch, concat_ranges
 
 
 def hash_series(series: pd.Series, hash_name: str = "murmur3") -> np.ndarray:
@@ -70,8 +75,6 @@ def hash_arrow_columns(batch, cols: Sequence[str], hash_name: str = "murmur3") -
     """Composite element hash straight from Arrow buffers (mapInArrow hot
     path — no pandas, no per-row Python string materialization). Same
     composition rule as :func:`hash_columns`."""
-    from ..encoding import arrow_flat_bytes
-
     _scalar, flat_fn = HASHES[hash_name]
     per = []
     for c in cols:
@@ -230,13 +233,11 @@ class HllSpec(SpecRepr):
         a.merge(b)
         return a
 
-    @staticmethod
-    def fold_blobs(blobs) -> bytes:
-        """Wire-level group fold (sketchlib/hll.py fold_blobs) — bit-identical
-        to sequential merge, picked up by merge_blobs_udf as the fast path."""
-        from ..hll import fold_blobs as _fold
-
-        return _fold(blobs)
+    #: batch wire-level kernels over Arrow binary buffers; their presence
+    #: routes the merge/estimate UDFs, rolling_merge and premerge_partials
+    #: to one Arrow-native fold per batch
+    fold_segments = staticmethod(hll.fold_segments)
+    estimate_blobs = staticmethod(hll.estimate_blobs)
 
     estimate_type = T.LongType()
 
@@ -593,40 +594,92 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
     return pruned.mapInPandas(build_stream, out_schema)
 
 
+def _object_fold(spec):
+    """Blob-list fold for specs without a batch kernel: the spec's own
+    ``fold_blobs`` if it has one, else sequential from_bytes/merge/to_bytes."""
+    fold = getattr(spec, "fold_blobs", None)
+    if fold is not None:
+        return fold
+
+    def fold(blobs):
+        merged = None
+        for b in blobs:
+            sk = spec.from_bytes(bytes(b))
+            merged = sk if merged is None else spec.merge(merged, sk)
+        return spec.to_bytes(merged)
+
+    return fold
+
+
+def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
+                blob_idx: np.ndarray, empty: bytes | None) -> pa.Array:
+    """One merged blob per segment of a binary Arrow array; segment ``s``
+    is ``blobs[blob_idx[seg_ptr[s]:seg_ptr[s + 1]]]``.
+
+    NULL blobs carry no sketch mass. A lone blob passes through
+    byte-for-byte (canonical serialization: it IS the merge result), a
+    segment with no blob yields ``empty``, and the rest fold in one
+    ``spec.fold_segments`` call (or the spec's object fold)."""
+    lens = np.diff(seg_ptr)
+    if blobs.null_count:
+        keep = blobs.is_valid().to_numpy(zero_copy_only=False)[blob_idx]
+        seg_of = np.repeat(np.arange(lens.shape[0]), lens)
+        lens = np.bincount(seg_of[keep], minlength=lens.shape[0])
+        blob_idx = blob_idx[keep]
+        blobs = blobs.fill_null(b"")
+    first = np.cumsum(lens) - lens
+    multi = np.flatnonzero(lens > 1)
+    sub_idx = blob_idx[concat_ranges(first[multi], lens[multi])]
+    sub_ptr = np.zeros(multi.shape[0] + 1, dtype=np.int64)
+    np.cumsum(lens[multi], out=sub_ptr[1:])
+    kernel = getattr(spec, "fold_segments", None)
+    if kernel is not None:
+        folded = kernel(*arrow_flat_bytes(blobs), sub_ptr, sub_idx)
+    else:
+        fold = _object_fold(spec)
+        values = blobs.to_pylist()
+        folded = [fold([values[i] for i in sub_idx[a:b]])
+                  for a, b in zip(sub_ptr[:-1].tolist(), sub_ptr[1:].tolist())]
+    pick = np.full(lens.shape[0], len(blobs) + multi.shape[0], dtype=np.int64)
+    single = lens == 1
+    pick[single] = blob_idx[first[single]]
+    pick[multi] = len(blobs) + np.arange(multi.shape[0])
+    pool = pa.concat_arrays([blobs, pa.array(folded + [empty], type=blobs.type)])
+    return pool.take(pa.array(pick))
+
+
 def merge_blobs_udf(spec) -> Column:
     """Vectorized fold-merge of an ``array<binary>`` column of serialized
     partial sketches into one blob per row.  Used after a JVM-side
     ``groupBy().agg(collect_list(sketch))`` — the whole merge stage stays in
     Spark's hash aggregate (map-side partial collect + shuffle), and Python is
     entered exactly once per output group with an Arrow batch of groups, not
-    once per group (the ``applyInPandas`` per-group overhead this replaces)."""
+    once per group (the ``applyInPandas`` per-group overhead this replaces).
 
-    # wire-level fold fast path (sketchlib/hll.py fold_blobs): bit-identical
-    # to the object loop, ~an order of magnitude less per-blob constant —
-    # the difference between 13M-blob HyperBall rounds being merge-bound or
-    # not.  Specs without a fold keep the generic object path.
-    fold = getattr(spec, "fold_blobs", None)
+    A spec with a batch kernel (``fold_segments``: HLL) gets an Arrow UDF
+    that folds the whole batch of groups in one kernel call; other specs
+    fold group by group in a pandas UDF. Either way a lone partial passes
+    through byte-for-byte and an empty list (global agg over zero rows)
+    gives the empty sketch, so COUNT(DISTINCT <empty>) estimates 0 like
+    SQL."""
+    empty = spec.to_bytes(spec.make())
+    if getattr(spec, "fold_segments", None) is not None:
+        @F.arrow_udf(T.BinaryType())
+        def _fold(lists: pa.Array) -> pa.Array:
+            return _fold_arrow(spec, lists.values,
+                               lists.offsets.to_numpy().astype(np.int64),
+                               np.arange(len(lists.values)), empty)
+
+        return _fold
+
+    fold = _object_fold(spec)
 
     @F.pandas_udf(T.BinaryType())
     def _merge(lists: pd.Series) -> pd.Series:
-        out = []
-        for blobs in lists:
-            if len(blobs) == 1:
-                # canonical serialization -> a lone partial IS the result
-                # (the common case when input is clustered by the group key)
-                out.append(bytes(blobs[0]))
-                continue
-            if fold is not None and len(blobs) > 1:
-                out.append(fold([bytes(b) for b in blobs]))
-                continue
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            # empty group (global agg over zero rows): emit the empty sketch,
-            # so COUNT(DISTINCT <empty>) estimates 0 like SQL
-            out.append(spec.to_bytes(merged if merged is not None else spec.make()))
-        return pd.Series(out)
+        return pd.Series([bytes(blobs[0]) if len(blobs) == 1
+                          else fold([bytes(b) for b in blobs]) if len(blobs)
+                          else empty
+                          for blobs in lists])
 
     return _merge
 
@@ -642,7 +695,25 @@ def merge_estimate_udf(spec) -> Column:
     only to be shipped to Python a second time for estimation: for a
     per-group query that only wants the NUMBER, this removes one full
     JVM->Python->JVM round trip of every group's blob plus a serialize +
-    deserialize per group."""
+    deserialize per group.  With a batch kernel (HLL) the whole Arrow
+    batch of groups is one ``fold_segments(..., estimate=True)`` call."""
+    empty_estimate = spec.estimate(spec.make())
+    if getattr(spec, "fold_segments", None) is not None:
+        @F.arrow_udf(spec.estimate_type)
+        def _fold_estimate(lists: pa.Array) -> pa.Array:
+            offsets = lists.offsets.to_numpy().astype(np.int64)
+            lens = np.diff(offsets)
+            live = np.flatnonzero(lens)
+            seg_ptr = np.zeros(live.shape[0] + 1, dtype=np.int64)
+            np.cumsum(lens[live], out=seg_ptr[1:])
+            est = np.full(lens.shape[0], empty_estimate, dtype=np.int64)
+            est[live] = spec.fold_segments(
+                *arrow_flat_bytes(lists.values), seg_ptr,
+                concat_ranges(offsets[live], lens[live]), estimate=True)
+            return pa.array(est)
+
+        return _fold_estimate
+
     fold = getattr(spec, "fold_blobs", None)
 
     @F.pandas_udf(spec.estimate_type)
@@ -650,8 +721,7 @@ def merge_estimate_udf(spec) -> Column:
         out = []
         for blobs in lists:
             if len(blobs) == 0:
-                # empty group (global agg over zero rows): estimate 0
-                out.append(spec.estimate(spec.make()))
+                out.append(empty_estimate)
                 continue
             if len(blobs) == 1:
                 out.append(spec.estimate(spec.from_bytes(bytes(blobs[0]))))
@@ -704,6 +774,22 @@ def rollup_sketches(sketch_df: DataFrame, to_group_cols: Sequence[str],
     return merge_partials(sketch_df, list(to_group_cols), spec, sketch_col)
 
 
+def _concat_batches(batches) -> "pa.RecordBatch | None":
+    """A ``mapInArrow`` partition as one record batch (None when empty):
+    the partition's blobs are held anyway, as the collect_list buffer of a
+    shuffle-side merge would hold them."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
+
+
+def _group_codes(batch, group_cols: Sequence[str]) -> np.ndarray:
+    if not group_cols:
+        return np.zeros(batch.num_rows, dtype=np.int64)
+    return arrow_group_codes(batch, group_cols)[0]
+
+
 def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
                   spec: HllSpec | None = None,
                   group_cols: Sequence[str] = (),
@@ -715,40 +801,93 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
 
     Union-only sketches (HLL/Theta/Bloom/CMS) can't subtract, so the
     classic streaming trick (add new day, remove old) is unavailable;
-    instead each daily sketch is *contributed* to the ≤``window`` rolling
-    rows it participates in (a JVM ``sequence``+``explode`` of blob rows —
-    ``window × groups × units`` blobs, kilobytes each) and each rolling row
-    fold-merges its contributions.  One shuffle of blobs, same as any
-    rollup; associativity makes the result bit-identical to building each
-    window from raw rows.  Output rows are kept only for order values that
-    actually exist in the input (trailing windows anchored at absent units
-    would double-report).
+    instead every window folds its ≤``window``-unit run of blobs. The plan
+    is ONE exchange and ONE Python pass: ``repartition(*group_cols)``
+    (``repartition(1)`` with no group columns) brings each group's rows
+    into one task, where a ``mapInArrow`` factorizes the group keys,
+    lexsorts rows by (group, order) and folds every distinct (group, o)
+    anchor's rows with order in ``(o - window, o]`` — all windows of the
+    partition in one :func:`sketchlib.hll.fold_segments` call for HLL,
+    ``spec.fold_blobs`` or the object merge otherwise. Task memory is
+    O(blobs in the partition), like the ``collect_list`` buffer of a
+    grouped merge. Associativity makes the result bit-identical to
+    building each window from raw rows; a one-blob window passes its blob
+    through byte-for-byte.
+
+    Output rows exist only for (group, order) pairs present in the input
+    (trailing windows anchored at absent units would double-report).
+    NULL semantics: a NULL group key is a group of its own (as in
+    :func:`merge_partials`); rows with a NULL order value are dropped; a
+    NULL sketch carries no mass (a window holding only NULL sketches gets
+    the empty sketch).
 
     ``order_col`` must be integer-like (for dates, pass e.g.
     ``F.datediff(day, lit(epoch))`` first)."""
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     spec = spec or HllSpec()
     group_cols = list(group_cols)
-    contrib = sketch_df.select(
-        *group_cols,
-        F.explode(F.sequence(F.col(order_col),
-                             F.col(order_col) + window - 1)).alias(order_col),
-        sketch_col)
-    anchors = sketch_df.select(*group_cols, order_col).distinct()
-    contrib = contrib.join(anchors, on=group_cols + [order_col], how="leftsemi")
-    return merge_partials(contrib, group_cols + [order_col], spec, sketch_col)
+    narrowed = sketch_df.select(*group_cols, order_col, sketch_col)
+    schema = narrowed.schema
+    empty = spec.to_bytes(spec.make())
+
+    def roll(batches):
+        batch = _concat_batches(batches)
+        if batch is None:
+            return
+        batch = batch.filter(pc.is_valid(batch.column(order_col)))
+        if batch.num_rows == 0:
+            return
+        codes = _group_codes(batch, group_cols)
+        order = batch.column(order_col).to_numpy().astype(np.int64)
+        perm = np.lexsort((order, codes))
+        codes, order = codes[perm], order[perm]
+        # (group, order) as one non-decreasing key over the dense order rank
+        values, rank = np.unique(order, return_inverse=True)
+        stride = values.shape[0] + 1
+        key = codes * stride + rank
+        anchors = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+        hi = np.searchsorted(key, key[anchors], side="right")
+        lo = np.searchsorted(key, codes[anchors] * stride + np.searchsorted(
+            values, order[anchors] - window, side="right"))
+        seg_ptr = np.zeros(anchors.shape[0] + 1, dtype=np.int64)
+        np.cumsum(hi - lo, out=seg_ptr[1:])
+        sketches = _fold_arrow(spec, batch.column(sketch_col), seg_ptr,
+                               perm[concat_ranges(lo, hi - lo)], empty)
+        keys = batch.take(pa.array(perm[anchors]))
+        yield pa.RecordBatch.from_arrays(
+            [keys.column(c) for c in group_cols + [order_col]] + [sketches],
+            schema=to_arrow_schema(schema))
+
+    shuffled = (narrowed.repartition(*group_cols) if group_cols
+                else narrowed.repartition(1))
+    return shuffled.mapInArrow(roll, schema)
 
 
 def estimate_col(spec: HllSpec | None = None, sketch_col: str | Column = "sketch") -> Column:
-    """Scalar estimate as a vectorized pandas UDF over sketch blobs (one blob
-    per group — Python cost is per-group, not per-row)."""
+    """Scalar estimate as a vectorized UDF over sketch blobs (one blob per
+    group — Python cost is per-group, not per-row). A spec with a batch
+    estimator (``estimate_blobs``: HLL) gets an Arrow UDF estimating the
+    whole batch in one call; NULL blobs estimate to NULL."""
     spec = spec or HllSpec()
+    col = sketch_col if isinstance(sketch_col, Column) else F.col(sketch_col)
+    if getattr(spec, "estimate_blobs", None) is not None:
+        @F.arrow_udf(spec.estimate_type)
+        def _estimate_blobs(blobs: pa.Array) -> pa.Array:
+            valid = blobs.is_valid().to_numpy(zero_copy_only=False)
+            est = np.zeros(len(blobs), dtype=np.int64)
+            est[valid] = spec.estimate_blobs(*arrow_flat_bytes(blobs.drop_null()))
+            return pa.array(est, mask=~valid)
+
+        return _estimate_blobs(col)
 
     @F.pandas_udf(spec.estimate_type)
     def _estimate(blobs: pd.Series) -> pd.Series:
         return pd.Series([None if b is None else spec.estimate(spec.from_bytes(bytes(b)))
                           for b in blobs])
 
-    return _estimate(sketch_col if isinstance(sketch_col, Column) else F.col(sketch_col))
+    return _estimate(col)
 
 
 def sketch_agg(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
@@ -842,60 +981,32 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
     makes the final result bit-identical with or without this pass.
     Worker memory is O(blobs in the partition) — the shuffle input it
     replaces.  Group keys factorize through ``arrow_group_codes``
-    (dictionary encoding), so NULL keys and full-range int64 keys
-    round-trip exactly; singleton groups pass their canonical blob
-    through untouched (no re-serialization).
+    (dictionary encoding) and leave as the input's own key values, so NULL
+    keys and full-range int64 keys round-trip exactly; rows are grouped by
+    one stable sort of the codes and every group of the partition folds in
+    one :func:`sketchlib.hll.fold_segments` call (HLL), singleton groups
+    passing their canonical blob through untouched.
     """
-    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     spec = spec or HllSpec()
     group_cols = list(group_cols)
-    fold = getattr(spec, "fold_blobs", None)
-    if fold is None:
-        def fold(blobs):  # generic object-path fallback, same semantics
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            return spec.to_bytes(merged)
-
     narrowed = partials.select(*group_cols, sketch_col)
     schema = narrowed.schema
 
     def combine(batches):
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        pa_schema = to_arrow_schema(schema)
-        acc: dict = {}  # key tuple -> list[bytes]
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            codes, key_cols = arrow_group_codes(batch, group_cols)
-            keys = _keys_as_tuples(key_cols)
-            blobs = batch.column(sketch_col).to_pylist()
-            # C-speed zip; dict/list ops are the only per-row Python cost
-            for code, blob in zip(codes.tolist(), blobs):
-                k = keys[code]
-                lst = acc.get(k)
-                if lst is None:
-                    acc[k] = [blob]
-                else:
-                    lst.append(blob)
-        if not acc:
+        batch = _concat_batches(batches)
+        if batch is None:
             return
-        out_keys = list(acc.keys())
-        # NULL keys in numeric columns ride through the dictionary decode as
-        # NaN floats (same as the build_partials pandas emit) — from_pandas
-        # with the explicit field type converts them back to typed nulls
-        arrays = [
-            pa.Array.from_pandas(pd.Series([k[i] for k in out_keys]),
-                                 type=pa_schema.field(i).type, safe=False)
-            for i in range(len(group_cols))
-        ]
-        arrays.append(pa.array(
-            [blobs[0] if len(blobs) == 1 else fold(blobs)
-             for blobs in acc.values()],
-            type=pa.binary()))
-        yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
+        codes = _group_codes(batch, group_cols)
+        perm = np.argsort(codes, kind="stable")
+        sorted_codes = codes[perm]
+        heads = np.flatnonzero(np.r_[True, sorted_codes[1:] != sorted_codes[:-1]])
+        sketches = _fold_arrow(spec, batch.column(sketch_col),
+                               np.r_[heads, perm.shape[0]], perm, None)
+        keys = batch.take(pa.array(perm[heads]))
+        yield pa.RecordBatch.from_arrays(
+            [keys.column(c) for c in group_cols] + [sketches],
+            schema=to_arrow_schema(schema))
 
     return narrowed.mapInArrow(combine, schema)

@@ -462,3 +462,224 @@ def test_fold_blobs_rejects_empty_and_truncated():
     a = HllSketch(); a.add(b"x")
     with pytest.raises(ValueError):
         fold_blobs([a.to_bytes()[:5]])
+
+
+# ---------------------------------------------------------------------------
+# fold_segments / estimate_blobs: the batch wire kernel behind every HLL merge
+# ---------------------------------------------------------------------------
+
+def _sequential(blobs):
+    from sketchlib.hll import HllSketch
+
+    merged = None
+    for b in blobs:
+        sk = HllSketch.from_bytes(b)
+        if merged is None:
+            merged = sk
+        else:
+            merged.merge(sk)
+    return merged
+
+
+def _fold_batch(blobs, segments, estimate=False):
+    """fold_segments over one buffer holding ``blobs``; each segment is a
+    list of blob indices (a blob may sit in several segments)."""
+    import numpy as np
+    from sketchlib.hll import fold_segments
+
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    seg_ptr = np.zeros(len(segments) + 1, dtype=np.int64)
+    np.cumsum([len(s) for s in segments], out=seg_ptr[1:])
+    idx = np.array([i for s in segments for i in s], dtype=np.int64)
+    return fold_segments(b"".join(blobs), offsets, seg_ptr, idx, estimate)
+
+
+def _assert_batch_matches_sequential(blobs, segments):
+    got = _fold_batch(blobs, segments)
+    est = _fold_batch(blobs, segments, estimate=True)
+    for seg, g, e in zip(segments, got, est):
+        want = _sequential([blobs[i] for i in seg])
+        assert g == want.to_bytes(), seg
+        assert int(e) == want.count(), seg
+
+
+@pytest.mark.parametrize("p", [4, 5, 10, 14, 16])
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_fold_segments_bit_identical_to_sequential(p, seed):
+    import numpy as np
+
+    rng = np.random.default_rng(seed * 100 + p)
+    modes = ["empty", "direct", "direct", "sparse", "dense"]
+    blobs = [_random_blob(rng, p, modes[int(rng.integers(0, len(modes)))])
+             for _ in range(24)]
+    # many segments per call, overlapping like rolling windows, sizes 1..6
+    segments = [rng.integers(0, len(blobs), size=int(rng.integers(1, 7))).tolist()
+                for _ in range(40)]
+    _assert_batch_matches_sequential(blobs, segments)
+
+
+def test_fold_segments_overlapping_direct_unions():
+    """Direct blobs that share hashes: the lexsort union dedups across
+    blobs, and unions crossing 100 hashes leave direct mode."""
+    import numpy as np
+    from sketchlib.hll import HllSketch
+
+    rng = np.random.default_rng(3)
+    pool = rng.integers(0, 2**63, size=150, dtype=np.int64).astype(np.uint64)
+    blobs = []
+    for lo in range(0, 150, 15):
+        sk = HllSketch()
+        sk.add_hashes(pool[lo:lo + 40])
+        blobs.append(sk.to_bytes())
+    segments = [[0, 1], [0, 1, 2, 3], [2, 2, 3], list(range(len(blobs)))]
+    _assert_batch_matches_sequential(blobs, segments)
+
+
+def test_fold_segments_overfull_sparse_blob_promotes():
+    """A sparse payload with more non-zero registers than the sparse bound
+    is promoted to dense on parse; the batch fold must agree."""
+    import struct
+
+    import numpy as np
+    from sketchlib.hll import HllSketch
+
+    p, m = 10, 1 << 10
+    n = 80  # sparse bound at p=10 is 1024 // 15 - 10 = 58
+    entries = np.empty(n, dtype=[("idx", "<u2"), ("rank", "u1")])
+    entries["idx"] = np.arange(n) * 7 % m
+    entries["rank"] = np.arange(n) % 9 + 1
+    overfull = (struct.pack("<HHiBi", 3, 1, p, 2, n) + entries.tobytes()
+                + struct.pack("<Q", n))
+    assert HllSketch.from_bytes(overfull).is_sparse is False
+    small = HllSketch(p=p)
+    small.add(b"a", b"b")
+    _assert_batch_matches_sequential([overfull, small.to_bytes()],
+                                     [[0], [0, 1], [1, 1]])
+
+
+def test_fold_segments_small_p_direct_union_past_sparse_bound():
+    """At p=8 the sparse bound (7) is below the direct limit (100): a
+    direct union of 8..100 hashes stays direct, but its sparse flag comes
+    from the replayed register count."""
+    import numpy as np
+    from sketchlib.hll import HllSketch
+
+    rng = np.random.default_rng(11)
+    blobs = []
+    for n in (3, 4, 5, 30):
+        sk = HllSketch(p=8)
+        sk.add_hashes(rng.integers(0, 2**63, size=n, dtype=np.int64).astype(np.uint64))
+        blobs.append(sk.to_bytes())
+    # two hashes sharing a register index: 9 hashes, 8 non-zero registers
+    clustered = HllSketch(p=8)
+    clustered.add_hashes(np.array([(i << 56) | 1 for i in range(8)] + [5],
+                                  dtype=np.uint64))
+    blobs.append(clustered.to_bytes())
+    _assert_batch_matches_sequential(blobs, [[0, 1], [0, 1, 2], [3, 0], [4],
+                                             [4, 0], [0, 1, 2, 3]])
+
+
+def test_fold_segments_count_additions_wrap_mod_2_64():
+    from sketchlib.hll import HllSketch
+
+    blobs = []
+    for i, adds in enumerate([2**64 - 3, 5, 2**63, 2**63 + 7]):
+        sk = HllSketch()
+        sk.add(f"x{i}".encode())
+        sk.count_additions = adds
+        blobs.append(sk.to_bytes())
+    out = _fold_batch(blobs, [[0, 1], [2, 3], [0, 1, 2, 3]])
+    assert [HllSketch.from_bytes(b).count_additions for b in out] == [
+        2, 7, (2**64 - 3 + 5 + 2**63 + 2**63 + 7) % 2**64]
+    _assert_batch_matches_sequential(blobs, [[0, 1], [2, 3], [0, 1, 2, 3]])
+
+
+def test_fold_segments_empty_batch_and_empty_segment():
+    import numpy as np
+    from sketchlib.hll import HllSketch, fold_segments
+
+    assert fold_segments(b"", np.zeros(1, dtype=np.int64), [0], []) == []
+    assert fold_segments(b"", np.zeros(1, dtype=np.int64), [0], [],
+                         estimate=True).shape == (0,)
+    blob = HllSketch().to_bytes()
+    with pytest.raises(ValueError, match="at least one blob"):
+        fold_segments(blob, [0, len(blob)], [0, 1, 1], [0])
+
+
+def test_fold_segments_single_canonical_blob_is_identity():
+    import numpy as np
+    from sketchlib.hll import fold_blobs
+
+    rng = np.random.default_rng(5)
+    for mode in ("empty", "direct", "sparse", "dense"):
+        blob = _random_blob(rng, 12, mode)
+        assert fold_blobs([blob]) == blob
+        assert _fold_batch([blob], [[0]]) == [blob]
+
+
+def test_fold_segments_legacy_v2_blob_takes_object_path():
+    """A v2 blob (extra hash-id byte after the version) folds through the
+    object path; v3.1 segments of the same batch stay on the kernel."""
+    from sketchlib.hll import HllSketch
+
+    a, b = HllSketch(), HllSketch()
+    a.add(b"x", b"y")
+    b.add(b"y", b"z")
+    v3 = a.to_bytes()
+    v2 = b"\x02\x00\x01\x00" + b"\x00" + v3[4:]  # v2.1: same payload
+    assert HllSketch.from_bytes(v2) == a
+    blobs = [v2, b.to_bytes(), v3]
+    _assert_batch_matches_sequential(blobs, [[0, 1], [1, 2], [0], [2, 0, 1]])
+
+
+def test_fold_segments_precision_mismatch_raises():
+    from sketchlib.hll import HllSketch
+
+    a = HllSketch(p=12); a.add(b"x")
+    b = HllSketch(p=14); b.add(b"y")
+    blobs = [a.to_bytes(), b.to_bytes()]
+    assert len(_fold_batch(blobs, [[0], [1]])) == 2  # per-segment precision
+    with pytest.raises(ValueError, match="precision"):
+        _fold_batch(blobs, [[0], [0, 1]])
+
+
+def test_estimate_blobs_matches_from_bytes_count():
+    """Canonical direct blobs report their header count; non-canonical
+    direct payloads (duplicate or unsorted hashes) and sparse/dense blobs
+    go through from_bytes().count()."""
+    import numpy as np
+    from sketchlib.hll import HllSketch, direct_blob, estimate_blobs
+
+    rng = np.random.default_rng(9)
+    h = np.sort(rng.integers(0, 2**63, size=20, dtype=np.int64).astype(np.uint64))
+    blobs = [
+        direct_blob(14, h, 20),                              # canonical
+        direct_blob(14, h[::-1].copy(), 20),                 # unsorted
+        direct_blob(14, np.concatenate([h[:5], h[:5]]), 10),  # duplicates
+        direct_blob(14, h[:0], 0),                           # empty
+        _random_blob(rng, 14, "sparse"),
+        _random_blob(rng, 10, "dense"),
+    ]
+    offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    got = estimate_blobs(b"".join(blobs), offsets)
+    assert got.tolist() == [HllSketch.from_bytes(b).count() for b in blobs]
+    assert got[:4].tolist() == [20, 20, 5, 0]
+
+
+def test_fold_segments_register_chunks_bit_identical(monkeypatch):
+    """A tiny register budget forces one-row chunks and one-blob dense
+    blocks: the chunked fold must equal the one-chunk fold."""
+    import numpy as np
+    import sketchlib.hll as hll_mod
+
+    rng = np.random.default_rng(21)
+    modes = ["direct", "sparse", "dense"]
+    blobs = [_random_blob(rng, 10, modes[i % 3]) for i in range(12)]
+    segments = [rng.integers(0, 12, size=int(rng.integers(2, 6))).tolist()
+                for _ in range(15)]
+    whole = _fold_batch(blobs, segments)
+    monkeypatch.setattr(hll_mod, "_REGISTER_BUDGET", 1)
+    assert _fold_batch(blobs, segments) == whole
+    _assert_batch_matches_sequential(blobs, segments)

@@ -321,3 +321,95 @@ def test_premerge_partials_reduces_rows(spark):
     pre = agg.premerge_partials(exploded, ["g"], agg.HllSpec())
     # ≤ groups × partitions rows out
     assert pre.count() <= 3 * exploded.rdd.getNumPartitions()
+
+
+def _rolling_reference(sketch_df, order_col, window, spec, group_cols):
+    """The explode + distinct-anchor + left-semi-join formulation of a
+    rolling merge (non-NULL group keys only: the equi-join drops NULLs)."""
+    contrib = sketch_df.select(
+        *group_cols,
+        F.explode(F.sequence(F.col(order_col),
+                             F.col(order_col) + window - 1)).alias(order_col),
+        "sketch")
+    anchors = sketch_df.select(*group_cols, order_col).distinct()
+    contrib = contrib.join(anchors, on=group_cols + [order_col], how="leftsemi")
+    return merge_partials(contrib, group_cols + [order_col], spec)
+
+
+def test_rolling_merge_matches_explode_semijoin(spark):
+    """Several groups, gapped days, duplicate (group, order) rows and a
+    mix of direct/sparse blobs: identical rows and bytes to the
+    explode/semi-join formulation, at any input partitioning."""
+    from sketchlib.spark.aggregate import rolling_merge
+
+    rows = []
+    for g, days, n in [("a", (1, 2, 3, 5, 9), 30), ("b", (2, 4, 5, 6), 150),
+                       ("c", (7,), 5), ("d", (1, 3, 4, 8, 10), 3)]:
+        for d in days:
+            rows += [(g, d, f"{g}{d}-{i % (n - d % 3)}") for i in range(n)]
+    df = spark.createDataFrame(rows, "g string, d int, v string")
+    spec = HllSpec()
+    daily = sketch_agg(df, "v", ["g", "d"], spec)
+    # a second sketch for (a, 3) and (b, 5): duplicate (group, order) rows
+    extra = sketch_agg(df.filter(F.col("d").isin(3, 5))
+                       .withColumn("v", F.concat("v", F.lit("x"))),
+                       "v", ["g", "d"], spec)
+    table = daily.unionByName(extra).repartition(5).persist()
+    want = {(r["g"], r["d"]): bytes(r["sketch"])
+            for r in _rolling_reference(table, "d", 3, spec, ["g"]).collect()}
+    got_rows = rolling_merge(table, "d", 3, spec, ["g"]).collect()
+    table.unpersist()
+    got = {(r["g"], r["d"]): bytes(r["sketch"]) for r in got_rows}
+    assert len(got_rows) == len(got) == len(want)
+    assert got == want
+
+
+def test_rolling_merge_null_group_and_null_order(spark):
+    """A NULL group key is its own group (rows (None, 1) and (None, 2)
+    survive, as rollup_sketches keeps a NULL group); rows with a NULL order
+    value are dropped."""
+    from sketchlib.spark.aggregate import rolling_merge, rollup_sketches
+
+    rows = [(None, 1, "u1"), (None, 2, "u2"), ("x", 1, "u1"), ("x", None, "u9")]
+    df = spark.createDataFrame(rows, "g string, d int, v string")
+    spec = HllSpec()
+    daily = sketch_agg(df, "v", ["g", "d"], spec)
+    est = {(r["g"], r["d"]): r["e"] for r in rolling_merge(daily, "d", 2, spec, ["g"])
+           .select("g", "d", estimate_col(spec).alias("e")).collect()}
+    assert est == {(None, 1): 1, (None, 2): 2, ("x", 1): 1}
+    assert None in {r["g"] for r in rollup_sketches(daily, ["g"], spec).collect()}
+    # no group columns: one global series, NULL orders still dropped
+    glob = {r["d"]: r["e"] for r in rolling_merge(daily, "d", 2, spec)
+            .select("d", estimate_col(spec).alias("e")).collect()}
+    assert glob == {1: 1, 2: 2}
+
+
+def test_arrow_merge_udfs_passthrough_empty_and_null(spark):
+    """HLL merge UDFs: a single-blob list passes through byte-for-byte (even
+    a non-canonical blob), an empty list gives the empty sketch / estimate
+    0, and estimate_col maps a NULL blob to NULL."""
+    from pyspark.sql import types as T
+
+    from sketchlib.hll import direct_blob
+    from sketchlib.spark.aggregate import merge_blobs_udf, merge_estimate_udf
+
+    h = np.array([9, 3, 3, 7], dtype=np.uint64)  # unsorted, duplicate
+    odd = direct_blob(14, h, 4)
+    canon = HllSketch.from_bytes(odd).to_bytes()
+    assert canon != odd
+    spec = HllSpec()
+    df = spark.createDataFrame(
+        [(0, [odd]), (1, []), (2, [odd, canon]), (3, None)],
+        T.StructType([T.StructField("k", T.IntegerType()),
+                      T.StructField("blobs", T.ArrayType(T.BinaryType()))]))
+    rows = {r["k"]: r for r in df.filter("k < 3").select(
+        "k", merge_blobs_udf(spec)("blobs").alias("s"),
+        merge_estimate_udf(spec)("blobs").alias("e")).collect()}
+    assert bytes(rows[0]["s"]) == odd and rows[0]["e"] == 3
+    assert bytes(rows[1]["s"]) == HllSketch().to_bytes() and rows[1]["e"] == 0
+    both = HllSketch.from_bytes(odd)
+    both.merge(HllSketch.from_bytes(canon))
+    assert bytes(rows[2]["s"]) == both.to_bytes() and rows[2]["e"] == 3
+    blobs = spark.createDataFrame([(odd,), (None,)], "s binary")
+    assert [r["e"] for r in blobs.select(estimate_col(spec, "s").alias("e"))
+            .collect()] == [3, None]

@@ -230,3 +230,66 @@ def test_media_dimension_bounds():
     neg = _FAKE_MAGIC + _s.pack("<iiq", -3, 5, 7)
     with pytest.raises(ValueError):
         decode_image_stub(neg)
+
+
+# ---------------------------------------------------------------------------
+# HLL batch wire kernel: a mutated blob inside a batch must surface as
+# ValueError (the object path's error), never IndexError/struct.error, and a
+# batch that does fold must agree with sequential merging
+# ---------------------------------------------------------------------------
+
+def _hll_blobs():
+    direct = HllSketch(p=12)
+    direct.add_hashes(_hashes(40))
+    sparse = HllSketch(p=12)
+    sparse.add_hashes(_hashes(300))
+    dense = _families()["hll"]
+    return [direct.to_bytes(), sparse.to_bytes(), dense.to_bytes()]
+
+
+def _batch_probe(mutated: bytes, partner: bytes) -> None:
+    from sketchlib.hll import estimate_blobs, fold_segments
+
+    blobs = [partner, mutated]
+    offsets = np.array([0, len(partner), len(partner) + len(mutated)])
+    data = b"".join(blobs)
+    for estimate in (False, True):
+        try:  # the sequential object path is the reference
+            want = HllSketch.from_bytes(partner)
+            want.merge(HllSketch.from_bytes(mutated))
+            want = want.count() if estimate else want.to_bytes()
+        except ValueError:
+            want = None
+        try:
+            got = fold_segments(data, offsets, [0, 1, 3], [0, 0, 1], estimate)
+        except ValueError:
+            assert want is None
+            continue
+        assert got[1] == want
+    try:
+        est = estimate_blobs(data, offsets)
+    except ValueError:
+        return
+    assert est[1] == HllSketch.from_bytes(mutated).count()
+
+
+@pytest.mark.parametrize("which", [0, 1, 2])
+def test_hll_batch_truncations_raise_valueerror(which):
+    blobs = _hll_blobs()
+    blob = blobs[which]
+    cuts = list(range(0, min(len(blob), 64))) + list(range(64, len(blob), 37))
+    for cut in cuts:
+        _batch_probe(blob[:cut], blobs[(which + 1) % 3])
+
+
+@pytest.mark.parametrize("which", [0, 1, 2])
+def test_hll_batch_byte_flips_raise_valueerror(which):
+    blobs = _hll_blobs()
+    blob = bytearray(blobs[which])
+    rng = np.random.default_rng(which)
+    idxs = list(range(24)) + sorted(rng.choice(
+        np.arange(24, len(blob)), size=32, replace=False).tolist())
+    for i in idxs:
+        for flip in (0xFF, 0x80, 0x01):
+            mutated = bytes(blob[:i]) + bytes([blob[i] ^ flip]) + bytes(blob[i + 1:])
+            _batch_probe(mutated, blobs[(which + 2) % 3])
