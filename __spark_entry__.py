@@ -1897,8 +1897,6 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
     # store's partition count binds at checkpoint creation — 8 partitions
     # for a 90-row gate, not the suite-wide 32
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    cksum_before = spark.conf.get(
-        "spark.sql.streaming.checkpoint.checksumEnabled", "true")
     schema = T.StructType([T.StructField("url", T.StringType()),
                            T.StructField("ts", T.TimestampType())])
     collected: list = []
@@ -1920,11 +1918,6 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
 
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "2")
-        # checkpoint checksums fsync one extra file per state/commit write
-        # — measured 2.5x the whole gate wall on a 90-row stream; a
-        # durability knob, not operator semantics
-        spark.conf.set("spark.sql.streaming.checkpoint.checksumEnabled",
-                       "false")
         t0 = time.time()
         write([(f"https://a/{i}", datetime(2026, 1, 1, 0, 10))
                for i in range(30)]
@@ -1958,8 +1951,6 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
         state_bounded = bool(prog) and prog[-1] == 1
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        spark.conf.set("spark.sql.streaming.checkpoint.checksumEnabled",
-                       cksum_before)
         shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(
         [(h, emitted[h], bool(late_dropped), bool(state_bounded))

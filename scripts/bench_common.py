@@ -30,12 +30,6 @@ def build_session(cpus: int | str, app: str = "sketchlib-bench",
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
-        # streaming checkpoint checksums fsync one extra sidecar file per
-        # state/commit write — pure durability overhead for the bench's
-        # throwaway local checkpoints (measured 2.5x on the 90-row windowed
-        # gate, ~0.1 s/pass on the 15k-row gates).  Production pipelines
-        # writing real checkpoints keep the default (docs/RUNBOOK.md).
-        .config("spark.sql.streaming.checkpoint.checksumEnabled", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

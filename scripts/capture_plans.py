@@ -14,6 +14,8 @@ OPTIMIZATION_r06.md.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 
@@ -36,8 +38,12 @@ def main() -> int:
     qs = entrymod.queries()
     for name in gates:
         df = qs[name](spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        # the public explain() works on classic and Connect sessions alike;
+        # drop the newline its print() adds so files match explainString
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue().removesuffix("\n")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"wrote {name}_{suffix}.txt ({len(plan)} bytes)")

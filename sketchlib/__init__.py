@@ -23,8 +23,13 @@ Layering:
   generator, frozen byte-identical text extraction, Iceberg/Parquet table
   interface.
 * ``sketchlib.jobs`` — spark-submit entry points.
+
+Importing the package inside a Spark Python worker (Python < 3.12) also
+stops the worker from re-reading unchanged zip archives before every task
+(``sketchlib._zipcache``); in any other process the import changes nothing.
 """
 
+from . import _zipcache
 from .ams import AmsSketch  # noqa: F401
 from .bloom import BloomFilter  # noqa: F401
 from .cuckoo import CuckooFilter  # noqa: F401
@@ -37,3 +42,5 @@ from .tdigest import TDigest  # noqa: F401
 from .theta import ThetaSketch  # noqa: F401
 
 __version__ = "0.1.0"
+
+_zipcache.install_in_worker()

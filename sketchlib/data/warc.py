@@ -438,9 +438,9 @@ def read_warc(spark, paths, on_error: str = "null"):
                 except ValueError as exc:
                     if on_error == "raise":
                         raise
-                    # a recovered gzip prefix usually ends mid-record, so
-                    # the structural error supersedes the gzip message
-                    err = str(exc)
+                    # a recovered gzip prefix usually ends mid-record:
+                    # keep the gzip root cause and add the structural error
+                    err = str(exc) if err is None else f"{err}; {exc}"
                 if err is not None:
                     yield _error_row(path, err)
 

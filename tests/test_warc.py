@@ -276,6 +276,27 @@ def test_read_warc_gzip_truncation_keeps_prefix(spark, tmp_path):
     assert len(bad) == 1 and bad[0]["url"] is None
 
 
+def test_read_warc_single_member_cut_reports_both_errors(spark, tmp_path):
+    """A whole-file (single-member) .warc.gz cut inside its last record:
+    the recovered prefix ends mid-record, so the structural error follows
+    the gzip one.  The good records are kept and the one parse_error row
+    keeps the gzip root cause as well as the structural message."""
+    import random
+
+    recs = RECS[:2] + [("https://c.example.com/3", "2026-01-03T00:00:00Z",
+                        random.Random(7).randbytes(4000))]
+    gz = gzip.compress(build_warc(recs))
+    (tmp_path / "member.warc.gz").write_bytes(gz[:-1000])
+    rows = read_warc(spark, str(tmp_path)).collect()
+    good = [r for r in rows if r["parse_error"] is None]
+    bad = [r for r in rows if r["parse_error"] is not None]
+    assert sorted(r["url"] for r in good) == [u for u, _, _ in recs[:2]]
+    assert len(bad) == 1 and bad[0]["url"] is None
+    gzip_msg, sep, structural_msg = bad[0]["parse_error"].partition("; ")
+    assert sep and "gzip" in gzip_msg
+    assert "overruns buffer" in structural_msg
+
+
 def test_warc_response_bytes_rejects_crlf_in_all_header_values(spark):
     """date_iso and content_type are framing-sensitive like url — a CR/LF
     in any of them must raise instead of silently corrupting the record
