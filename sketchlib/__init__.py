@@ -10,8 +10,8 @@ Layering:
   ``add_* / merge / estimate / to_bytes / from_bytes``.
 * ``sketchlib.spark`` — the thin Spark integration: two-stage partial/final
   aggregation (``mapInArrow`` partial build + JVM ``collect_list`` merge),
-  estimate ``pandas_udf``s, explicit skew salting, heavy hitters, membership,
-  quantiles, checkpoint/resume, SQL registration.
+  merge and estimate Arrow UDFs, explicit skew salting, heavy hitters,
+  membership, quantiles, checkpoint/resume, SQL registration.
 * ``sketchlib.streaming`` — stateful Structured-Streaming sketch aggregation.
 * ``sketchlib.text`` / ``sketchlib.dedup`` / ``sketchlib.similarity`` /
   ``sketchlib.multimodal`` — training-data pipeline operators (quality/langid,

@@ -199,10 +199,8 @@ def drop_seen(new: DataFrame, seen: DataFrame | None = None,
                 .drop(fpc))
 
     keyed = new.withColumn(fpc, fingerprint_key(F.col(text_col)))
-    # frame-level probe: null-exact for full-range int64 fingerprints
-    # (xxhash64 never yields NULL today, but a null fp sharing an Arrow
-    # batch would otherwise degrade the whole batch to float64 and leak
-    # dups past the bypass branch)
+    # frame-level probe: null-exact for full-range int64 fingerprints (a
+    # null fp probes False and leaves the other keys of its batch exact)
     probe = probe_might_contain(keyed, fpc, bloom_blob, spec)
     probed = keyed.withColumn(
         probed_name, F.col(text_col).isNotNull() & probe)

@@ -80,8 +80,9 @@ def encode_string_series(series) -> tuple[np.ndarray, np.ndarray]:
 def arrow_flat_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
     """(flat uint8, int64 offsets) straight from an Arrow array's buffers —
     ZERO per-row Python, no pandas materialization. Accepts string/binary
-    (32-bit offsets cast up), numerics (fixed-width LE reinterpret), and
-    timestamps (int64 micros). This is the ``mapInArrow`` hot path."""
+    (32-bit offsets cast up), numerics (fixed-width LE reinterpret; 8- and
+    16-bit integers widen to 8 bytes), timestamps (int64 micros) and dates
+    (int64 day counts). This is the ``mapInArrow`` hot path."""
     import pyarrow as pa
     import pyarrow.types as pt
 
@@ -109,9 +110,10 @@ def arrow_flat_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
             raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(vals.to_numpy(), "int64")
     if pt.is_integer(t):
-        width = t.bit_width // 8
-        kind = {4: "int32", 8: "int64"}[width] if not pt.is_unsigned_integer(t) \
-            else {4: "uint32", 8: "uint64"}[width]
+        # 1- and 2-byte integers widen to 8 bytes, as ``hash_series`` does
+        kind = ("int32" if t.bit_width == 32 else "int64")
+        if pt.is_unsigned_integer(t):
+            kind = "u" + kind
         if arr.null_count:
             raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(arr.to_numpy(), kind)
@@ -121,7 +123,9 @@ def arrow_flat_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
             raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(arr.to_numpy(), kind)
     if pt.is_date(t):
-        vals = arr.cast(pa.int64())
+        # day counts (date32) widen through int32: pyarrow has no
+        # date32 -> int64 cast
+        vals = arr.cast(pa.int32() if pt.is_date32(t) else pa.int64()).cast(pa.int64())
         if vals.null_count:
             raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(vals.to_numpy(), "int64")

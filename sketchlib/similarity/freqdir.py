@@ -165,10 +165,9 @@ class FrequentDirections:
 class FdSpec:
     """Binding for the two-stage aggregation in
     :mod:`sketchlib.spark.aggregate`: one FD per (group, partition) built in
-    the pandas stream path (``prepare`` returns the (n, d) row matrix; the
-    generic builder's row-indexing composes with 2-D prepared arrays), then
-    blob-merged. No ``prepare_arrow``: rows are float matrices, not hashes,
-    and numpy stacking from Arrow-backed pandas is already the fast path."""
+    the Arrow stream path (``prepare_arrow`` returns the (n, d) row matrix;
+    the stream build's row-indexing composes with 2-D prepared arrays),
+    then blob-merged. ``prepare`` is the same matrix from a pandas frame."""
 
     name = "freqdir"
     hash_dedup = False
@@ -184,6 +183,19 @@ class FdSpec:
         if len(element_cols) != 1:
             raise ValueError("FD takes exactly one embedding column")
         return np.stack(pdf[element_cols[0]].to_numpy()).astype(np.float64)
+
+    def prepare_arrow(self, batch, element_cols):
+        """(n, d) float64 view of a list column's flat values buffer."""
+        import pyarrow.compute as pc
+
+        if len(element_cols) != 1:
+            raise ValueError("FD takes exactly one embedding column")
+        rows = batch.column(element_cols[0])
+        lens = pc.list_value_length(rows).to_numpy(zero_copy_only=False)
+        if lens.shape[0] and (lens != lens[0]).any():
+            raise ValueError("embedding rows have different lengths")
+        flat = rows.flatten().to_numpy(zero_copy_only=False)
+        return flat.astype(np.float64).reshape(len(rows), -1)
 
     def ingest(self, sketch: FrequentDirections, prepared: np.ndarray) -> None:
         sketch.update(prepared)

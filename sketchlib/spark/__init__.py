@@ -1,6 +1,7 @@
 """Spark integration: two-stage mergeable sketch aggregation, estimate UDFs,
-skew handling, checkpoint/resume.  Everything is DataFrame-native; Python
-executes only inside Arrow-batched Pandas UDFs (no per-row Python)."""
+skew handling, checkpoint/resume.  Everything is DataFrame-native; sketch
+code crosses the Python boundary only as Arrow batches (``mapInArrow``,
+``applyInArrow``, ``arrow_udf``)."""
 
 from .aggregate import (  # noqa: F401
     HllSpec,

@@ -13,11 +13,12 @@ two-phase aggregation explicitly (SURVEY.md §4):
   a hot group contributes at most one partial per partition.
 * **stage 2 — final merge**: JVM-side ``groupBy().agg(collect_list(sketch))``
   (map-side partial aggregation + one exchange of blobs) followed by ONE
-  vectorized UDF that fold-merges each group's blobs (register-wise max —
+  Arrow UDF that fold-merges each group's blobs (register-wise max —
   associative & commutative, so any merge order yields bit-identical
-  canonical bytes; a lone partial passes through untouched). For HLL it is
-  an Arrow UDF whose whole batch of groups folds in one call of the wire
-  kernel :func:`sketchlib.hll.fold_segments`.
+  canonical bytes; a lone partial passes through untouched). For HLL the
+  whole batch of groups folds in one call of the wire kernel
+  :func:`sketchlib.hll.fold_segments`; other specs fold each group's
+  blobs in list order.
 
 This is the DataFrame-native equivalent of the reference's build-then-Merge
 pipeline (``CardinalityEstimator.cs:704-730``, ``CardinalityEstimatorExtensions.cs:87-103``)
@@ -31,7 +32,7 @@ RoundRobin -> ``repartition(n)``, Chunked -> ``coalesce(n)``; see
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -404,6 +405,24 @@ class _PairAccumulator:
         yield out
 
 
+def _element_batches(batches, element_cols: Sequence[str]):
+    """The non-empty Arrow batches of a partition with every row that has a
+    NULL element dropped (NULL elements carry no sketch mass)."""
+    import pyarrow.compute as pc
+
+    for batch in batches:
+        mask = None
+        for c in element_cols:
+            col = batch.column(c)
+            if col.null_count:
+                v = pc.is_valid(col)
+                mask = v if mask is None else pc.and_(mask, v)
+        if mask is not None:
+            batch = batch.filter(mask)
+        if batch.num_rows:
+            yield batch
+
+
 def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
                    group_cols: Sequence[str] = (), spec: HllSpec | None = None,
                    sketch_col: str = "sketch") -> DataFrame:
@@ -448,28 +467,14 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
         return to_arrow_schema(out_schema)
 
     def build_arrow(batches):
-        """Arrow-native build (mapInArrow): element bytes are hashed straight
-        from Arrow buffers; group keys factorize via dictionary encoding.
-        Strings never materialize as Python objects — this path is ~3x the
-        row throughput of the pandas path on url-shaped data."""
-        import pyarrow as pa
-
+        """Dedup-able sketches (HLL/Bloom/Theta/Cuckoo): element bytes are
+        hashed straight from Arrow buffers and group keys factorize via
+        dictionary encoding into the vectorized pair accumulator; per-group
+        Python cost is one sketch materialization per group per partition,
+        at partition end."""
         pa_schema = _arrow_out_schema()
         acc = _PairAccumulator(spec)
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            mask = None
-            for c in element_cols:
-                col = batch.column(c)
-                if col.null_count:
-                    import pyarrow.compute as pc
-                    v = pc.is_valid(col)
-                    mask = v if mask is None else pc.and_(mask, v)
-            if mask is not None:
-                batch = batch.filter(mask)
-                if batch.num_rows == 0:
-                    continue
+        for batch in _element_batches(batches, element_cols):
             prepared = spec.prepare_arrow(batch, element_cols)
             if group_cols:
                 local_codes, key_cols = arrow_group_codes(batch, group_cols)
@@ -481,55 +486,13 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
             yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
                                              preserve_index=False)
 
-    def build_dedup(batches: Iterable[pd.DataFrame]):
-        """Dedup-able sketches (HLL/Bloom): vectorized pair accumulation;
-        per-group Python cost is one sketch materialization per group per
-        partition, at partition end."""
-        acc = _PairAccumulator(spec)
-        for pdf in batches:
-            pdf = pdf.dropna(subset=element_cols)
-            if pdf.empty:
-                continue
-            prepared = spec.prepare(pdf, element_cols)
-            if group_cols:
-                if len(group_cols) == 1:
-                    local_codes, uniques = pd.factorize(
-                        pdf[group_cols[0]], use_na_sentinel=False)
-                    key_cols = (np.asarray(uniques),)
-                else:
-                    mi = pd.MultiIndex.from_frame(pdf[group_cols])
-                    local_codes, uniques = mi.factorize(use_na_sentinel=False)
-                    key_cols = tuple(np.asarray(uniques.get_level_values(i))
-                                     for i in range(len(group_cols)))
-            else:
-                local_codes = np.zeros(len(pdf), dtype=np.int64)
-                key_cols = (np.zeros(1, dtype=np.int64),)
-            acc.add_batch(np.asarray(local_codes, dtype=np.int64), key_cols, prepared)
-        yield from acc.finalize(group_cols, sketch_col)
-
     def build_stream_arrow(batches):
-        """Arrow-native streaming build for non-dedup sketches (CMS,
-        t-digest, KLL): one live sketch per group; per batch the rows are
-        ordered by group code once and each group's slice is ingested
-        vectorized."""
-        import pyarrow as pa
-
+        """Streaming build for non-dedup sketches (CMS, t-digest, KLL, FD):
+        one live sketch per group; per batch the rows are ordered by group
+        code once and each group's slice is ingested vectorized."""
         pa_schema = _arrow_out_schema()
         sketches: dict[tuple, object] = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            mask = None
-            for c in element_cols:
-                col = batch.column(c)
-                if col.null_count:
-                    import pyarrow.compute as pc
-                    v = pc.is_valid(col)
-                    mask = v if mask is None else pc.and_(mask, v)
-            if mask is not None:
-                batch = batch.filter(mask)
-                if batch.num_rows == 0:
-                    continue
+        for batch in _element_batches(batches, element_cols):
             prepared = spec.prepare_arrow(batch, element_cols)
             if group_cols:
                 codes, key_cols = arrow_group_codes(batch, group_cols)
@@ -555,60 +518,35 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
             yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
                                              preserve_index=False)
 
-    def build_stream(batches: Iterable[pd.DataFrame]):
-        """Generic streaming path: one live sketch per group, batch-ingested."""
-        sketches: dict[tuple, object] = {}
-        for pdf in batches:
-            pdf = pdf.dropna(subset=element_cols)
-            if pdf.empty:
-                continue
-            prepared = spec.prepare(pdf, element_cols)
-            if group_cols:
-                indices = pdf.groupby(group_cols, sort=False, dropna=False).indices
-                for key, idx in indices.items():
-                    k = key if isinstance(key, tuple) else (key,)
-                    sk = sketches.get(k)
-                    if sk is None:
-                        sk = spec.make()
-                        sketches[k] = sk
-                    spec.ingest(sk, prepared[idx])
-            else:
-                sk = sketches.get(())
-                if sk is None:
-                    sk = spec.make()
-                    sketches[()] = sk
-                spec.ingest(sk, prepared)
-        if sketches:
-            rows = [list(k) + [spec.to_bytes(s)] for k, s in sketches.items()]
-            yield pd.DataFrame(rows, columns=group_cols + [sketch_col])
-
     needed = list(dict.fromkeys(group_cols + element_cols))  # dedupe overlap
-    pruned = df.select(*needed)
-    has_arrow = hasattr(spec, "prepare_arrow")
-    if getattr(spec, "hash_dedup", False):
-        if has_arrow:
-            return pruned.mapInArrow(build_arrow, out_schema)
-        return pruned.mapInPandas(build_dedup, out_schema)
-    if has_arrow:
-        return pruned.mapInArrow(build_stream_arrow, out_schema)
-    return pruned.mapInPandas(build_stream, out_schema)
+    build = build_arrow if getattr(spec, "hash_dedup", False) else build_stream_arrow
+    return df.select(*needed).mapInArrow(build, out_schema)
 
 
-def _object_fold(spec):
-    """Blob-list fold for specs without a batch kernel: the spec's own
-    ``fold_blobs`` if it has one, else sequential from_bytes/merge/to_bytes."""
-    fold = getattr(spec, "fold_blobs", None)
-    if fold is not None:
-        return fold
+def _object_merge(spec, blobs):
+    """Sequential from_bytes/merge over a non-empty list of blobs: the fold
+    of every spec without a batch kernel."""
+    merged = None
+    for b in blobs:
+        sk = spec.from_bytes(b)
+        merged = sk if merged is None else spec.merge(merged, sk)
+    return merged
 
-    def fold(blobs):
-        merged = None
-        for b in blobs:
-            sk = spec.from_bytes(bytes(b))
-            merged = sk if merged is None else spec.merge(merged, sk)
-        return spec.to_bytes(merged)
 
-    return fold
+def _segment_bounds(seg_ptr: np.ndarray):
+    return zip(seg_ptr[:-1].tolist(), seg_ptr[1:].tolist())
+
+
+def _drop_null_blobs(blobs: pa.Array, lens: np.ndarray, blob_idx: np.ndarray):
+    """Segments without their NULL blobs, which carry no sketch mass:
+    ``(blobs, lens, blob_idx)`` with every remaining ``blob_idx`` valid."""
+    if blobs.null_count:
+        keep = blobs.is_valid().to_numpy(zero_copy_only=False)[blob_idx]
+        seg_of = np.repeat(np.arange(lens.shape[0]), lens)
+        lens = np.bincount(seg_of[keep], minlength=lens.shape[0])
+        blob_idx = blob_idx[keep]
+        blobs = blobs.fill_null(b"")
+    return blobs, lens, blob_idx
 
 
 def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
@@ -619,14 +557,9 @@ def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
     NULL blobs carry no sketch mass. A lone blob passes through
     byte-for-byte (canonical serialization: it IS the merge result), a
     segment with no blob yields ``empty``, and the rest fold in one
-    ``spec.fold_segments`` call (or the spec's object fold)."""
-    lens = np.diff(seg_ptr)
-    if blobs.null_count:
-        keep = blobs.is_valid().to_numpy(zero_copy_only=False)[blob_idx]
-        seg_of = np.repeat(np.arange(lens.shape[0]), lens)
-        lens = np.bincount(seg_of[keep], minlength=lens.shape[0])
-        blob_idx = blob_idx[keep]
-        blobs = blobs.fill_null(b"")
+    ``spec.fold_segments`` call, or in segment order through the spec's
+    object merge."""
+    blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
     first = np.cumsum(lens) - lens
     multi = np.flatnonzero(lens > 1)
     sub_idx = blob_idx[concat_ranges(first[multi], lens[multi])]
@@ -636,10 +569,9 @@ def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
     if kernel is not None:
         folded = kernel(*arrow_flat_bytes(blobs), sub_ptr, sub_idx)
     else:
-        fold = _object_fold(spec)
-        values = blobs.to_pylist()
-        folded = [fold([values[i] for i in sub_idx[a:b]])
-                  for a, b in zip(sub_ptr[:-1].tolist(), sub_ptr[1:].tolist())]
+        values = blobs.take(pa.array(sub_idx)).to_pylist()
+        folded = [spec.to_bytes(_object_merge(spec, values[a:b]))
+                  for a, b in _segment_bounds(sub_ptr)]
     pick = np.full(lens.shape[0], len(blobs) + multi.shape[0], dtype=np.int64)
     single = lens == 1
     pick[single] = blob_idx[first[single]]
@@ -648,45 +580,76 @@ def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
     return pool.take(pa.array(pick))
 
 
+def _list_segments(lists: pa.Array):
+    """``(blobs, seg_ptr, blob_idx)`` of an ``array<binary>`` batch: segment
+    ``s`` is row ``s``'s list (a NULL list is an empty segment)."""
+    offsets = lists.offsets.to_numpy().astype(np.int64)
+    return (lists.values, offsets - offsets[0],
+            np.arange(offsets[0], offsets[-1], dtype=np.int64))
+
+
+def _scatter(values, where: np.ndarray, fill, type_: pa.DataType) -> pa.Array:
+    """Arrow array with ``values`` at the rows where ``where`` is True and
+    ``fill`` (None: NULL) at the others. A NaN result (e.g. a quantile of
+    an empty sketch) becomes NULL, as Spark's pandas conversion makes it."""
+    pick = np.full(where.shape[0], len(values), dtype=np.int64)
+    pick[where] = np.arange(len(values))
+    pool = pa.concat_arrays([pa.array(values, type=type_, from_pandas=True),
+                             pa.array([fill], type=type_, from_pandas=True)])
+    return pool.take(pa.array(pick))
+
+
+def per_row_udf(return_type: T.DataType, fn):
+    """Arrow UDF applying ``fn`` to the Python values (``bytes`` for blobs)
+    of every row whose arguments are all non-NULL and not NaN; any other
+    row gives NULL. Integer arguments keep their type with or without NULLs
+    in the batch."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    type_ = to_arrow_type(return_type)
+
+    @F.arrow_udf(return_type)
+    def _rows(*cols: pa.Array) -> pa.Array:
+        ok = np.ones(len(cols[0]), dtype=bool)
+        for c in cols:
+            if pa.types.is_floating(c.type):
+                ok &= ~np.isnan(c.to_numpy(zero_copy_only=False))
+            else:
+                ok &= c.is_valid().to_numpy(zero_copy_only=False)
+        take = pa.array(np.flatnonzero(ok))
+        args = zip(*(c.take(take).to_pylist() for c in cols))
+        return _scatter([fn(*a) for a in args], ok, None, type_)
+
+    return _rows
+
+
 def merge_blobs_udf(spec) -> Column:
     """Vectorized fold-merge of an ``array<binary>`` column of serialized
     partial sketches into one blob per row.  Used after a JVM-side
     ``groupBy().agg(collect_list(sketch))`` — the whole merge stage stays in
     Spark's hash aggregate (map-side partial collect + shuffle), and Python is
-    entered exactly once per output group with an Arrow batch of groups, not
-    once per group (the ``applyInPandas`` per-group overhead this replaces).
+    entered once per Arrow batch of groups, not once per group.
 
-    A spec with a batch kernel (``fold_segments``: HLL) gets an Arrow UDF
-    that folds the whole batch of groups in one kernel call; other specs
-    fold group by group in a pandas UDF. Either way a lone partial passes
-    through byte-for-byte and an empty list (global agg over zero rows)
-    gives the empty sketch, so COUNT(DISTINCT <empty>) estimates 0 like
-    SQL."""
+    One Arrow UDF for every spec: a spec with a batch kernel
+    (``fold_segments``: HLL) folds the whole batch of groups in one kernel
+    call; other specs fold each group in list order through
+    ``from_bytes``/``merge``/``to_bytes``. A lone partial passes through
+    byte-for-byte, NULL blobs carry no sketch mass, and an empty list
+    (global agg over zero rows) gives the empty sketch, so
+    COUNT(DISTINCT <empty>) estimates 0 like SQL."""
     empty = spec.to_bytes(spec.make())
-    if getattr(spec, "fold_segments", None) is not None:
-        @F.arrow_udf(T.BinaryType())
-        def _fold(lists: pa.Array) -> pa.Array:
-            return _fold_arrow(spec, lists.values,
-                               lists.offsets.to_numpy().astype(np.int64),
-                               np.arange(len(lists.values)), empty)
 
-        return _fold
+    @F.arrow_udf(T.BinaryType())
+    def _fold(lists: pa.Array) -> pa.Array:
+        return _fold_arrow(spec, *_list_segments(lists), empty)
 
-    fold = _object_fold(spec)
-
-    @F.pandas_udf(T.BinaryType())
-    def _merge(lists: pd.Series) -> pd.Series:
-        return pd.Series([bytes(blobs[0]) if len(blobs) == 1
-                          else fold([bytes(b) for b in blobs]) if len(blobs)
-                          else empty
-                          for blobs in lists])
-
-    return _merge
+    return _fold
 
 
 def merge_estimate_udf(spec) -> Column:
     """Fused fold-merge + estimate over an ``array<binary>`` column: one
-    Python entry per output group yielding the scalar estimate directly.
+    Python entry per Arrow batch of groups yielding the scalar estimates
+    directly.
 
     Functionally identical to ``merge_blobs_udf`` followed by
     ``estimate_col`` (canonical serialization round-trips bit-for-bit, so
@@ -696,48 +659,32 @@ def merge_estimate_udf(spec) -> Column:
     per-group query that only wants the NUMBER, this removes one full
     JVM->Python->JVM round trip of every group's blob plus a serialize +
     deserialize per group.  With a batch kernel (HLL) the whole Arrow
-    batch of groups is one ``fold_segments(..., estimate=True)`` call."""
+    batch of groups is one ``fold_segments(..., estimate=True)`` call;
+    other specs estimate each group's merged object. An empty list
+    estimates as the empty sketch."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     empty_estimate = spec.estimate(spec.make())
-    if getattr(spec, "fold_segments", None) is not None:
-        @F.arrow_udf(spec.estimate_type)
-        def _fold_estimate(lists: pa.Array) -> pa.Array:
-            offsets = lists.offsets.to_numpy().astype(np.int64)
-            lens = np.diff(offsets)
-            live = np.flatnonzero(lens)
-            seg_ptr = np.zeros(live.shape[0] + 1, dtype=np.int64)
-            np.cumsum(lens[live], out=seg_ptr[1:])
-            est = np.full(lens.shape[0], empty_estimate, dtype=np.int64)
-            est[live] = spec.fold_segments(
-                *arrow_flat_bytes(lists.values), seg_ptr,
-                concat_ranges(offsets[live], lens[live]), estimate=True)
-            return pa.array(est)
+    type_ = to_arrow_type(spec.estimate_type)
+    kernel = getattr(spec, "fold_segments", None)
 
-        return _fold_estimate
+    @F.arrow_udf(spec.estimate_type)
+    def _fold_estimate(lists: pa.Array) -> pa.Array:
+        blobs, seg_ptr, blob_idx = _list_segments(lists)
+        blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
+        live = lens > 0
+        live_ptr = np.zeros(np.count_nonzero(live) + 1, dtype=np.int64)
+        np.cumsum(lens[live], out=live_ptr[1:])
+        if kernel is not None:
+            est = kernel(*arrow_flat_bytes(blobs), live_ptr, blob_idx,
+                         estimate=True)
+        else:
+            values = blobs.take(pa.array(blob_idx)).to_pylist()
+            est = [spec.estimate(_object_merge(spec, values[a:b]))
+                   for a, b in _segment_bounds(live_ptr)]
+        return _scatter(est, live, empty_estimate, type_)
 
-    fold = getattr(spec, "fold_blobs", None)
-
-    @F.pandas_udf(spec.estimate_type)
-    def _merge_estimate(lists: pd.Series) -> pd.Series:
-        out = []
-        for blobs in lists:
-            if len(blobs) == 0:
-                out.append(empty_estimate)
-                continue
-            if len(blobs) == 1:
-                out.append(spec.estimate(spec.from_bytes(bytes(blobs[0]))))
-                continue
-            if fold is not None:
-                out.append(spec.estimate(
-                    spec.from_bytes(fold([bytes(b) for b in blobs]))))
-                continue
-            merged = None
-            for b in blobs:
-                sk = spec.from_bytes(bytes(b))
-                merged = sk if merged is None else spec.merge(merged, sk)
-            out.append(spec.estimate(merged))
-        return pd.Series(out)
-
-    return _merge_estimate
+    return _fold_estimate
 
 
 def merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
@@ -808,7 +755,7 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
     lexsorts rows by (group, order) and folds every distinct (group, o)
     anchor's rows with order in ``(o - window, o]`` — all windows of the
     partition in one :func:`sketchlib.hll.fold_segments` call for HLL,
-    ``spec.fold_blobs`` or the object merge otherwise. Task memory is
+    through the object merge otherwise. Task memory is
     O(blobs in the partition), like the ``collect_list`` buffer of a
     grouped merge. Associativity makes the result bit-identical to
     building each window from raw rows; a one-blob window passes its blob
@@ -866,26 +813,25 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
 
 
 def estimate_col(spec: HllSpec | None = None, sketch_col: str | Column = "sketch") -> Column:
-    """Scalar estimate as a vectorized UDF over sketch blobs (one blob per
+    """Scalar estimate as one Arrow UDF over sketch blobs (one blob per
     group — Python cost is per-group, not per-row). A spec with a batch
-    estimator (``estimate_blobs``: HLL) gets an Arrow UDF estimating the
-    whole batch in one call; NULL blobs estimate to NULL."""
+    estimator (``estimate_blobs``: HLL) estimates the whole batch in one
+    call, other specs one deserialized blob at a time; NULL blobs estimate
+    to NULL."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
     spec = spec or HllSpec()
     col = sketch_col if isinstance(sketch_col, Column) else F.col(sketch_col)
-    if getattr(spec, "estimate_blobs", None) is not None:
-        @F.arrow_udf(spec.estimate_type)
-        def _estimate_blobs(blobs: pa.Array) -> pa.Array:
-            valid = blobs.is_valid().to_numpy(zero_copy_only=False)
-            est = np.zeros(len(blobs), dtype=np.int64)
-            est[valid] = spec.estimate_blobs(*arrow_flat_bytes(blobs.drop_null()))
-            return pa.array(est, mask=~valid)
+    type_ = to_arrow_type(spec.estimate_type)
+    kernel = getattr(spec, "estimate_blobs", None)
 
-        return _estimate_blobs(col)
-
-    @F.pandas_udf(spec.estimate_type)
-    def _estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else spec.estimate(spec.from_bytes(bytes(b)))
-                          for b in blobs])
+    @F.arrow_udf(spec.estimate_type)
+    def _estimate(blobs: pa.Array) -> pa.Array:
+        valid = blobs.is_valid().to_numpy(zero_copy_only=False)
+        live = blobs.drop_null()
+        est = (kernel(*arrow_flat_bytes(live)) if kernel is not None
+               else [spec.estimate(spec.from_bytes(b)) for b in live.to_pylist()])
+        return _scatter(est, valid, None, type_)
 
     return _estimate(col)
 

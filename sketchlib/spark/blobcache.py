@@ -1,8 +1,7 @@
 """Shared infrastructure for broadcast-blob probe UDFs: driver-side
-broadcast reuse, worker-process-level deserialization caching, and the
-typed null-filler literal the probes coalesce with.
+broadcast reuse and worker-process-level deserialization caching.
 
-Worker cache: a pandas UDF's closure — including any dict created next
+Worker cache: a UDF's closure — including any dict created next
 to it — is re-pickled into EVERY task, so a closure-level ``cache = {}``
 only dedups across the Arrow batches of one task: a probe stage with
 thousands of short tasks still re-parses the blob thousands of times per
@@ -110,28 +109,3 @@ def col_type(df, col: str):
     from pyspark.sql import functions as F
 
     return df.select(F.col(col)).schema[0].dataType
-
-
-def zero_lit(dt):
-    """A non-null literal of the column's exact type (coalesce filler for
-    rows whose result is masked out anyway).  Keeping nulls out of the
-    Arrow batch keeps integer columns int64 in pandas — one null degrades
-    the whole batch to float64, mis-hashing every key in it."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                       T.FloatType, T.DoubleType, T.DecimalType)):
-        return F.lit(0).cast(dt)
-    if isinstance(dt, T.StringType):
-        return F.lit("")
-    if isinstance(dt, T.BinaryType):
-        return F.lit(b"")
-    if isinstance(dt, T.BooleanType):
-        return F.lit(False)
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return F.timestamp_seconds(F.lit(0)).cast(dt)
-    if isinstance(dt, T.DateType):
-        return F.date_from_unix_date(F.lit(0))
-    raise TypeError(f"unsupported membership key type {dt}; drop nulls or "
-                    "cast the column first")

@@ -38,7 +38,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .aggregate import build_partials, merge_partials
+from .aggregate import build_partials, merge_partials, per_row_udf
 from .skew import tree_merge_partials
 
 
@@ -124,15 +124,11 @@ class SketchCheckpoint:
         so mixed stage-1 outputs that interleave non-blob rows (heavy
         hitters' candidates) don't inflate the metric."""
         from pyspark.sql import Observation
+        from pyspark.sql import types as T
 
         spec = self.spec
-
-        @F.pandas_udf("long")
-        def _adds(blobs):
-            return blobs.map(
-                lambda b: 0 if b is None
-                else int(spec.from_bytes(bytes(b)).count_additions))
-
+        _adds = per_row_udf(T.LongType(),
+                            lambda b: int(spec.from_bytes(b).count_additions))
         obs = Observation()
         observed = partials.observe(
             obs, F.count(F.col(blob_col)).alias("n_partials"),
@@ -178,7 +174,11 @@ class SketchCheckpoint:
         later unit's scan back-fills executors freed by an earlier unit's
         write tail.  2-3 in flight is plenty; the returned ``records`` list
         stays in ``units`` order, and manifest-line order (which may
-        interleave) carries no semantics — completion is set-based."""
+        interleave) carries no semantics — completion is set-based.  If
+        units fail, every unit still runs to its end and one
+        ``RuntimeError`` names each failed unit; the units that
+        committed stay complete, so a re-run resumes with the failed ones
+        only."""
         self._check_resume_config()
         done = self.completed_units()
         todo = [u for u in units if str(u) not in done]
@@ -186,7 +186,17 @@ class SketchCheckpoint:
             with ThreadPoolExecutor(max_workers=parallelism) as pool:
                 futs = [pool.submit(self.run_unit, source(u), str(u))
                         for u in todo]
-                records = [f.result() for f in futs]
+            # the pool has waited for every unit: the ones that committed
+            # stay in the manifest (resume skips them), and one error
+            # names every unit that failed
+            failed = [(u, f.exception()) for u, f in zip(todo, futs)
+                      if f.exception() is not None]
+            if failed:
+                raise RuntimeError(
+                    f"{len(failed)} checkpoint unit(s) failed: " + "; ".join(
+                        f"{u}: {type(e).__name__}: {e}" for u, e in failed)
+                ) from failed[0][1]
+            records = [f.result() for f in futs]
         else:
             records = [self.run_unit(source(u), str(u)) for u in todo]
         return {"resumed": bool(done), "skipped": len(units) - len(todo),

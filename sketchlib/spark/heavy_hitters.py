@@ -5,7 +5,7 @@ Spark's own ``countMinSketch``-based frequent-items): the CMS alone cannot
 *enumerate* heavy values (it only answers point queries), so stage 1 also
 emits each partition's locally-frequent values as candidates:
 
-* stage 1 (``mapInPandas``, one pass): per (group, partition) a partial CMS
+* stage 1 (``mapInArrow``, one pass): per (group, partition) a partial CMS
   over all values **and** the top ``candidates_per_partition`` values by a
   *bounded* Misra–Gries-style candidate tracker (capacity ``4*n_cand``):
   every batch's per-value weight sums feed the CMS immediately (CMS cells
@@ -20,7 +20,7 @@ emits each partition's locally-frequent values as candidates:
   candidate union covers the true heavy hitters with the standard
   oversampling argument; the MG decrement only *undercounts* survivors, so
   ``local_count`` stays a valid lower bound.
-* stage 2 (one shuffle, grouped ``applyInPandas``): per group, candidate
+* stage 2 (one shuffle, grouped ``applyInArrow``): per group, candidate
   local counts sum exactly, CMS partials fold cell-wise, every candidate is
   estimated against the merged CMS (upper-biased, overcount <= eps*N
   w.h.p.), and the top k by (estimate, value) are kept.  One pass over the
@@ -36,15 +36,16 @@ per input partition; at >=10k partitions pre-merge units via
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .aggregate import _group_field, hash_series
+from .aggregate import _group_field, _object_merge, hash_arrow_columns
 from .blobcache import col_type as _col_type
 from .specs import CmsSpec
 
@@ -118,11 +119,9 @@ def heavy_hitters_partials(df: DataFrame, value_col: str,
         # Arrow-native stage 1: the per-batch (value -> weight-sum) reduction
         # runs in Arrow's C++ hash aggregation and values hash straight from
         # the Arrow buffers — raw rows are NEVER materialized as pandas
-        # objects (measured 6.8x on the 200k-row batch reduction alone; the
-        # old mapInPandas path also paid a full per-batch string
-        # materialization before the kernel even started).  Only the <=
-        # uniques-sized aggregate crosses into pandas for the MG table.
-        import pyarrow as pa
+        # objects (measured 6.8x on the 200k-row batch reduction alone).
+        # Only the <= uniques-sized aggregate crosses into pandas for the
+        # MG table.
         import pyarrow.compute as pc
 
         from ..encoding import arrow_flat_bytes
@@ -193,55 +192,47 @@ def heavy_hitters_from_partials(partials: DataFrame,
                                 k: int = 20, group_cols: Sequence[str] = (),
                                 spec: CmsSpec | None = None) -> DataFrame:
     """Stage 2 over (possibly unioned-across-units) stage-1 partials: ONE
-    grouped ``applyInPandas`` pass that sums candidate lower bounds, folds
-    the group's CMS blobs cell-wise, point-estimates every candidate and
-    keeps the top k.  Consumes the partials exactly once (no persist)."""
+    grouped ``applyInArrow`` pass that sums candidate lower bounds, folds
+    the group's CMS blobs, point-estimates every candidate and keeps the
+    top k.  Candidates are hashed from their Arrow buffers with
+    :func:`hash_arrow_columns`, the encoding stage 1 built the CMS with.
+    Consumes the partials exactly once (no persist)."""
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     group_cols = list(group_cols)
     spec = spec or CmsSpec()
 
-    vtype = partials.schema["value"].dataType
     out_schema = T.StructType(
         [_group_field(partials, g) for g in group_cols]
-        + [T.StructField("value", vtype, True),
+        + [T.StructField("value", partials.schema["value"].dataType, True),
            T.StructField("est_count", T.LongType(), True),
            T.StructField("lower_bound", T.LongType(), True)]
     )
-    # the CMS marker rows carry NULL values, which promotes an integer value
-    # column to float64 in pandas — cast candidates back to the declared type
-    # so the point-query hashes the same bytes the build side hashed
-    _np_value = {"long": np.int64, "integer": np.int32, "short": np.int16,
-                 "byte": np.int8, "double": np.float64,
-                 "float": np.float32}.get(vtype.typeName())
+    pa_schema = to_arrow_schema(out_schema)
 
-    def rank(pdf: pd.DataFrame) -> pd.DataFrame:
-        blobs = pdf["cms"].dropna()
-        cand = pdf[pdf["value"].notna()]
-        if blobs.empty or cand.empty:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        cms = spec.from_bytes(bytes(blobs.iloc[0]))
-        for b in blobs.iloc[1:]:
-            cms = spec.merge(cms, spec.from_bytes(bytes(b)))
-        lower = cand.groupby("value", sort=False)["local_count"].sum()
-        values = pd.Series(lower.index)
-        if _np_value is not None:
-            values = values.astype(_np_value)
-        est = cms.estimate_hashes(hash_series(values, spec.hash_name))
-        out = pd.DataFrame({"value": values.to_numpy(),
-                            "est_count": est.astype(np.int64),
-                            "lower_bound": lower.to_numpy(dtype=np.int64)})
-        out = out.sort_values(["est_count", "value"],
-                              ascending=[False, True], kind="stable").head(k)
-        for g in group_cols:
-            out[g] = pdf[g].iloc[0]
-        return out[[*group_cols, "value", "est_count", "lower_bound"]]
+    def rank(table: pa.Table) -> pa.Table:
+        blobs = table.column("cms").drop_null().to_pylist()
+        cand = table.filter(pc.is_valid(table.column("value")))
+        if not blobs or cand.num_rows == 0:
+            return pa_schema.empty_table()
+        cms = _object_merge(spec, blobs)
+        lower = cand.group_by("value", use_threads=False).aggregate(
+            [("local_count", "sum")])
+        values = pa.record_batch([lower.column("value").combine_chunks()],
+                                 names=["value"])
+        est = cms.estimate_hashes(
+            hash_arrow_columns(values, ["value"], spec.hash_name))
+        top = pa.table({"value": values.column(0),
+                        "est_count": pa.array(est.astype(np.int64)),
+                        "lower_bound": lower.column("local_count_sum")})
+        top = top.take(pc.sort_indices(top, sort_keys=[
+            ("est_count", "descending"), ("value", "ascending")])[:k])
+        first = pa.array(np.zeros(top.num_rows, dtype=np.int64))
+        keys = [table.column(g).take(first) for g in group_cols]
+        return pa.Table.from_arrays(keys + top.columns, schema=pa_schema)
 
-    if group_cols:
-        return (partials.groupBy(*group_cols)
-                .applyInPandas(lambda pdf: rank(pdf), out_schema))
-    schema_g = T.StructType([T.StructField("__g", T.IntegerType())] + list(out_schema))
-    return (partials.withColumn("__g", F.lit(1)).groupBy("__g")
-            .applyInPandas(lambda pdf: rank(pdf).assign(__g=1), schema_g)
-            .drop("__g"))
+    return partials.groupBy(*group_cols).applyInArrow(rank, out_schema)
 
 
 def heavy_hitters(df: DataFrame, value_col: str, k: int = 20,
@@ -269,8 +260,7 @@ def estimate_counts(df: DataFrame, value_col: str, cms_blob: bytes,
     The blob ships via ``sc.broadcast`` (torrent distribution, one copy per
     executor) rather than the UDF closure — a right-sized 100 TB CMS/Bloom
     can be GBs, and closures re-ship per task."""
-    from .blobcache import (blob_digest, blob_token, broadcast_blob,
-                            col_type, get_or_load, zero_lit)
+    from .blobcache import blob_digest, blob_token, broadcast_blob, get_or_load
 
     spec = spec or CmsSpec()
     sc = df.sparkSession.sparkContext
@@ -279,21 +269,21 @@ def estimate_counts(df: DataFrame, value_col: str, cms_blob: bytes,
     # (blob, spec) share one per-worker deserialization
     token = blob_token(blob_digest(cms_blob), spec)
 
-    @F.pandas_udf(T.LongType())
-    def _est(values: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.LongType())
+    def _est(values: pa.Array) -> pa.Array:
         # deserialize ONCE per worker PROCESS, not per task or Arrow
         # batch: a closure-level cache dict is re-pickled into every task,
         # so only the module-level blobcache survives task boundaries —
         # and re-parsing a right-sized (GBs at 100 TB) blob once per short
         # task would dominate a large probe stage.
         cms = get_or_load(token, lambda: spec.from_bytes(blob_bc.value))
-        return pd.Series(cms.estimate_hashes(hash_series(values, spec.hash_name)).astype(np.int64))
+        # a NULL value was never counted by the build side: estimate 0
+        valid = values.is_valid().to_numpy(zero_copy_only=False)
+        est = np.zeros(len(values), dtype=np.int64)
+        if valid.any():
+            live = pa.record_batch([values.drop_null()], names=["v"])
+            est[valid] = cms.estimate_hashes(
+                hash_arrow_columns(live, ["v"], spec.hash_name))
+        return pa.array(est)
 
-    # nulls never reach pandas: one null in an Arrow batch degrades an
-    # int64 key column to float64 (mis-hashing every key in the batch);
-    # coalesce JVM-side — where the type is known — and mask to 0 (a null
-    # key was never counted by the build side)
-    col = F.col(value_col)
-    safe = F.coalesce(col, zero_lit(col_type(df, value_col)))
-    return df.withColumn(
-        est_name, F.when(col.isNotNull(), _est(safe)).otherwise(F.lit(0)))
+    return df.withColumn(est_name, _est(F.col(value_col)))

@@ -12,21 +12,20 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .aggregate import hash_columns, sketch_agg
-# broadcast reuse, worker dedup cache, and typed null fillers are shared
-# probe infrastructure (heavy_hitters uses them too) — see blobcache
-from .blobcache import blob_digest, blob_token, broadcast_blob, col_type
-from .blobcache import get_or_load, zero_lit
+from .aggregate import hash_arrow_columns, hash_columns, sketch_agg
+# broadcast reuse and the worker dedup cache are shared probe
+# infrastructure (heavy_hitters uses them too) — see blobcache
+from .blobcache import blob_digest, blob_token, broadcast_blob, get_or_load
 from .specs import BloomSpec, CuckooSpec
 
-# compatibility aliases for the old private names
+# compatibility alias for the old private name
 _broadcast_blob = broadcast_blob
-_zero_lit = zero_lit
 
 
 def bloom_build(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
@@ -137,34 +136,15 @@ def might_contain_udf(blob: bytes, cols: Sequence[str] | str,
 
     The blob ships via ``sc.broadcast`` (one torrent-distributed copy per
     executor) instead of the UDF closure — a right-sized 100 TB filter is
-    GBs, and closures re-serialize per task.
-
-    Dtype caveat for this raw-column form: Arrow→pandas conversion of a
-    null-BEARING integer batch degrades the WHOLE batch to float64, and
-    the hash encoding follows the pandas dtype — so every non-null
-    integer key sharing a batch with a null mis-hashes (IEEE-bits
-    encoding vs the build side's integer-bytes encoding) and probes as a
-    false negative, small values included.  The in-UDF guard below masks
-    the null ROWS correctly but cannot restore the batch's dtype (a
-    float64 batch is indistinguishable from a genuine double column
-    here).  The frame-level :func:`filter_might_contain` /
-    :func:`probe_might_contain` coalesce nulls JVM-side (where column
-    types are known), so no null ever reaches pandas and every dtype
-    stays exact — ALWAYS prefer them for possibly-null integer keys;
-    this raw form is only null-safe for string/binary/float keys."""
-    if isinstance(cols, str):
-        cols = [cols]
-    return _might_contain_expr(blob, list(cols), spec or BloomSpec(),
-                               [F.col(c) for c in cols],
-                               valid=None)
+    GBs, and closures re-serialize per task."""
+    return _might_contain_expr(blob, cols, spec)
 
 
-def _might_contain_expr(blob: bytes, cols: list, spec, col_exprs: list,
-                        valid: Column | None,
+def _might_contain_expr(blob: bytes, cols, spec: BloomSpec | None,
                         opaque: bool = False) -> Column:
-    """Shared core: ``valid`` non-None means the caller guarantees
-    ``col_exprs`` are null-free (JVM-side coalesce) and supplies the
-    membership verdict for the masked rows (False).
+    """Shared core: one Arrow UDF over the key columns that hashes them
+    from their Arrow buffers (the build side's encoding, whatever NULLs
+    share the batch) and masks rows with a NULL key to False.
 
     ``opaque=True`` marks the probe UDF non-deterministic, which pins it
     where the caller placed it: Catalyst's filter inference otherwise
@@ -174,6 +154,8 @@ def _might_contain_expr(blob: bytes, cols: list, spec, col_exprs: list,
     probes exactly one side by design)."""
     from pyspark.sql import SparkSession
 
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    spec = spec or BloomSpec()
     session = SparkSession.getActiveSession()
     if session is not None:
         blob_ref = broadcast_blob(session.sparkContext, blob)
@@ -189,49 +171,33 @@ def _might_contain_expr(blob: bytes, cols: list, spec, col_exprs: list,
     # token would re-parse the (GBs at 100 TB) blob once per call and
     # thrash the capped worker LRU when several probe UDFs are live
     token = blob_token(blob_digest(blob), spec)
-    guard_nulls = valid is None
+    names = [f"k{i}" for i in range(len(cols))]
 
-    @F.pandas_udf(T.BooleanType())
-    def _contains(*series: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.BooleanType())
+    def _contains(*keys: pa.Array) -> pa.Array:
         bf = get_or_load(token, lambda: spec.from_bytes(load()))
-        pdf = pd.concat(series, axis=1)
-        pdf.columns = cols
-        if guard_nulls:
-            ok = pdf.notna().all(axis=1).to_numpy()
-            if not ok.all():
-                import numpy as np
-                out = np.zeros(len(pdf), dtype=bool)
-                sub = pdf.loc[ok]
-                if len(sub):
-                    out[ok] = bf.contains_hashes(
-                        hash_columns(sub, cols, spec.hash_name))
-                return pd.Series(out)
-        return pd.Series(bf.contains_hashes(
-            hash_columns(pdf, cols, spec.hash_name)))
+        batch = pa.record_batch(list(keys), names=names)
+        valid = np.ones(batch.num_rows, dtype=bool)
+        for k in keys:
+            valid &= k.is_valid().to_numpy(zero_copy_only=False)
+        out = np.zeros(batch.num_rows, dtype=bool)
+        if valid.any():
+            out[valid] = bf.contains_hashes(hash_arrow_columns(
+                batch.filter(pa.array(valid)), names, spec.hash_name))
+        return pa.array(out)
 
     if opaque:
         _contains = _contains.asNondeterministic()
-    probe = _contains(*col_exprs)
-    return probe if valid is None else (valid & probe)
+    return _contains(*[F.col(c) for c in cols])
 
 
 def probe_might_contain(df: DataFrame, cols, blob: bytes,
                         spec: BloomSpec | None = None,
                         opaque: bool = False) -> Column:
-    """Null-exact membership column for ``df``'s key columns: nulls are
-    coalesced JVM-side to a typed filler (so integer batches never degrade
-    to float64 in pandas — exact for full-range int64) and masked to
-    False (a null key was never inserted)."""
-    if isinstance(cols, str):
-        cols = [cols]
-    cols = list(cols)
-    valid = F.lit(True)
-    safe = []
-    for c in cols:
-        valid = valid & F.col(c).isNotNull()
-        safe.append(F.coalesce(F.col(c), zero_lit(col_type(df, c))))
-    return _might_contain_expr(blob, cols, spec or BloomSpec(), safe, valid,
-                               opaque=opaque)
+    """Null-exact membership column for ``df``'s key columns: rows with a
+    NULL key are False (a null key was never inserted), and every other
+    key hashes with its exact type, full-range int64 included."""
+    return _might_contain_expr(blob, cols, spec, opaque)
 
 
 def filter_might_contain(df: DataFrame, cols, blob: bytes,

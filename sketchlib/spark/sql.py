@@ -1,7 +1,7 @@
 """SQL-string access to the sketch library.
 
-``register_sql_functions(spark)`` registers vectorized UDFs so sketch
-columns produced by the two-stage aggregation are queryable from plain
+``register_sql_functions(spark)`` registers Arrow UDFs so sketch columns
+produced by the two-stage aggregation are queryable from plain
 ``spark.sql``:
 
     SELECT lang, hll_estimate(sketch) FROM sketches_by_lang
@@ -13,14 +13,36 @@ columns produced by the two-stage aggregation are queryable from plain
 (Per-group *building* stays with the Python API — Spark has no Python UDAF
 with a partial/final split, SURVEY.md §7 — but merge/estimate compose in SQL
 through collect_list + these functions.)
+
+NULL semantics: a NULL blob, or a NULL or NaN ``q``/hash argument, gives
+NULL; ``*_merge_all`` skips NULL blobs and gives NULL for an empty list.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .aggregate import HllSpec, _fold_arrow, _list_segments, per_row_udf
+
+
+def _merge_all_udf(spec):
+    """Fold each row's list of blobs into one (the HLL kernel for HLL, the
+    spec's object merge otherwise)."""
+    @F.arrow_udf(T.BinaryType())
+    def merge_all(lists: pa.Array) -> pa.Array:
+        return _fold_arrow(spec, *_list_segments(lists), None)
+
+    return merge_all
+
+
+def _point_estimate(sketch, h) -> int:
+    """Point query of one signed 64-bit element hash."""
+    return int(sketch.estimate_hashes(
+        np.array([h], dtype=np.int64).view(np.uint64))[0])
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -33,153 +55,42 @@ def register_sql_functions(spark: SparkSession) -> None:
     from ..mg import MisraGriesSketch
     from ..tdigest import TDigest
     from ..theta import ThetaSketch
+    from .specs import AmsSpec, DdSpec, MgSpec, ThetaSpec
 
-    def _merge_all_udf(from_bytes):
-        """One fold-merge-blobs body for every family: in-place merges
-        return None (keep the accumulator), set-algebra merges (Theta)
-        return the merged sketch."""
-        @F.pandas_udf(T.BinaryType())
-        def merge_all(lists: pd.Series) -> pd.Series:
-            out = []
-            for blobs in lists:
-                merged = None
-                for b in blobs:
-                    sk = from_bytes(bytes(b))
-                    merged = sk if merged is None else (merged.merge(sk)
-                                                        or merged)
-                out.append(None if merged is None else merged.to_bytes())
-            return pd.Series(out)
-        return merge_all
-
-    hll_merge_all = _merge_all_udf(HllSketch.from_bytes)
-    ddsketch_merge_all = _merge_all_udf(DDSketch.from_bytes)
-    theta_merge_all = _merge_all_udf(ThetaSketch.from_bytes)
-    mg_merge_all = _merge_all_udf(MisraGriesSketch.from_bytes)
-
-    @F.pandas_udf(T.LongType())
-    def hll_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else HllSketch.from_bytes(bytes(b)).count()
-                          for b in blobs])
-
-    @F.pandas_udf(T.LongType())
-    def hll_count_additions(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          HllSketch.from_bytes(bytes(b)).count_additions
-                          for b in blobs])
-
-    @F.pandas_udf(T.LongType())
-    def bloom_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          BloomFilter.from_bytes(bytes(b)).estimate_cardinality()
-                          for b in blobs])
-
-    @F.pandas_udf(T.LongType())
-    def cms_total(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          CountMinSketch.from_bytes(bytes(b)).count_additions
-                          for b in blobs])
-
-    @F.pandas_udf(T.DoubleType())
-    def tdigest_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        # pd.isna(q), not q is None: a NULL in the double q column
-        # reaches the UDF as NaN, and NaN passes the [0,1] range check
-        # (comparisons are False) to silently return the sketch MAX
-        return pd.Series([None if (b is None or pd.isna(q)) else
-                          float(TDigest.from_bytes(bytes(b)).quantile(float(q)))
-                          for b, q in zip(blobs, qs)])
-
-    @F.pandas_udf(T.DoubleType())
-    def kll_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        # pd.isna(q), not q is None: a NULL in the double q column
-        # reaches the UDF as NaN, and NaN passes the [0,1] range check
-        # (comparisons are False) to silently return the sketch MAX
-        return pd.Series([None if (b is None or pd.isna(q)) else
-                          float(KllSketch.from_bytes(bytes(b)).quantile(float(q)))
-                          for b, q in zip(blobs, qs)])
-
-    @F.pandas_udf(T.DoubleType())
-    def ddsketch_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        # pd.isna(q), not q is None: a NULL in the double q column
-        # reaches the UDF as NaN, and NaN passes the [0,1] range check
-        # (comparisons are False) to silently return the sketch MAX
-        return pd.Series([None if (b is None or pd.isna(q)) else
-                          float(DDSketch.from_bytes(bytes(b)).quantile(float(q)))
-                          for b, q in zip(blobs, qs)])
-
-    @F.pandas_udf(T.LongType())
-    def theta_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          ThetaSketch.from_bytes(bytes(b)).count()
-                          for b in blobs])
-
-    @F.pandas_udf(T.LongType())
-    def theta_intersect_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if (x is None or y is None) else
-            ThetaSketch.from_bytes(bytes(x)).intersect_count(
-                ThetaSketch.from_bytes(bytes(y)))[0]
-            for x, y in zip(a, b)])
-
-    @F.pandas_udf(T.LongType())
-    def theta_a_not_b_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series([
-            None if (x is None or y is None) else
-            ThetaSketch.from_bytes(bytes(x)).a_not_b_count(
-                ThetaSketch.from_bytes(bytes(y)))[0]
-            for x, y in zip(a, b)])
-
-    @F.pandas_udf(T.LongType())
-    def mg_point_estimate(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # pd.isna(h): a NULL long hash arrives as float64 NaN, and
-        # np.int64(NaN) raises instead of yielding NULL
-        return pd.Series([
-            None if (b is None or pd.isna(h)) else
-            int(MisraGriesSketch.from_bytes(bytes(b)).estimate_hashes(
-                np.array([np.int64(h)], dtype=np.int64).view(np.uint64))[0])
-            for b, h in zip(blobs, hashes)])
-
-    @F.pandas_udf(T.LongType())
-    def mg_error_bound(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          MisraGriesSketch.from_bytes(bytes(b)).error_bound()
-                          for b in blobs])
-
-    ams_merge_all = _merge_all_udf(AmsSketch.from_bytes)
-
-    @F.pandas_udf(T.LongType())
-    def ams_f2_estimate(blobs: pd.Series) -> pd.Series:
-        return pd.Series([None if b is None else
-                          AmsSketch.from_bytes(bytes(b)).estimate_f2()
-                          for b in blobs])
-
-    @F.pandas_udf(T.LongType())
-    def countsketch_point_estimate(blobs: pd.Series, hashes: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series([
-            None if (b is None or pd.isna(h)) else
-            int(AmsSketch.from_bytes(bytes(b)).estimate_hashes(
-                np.array([np.int64(h)], dtype=np.int64).view(np.uint64))[0])
-            for b, h in zip(blobs, hashes)])
-
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("hll_merge_all", hll_merge_all)
-    spark.udf.register("hll_count_additions", hll_count_additions)
-    spark.udf.register("bloom_estimate", bloom_estimate)
-    spark.udf.register("cms_total", cms_total)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("ddsketch_quantile", ddsketch_quantile)
-    spark.udf.register("ddsketch_merge_all", ddsketch_merge_all)
-    spark.udf.register("theta_estimate", theta_estimate)
-    spark.udf.register("theta_merge_all", theta_merge_all)
-    spark.udf.register("theta_intersect_estimate", theta_intersect_estimate)
-    spark.udf.register("theta_a_not_b_estimate", theta_a_not_b_estimate)
-    spark.udf.register("mg_merge_all", mg_merge_all)
-    spark.udf.register("mg_point_estimate", mg_point_estimate)
-    spark.udf.register("mg_error_bound", mg_error_bound)
-    spark.udf.register("ams_merge_all", ams_merge_all)
-    spark.udf.register("ams_f2_estimate", ams_f2_estimate)
-    spark.udf.register("countsketch_point_estimate", countsketch_point_estimate)
+    long_, double = T.LongType(), T.DoubleType()
+    per_row = {
+        "hll_estimate": (long_, lambda b: HllSketch.from_bytes(b).count()),
+        "hll_count_additions": (
+            long_, lambda b: HllSketch.from_bytes(b).count_additions),
+        "bloom_estimate": (
+            long_, lambda b: BloomFilter.from_bytes(b).estimate_cardinality()),
+        "cms_total": (
+            long_, lambda b: CountMinSketch.from_bytes(b).count_additions),
+        "tdigest_quantile": (
+            double, lambda b, q: float(TDigest.from_bytes(b).quantile(float(q)))),
+        "kll_quantile": (
+            double, lambda b, q: float(KllSketch.from_bytes(b).quantile(float(q)))),
+        "ddsketch_quantile": (
+            double, lambda b, q: float(DDSketch.from_bytes(b).quantile(float(q)))),
+        "theta_estimate": (long_, lambda b: ThetaSketch.from_bytes(b).count()),
+        "theta_intersect_estimate": (
+            long_, lambda a, b: ThetaSketch.from_bytes(a).intersect_count(
+                ThetaSketch.from_bytes(b))[0]),
+        "theta_a_not_b_estimate": (
+            long_, lambda a, b: ThetaSketch.from_bytes(a).a_not_b_count(
+                ThetaSketch.from_bytes(b))[0]),
+        "mg_point_estimate": (
+            long_, lambda b, h: _point_estimate(MisraGriesSketch.from_bytes(b), h)),
+        "mg_error_bound": (
+            long_, lambda b: MisraGriesSketch.from_bytes(b).error_bound()),
+        "ams_f2_estimate": (long_, lambda b: AmsSketch.from_bytes(b).estimate_f2()),
+        "countsketch_point_estimate": (
+            long_, lambda b, h: _point_estimate(AmsSketch.from_bytes(b), h)),
+    }
+    merge_all = {"hll_merge_all": HllSpec(), "ddsketch_merge_all": DdSpec(),
+                 "theta_merge_all": ThetaSpec(), "mg_merge_all": MgSpec(),
+                 "ams_merge_all": AmsSpec()}
+    for name, (return_type, fn) in per_row.items():
+        spark.udf.register(name, per_row_udf(return_type, fn))
+    for name, spec in merge_all.items():
+        spark.udf.register(name, _merge_all_udf(spec))

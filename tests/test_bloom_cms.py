@@ -292,6 +292,21 @@ class TestNullKeyProbes:
                s.withColumn("h", might_contain_udf(blob, "k")).collect()}
         assert got == {("a", True), ("b", True), (None, False)}
 
+    def test_might_contain_udf_null_long_row_keeps_members(self, spark):
+        """One NULL in the members' Arrow batch must not change how the
+        other int64 keys hash (a pandas probe saw the batch as float64
+        and dropped 500 of these 1000 members)."""
+        from sketchlib.spark.membership import (bloom_build_bytes,
+                                                might_contain_udf)
+
+        base = spark.range(1000).withColumnRenamed("id", "k")
+        blob = bloom_build_bytes(base, "k")
+        probe = base.unionByName(
+            spark.sql("select cast(null as long) k")).coalesce(1)
+        got = probe.withColumn("h", might_contain_udf(blob, "k")).collect()
+        assert sum(r["h"] for r in got if r["k"] is not None) == 1000
+        assert [r["h"] for r in got if r["k"] is None] == [False]
+
     def test_estimate_counts_null_rows_zero(self, spark):
         from sketchlib.spark.aggregate import sketch_agg
         from sketchlib.spark.heavy_hitters import estimate_counts

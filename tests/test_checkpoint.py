@@ -226,3 +226,32 @@ def test_parallel_units_equal_sequential(spark, tmp_path):
     b = {r["__g"] if "__g" in r else 0: bytes(r["sketch"])
          for r in par.result(spark).collect()}
     assert a == b
+
+
+def test_parallel_run_reports_every_failed_unit(spark, tmp_path):
+    """run(parallelism>1) waits for every unit, names each failed one in a
+    single error, and keeps the units that committed complete, so a
+    resume runs only the failed units."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(i, f"u{i % 13}", f"d{i % 2}") for i in range(200)],
+        "id long, url string, day string")
+
+    def src(u):
+        if u.startswith("bad"):
+            return df.select(F.when(F.col("id") >= 0, F.raise_error(
+                F.lit(f"{u} input is corrupt"))).otherwise(F.col("url"))
+                .alias("url"))
+        return df.filter(df.day == u)
+
+    ck = SketchCheckpoint(str(tmp_path / "ck"), HllSpec(p=12), "url")
+    with pytest.raises(RuntimeError) as err:
+        ck.run(spark, src, ["bad1", "d0", "bad2", "d1"], parallelism=2)
+    msg = str(err.value)
+    assert "2 checkpoint unit(s) failed" in msg
+    assert "bad1" in msg and "bad2" in msg
+    assert ck.completed_units() == {"d0", "d1"}
+    res = ck.run(spark, lambda u: df.filter(df.day == u),
+                 ["bad1", "d0", "bad2", "d1"])
+    assert res["skipped"] == 2 and res["ran"] == 2

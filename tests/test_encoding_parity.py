@@ -1,9 +1,10 @@
 """Pandas-path vs Arrow-path encoding/hash parity.
 
-build_partials has two stage-1 implementations (mapInPandas and mapInArrow);
-a hash mismatch between them would silently change sketches when specs or
-Spark versions flip the path. Pin byte-level agreement per element type, and
-pin the scalar encodings against the reference's Add overloads."""
+build_partials has one stage-1 path (mapInArrow, hashing through
+``arrow_flat_bytes``); the pandas path (``hash_series``) remains only for
+streaming sketches, which must agree with batch sketches of the same column.
+Pin byte-level agreement per element type, and pin the scalar encodings
+against the reference's Add overloads."""
 
 import numpy as np
 import pandas as pd
@@ -48,9 +49,11 @@ class TestPathParity:
 
     @pytest.mark.parametrize("pa_type,np_dtype", [
         (pa.int64(), np.int64), (pa.int32(), np.int32),
+        (pa.int16(), np.int16), (pa.int8(), np.int8),
     ])
     def test_integers(self, pa_type, np_dtype):
-        vals = [0, 1, -1 if not pa_type.equals(pa.uint64()) else 1, 2**30]
+        vals = [0, 1, -1 if not pa_type.equals(pa.uint64()) else 1,
+                min(2**30, np.iinfo(np_dtype).max)]
         a = _hash_arrow(pa.array(vals, type=pa_type))
         p = _hash_pandas(pd.Series(np.asarray(vals, dtype=np_dtype)))
         assert np.array_equal(a, p)

@@ -95,3 +95,19 @@ class TestFrequentDirections:
     def test_spec_prepare_validates(self):
         with pytest.raises(ValueError):
             FdSpec(ell=4, d=8).prepare(None, ["a", "b"])
+
+    def test_spec_prepare_arrow_matches_prepare(self):
+        import pandas as pd
+        import pyarrow as pa
+
+        rows = [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], [7.0, 8.0, 9.5]]
+        spec = FdSpec(ell=2, d=3)
+        batch = pa.record_batch([pa.array(rows).slice(1)], names=["e"])
+        want = spec.prepare(pd.DataFrame({"e": [np.array(r) for r in rows[1:]]}), ["e"])
+        got = spec.prepare_arrow(batch, ["e"])
+        assert got.dtype == np.float64 and np.array_equal(got, want)
+        ragged = pa.record_batch([pa.array([[1.0, 2.0, 3.0], [4.0]])], names=["e"])
+        with pytest.raises(ValueError, match="different lengths"):
+            spec.prepare_arrow(ragged, ["e"])
+        with pytest.raises(ValueError):
+            spec.prepare_arrow(batch, ["e", "e"])

@@ -147,6 +147,16 @@ def test_integer_element_hashing(spark):
         assert abs(est - n) / n <= 10 * 0.008125
 
 
+def test_date_element_column(spark):
+    """DateType elements hash as 8-byte day counts (pyarrow has no direct
+    date32 -> int64 cast, so this used to raise)."""
+    import datetime
+
+    rows = [(datetime.date(2026, 1, 1 + i % 7),) for i in range(40)]
+    df = spark.createDataFrame(rows, "d date").repartition(3)
+    assert distinct_count(df, "d").first()["estimate"] == 7
+
+
 def test_null_group_keys_own_group(spark):
     """NULL group keys form their own group and never fold into a real one
     (regression: Arrow dictionary_encode emits null indices that used to
