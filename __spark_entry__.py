@@ -19,8 +19,10 @@ exactly when the sketch math is out of bound. Queries over groups with
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -36,6 +38,7 @@ from sketchlib.spark.aggregate import (  # noqa: E402
     merge_partials,
     sketch_agg,
 )
+from sketchlib.spark.concurrency import run_concurrently  # noqa: E402
 
 # 6 sigma on HLL's published std error 1.04/sqrt(2^14) = 0.8125%  (README.md:58)
 _HLL_SIGMA_P14 = 1.04 / (2 ** 14) ** 0.5
@@ -632,14 +635,11 @@ def q_hll_checkpointed_users(spark: SparkSession, sf_dir: str) -> DataFrame:
                           ["user_id"], ["event_type"], unit_col="week")
     # per-week unit jobs are independent (write-then-commit) — run 3 in
     # flight; and the exact reference aggregate overlaps the unit builds
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_exact = pool.submit(ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")).collect)
-        ck.run(spark, lambda w: ev.filter(F.col("week") == w), weeks,
-               parallelism=3)
-        exact_rows = f_exact.result()
+    exact_rows = run_concurrently({
+        "exact": ev.groupBy("event_type").agg(
+            F.countDistinct("user_id").alias("exact_users")).collect,
+        "units": lambda: ck.run(spark, lambda w: ev.filter(F.col("week") == w),
+                                weeks, parallelism=3)})["exact"]
     merged = ck.result(spark)
     est = merged.select("event_type", estimate_col(HllSpec()).alias("estimate"))
     exact = spark.createDataFrame(
@@ -801,16 +801,12 @@ def q_hash_split_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = hash_split(docs.repartition(13), "doc_id", weights)
     # the split-fraction counts and the A-vs-B stability join are
     # independent jobs — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_counts = pool.submit(
-            a.groupBy("split").agg(F.count("*").alias("n")).collect)
-        f_mismatch = pool.submit(
-            (a.join(b.withColumnRenamed("split", "split_b"), "doc_id")
-             .filter(F.col("split") != F.col("split_b"))).count)
-        counts = {r["split"]: r["n"] for r in f_counts.result()}
-        mismatch = f_mismatch.result()
+    got = run_concurrently({
+        "counts": a.groupBy("split").agg(F.count("*").alias("n")).collect,
+        "mismatch": (a.join(b.withColumnRenamed("split", "split_b"), "doc_id")
+                     .filter(F.col("split") != F.col("split_b"))).count})
+    counts = {r["split"]: r["n"] for r in got["counts"]}
+    mismatch = got["mismatch"]
     n_total = sum(counts.values())
     frac_ok = all(
         abs(counts.get(s, 0) - w * n_total)
@@ -847,18 +843,14 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the pair aggregate and the two partition-stability fingerprint passes
     # are independent job chains — overlap them (each underutilizes the
     # cluster on its own; results are deterministic under overlap)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_pairs = pool.submit(self_pairs.agg(
-            F.count("*").alias("nf"),
-            F.count_if(full).alias("nfull")).collect)
-        f_a = pool.submit(chunk_fingerprints(docs, avg_size=64).collect)
-        f_b = pool.submit(
-            chunk_fingerprints(docs.repartition(13), avg_size=64).collect)
-        [prow] = f_pairs.result()
-        a = {r["doc_id"]: r["chunks"] for r in f_a.result()}
-        b = {r["doc_id"]: r["chunks"] for r in f_b.result()}
+    got = run_concurrently({
+        "pairs": self_pairs.agg(F.count("*").alias("nf"),
+                                F.count_if(full).alias("nfull")).collect,
+        "a": chunk_fingerprints(docs, avg_size=64).collect,
+        "b": chunk_fingerprints(docs.repartition(13), avg_size=64).collect})
+    [prow] = got["pairs"]
+    a = {r["doc_id"]: r["chunks"] for r in got["a"]}
+    b = {r["doc_id"]: r["chunks"] for r in got["b"]}
     n_found, n_full = prow["nf"], prow["nfull"]
     from sketchlib.spark.cacheutil import unpersist_intermediates
     unpersist_intermediates(pairs)  # the tag lives on shared_chunk_pairs' result
@@ -888,19 +880,14 @@ def q_source_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets = {s: (int(s[3:]) + 1) / tot for s in srcs}
     # the fraction fit, the raw per-source counts, and the kept per-source
     # counts are independent job chains over the same table — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
     kept = mix_by_source(docs, "source", targets, "doc_id", "n_chars")
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_fracs = pool.submit(mix_fractions, docs, "source", targets,
-                              "n_chars")
-        f_rows = pool.submit(
-            docs.groupBy("source").agg(F.count("*").alias("n")).collect)
-        f_kept = pool.submit(
-            kept.groupBy("source").agg(F.count("*").alias("n")).collect)
-        fracs = f_fracs.result()
-        n_rows = {r["source"]: r["n"] for r in f_rows.result()}
-        n_kept = {r["source"]: r["n"] for r in f_kept.result()}
+    got = run_concurrently({
+        "fracs": lambda: mix_fractions(docs, "source", targets, "n_chars"),
+        "rows": docs.groupBy("source").agg(F.count("*").alias("n")).collect,
+        "kept": kept.groupBy("source").agg(F.count("*").alias("n")).collect})
+    fracs = got["fracs"]
+    n_rows = {r["source"]: r["n"] for r in got["rows"]}
+    n_kept = {r["source"]: r["n"] for r in got["kept"]}
     out = []
     for s in srcs:
         f, n = fracs[s], n_rows[s]
@@ -940,18 +927,75 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count("*") > 0).alias("found_pairs")), sim)
 
 
+@contextlib.contextmanager
+def _stream_scratch(spark: SparkSession, name: str, shuffle_partitions: int):
+    """Yield fresh ``(src, ckpt)`` directories under
+    ``.tmp_stream_<name>_gate/`` next to this file, with
+    ``spark.sql.shuffle.partitions`` set for the block; both are undone on
+    exit.  The state store binds its partition count at checkpoint creation
+    and creates one directory tree per shuffle partition per pass, so a
+    gate-sized state wants a handful (a bench-scale knob — a real cluster
+    keeps its own)."""
+    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        f".tmp_stream_{name}_gate")
+    shutil.rmtree(base, ignore_errors=True)
+    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        yield os.path.join(base, "src"), os.path.join(base, "ckpt")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _stream_pass(stream: DataFrame, sink, output_mode: str, ckpt: str):
+    """One ``availableNow`` run of ``stream`` into ``foreachBatch(sink)``
+    that resumes from (and commits to) the checkpoint ``ckpt``; returns the
+    finished query."""
+    q = (stream.writeStream.foreachBatch(sink)
+         .outputMode(output_mode)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(
+            "availableNow streaming pass did not finish in 300s")
+    return q
+
+
+def _two_pass_stream(spark: SparkSession, name: str, ev: DataFrame,
+                     split_col: str,
+                     operator: Callable[[DataFrame], DataFrame],
+                     output_mode: str = "update") -> list:
+    """Stream ``ev`` through ``operator`` (streaming frame -> streaming
+    frame) in two ``availableNow`` passes over a growing file source: the
+    rows with an even ``split_col`` first, then the odd ones, the second
+    pass resuming from the first pass's state-store checkpoint (a restart,
+    not a recount).  Returns every row the query emitted, in order.
+
+    The gates check their answer after both passes, not overlapped with
+    them: overlapping the exact aggregate with the passes was measured
+    slower warm (the concurrent job stretches the micro-batch more than it
+    saves)."""
+    emitted: list = []
+    with _stream_scratch(spark, name, 8) as (src, ckpt):
+        for parity in (0, 1):
+            (ev.filter(F.col(split_col) % 2 == parity)
+             .coalesce(2).write.mode("append").parquet(src))
+            stream = spark.readStream.schema(ev.schema).parquet(src)
+            _stream_pass(operator(stream),
+                         lambda bdf, _b: emitted.extend(bdf.collect()),
+                         output_mode, ckpt)
+    return emitted
+
+
 def q_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming HLL state: two ``availableNow`` passes over a
     growing file source (restart resumes from the state-store checkpoint,
     not a recount), final per-event_type estimate bound-checked vs exact.
     The streaming estimate equals the batch estimate bit-for-bit because
     the state is the same canonical sketch."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.streaming import streaming_distinct_count
 
     # deterministic 1/7 user sample: the gate checks streaming-state
     # semantics (resume, dedup across batches, bound vs exact), which are
@@ -960,48 +1004,34 @@ def q_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id")
           .filter(F.col("user_id") % 7 == 0))
-    schema = ev.schema
-    collected: dict[str, int] = {}
+    rows = _two_pass_stream(
+        spark, "hll", ev, "user_id",
+        lambda s: streaming_distinct_count(s, "user_id", ["event_type"]))
+    latest = {r["event_type"]: r["estimate"] for r in rows}
+    est = spark.createDataFrame([(k, int(v)) for k, v in latest.items()],
+                                "event_type string, estimate long")
+    exact = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users"))
+    return _bound_check(est, exact, ["event_type"], "exact_users")
 
-    def run_pass():
-        from sketchlib.streaming import streaming_distinct_count
 
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_distinct_count(stream, "user_id", ["event_type"])
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: r["estimate"] for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # the state store creates one directory tree per shuffle partition
-        # per pass; 8 is plenty for a 5-group state and cuts checkpoint
-        # file churn 4x (a bench-scale knob — a real cluster keeps its own)
-        # (r6 note: overlapping the exact aggregate with the passes was
-        # tried and measured SLOWER warm — the concurrent job stretches the
-        # micro-batch more than it saves — so the check stays sequential)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, int(v)) for k, v in collected.items()],
-            "event_type string, estimate long")
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users"))
-        return _bound_check(est, exact, ["event_type"], "exact_users")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+def _median_rank_check(ev: DataFrame, rows: list) -> DataFrame:
+    """Per event_type, the exact rank of the last emitted median estimate
+    among the group's values must land in [0.45, 0.55]."""
+    latest = {r["event_type"]: r["estimate"] for r in rows}
+    est = ev.sparkSession.createDataFrame(
+        [(k, float(v)) for k, v in latest.items()],
+        "event_type string, est_median double")
+    ranks = (ev.join(est, "event_type")
+             .groupBy("event_type")
+             .agg(F.count(F.lit(1)).alias("n_events"),
+                  (F.sum(F.when(F.col("value") <= F.col("est_median"), 1)
+                         .otherwise(0)) / F.count(F.lit(1))).alias("r")))
+    return (ranks.select(
+        "event_type", "n_events",
+        ((F.col("r") >= 0.45) & (F.col("r") <= 0.55))
+        .alias("median_rank_ok"))
+        .orderBy("event_type"))
 
 
 def q_streaming_tdigest_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1013,62 +1043,17 @@ def q_streaming_tdigest_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e-3 rank error at the median — the generous band absorbs ties).
     The oracle reproduces the exact per-group event counts and states the
     rank invariant as a literal."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_tdigest_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.spark.specs import TDigestSpec
+    from sketchlib.streaming import streaming_sketch_agg
 
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id", "value")
           .filter(F.col("value").isNotNull()))
-    schema = ev.schema
-    collected: dict[str, float] = {}
-
-    def run_pass():
-        from sketchlib.spark.specs import TDigestSpec
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "value", ["event_type"],
-                                   TDigestSpec())
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: r["estimate"] for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, float(v)) for k, v in collected.items()],
-            "event_type string, est_median double")
-        ranks = (ev.join(est, "event_type")
-                 .groupBy("event_type")
-                 .agg(F.count(F.lit(1)).alias("n_events"),
-                      (F.sum(F.when(F.col("value") <= F.col("est_median"), 1)
-                             .otherwise(0)) / F.count(F.lit(1))).alias("r")))
-        return (ranks.select(
-            "event_type", "n_events",
-            ((F.col("r") >= 0.45) & (F.col("r") <= 0.55))
-            .alias("median_rank_ok"))
-            .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    rows = _two_pass_stream(
+        spark, "tdigest", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "value", ["event_type"],
+                                       TDigestSpec()))
+    return _median_rank_check(ev, rows)
 
 
 def q_streaming_kll_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1079,62 +1064,17 @@ def q_streaming_kll_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS / KLL) runs as streaming state.  Same rank check as the t-digest
     gate: the exact rank of the final per-group median estimate must land
     in [0.45, 0.55] (KLL k=200 has ~1%% rank error w.h.p.)."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_kll_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.spark.specs import KllSpec
+    from sketchlib.streaming import streaming_sketch_agg
 
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id", "value")
           .filter(F.col("value").isNotNull()))
-    schema = ev.schema
-    collected: dict[str, float] = {}
-
-    def run_pass():
-        from sketchlib.spark.specs import KllSpec
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "value", ["event_type"],
-                                   KllSpec())
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: r["estimate"] for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, float(v)) for k, v in collected.items()],
-            "event_type string, est_median double")
-        ranks = (ev.join(est, "event_type")
-                 .groupBy("event_type")
-                 .agg(F.count(F.lit(1)).alias("n_events"),
-                      (F.sum(F.when(F.col("value") <= F.col("est_median"), 1)
-                             .otherwise(0)) / F.count(F.lit(1))).alias("r")))
-        return (ranks.select(
-            "event_type", "n_events",
-            ((F.col("r") >= 0.45) & (F.col("r") <= 0.55))
-            .alias("median_rank_ok"))
-            .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    rows = _two_pass_stream(
+        spark, "kll", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "value", ["event_type"],
+                                       KllSpec()))
+    return _median_rank_check(ev, rows)
 
 
 def q_streaming_ddsketch_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1148,61 +1088,28 @@ def q_streaming_ddsketch_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay over ALL events (both passes must have folded into state for the
     per-group n and bucket to match).  ``n_values`` comes from the state
     sketch's count_additions — an exact cross-restart row count."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_dd_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.spark.specs import DdSpec
+    from sketchlib.streaming import streaming_sketch_agg
 
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id", "value")
           .filter(F.col("value").isNotNull()))
-    schema = ev.schema
-    collected: dict[str, tuple[float, int]] = {}
     alpha = 0.01
     gamma = (1.0 + alpha) / (1.0 - alpha)
-
-    def run_pass():
-        from sketchlib.spark.specs import DdSpec
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "value", ["event_type"],
-                                   DdSpec(alpha=alpha))
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: (r["estimate"], r["count_additions"])
-                  for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        rows = []
-        for etype, (est, n) in collected.items():
-            # invert the representative: est == 2*gamma^i/(gamma+1) exactly
-            idx = int(round(math.log(est * (gamma + 1.0) / 2.0)
-                            / math.log(gamma)))
-            rows.append((etype, int(n), idx))
-        return (spark.createDataFrame(
-            rows, "event_type string, n_values long, median_bucket long")
-            .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    emitted = _two_pass_stream(
+        spark, "dd", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "value", ["event_type"],
+                                       DdSpec(alpha=alpha)))
+    latest = {r["event_type"]: r for r in emitted}
+    rows = []
+    for etype, r in latest.items():
+        # invert the representative: est == 2*gamma^i/(gamma+1) exactly
+        idx = int(round(math.log(r["estimate"] * (gamma + 1.0) / 2.0)
+                        / math.log(gamma)))
+        rows.append((etype, int(r["count_additions"]), idx))
+    return (spark.createDataFrame(
+        rows, "event_type string, n_values long, median_bucket long")
+        .orderBy("event_type"))
 
 
 def q_streaming_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1213,55 +1120,22 @@ def q_streaming_theta_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays far below k=4096, where a KMV sketch is exact (it has retained
     every distinct hash), so the oracle is plain COUNT DISTINCT with the
     shared bound margin absorbing a possible 64-bit hash collision."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_theta_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.spark.specs import ThetaSpec
+    from sketchlib.streaming import streaming_sketch_agg
 
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id")
           .filter(F.col("user_id") % 7 == 0))
-    schema = ev.schema
-    collected: dict[str, int] = {}
-
-    def run_pass():
-        from sketchlib.spark.specs import ThetaSpec
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "user_id", ["event_type"],
-                                   ThetaSpec())
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: r["estimate"] for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, int(v)) for k, v in collected.items()],
-            "event_type string, estimate long")
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users"))
-        return _bound_check(est, exact, ["event_type"], "exact_users")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    rows = _two_pass_stream(
+        spark, "theta", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "user_id", ["event_type"],
+                                       ThetaSpec()))
+    latest = {r["event_type"]: r["estimate"] for r in rows}
+    est = spark.createDataFrame([(k, int(v)) for k, v in latest.items()],
+                                "event_type string, estimate long")
+    exact = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users"))
+    return _bound_check(est, exact, ["event_type"], "exact_users")
 
 
 def q_streaming_cms_point_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1276,19 +1150,12 @@ def q_streaming_cms_point_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact-equality pin on blob serialize/restore across the restart
     (reference counterpart: frequency estimation has no analog in
     CardinalityEstimation; CMS per SURVEY.md §2.6)."""
-    import math
-    import shutil
-
     import numpy as np
     import pandas as pd
 
     from sketchlib.spark.aggregate import hash_columns
     from sketchlib.spark.specs import CmsSpec
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_cms_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.streaming import streaming_sketch_agg
 
     PROBE = 42  # multiple of 7 -> survives the 1/7 sample filter
     probe_hash = int(hash_columns(
@@ -1309,54 +1176,27 @@ def q_streaming_cms_point_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id")
           .filter(F.col("user_id") % 7 == 0))
-    schema = ev.schema
-    collected: dict[str, tuple[int, int]] = {}
-
-    def run_pass():
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "user_id", ["event_type"],
-                                   _CmsProbeSpec(probe_hash))
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: (r["estimate"], r["count_additions"])
-                  for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, int(v[0]), int(v[1])) for k, v in collected.items()],
-            "event_type string, est long, n_rows long")
-        exact = ev.groupBy("event_type").agg(
-            F.count(F.when(F.col("user_id") == PROBE, 1))
-            .alias("exact_probe"))
-        eps = math.e / CmsSpec().width
-        return (est.join(exact, "event_type")
-                .select(
-                    "event_type", "n_rows", "exact_probe",
-                    ((F.col("est") >= F.col("exact_probe"))
-                     & (F.col("est") <= F.col("exact_probe")
-                        + F.ceil(F.lit(eps) * F.col("n_rows")) + F.lit(2)))
-                    .alias("within_bound"))
-                .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    rows = _two_pass_stream(
+        spark, "cms", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "user_id", ["event_type"],
+                                       _CmsProbeSpec(probe_hash)))
+    latest = {r["event_type"]: r for r in rows}
+    est = spark.createDataFrame(
+        [(k, int(r["estimate"]), int(r["count_additions"]))
+         for k, r in latest.items()],
+        "event_type string, est long, n_rows long")
+    exact = ev.groupBy("event_type").agg(
+        F.count(F.when(F.col("user_id") == PROBE, 1))
+        .alias("exact_probe"))
+    eps = math.e / CmsSpec().width
+    return (est.join(exact, "event_type")
+            .select(
+                "event_type", "n_rows", "exact_probe",
+                ((F.col("est") >= F.col("exact_probe"))
+                 & (F.col("est") <= F.col("exact_probe")
+                    + F.ceil(F.lit(eps) * F.col("n_rows")) + F.lit(2)))
+                .alias("within_bound"))
+            .orderBy("event_type"))
 
 
 def q_streaming_mg_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1369,18 +1209,12 @@ def q_streaming_mg_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted ``count_additions`` n upper-bounds the cumulative decrement)
     AND pins ``count_additions`` to the exact per-group stream length, an
     exact-equality check on blob serialize/restore across the restart."""
-    import shutil
-
     import numpy as np
     import pandas as pd
 
     from sketchlib.spark.aggregate import hash_columns
     from sketchlib.spark.specs import MgSpec
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_mg_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.streaming import streaming_sketch_agg
 
     PROBE = 42  # multiple of 7 -> survives the 1/7 sample filter
     probe_hash = int(hash_columns(
@@ -1402,55 +1236,28 @@ def q_streaming_mg_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (_read(spark, sf_dir, "events")
           .select("event_type", "user_id")
           .filter(F.col("user_id") % 7 == 0))
-    schema = ev.schema
-    collected: dict[str, tuple[int, int]] = {}
-
-    def run_pass():
-        from sketchlib.streaming import streaming_sketch_agg
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        agg = streaming_sketch_agg(stream, "user_id", ["event_type"],
-                                   _MgProbeSpec(probe_hash))
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, _b: collected.update(
-                 {r["event_type"]: (r["estimate"], r["count_additions"])
-                  for r in bdf.collect()}))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("user_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("user_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        est = spark.createDataFrame(
-            [(k, int(v[0]), int(v[1])) for k, v in collected.items()],
-            "event_type string, est long, n_rows long")
-        exact = ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("exact_rows"),
-            F.count(F.when(F.col("user_id") == PROBE, 1))
-            .alias("exact_probe"))
-        return (est.join(exact, "event_type")
-                .select(
-                    "event_type", "exact_probe",
-                    (F.col("n_rows") == F.col("exact_rows")).alias("n_exact"),
-                    ((F.col("est") <= F.col("exact_probe"))
-                     & (F.col("exact_probe") <= F.col("est")
-                        + F.floor(F.col("n_rows") / F.lit(K + 1))))
-                    .alias("within_bound"))
-                .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    rows = _two_pass_stream(
+        spark, "mg", ev, "user_id",
+        lambda s: streaming_sketch_agg(s, "user_id", ["event_type"],
+                                       _MgProbeSpec(probe_hash)))
+    latest = {r["event_type"]: r for r in rows}
+    est = spark.createDataFrame(
+        [(k, int(r["estimate"]), int(r["count_additions"]))
+         for k, r in latest.items()],
+        "event_type string, est long, n_rows long")
+    exact = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("exact_rows"),
+        F.count(F.when(F.col("user_id") == PROBE, 1))
+        .alias("exact_probe"))
+    return (est.join(exact, "event_type")
+            .select(
+                "event_type", "exact_probe",
+                (F.col("n_rows") == F.col("exact_rows")).alias("n_exact"),
+                ((F.col("est") <= F.col("exact_probe"))
+                 & (F.col("exact_probe") <= F.col("est")
+                    + F.floor(F.col("n_rows") / F.lit(K + 1))))
+                .alias("within_bound"))
+            .orderBy("event_type"))
 
 
 def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,55 +1266,24 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated across chunks are suppressed by checkpoint-recovered state.
     With the watermark spanning the whole table, kept rows per event_type
     == exact COUNT(DISTINCT user_id) — the oracle is exact SQL."""
-    import shutil
-
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_dedup_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
+    from sketchlib.streaming import streaming_dedup
 
     ev = (_read(spark, sf_dir, "events")
           # watermarks require session-tz TIMESTAMP, the table stores NTZ
           .select("event_id", F.col("ts").cast("timestamp").alias("ts"),
                   "event_type", "user_id")
           .filter(F.col("user_id") % 7 == 0))
-    schema = ev.schema
-    kept: list = []
-
-    def run_pass():
-        from sketchlib.streaming import streaming_dedup
-
-        stream = spark.readStream.schema(schema).parquet(src)
-        dd = streaming_dedup(stream, "ts", watermark="87600 hours",
-                             key_cols=["event_type", "user_id"])
-        q = (dd.writeStream
-             .foreachBatch(lambda bdf, _b: kept.extend(
-                 bdf.select("event_type", "user_id").collect()))
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "availableNow streaming pass did not finish in 300s")
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        (ev.filter(F.col("event_id") % 2 == 0)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        (ev.filter(F.col("event_id") % 2 == 1)
-         .coalesce(2).write.mode("append").parquet(src))
-        run_pass()
-        out = spark.createDataFrame(
-            [(r["event_type"], r["user_id"]) for r in kept],
-            "event_type string, user_id long")
-        return (out.groupBy("event_type")
-                .agg(F.count("*").alias("n_first_seen"))
-                .orderBy("event_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+    kept = _two_pass_stream(
+        spark, "dedup", ev, "event_id",
+        lambda s: streaming_dedup(s, "ts", watermark="87600 hours",
+                                  key_cols=["event_type", "user_id"]),
+        output_mode="append")
+    out = spark.createDataFrame(
+        [(r["event_type"], r["user_id"]) for r in kept],
+        "event_type string, user_id long")
+    return (out.groupBy("event_type")
+            .agg(F.count("*").alias("n_first_seen"))
+            .orderBy("event_type"))
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,13 +1387,11 @@ def q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _read(spark, sf_dir, "embeddings")
     # centroid training and the query-row collect are independent jobs
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cents = pool.submit(train_centroids, emb, n_clusters=8,
-                              sample_rows=2000, seed=7)
-        f_q = pool.submit(emb.filter(F.col("vec_id").isin([0, 7, 21])).collect)
-        cents, qrows = f_cents.result(), f_q.result()
+    got = run_concurrently({
+        "cents": lambda: train_centroids(emb, n_clusters=8, sample_rows=2000,
+                                         seed=7),
+        "queries": emb.filter(F.col("vec_id").isin([0, 7, 21])).collect})
+    cents, qrows = got["cents"], got["queries"]
     queries = [(r["vec_id"], list(r["embedding"])) for r in qrows]
     res = ivf_topk(emb, queries, cents, k=5, nprobe=8)
     return res.select("query_id", "vec_id", F.col("rnk").cast("int").alias("rnk"))
@@ -1643,13 +1417,12 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding",
                     lambda v: F.round(v.cast("double") * scale)).alias("qe"))
     # codebook training and the query-row collect are independent jobs
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cb = pool.submit(train_codebooks, qdf, vec_col="qe", m=8, ksub=16,
-                           method="first_ids", id_col="vec_id")
-        f_q = pool.submit(qdf.filter(F.col("vec_id").isin([0, 7, 21])).collect)
-        cb, qrows = f_cb.result(), f_q.result()
+    got = run_concurrently({
+        "codebooks": lambda: train_codebooks(qdf, vec_col="qe", m=8, ksub=16,
+                                             method="first_ids",
+                                             id_col="vec_id"),
+        "queries": qdf.filter(F.col("vec_id").isin([0, 7, 21])).collect})
+    cb, qrows = got["codebooks"], got["queries"]
     enc = pq_encode(qdf, cb, vec_col="qe", exact_distances=True)
     queries = [(r["vec_id"], list(r["qe"])) for r in qrows]
     res = adc_topk(enc, queries, cb, k=5)
@@ -1694,15 +1467,13 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     # the coarse-quantizer training, the codebook training, and the
     # query-row collect are three independent sample jobs — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_cents = pool.submit(train_centroids, emb, n_clusters=8,
-                              sample_rows=2000, seed=7)
-        f_cb = pool.submit(train_codebooks, emb, m=8, ksub=16,
-                           sample_rows=2000, seed=7)
-        f_q = pool.submit(emb.filter(F.col("vec_id").isin([0, 7, 21])).collect)
-        cents, cb, qrows = f_cents.result(), f_cb.result(), f_q.result()
+    got = run_concurrently({
+        "cents": lambda: train_centroids(emb, n_clusters=8, sample_rows=2000,
+                                         seed=7),
+        "codebooks": lambda: train_codebooks(emb, m=8, ksub=16,
+                                             sample_rows=2000, seed=7),
+        "queries": emb.filter(F.col("vec_id").isin([0, 7, 21])).collect})
+    cents, cb, qrows = got["cents"], got["codebooks"], got["queries"]
     indexed = pq_encode(ivf_assign(emb, cents), cb)
     queries = [(r["vec_id"], list(r["embedding"])) for r in qrows]
     # full probe: every cluster is a candidate source (nprobe == n_clusters
@@ -1731,17 +1502,15 @@ def q_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two bucketed materializations are independent write jobs to
     # distinct tables/paths — overlap them so the smaller side's write
     # back-fills executors while the larger side's tasks drain
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bo = pool.submit(write_bucketed, orders, "gate_bkt_orders",
-                           "o_orderkey", 8, path=os.path.join(base, "o"),
-                           sorted_by="o_orderkey")
-        f_bl = pool.submit(write_bucketed, li, "gate_bkt_li",
-                           "o_orderkey", 8, path=os.path.join(base, "l"),
-                           sorted_by="o_orderkey")
-        bo = f_bo.result()
-        bl = f_bl.result()
+    got = run_concurrently({
+        "orders": lambda: write_bucketed(orders, "gate_bkt_orders",
+                                         "o_orderkey", 8,
+                                         path=os.path.join(base, "o"),
+                                         sorted_by="o_orderkey"),
+        "lineitem": lambda: write_bucketed(li, "gate_bkt_li", "o_orderkey", 8,
+                                           path=os.path.join(base, "l"),
+                                           sorted_by="o_orderkey")})
+    bo, bl = got["orders"], got["lineitem"]
     j = colocated_join(bl, bo, "o_orderkey")
     j.count()  # materialize so AQE finalizes the physical plan
     plan = (j._jdf.queryExecution().executedPlan().toString()
@@ -1829,16 +1598,12 @@ def _checkpoint_resume_users_body(spark, sf_dir, tempfile, HllSpec,
         # three independent job chains over the persisted gate input —
         # overlap them so the gate's ~8 sequential tiny jobs become ~3
         # concurrent chains (each alone underutilizes the cluster)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_resumed = pool.submit(_resume_chain)
-            f_control = pool.submit(_control_chain)
-            f_exact = pool.submit(ev.groupBy("event_type").agg(
-                F.countDistinct("user_id").alias("exact_users")).collect)
-            resumed = f_resumed.result()
-            control = f_control.result()
-            exact_rows = f_exact.result()
+        got = run_concurrently({
+            "resume": _resume_chain, "control": _control_chain,
+            "exact": ev.groupBy("event_type").agg(
+                F.countDistinct("user_id").alias("exact_users")).collect})
+        resumed, control = got["resume"], got["control"]
+        exact_rows = got["exact"]
         units_once = sorted(rec["unit"]
                             for rec in resumed.lineage()) == weeks
 
@@ -1880,7 +1645,6 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
     checkpoint-RESTART behavior is separately gated by the seven
     streaming_* sketch gates and checkpoint_resume_users.)"""
     import glob
-    import shutil
     import time
     from datetime import datetime
 
@@ -1888,20 +1652,11 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from sketchlib.streaming import windowed_distinct_count
 
-    base = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        ".tmp_stream_evict_gate")
-    shutil.rmtree(base, ignore_errors=True)
-    src, ckpt = os.path.join(base, "src"), os.path.join(base, "ckpt")
-    os.makedirs(src, exist_ok=True)
-    # same harness convention as the other streaming gates: the state
-    # store's partition count binds at checkpoint creation — 8 partitions
-    # for a 90-row gate, not the suite-wide 32
-    shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     schema = T.StructType([T.StructField("url", T.StringType()),
                            T.StructField("ts", T.TimestampType())])
     collected: list = []
 
-    def write(rows, mtime: float):
+    def write(src, rows, mtime: float):
         # repartition(1), NOT coalesce(1): a python-parallelized local
         # relation has defaultParallelism (32) pickled partitions, and a
         # coalesced single task deserializes them SEQUENTIALLY (one python
@@ -1916,42 +1671,32 @@ def q_streaming_windowed_eviction(spark: SparkSession, sf_dir: str) -> DataFrame
             if os.path.getmtime(f) > mtime - 0.5:
                 os.utime(f, (mtime, mtime))
 
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
+    # 2 state-store partitions for a 90-row gate, not the suite-wide 32
+    with _stream_scratch(spark, "evict", 2) as (src, ckpt):
         t0 = time.time()
-        write([(f"https://a/{i}", datetime(2026, 1, 1, 0, 10))
-               for i in range(30)]
+        write(src, [(f"https://a/{i}", datetime(2026, 1, 1, 0, 10))
+                    for i in range(30)]
               + [(f"https://b/{i}", datetime(2026, 1, 1, 1, 10))
                  for i in range(40)], t0 - 30)
-        write([(f"https://c/{i}", datetime(2026, 1, 1, 3, 10))
-               for i in range(20)], t0 - 20)
+        write(src, [(f"https://c/{i}", datetime(2026, 1, 1, 3, 10))
+                    for i in range(20)], t0 - 20)
         # late rows for hour 0: after batch 1 the watermark is
         # 02:40 > window end 01:00, so batch 2 must emit nothing
-        write([(f"https://late/{i}", datetime(2026, 1, 1, 0, 20))
-               for i in range(10)], t0 - 10)
+        write(src, [(f"https://late/{i}", datetime(2026, 1, 1, 0, 20))
+                    for i in range(10)], t0 - 10)
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(src))
-        agg = windowed_distinct_count(stream, "url", "ts", "1 hour",
-                                      "30 minutes")
-        q = (agg.writeStream
-             .foreachBatch(lambda bdf, b: collected.extend(
-                 (b, r) for r in bdf.collect()))
-             .outputMode("update")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(180):
-            q.stop()
-            raise TimeoutError("availableNow pass did not finish")
-        emitted = {int(r["window_start"].hour): int(r["estimate"])
-                   for _b, r in collected}
-        late_dropped = not any(b >= 2 for b, _r in collected)
-        prog = [p["stateOperators"][0]["numRowsTotal"]
-                for p in (q.recentProgress or [])
-                if p.get("stateOperators")]
-        state_bounded = bool(prog) and prog[-1] == 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
-        shutil.rmtree(base, ignore_errors=True)
+        q = _stream_pass(
+            windowed_distinct_count(stream, "url", "ts", "1 hour",
+                                    "30 minutes"),
+            lambda bdf, b: collected.extend((b, r) for r in bdf.collect()),
+            "update", ckpt)
+    emitted = {int(r["window_start"].hour): int(r["estimate"])
+               for _b, r in collected}
+    late_dropped = not any(b >= 2 for b, _r in collected)
+    prog = [p["stateOperators"][0]["numRowsTotal"]
+            for p in (q.recentProgress or []) if p.get("stateOperators")]
+    state_bounded = bool(prog) and prog[-1] == 1
     return spark.createDataFrame(
         [(h, emitted[h], bool(late_dropped), bool(state_bounded))
          for h in sorted(emitted)],
@@ -2611,14 +2356,11 @@ def q_hyperball_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the HyperBall relaxation rounds and the exact BFS are independent job
     # chains over the same edge set — overlap them so one chain's shuffle
     # tail back-fills the other's map stages
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_est = pool.submit(neighborhood_function, edges, 3, None,
-                            "u", "v", False)
-        f_exact = pool.submit(_exact_bfs)
-        est = f_est.result()
-        counts = f_exact.result()
+    got = run_concurrently({
+        "hyperball": lambda: neighborhood_function(edges, 3, None, "u", "v",
+                                                   False),
+        "bfs": _exact_bfs})
+    est, counts = got["hyperball"], got["bfs"]
     exact = spark.createDataFrame(counts, "r int, exact_pairs long")
 
     j = est.join(exact, "r")
@@ -2750,14 +2492,11 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("text").isNotNull()))
     # the curve build (internal sketch jobs) and the id-bounds aggregate
     # are independent — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_curve = pool.submit(vocab_growth, docs, 10)
-        f_bounds = pool.submit(docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")).collect)
-        curve = f_curve.result()
-        bounds = f_bounds.result()[0]
+    got = run_concurrently({
+        "curve": lambda: vocab_growth(docs, 10),
+        "bounds": docs.agg(F.min("doc_id").alias("lo"),
+                           F.max("doc_id").alias("hi")).collect})
+    curve, [bounds] = got["curve"], got["bounds"]
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
     span = max(hi - lo + 1, 1)
     bucket = F.least(F.lit(9), F.floor(
@@ -2942,8 +2681,6 @@ def q_ams_f2_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin = 6.8 * (2.0 / (1 << 12)) ** 0.5  # ~0.15 relative
     # 2 columns x (sketch build + exact F2) = four independent jobs over the
     # same scan — overlap them instead of running four sequential passes
-    from concurrent.futures import ThreadPoolExecutor
-
     def _sketch_f2(col):
         spec = AmsSpec(width=1 << 12, depth=7)
         [r] = sketch_agg(li, col, (), spec).collect()
@@ -2955,13 +2692,13 @@ def q_ams_f2_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         return int(e["f2"])
 
     cols = ("l_orderkey", "l_suppkey")
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_est = {c: pool.submit(_sketch_f2, c) for c in cols}
-        f_ex = {c: pool.submit(_exact_f2, c) for c in cols}
-        rows = []
-        for col in cols:
-            est, exact = f_est[col].result(), f_ex[col].result()
-            rows.append((col, exact, bool(abs(est - exact) <= margin * exact)))
+    got = run_concurrently({
+        **{f"sketch {c}": (lambda c=c: _sketch_f2(c)) for c in cols},
+        **{f"exact {c}": (lambda c=c: _exact_f2(c)) for c in cols}})
+    rows = []
+    for col in cols:
+        est, exact = got[f"sketch {col}"], got[f"exact {col}"]
+        rows.append((col, exact, bool(abs(est - exact) <= margin * exact)))
     return spark.createDataFrame(
         rows, "element string, exact_f2 long, within_bound boolean")
 
@@ -3116,18 +2853,14 @@ def q_skew_diagnosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-key counts (n = sum(count), hub = count of the k=-1 group, ndv =
     # #groups, F2 = sum(count^2)) — identical integers, half the scans; and
     # the exact pass overlaps the sketch diagnosis (independent jobs)
-    from concurrent.futures import ThreadPoolExecutor
-
     exact_agg = (skewed.groupBy("k").count().agg(
         F.sum("count").alias("n"),
         F.sum(F.when(F.col("k") == -1, F.col("count")).otherwise(0)).alias("hub"),
         F.count("*").alias("ndv"),
         F.sum(F.col("count") * F.col("count")).alias("f2")))
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_diag = pool.submit(diagnose_skew, skewed, "k", 5)
-        f_ex = pool.submit(exact_agg.collect)
-        diag = f_diag.result()
-        [ex] = f_ex.result()
+    got = run_concurrently({"diagnosis": lambda: diagnose_skew(skewed, "k", 5),
+                            "exact": exact_agg.collect})
+    diag, [ex] = got["diagnosis"], got["exact"]
     f2_exact = ex["f2"]
     hub_val, est, lower = diag.hot_keys[0]
     sandwich_ok = bool(lower <= ex["hub"] <= est)
@@ -3161,25 +2894,19 @@ def q_join_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlap them (straggler back-fill); and the left side's n / ndv / F2
     # come from ONE per-key-count pass instead of two separate scans
     # (n = sum(count), ndv = #groups, F2 = sum(count^2) — same integers)
-    from concurrent.futures import ThreadPoolExecutor
-
     left_agg = (li.groupBy("l_orderkey").count().agg(
         F.sum("count").alias("n"),
         F.count("*").alias("ndv"),
         F.sum(F.col("count") * F.col("count")).alias("f2")))
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_adv = pool.submit(advise_join, li, "l_orderkey", orders, "o_orderkey")
-        f_ex = pool.submit(
-            (li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-             .agg(F.count("*").alias("join_rows"))).collect)
-        f_el = pool.submit(left_agg.collect)
-        f_er = pool.submit(
-            orders.agg(F.count("*").alias("n"),
-                       F.count_distinct("o_orderkey").alias("ndv")).collect)
-        adv = f_adv.result()
-        [ex] = f_ex.result()
-        [el] = f_el.result()
-        [er] = f_er.result()
+    got = run_concurrently({
+        "advice": lambda: advise_join(li, "l_orderkey", orders, "o_orderkey"),
+        "join": (li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
+                 .agg(F.count("*").alias("join_rows"))).collect,
+        "left": left_agg.collect,
+        "right": orders.agg(F.count("*").alias("n"),
+                            F.count_distinct("o_orderkey").alias("ndv")).collect})
+    adv = got["advice"]
+    [ex], [el], [er] = got["join"], got["left"], got["right"]
     f2l = el["f2"]
     est_ok = bool(ex["join_rows"] <= adv.est_join_rows
                   <= ex["join_rows"] + adv.upper_margin)
@@ -3296,14 +3023,11 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["o_custkey", "o_orderkey", "o_orderstatus"]
     # profile_columns runs its exact-scalar collect internally; the gate's
     # exact COUNT(DISTINCT) reference is an independent job — overlap them
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_prof = pool.submit(profile_columns, orders, cols)
-        f_exact = pool.submit(orders.agg(
-            *[F.countDistinct(c).alias(c) for c in cols]).collect)
-        prof = f_prof.result()
-        [r] = f_exact.result()
+    got = run_concurrently({
+        "profile": lambda: profile_columns(orders, cols),
+        "exact": orders.agg(*[F.countDistinct(c).alias(c)
+                              for c in cols]).collect})
+    prof, [r] = got["profile"], got["exact"]
     exact = spark.createDataFrame([(c, int(r[c])) for c in cols],
                                   "column string, exact_distinct long")
     j = prof.join(exact, "column")

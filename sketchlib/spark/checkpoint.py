@@ -32,13 +32,13 @@ import os
 import threading
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .aggregate import build_partials, merge_partials, per_row_udf
+from .concurrency import run_concurrently
 from .skew import tree_merge_partials
 
 
@@ -175,30 +175,24 @@ class SketchCheckpoint:
         write tail.  2-3 in flight is plenty; the returned ``records`` list
         stays in ``units`` order, and manifest-line order (which may
         interleave) carries no semantics — completion is set-based.  If
-        units fail, every unit still runs to its end and one
-        ``RuntimeError`` names each failed unit; the units that
-        committed stay complete, so a re-run resumes with the failed ones
-        only."""
+        units fail, every unit still runs to its end (at ``parallelism=1``
+        too) and one ``RuntimeError`` names each failed unit; the units
+        that committed stay complete, so a re-run resumes with the failed
+        ones only."""
         self._check_resume_config()
         done = self.completed_units()
         todo = [u for u in units if str(u) not in done]
-        if parallelism > 1 and len(todo) > 1:
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                futs = [pool.submit(self.run_unit, source(u), str(u))
-                        for u in todo]
-            # the pool has waited for every unit: the ones that committed
-            # stay in the manifest (resume skips them), and one error
-            # names every unit that failed
-            failed = [(u, f.exception()) for u, f in zip(todo, futs)
-                      if f.exception() is not None]
-            if failed:
-                raise RuntimeError(
-                    f"{len(failed)} checkpoint unit(s) failed: " + "; ".join(
-                        f"{u}: {type(e).__name__}: {e}" for u, e in failed)
-                ) from failed[0][1]
-            records = [f.result() for f in futs]
-        else:
-            records = [self.run_unit(source(u), str(u)) for u in todo]
+        try:
+            ran = run_concurrently(
+                {str(u): (lambda u=u: self.run_unit(source(u), str(u)))
+                 for u in todo}, max_workers=parallelism)
+        except RuntimeError as err:
+            # every unit ran to its end; the ones that committed stay in
+            # the manifest (resume skips them)
+            n_failed = len({str(u) for u in todo} - self.completed_units())
+            raise RuntimeError(f"{n_failed} checkpoint unit(s) failed; {err}"
+                               ) from err.__cause__
+        records = [ran[str(u)] for u in todo]
         return {"resumed": bool(done), "skipped": len(units) - len(todo),
                 "ran": len(todo), "records": records}
 

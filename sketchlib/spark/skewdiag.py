@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 
 from .aggregate import sketch_agg
+from .concurrency import run_concurrently
 from .heavy_hitters import heavy_hitters
 from .specs import AmsSpec, CmsSpec, ComboSpec, ThetaSpec
 
@@ -166,8 +167,6 @@ def advise_join(df_left: DataFrame, left_key, df_right: DataFrame,
                 hash_name: str = "murmur3") -> JoinAdvice:
     """One ComboSpec scan per side -> :class:`JoinAdvice`.  No join runs,
     no raw rows shuffle; the driver folds two ~300 KB blob sets."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..cms import CountMinSketch
 
     def side(df, key):
@@ -181,11 +180,10 @@ def advise_join(df_left: DataFrame, left_key, df_right: DataFrame,
     # the two sides are independent jobs — submit both so the second side's
     # scan back-fills executors as the first side's stages drain (the
     # straggler-overlap pattern; blob results are unaffected by overlap)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_left = pool.submit(side, df_left, left_key)
-        f_right = pool.submit(side, df_right, right_key)
-        lt, la, lc = f_left.result()
-        rt, ra, rc = f_right.result()
+    sides = run_concurrently({"left": lambda: side(df_left, left_key),
+                              "right": lambda: side(df_right, right_key)})
+    lt, la, lc = sides["left"]
+    rt, ra, rc = sides["right"]
     assert isinstance(lc, CountMinSketch) and isinstance(rc, CountMinSketch)
     return JoinAdvice(
         n_left=int(la.count_additions), n_right=int(ra.count_additions),
@@ -208,23 +206,19 @@ def diagnose_skew(df: DataFrame, key_col: str, k: int = 10,
     capacity-bounded per partition (heavy_hitters docstring) — the hot key
     this function exists to find never becomes a hot key of the diagnosis
     itself."""
-    from concurrent.futures import ThreadPoolExecutor
-
     combo = ComboSpec([ThetaSpec(k=theta_k, hash_name=hash_name),
                        AmsSpec(width=ams_width, depth=ams_depth,
                                hash_name=hash_name)])
     # both passes scan the same column and are independent — overlap them so
     # pass 2's map tasks back-fill the cluster while pass 1's blob merge
     # drains (results are deterministic either way)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_combo = pool.submit(
-            lambda: sketch_agg(df, key_col, (), combo).collect())
-        f_hh = pool.submit(
-            lambda: heavy_hitters(
-                df, key_col, k=k,
-                spec=cms_spec or CmsSpec(hash_name=hash_name)).collect())
-        [row] = f_combo.result()
-        hh = f_hh.result()
+    passes = run_concurrently({
+        "combo": lambda: sketch_agg(df, key_col, (), combo).collect(),
+        "heavy_hitters": lambda: heavy_hitters(
+            df, key_col, k=k,
+            spec=cms_spec or CmsSpec(hash_name=hash_name)).collect()})
+    [row] = passes["combo"]
+    hh = passes["heavy_hitters"]
     theta_sk, ams_sk = combo.from_bytes(bytes(row["sketch"]))
     hot = tuple(sorted(((r["value"], int(r["est_count"]), int(r["lower_bound"]))
                         for r in hh), key=lambda t: (-t[1], str(t[0]))))

@@ -21,20 +21,37 @@ timeout argument if desired).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Iterable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _STATE_SCHEMA = T.StructType([T.StructField("sketch", T.BinaryType())])
 
 
+def _drop_null_elements(df: DataFrame, element_cols: Sequence[str]) -> DataFrame:
+    """``df`` without the rows that have a NULL element, filtered JVM-side.
+    Dropping them after Spark's Arrow->pandas conversion is too late: that
+    conversion has already turned an integer column holding a NULL into
+    float64, and the sketch would hash every value of it as a double."""
+    return df.filter(reduce(operator.and_,
+                            [F.col(c).isNotNull() for c in element_cols]))
+
+
 def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequence[str],
                          spec, output_mode: str = "update") -> DataFrame:
     """(group_cols..., estimate: long, count_additions: long), updated every
-    micro-batch. ``stream_df`` must be a streaming DataFrame."""
+    micro-batch. ``stream_df`` must be a streaming DataFrame.
+
+    NULL rule (as in :func:`~sketchlib.spark.aggregate.sketch_agg`): rows
+    with a NULL element carry no sketch mass and are dropped before the
+    state operator, so a group whose micro-batch rows are all NULL neither
+    updates its state nor emits a row in that micro-batch."""
     if isinstance(element_cols, str):
         element_cols = [element_cols]
     element_cols = list(element_cols)
@@ -55,7 +72,6 @@ def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequenc
         else:
             sketch = spec.make()
         for pdf in pdfs:
-            pdf = pdf.dropna(subset=element_cols)
             if len(pdf):
                 spec.ingest(sketch, spec.prepare(pdf, element_cols))
         state.update((spec.to_bytes(sketch),))
@@ -64,7 +80,8 @@ def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequenc
                           int(getattr(sketch, "count_additions", 0))]],
             columns=group_cols + ["estimate", "count_additions"])
 
-    return (stream_df.groupBy(*group_cols)
+    return (_drop_null_elements(stream_df, element_cols)
+            .groupBy(*group_cols)
             .applyInPandasWithState(update, out_schema, _STATE_SCHEMA,
                                     output_mode, GroupStateTimeout.NoTimeout))
 
@@ -105,13 +122,15 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
     ``slide_duration`` turns the tumbling window into a sliding one
     (``F.window``'s slide): each row then feeds every overlapping window's
     sketch; eviction still fires per window as the watermark passes its end.
+
+    NULL rule: as in :func:`streaming_sketch_agg`, rows with a NULL element
+    are dropped before the state operator — a window whose rows are all
+    NULL gets no state, no timeout and no output row.
     """
     if isinstance(element_cols, str):
         element_cols = [element_cols]
     element_cols = list(element_cols)
     group_cols = list(group_cols)
-
-    from pyspark.sql import functions as F
 
     # NOTE: the event-time watermark rides on the window struct column's
     # metadata — it must stay intact through the groupBy (flattening
@@ -180,7 +199,6 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
         else:
             sketch = spec.make()
         for pdf in pdfs:
-            pdf = pdf.dropna(subset=element_cols)
             if len(pdf):
                 spec.ingest(sketch, spec.prepare(pdf, element_cols))
         state.update((spec.to_bytes(sketch),))
@@ -192,7 +210,8 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
             columns=(["window_start", "window_end"] + group_cols
                      + ["estimate", "count_additions"]))
 
-    return (df.groupBy("__w", *group_cols)
+    return (_drop_null_elements(df, element_cols)
+            .groupBy("__w", *group_cols)
             .applyInPandasWithState(update, out_schema, _STATE_SCHEMA,
                                     output_mode,
                                     GroupStateTimeout.EventTimeTimeout))

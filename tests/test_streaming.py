@@ -319,3 +319,55 @@ def test_windowed_eviction_non_utc_session_tz(spark, tmp_path):
         assert n_state and n_state[-1] == 1, n_state
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+@pytest.mark.parametrize("windowed", [False, True])
+def test_null_element_keeps_int64_hashes(spark, tmp_path, windowed):
+    """A NULL element in a micro-batch must not change how the other
+    int64 elements hash: the NULL rows are dropped JVM-side, before Spark's
+    Arrow->pandas conversion would turn the column into float64.  A CMS
+    point query for two members (one beyond 2**53) finds each once."""
+    from datetime import datetime
+
+    import numpy as np
+    import pandas as pd
+
+    from sketchlib.spark.aggregate import hash_columns
+    from sketchlib.spark.specs import CmsSpec
+    from sketchlib.streaming import streaming_sketch_agg, windowed_sketch_agg
+
+    big = 2 ** 60 + 7
+    probes = hash_columns(
+        pd.DataFrame({"id": pd.Series([5, big], dtype="int64")}), ["id"])
+
+    class _ProbeSpec(CmsSpec):
+        def estimate(self, sk) -> int:
+            # the smaller of the two probes' point estimates
+            return int(sk.estimate_hashes(np.asarray(probes, "<u8")).min())
+
+    schema = "id long, g string, ts timestamp"
+    ts = datetime(2026, 1, 1, 0, 10)
+    rows = [(i, "a", ts) for i in range(1, 51)] + [(big, "a", ts),
+                                                   (None, "a", ts)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).repartition(1).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    if windowed:
+        agg = windowed_sketch_agg(stream, "id", "ts", "1 hour", "30 minutes",
+                                  _ProbeSpec(), group_cols=["g"])
+    else:
+        agg = streaming_sketch_agg(stream.select("id", "g"), "id", ["g"],
+                                   _ProbeSpec())
+    collected = []
+    q = (agg.writeStream
+         .foreachBatch(lambda bdf, _b: collected.extend(bdf.collect()))
+         .outputMode("update")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    if not q.awaitTermination(120):
+        q.stop()
+        raise TimeoutError(
+            "availableNow streaming pass did not finish in 120s")
+    [r] = collected
+    assert r["estimate"] == 1
+    assert r["count_additions"] == 51  # the NULL row carries no mass
