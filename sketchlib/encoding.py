@@ -12,8 +12,9 @@ cross-system sketch compatibility.
 * bytes   → raw                                  (CardinalityEstimator.cs:467-528)
 
 Batch encoders produce (flat uint8 buffer, int64 offsets) — the shape the
-vectorized hashers consume.  Fixed-width numerics encode with a single
-``astype`` (zero per-row Python); strings ride on Arrow/pandas buffers.
+vectorized hashers consume.  :func:`arrow_flat_bytes` is the only type ->
+bytes map: fixed-width numerics encode with a single ``astype`` (zero
+per-row Python) and strings ride on Arrow buffers.
 """
 
 from __future__ import annotations
@@ -56,46 +57,23 @@ def encode_numeric_batch(values: np.ndarray, kind: str) -> tuple[np.ndarray, np.
     return flat, offsets
 
 
-def encode_string_series(series) -> tuple[np.ndarray, np.ndarray]:
-    """UTF-8 encode a pandas Series of strings → (flat, offsets), null-free.
-
-    Uses Arrow's large_utf8 buffers (offsets int64 + contiguous UTF-8 data)
-    so no per-row Python executes.
-    """
-    import pyarrow as pa
-
-    arr = pa.Array.from_pandas(series, type=pa.large_utf8())
-    if arr.null_count:
-        raise ValueError("null strings must be filtered before hashing")
-    buffers = arr.buffers()  # [validity, offsets, data]
-    offsets = np.frombuffer(buffers[1], dtype=np.int64, count=len(arr) + 1,
-                            offset=arr.offset * 8)
-    data = np.frombuffer(buffers[2], dtype=np.uint8)
-    if offsets[0] != 0:
-        data = data[offsets[0]:]
-        offsets = offsets - offsets[0]
-    return data, offsets
-
-
 def arrow_flat_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
     """(flat uint8, int64 offsets) straight from an Arrow array's buffers —
     ZERO per-row Python, no pandas materialization. Accepts string/binary
     (32-bit offsets cast up), numerics (fixed-width LE reinterpret; 8- and
     16-bit integers widen to 8 bytes), timestamps (int64 micros) and dates
-    (int64 day counts). This is the ``mapInArrow`` hot path."""
+    (int64 day counts). This is the one element encoding: batch, streaming
+    and driver-side frames all hash through it."""
     import pyarrow as pa
     import pyarrow.types as pt
 
+    if arr.null_count:
+        raise ValueError("nulls must be filtered before hashing")
     t = arr.type
-    if pt.is_string(t) or pt.is_binary(t):
-        arr = arr.cast(pa.large_binary())
-        t = arr.type
-    if pt.is_large_string(t):
+    if pt.is_string(t) or pt.is_binary(t) or pt.is_large_string(t):
         arr = arr.cast(pa.large_binary())
         t = arr.type
     if pt.is_large_binary(t):
-        if arr.null_count:
-            raise ValueError("nulls must be filtered before hashing")
         buffers = arr.buffers()
         offsets = np.frombuffer(buffers[1], dtype=np.int64, count=len(arr) + 1,
                                 offset=arr.offset * 8)
@@ -106,44 +84,19 @@ def arrow_flat_bytes(arr) -> tuple[np.ndarray, np.ndarray]:
         return data, offsets
     if pt.is_timestamp(t):
         vals = arr.cast(pa.timestamp("us")).cast(pa.int64())
-        if vals.null_count:
-            raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(vals.to_numpy(), "int64")
     if pt.is_integer(t):
-        # 1- and 2-byte integers widen to 8 bytes, as ``hash_series`` does
+        # 1- and 2-byte integers widen to 8 bytes
         kind = ("int32" if t.bit_width == 32 else "int64")
         if pt.is_unsigned_integer(t):
             kind = "u" + kind
-        if arr.null_count:
-            raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(arr.to_numpy(), kind)
     if pt.is_floating(t):
         kind = "float32" if t.bit_width == 32 else "float64"
-        if arr.null_count:
-            raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(arr.to_numpy(), kind)
     if pt.is_date(t):
         # day counts (date32) widen through int32: pyarrow has no
         # date32 -> int64 cast
         vals = arr.cast(pa.int32() if pt.is_date32(t) else pa.int64()).cast(pa.int64())
-        if vals.null_count:
-            raise ValueError("nulls must be filtered before hashing")
         return encode_numeric_batch(vals.to_numpy(), "int64")
     raise TypeError(f"unsupported arrow type for hashing: {t}")
-
-
-def encode_binary_series(series) -> tuple[np.ndarray, np.ndarray]:
-    """Raw-bytes encoding of a pandas Series of bytes objects."""
-    import pyarrow as pa
-
-    arr = pa.Array.from_pandas(series, type=pa.large_binary())
-    if arr.null_count:
-        raise ValueError("null values must be filtered before hashing")
-    buffers = arr.buffers()
-    offsets = np.frombuffer(buffers[1], dtype=np.int64, count=len(arr) + 1,
-                            offset=arr.offset * 8)
-    data = np.frombuffer(buffers[2], dtype=np.uint8)
-    if offsets[0] != 0:
-        data = data[offsets[0]:]
-        offsets = offsets - offsets[0]
-    return data, offsets

@@ -29,7 +29,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+from pyspark.sql import types as T
+
 from .._wire import read_array, unpack
+from ..spark.aggregate import SketchSpec
 
 WIRE_MAGIC = b"FD"
 WIRE_VERSION = 1
@@ -162,15 +165,17 @@ class FrequentDirections:
         return sk
 
 
-class FdSpec:
+class FdSpec(SketchSpec):
     """Binding for the two-stage aggregation in
     :mod:`sketchlib.spark.aggregate`: one FD per (group, partition) built in
     the Arrow stream path (``prepare_arrow`` returns the (n, d) row matrix;
     the stream build's row-indexing composes with 2-D prepared arrays),
-    then blob-merged. ``prepare`` is the same matrix from a pandas frame."""
+    then blob-merged."""
 
     name = "freqdir"
+    sketch_type = FrequentDirections
     hash_dedup = False
+    estimate_type = T.DoubleType()
 
     def __init__(self, ell: int, d: int) -> None:
         self.ell = ell
@@ -178,11 +183,6 @@ class FdSpec:
 
     def make(self) -> FrequentDirections:
         return FrequentDirections(ell=self.ell, d=self.d)
-
-    def prepare(self, pdf, element_cols):
-        if len(element_cols) != 1:
-            raise ValueError("FD takes exactly one embedding column")
-        return np.stack(pdf[element_cols[0]].to_numpy()).astype(np.float64)
 
     def prepare_arrow(self, batch, element_cols):
         """(n, d) float64 view of a list column's flat values buffer."""
@@ -200,25 +200,9 @@ class FdSpec:
     def ingest(self, sketch: FrequentDirections, prepared: np.ndarray) -> None:
         sketch.update(prepared)
 
-    def to_bytes(self, sketch: FrequentDirections) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> FrequentDirections:
-        return FrequentDirections.from_bytes(blob)
-
-    def merge(self, a: FrequentDirections, b: FrequentDirections) -> FrequentDirections:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: FrequentDirections) -> float:
         """Scalar summary = the a-priori spectral error bound."""
         return sketch.covariance_error_bound()
-
-    @property
-    def estimate_type(self):
-        from pyspark.sql import types as T
-
-        return T.DoubleType()
 
 
 def fd_sketch(df, embedding_col: str, ell: int, d: int,

@@ -42,40 +42,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import hll
-from ..encoding import (arrow_flat_bytes, encode_binary_series, encode_numeric_batch,
-                        encode_string_series)
+from ..encoding import arrow_flat_bytes
 from ..hashing import HASHES
 from ..hll import HllSketch, concat_ranges
 
 
-def hash_series(series: pd.Series, hash_name: str = "murmur3") -> np.ndarray:
-    """Vectorized 64-bit hash of a pandas Series using the normative element
-    encodings (sketchlib.encoding).  Integer width follows the Spark column
-    type (int32 -> 4-byte LE, int64 -> 8-byte LE), matching the reference's
-    distinct Add(int)/Add(long) encodings."""
-    _scalar, flat_fn = HASHES[hash_name]
-    dt = series.dtype
-    if pd.api.types.is_integer_dtype(dt):
-        kind = "int32" if dt.itemsize == 4 else "int64"
-        flat, offsets = encode_numeric_batch(series.to_numpy(), kind)
-    elif pd.api.types.is_float_dtype(dt):
-        kind = "float32" if dt.itemsize == 4 else "float64"
-        flat, offsets = encode_numeric_batch(series.to_numpy(), kind)
-    elif pd.api.types.is_datetime64_any_dtype(dt):
-        flat, offsets = encode_numeric_batch(series.to_numpy("datetime64[us]").view(np.int64), "int64")
-    else:
-        first = series.iloc[0] if len(series) else ""
-        if isinstance(first, (bytes, bytearray)):
-            flat, offsets = encode_binary_series(series)
-        else:
-            flat, offsets = encode_string_series(series)
-    return flat_fn(flat, offsets)
-
-
 def hash_arrow_columns(batch, cols: Sequence[str], hash_name: str = "murmur3") -> np.ndarray:
-    """Composite element hash straight from Arrow buffers (mapInArrow hot
-    path — no pandas, no per-row Python string materialization). Same
-    composition rule as :func:`hash_columns`."""
+    """Composite element hash straight from Arrow buffers (the one hashing
+    path — no pandas, no per-row Python string materialization).  Single
+    column: the element hash itself (reference-compatible).  Multi-column:
+    hash of the concatenated per-column hashes (16/24/... fixed-width
+    bytes) — unambiguous, vectorized, and library-normative (the reference
+    is single-element only)."""
     _scalar, flat_fn = HASHES[hash_name]
     per = []
     for c in cols:
@@ -133,42 +111,91 @@ def _keys_as_tuples(key_cols: tuple) -> list[tuple]:
     return list(zip(*[c.tolist() for c in key_cols]))
 
 
+def element_batch(pdf: pd.DataFrame, cols: Sequence[str]) -> pa.RecordBatch:
+    """The element columns of a pandas frame as an Arrow batch, for
+    ``spec.prepare_arrow``.  ``from_pandas=False`` keeps a float NaN as a
+    value (pandas' null convention would turn it into a NULL), so a frame
+    hashes exactly as the same column does in the batch path."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(pdf[c], from_pandas=False) for c in cols], names=list(cols))
+
+
 def hash_columns(pdf: pd.DataFrame, cols: Sequence[str], hash_name: str = "murmur3") -> np.ndarray:
-    """Composite element hash.  Single column: the element hash itself
-    (reference-compatible).  Multi-column: hash of the concatenated per-column
-    hashes (16/24/... fixed-width bytes) — unambiguous, vectorized, and
-    library-normative (the reference is single-element only)."""
-    per = [hash_series(pdf[c], hash_name) for c in cols]
-    if len(per) == 1:
-        return per[0]
-    _scalar, flat_fn = HASHES[hash_name]
-    combo = np.empty((per[0].shape[0], len(per)), dtype="<u8")
-    for j, h in enumerate(per):
-        combo[:, j] = h
-    flat = combo.reshape(-1).view(np.uint8)
-    offsets = np.arange(per[0].shape[0] + 1, dtype=np.int64) * (8 * len(per))
-    return flat_fn(flat, offsets)
+    """:func:`hash_arrow_columns` over the columns of a driver-side pandas
+    frame."""
+    return hash_arrow_columns(element_batch(pdf, cols), cols, hash_name)
 
 
-class SpecRepr:
-    """Stable parameter-based repr shared by every sketch spec: two specs
-    constructed with equal parameters repr identically (the default
-    object repr embeds the instance address — under which
-    ``blobcache.blob_token`` would mint a fresh worker-cache token per
-    spec INSTANCE, defeating cross-call deserialization reuse for the
-    common ``spec or BloomSpec()`` pattern)."""
+class SketchSpec:
+    """The protocol that binds one sketch type into the two-stage
+    aggregation, the SQL functions and the streaming state.  A spec is a
+    small picklable value object (UDF closures ship it to executors):
+
+    * ``make()`` -> an empty sketch;
+    * ``prepare_arrow(batch, element_cols)`` -> the array ``ingest`` takes
+      from an Arrow batch of element columns: 64-bit element hashes
+      (:class:`HashSpec`), float64 values (the quantile specs) or an (n, d)
+      row matrix (``FdSpec``).  Every path — batch, streaming and
+      driver-side frames (:func:`element_batch`) — prepares through it;
+    * ``ingest(sketch, prepared)``;
+    * ``to_bytes`` / ``from_bytes`` / ``merge`` — by default the
+      ``sketch_type`` class's wire format and in-place merge;
+    * ``estimate(sketch)`` -> the scalar summary, of Spark type
+      ``estimate_type``.
+
+    Optional attributes, read with ``getattr``, route the build and fold
+    paths: ``hash_dedup`` (stage 1 may dedup (group, hash) pairs and build
+    through ``build_from_hashes`` / ``blob_from_hashes``), ``fold_segments``
+    / ``estimate_blobs`` (Arrow-native wire kernels), ``prehashed`` and
+    ``hash_name``.
+
+    The repr is parameter-based: two specs constructed with equal
+    parameters repr identically (the default object repr embeds the
+    instance address — under which ``blobcache.blob_token`` would mint a
+    fresh worker-cache token per spec INSTANCE, defeating cross-call
+    deserialization reuse for the common ``spec or BloomSpec()`` pattern)."""
+
+    sketch_type: type
 
     def __repr__(self) -> str:
         args = ", ".join(f"{k}={v!r}" for k, v in sorted(vars(self).items()))
         return f"{type(self).__name__}({args})"
 
+    def to_bytes(self, sketch) -> bytes:
+        return sketch.to_bytes()
 
-class HllSpec(SpecRepr):
-    """Sketch-spec protocol binding :class:`HllSketch` into the two-stage
-    aggregation.  Sibling sketches (bloom/cms/kll/tdigest) implement the same
-    four methods plus ``estimate_fields``."""
+    def from_bytes(self, blob: bytes):
+        return self.sketch_type.from_bytes(blob)
+
+    def merge(self, a, b):
+        a.merge(b)
+        return a
+
+
+class HashSpec(SketchSpec):
+    """Base of the hash families: elements hash to 64-bit values through
+    :func:`hash_arrow_columns` with the spec's ``hash_name``, and the sketch
+    ingests them with ``add_hashes``.  A ``prehashed`` spec's single int64
+    element column already IS the hash (computed JVM-side, e.g.
+    ``F.xxhash64``; see :func:`build_partials`) and is reinterpreted
+    instead."""
+
+    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
+        if getattr(self, "prehashed", False):
+            return np.ascontiguousarray(
+                batch.column(element_cols[0]).to_numpy(zero_copy_only=False)
+            ).view(np.uint64)
+        return hash_arrow_columns(batch, element_cols, self.hash_name)
+
+    def ingest(self, sketch, prepared: np.ndarray) -> None:
+        sketch.add_hashes(prepared)
+
+
+class HllSpec(HashSpec):
+    """Binds :class:`HllSketch` into the two-stage aggregation."""
 
     name = "hll"
+    sketch_type = HllSketch
     #: distinct-counting sketches are a pure function of the *set* of element
     #: hashes -> stage 1 may dedup (group, hash) pairs and batch-build
     #: (the vectorized many-tiny-groups fast path).
@@ -181,9 +208,7 @@ class HllSpec(SpecRepr):
         self.hash_name = hash_name
         self.use_direct_counting = use_direct_counting
         #: the element column already IS the 64-bit element hash (computed
-        #: JVM-side, e.g. ``F.xxhash64``); ``prepare`` reinterprets the int64
-        #: values instead of encoding+hashing in Python.  See
-        #: :func:`build_partials` ``prehash64``.
+        #: JVM-side, e.g. ``F.xxhash64``); see :class:`HashSpec`.
         self.prehashed = prehashed
 
     def make(self):
@@ -207,32 +232,6 @@ class HllSpec(SpecRepr):
             return direct_blob(self.p, sorted_unique_hashes, count_additions)
         return self.to_bytes(self.build_from_hashes(sorted_unique_hashes,
                                                     count_additions))
-
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        if self.prehashed:
-            return np.ascontiguousarray(
-                pdf[element_cols[0]].to_numpy(np.int64)).view(np.uint64)
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        if self.prehashed:
-            return np.ascontiguousarray(
-                batch.column(element_cols[0]).to_numpy(zero_copy_only=False)
-            ).view(np.uint64)
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: HllSketch, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
-    def to_bytes(self, sketch: HllSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> HllSketch:
-        return HllSketch.from_bytes(blob)
-
-    def merge(self, a: HllSketch, b: HllSketch) -> HllSketch:
-        a.merge(b)
-        return a
 
     #: batch wire-level kernels over Arrow binary buffers; their presence
     #: routes the merge/estimate UDFs, rolling_merge and premerge_partials

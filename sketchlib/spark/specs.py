@@ -2,9 +2,18 @@
 :mod:`sketchlib.spark.aggregate`.
 
 A spec adapts one pure-numpy sketch to the partial-build / shuffle-merge /
-estimate pipeline. ``HllSpec`` lives in :mod:`sketchlib.spark.aggregate` for
-historical reasons; the sibling sketches bind here. Every spec is a small
-picklable value object (it is captured in UDF closures shipped to executors).
+estimate pipeline; the protocol is documented once, on
+:class:`~sketchlib.spark.aggregate.SketchSpec`. ``HllSpec`` lives in
+:mod:`sketchlib.spark.aggregate` for historical reasons; the sibling
+sketches bind here.
+
+Batch builds, streaming state and driver-side frames share one Arrow hot
+path, ``prepare_arrow``: the hash families hash each element through
+:func:`sketchlib.encoding.arrow_flat_bytes`, so a streaming state and a
+batch partial over the same column hold the same registers and merge.  A
+timestamp element hashes as its int64 UTC microseconds on every path (see
+:mod:`sketchlib.streaming.stream_agg`), a ``TIMESTAMP_NTZ`` element as its
+wall-clock microseconds and a date as its int64 day count.
 """
 
 from __future__ import annotations
@@ -12,7 +21,6 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import types as T
 
 from ..ams import AmsSketch
@@ -24,13 +32,14 @@ from ..ddsketch import DDSketch
 from ..kll import KllSketch
 from ..tdigest import TDigest
 from ..theta import ThetaSketch
-from .aggregate import SpecRepr, hash_arrow_columns, hash_columns
+from .aggregate import HashSpec, SketchSpec
 
 
-class BloomSpec(SpecRepr):
+class BloomSpec(HashSpec):
     """Bloom membership sketch: set semantics -> dedup-able stage 1."""
 
     name = "bloom"
+    sketch_type = BloomFilter
     hash_dedup = True
     estimate_type = T.LongType()
 
@@ -43,15 +52,6 @@ class BloomSpec(SpecRepr):
     def make(self) -> BloomFilter:
         return BloomFilter(m_bits=self.m_bits, k=self.k)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: BloomFilter, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
     def build_from_hashes(self, unique_hashes: np.ndarray,
                           count_additions: int) -> BloomFilter:
         bf = self.make()
@@ -59,21 +59,11 @@ class BloomSpec(SpecRepr):
         bf.count_additions = count_additions
         return bf
 
-    def to_bytes(self, sketch: BloomFilter) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> BloomFilter:
-        return BloomFilter.from_bytes(blob)
-
-    def merge(self, a: BloomFilter, b: BloomFilter) -> BloomFilter:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: BloomFilter) -> int:
         return sketch.estimate_cardinality()
 
 
-class CuckooSpec(SpecRepr):
+class CuckooSpec(HashSpec):
     """Cuckoo membership sketch: set semantics like Bloom (stage-1 dedup is
     per-partition, see the duplicate-copies caveat in
     :mod:`sketchlib.cuckoo`), merge = fingerprint re-insertion.  Estimate is
@@ -88,6 +78,7 @@ class CuckooSpec(SpecRepr):
     cardinality for anything bigger."""
 
     name = "cuckoo"
+    sketch_type = CuckooFilter
     hash_dedup = True
     estimate_type = T.LongType()
 
@@ -117,15 +108,6 @@ class CuckooSpec(SpecRepr):
     def make(self) -> CuckooFilter:
         return CuckooFilter(n_buckets=self.n_buckets)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: CuckooFilter, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
     def build_from_hashes(self, unique_hashes: np.ndarray,
                           count_additions: int) -> CuckooFilter:
         cf = self.make()
@@ -133,25 +115,16 @@ class CuckooSpec(SpecRepr):
         cf.count_additions = count_additions
         return cf
 
-    def to_bytes(self, sketch: CuckooFilter) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> CuckooFilter:
-        return CuckooFilter.from_bytes(blob)
-
-    def merge(self, a: CuckooFilter, b: CuckooFilter) -> CuckooFilter:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: CuckooFilter) -> int:
         return sketch.size()
 
 
-class CmsSpec(SpecRepr):
+class CmsSpec(HashSpec):
     """Count-min frequency sketch: multiplicities matter -> streaming stage 1
     (``hash_dedup = False``); merge = cell-wise sum."""
 
     name = "cms"
+    sketch_type = CountMinSketch
     hash_dedup = False
     estimate_type = T.LongType()
 
@@ -164,37 +137,19 @@ class CmsSpec(SpecRepr):
     def make(self) -> CountMinSketch:
         return CountMinSketch(width=self.width, depth=self.depth)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: CountMinSketch, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
-    def to_bytes(self, sketch: CountMinSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> CountMinSketch:
-        return CountMinSketch.from_bytes(blob)
-
-    def merge(self, a: CountMinSketch, b: CountMinSketch) -> CountMinSketch:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: CountMinSketch) -> int:
         """Scalar summary = total stream length N (point queries go through
         :func:`sketchlib.spark.heavy_hitters.estimate_counts`)."""
         return sketch.count_additions
 
 
-class AmsSpec(SpecRepr):
+class AmsSpec(HashSpec):
     """AMS/Count-Sketch F2 sketch: linear sketch -> streaming stage 1
     (``hash_dedup = False``, multiplicities are the whole point); merge =
     cell-wise sum; estimate = median-of-rows F2 (self-join size)."""
 
     name = "ams"
+    sketch_type = AmsSketch
     hash_dedup = False
     estimate_type = T.LongType()
 
@@ -207,30 +162,11 @@ class AmsSpec(SpecRepr):
     def make(self) -> AmsSketch:
         return AmsSketch(width=self.width, depth=self.depth)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: AmsSketch, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
-    def to_bytes(self, sketch: AmsSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> AmsSketch:
-        return AmsSketch.from_bytes(blob)
-
-    def merge(self, a: AmsSketch, b: AmsSketch) -> AmsSketch:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: AmsSketch) -> int:
         return sketch.estimate_f2()
 
 
-class MgSpec(SpecRepr):
+class MgSpec(HashSpec):
     """Misra–Gries frequent-items summary: deterministic per-key sandwich
     (estimate <= true <= estimate + total_decrement, total_decrement <=
     n/(k+1) under any merge tree — Agarwal et al. 2012).  Multiplicities are
@@ -239,6 +175,7 @@ class MgSpec(SpecRepr):
     certified frequency lower bound (the top counter)."""
 
     name = "mg"
+    sketch_type = MisraGriesSketch
     hash_dedup = False
     estimate_type = T.LongType()
 
@@ -249,42 +186,18 @@ class MgSpec(SpecRepr):
     def make(self) -> MisraGriesSketch:
         return MisraGriesSketch(k=self.k)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: MisraGriesSketch, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
-    def to_bytes(self, sketch: MisraGriesSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> MisraGriesSketch:
-        return MisraGriesSketch.from_bytes(blob)
-
-    def merge(self, a: MisraGriesSketch, b: MisraGriesSketch) -> MisraGriesSketch:
-        a.merge(b)
-        return a
-
     def estimate(self, sketch: MisraGriesSketch) -> int:
         return int(sketch.counts.max()) if sketch.counts.shape[0] else 0
 
 
-class _QuantileSpecBase(SpecRepr):
+class _QuantileSpecBase(SketchSpec):
     """Shared binding for value-based (not hash-based) quantile sketches:
-    ``prepare`` extracts the float64 value column; stage 1 streams values into
+    ``prepare_arrow`` extracts the float64 value column; stage 1 streams values into
     one live sketch per group (``hash_dedup = False`` — multiplicity and
     magnitude matter)."""
 
     hash_dedup = False
     estimate_type = T.DoubleType()
-
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        if len(element_cols) != 1:
-            raise ValueError("quantile sketches take exactly one value column")
-        return pdf[element_cols[0]].to_numpy(dtype=np.float64)
 
     def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
         import pyarrow as pa
@@ -297,10 +210,6 @@ class _QuantileSpecBase(SpecRepr):
     def ingest(self, sketch, prepared: np.ndarray) -> None:
         sketch.add_values(prepared)
 
-    def merge(self, a, b):
-        a.merge(b)
-        return a
-
     def estimate(self, sketch) -> float:
         """Scalar summary = median (full quantile sets via quantiles_col)."""
         return float(sketch.quantile(0.5))
@@ -308,6 +217,7 @@ class _QuantileSpecBase(SpecRepr):
 
 class TDigestSpec(_QuantileSpecBase):
     name = "tdigest"
+    sketch_type = TDigest
 
     def __init__(self, delta: int = 200) -> None:
         self.delta = delta
@@ -315,27 +225,16 @@ class TDigestSpec(_QuantileSpecBase):
     def make(self) -> TDigest:
         return TDigest(delta=self.delta)
 
-    def to_bytes(self, sketch: TDigest) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> TDigest:
-        return TDigest.from_bytes(blob)
-
 
 class KllSpec(_QuantileSpecBase):
     name = "kll"
+    sketch_type = KllSketch
 
     def __init__(self, k: int = 200) -> None:
         self.k = k
 
     def make(self) -> KllSketch:
         return KllSketch(k=self.k)
-
-    def to_bytes(self, sketch: KllSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> KllSketch:
-        return KllSketch.from_bytes(blob)
 
 
 class DdSpec(_QuantileSpecBase):
@@ -345,6 +244,7 @@ class DdSpec(_QuantileSpecBase):
     is closed-form, so no insertion-order dependence at all)."""
 
     name = "ddsketch"
+    sketch_type = DDSketch
 
     def __init__(self, alpha: float = 0.01, min_positive: float = 1e-9) -> None:
         self.alpha = alpha
@@ -353,14 +253,8 @@ class DdSpec(_QuantileSpecBase):
     def make(self) -> DDSketch:
         return DDSketch(alpha=self.alpha, min_positive=self.min_positive)
 
-    def to_bytes(self, sketch: DDSketch) -> bytes:
-        return sketch.to_bytes()
 
-    def from_bytes(self, blob: bytes) -> DDSketch:
-        return DDSketch.from_bytes(blob)
-
-
-class ComboSpec(SpecRepr):
+class ComboSpec(SketchSpec):
     """Several sketch families over ONE prepared element stream — one scan
     and one blob shuffle build them all (the alternative is one
     ``sketch_agg`` scan per family; at 100 TB each extra family would cost
@@ -411,9 +305,6 @@ class ComboSpec(SpecRepr):
 
     def make(self) -> list:
         return [s.make() for s in self.specs]
-
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        return self.specs[0].prepare(pdf, element_cols)
 
     def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
         return self.specs[0].prepare_arrow(batch, element_cols)
@@ -475,11 +366,12 @@ class ComboSpec(SpecRepr):
         return self.specs[0].estimate(sketches[0])
 
 
-class ThetaSpec(SpecRepr):
+class ThetaSpec(HashSpec):
     """Theta/KMV distinct sketch: set semantics -> dedup-able stage 1, with
     first-class intersection/difference (:mod:`sketchlib.theta`)."""
 
     name = "theta"
+    sketch_type = ThetaSketch
     hash_dedup = True
     estimate_type = T.LongType()
 
@@ -494,22 +386,6 @@ class ThetaSpec(SpecRepr):
     def make(self) -> ThetaSketch:
         return ThetaSketch(k=self.k)
 
-    def prepare(self, pdf: pd.DataFrame, element_cols: Sequence[str]) -> np.ndarray:
-        if self.prehashed:
-            return np.ascontiguousarray(
-                pdf[element_cols[0]].to_numpy(np.int64)).view(np.uint64)
-        return hash_columns(pdf, element_cols, self.hash_name)
-
-    def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        if self.prehashed:
-            return np.ascontiguousarray(
-                batch.column(element_cols[0]).to_numpy(zero_copy_only=False)
-            ).view(np.uint64)
-        return hash_arrow_columns(batch, element_cols, self.hash_name)
-
-    def ingest(self, sketch: ThetaSketch, prepared: np.ndarray) -> None:
-        sketch.add_hashes(prepared)
-
     def build_from_hashes(self, unique_hashes: np.ndarray,
                           count_additions: int) -> ThetaSketch:
         return ThetaSketch.from_unique_hashes(unique_hashes, k=self.k,
@@ -521,16 +397,6 @@ class ThetaSpec(SpecRepr):
         return ThetaSketch.from_unique_hashes(
             sorted_unique_hashes, k=self.k,
             count_additions=count_additions).to_bytes()
-
-    def to_bytes(self, sketch: ThetaSketch) -> bytes:
-        return sketch.to_bytes()
-
-    def from_bytes(self, blob: bytes) -> ThetaSketch:
-        return ThetaSketch.from_bytes(blob)
-
-    def merge(self, a: ThetaSketch, b: ThetaSketch) -> ThetaSketch:
-        a.merge(b)
-        return a
 
     def estimate(self, sketch: ThetaSketch) -> int:
         return sketch.count()

@@ -1,13 +1,23 @@
 """Stateful streaming sketch aggregation.
 
 ``streaming_sketch_agg`` turns any mergeable sketch spec into a Structured
-Streaming stateful operator via ``applyInPandasWithState``: the group state
-is the serialized sketch blob; every micro-batch folds its Arrow batches into
-the state sketch (vectorized batch ingest — same hot path as the batch
-builder) and emits the updated estimate. Because sketches are tiny and
-mergeable, state size is O(sketch) per group no matter how many rows
-streamed through — the property that makes sketch aggregation the natural
-streaming operator (a true COUNT DISTINCT would need unbounded state).
+Streaming stateful operator via ``applyInPandasWithState`` (PySpark has no
+Arrow twin of it): the group state is the serialized sketch blob; every
+micro-batch rebuilds its element columns as an Arrow batch and folds them
+into the state sketch through ``spec.prepare_arrow`` — the same hot path,
+and so the same element hashes, as the batch builder. A streaming state and
+a batch partial over the same column therefore merge. Because sketches are
+tiny and mergeable, state size is O(sketch) per group no matter how many
+rows streamed through — the property that makes sketch aggregation the
+natural streaming operator (a true COUNT DISTINCT would need unbounded
+state).
+
+Element rule: rows with a NULL element are dropped, and ``TimestampType``
+elements become their int64 UTC microseconds (``unix_micros``), JVM-side
+before the state operator. Spark hands the state function a tz-aware
+timestamp as the session-local wall clock; the batch path hashes UTC
+microseconds (localizing in pandas instead is ambiguous in the DST
+fall-back hour).
 
 Restart semantics come from Spark's state store: with a checkpointLocation,
 a restarted query resumes from committed state (tested with two
@@ -31,16 +41,40 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..spark.aggregate import HllSpec, element_batch
+
 _STATE_SCHEMA = T.StructType([T.StructField("sketch", T.BinaryType())])
 
 
-def _drop_null_elements(df: DataFrame, element_cols: Sequence[str]) -> DataFrame:
-    """``df`` without the rows that have a NULL element, filtered JVM-side.
-    Dropping them after Spark's Arrow->pandas conversion is too late: that
+def _element_rows(df: DataFrame, element_cols: Sequence[str]) -> DataFrame:
+    """``df`` with every row that has a NULL element dropped and every
+    ``TimestampType`` element as its int64 UTC microseconds, both JVM-side.
+    Dropping NULLs after Spark's Arrow->pandas conversion is too late: that
     conversion has already turned an integer column holding a NULL into
     float64, and the sketch would hash every value of it as a double."""
-    return df.filter(reduce(operator.and_,
-                            [F.col(c).isNotNull() for c in element_cols]))
+    df = df.filter(reduce(operator.and_,
+                          [F.col(c).isNotNull() for c in element_cols]))
+    for c in element_cols:
+        if isinstance(df.schema[c].dataType, T.TimestampType):
+            df = df.withColumn(c, F.unix_micros(c))
+    return df
+
+
+def _fold_state(spec, state: GroupState, pdfs: Iterable[pd.DataFrame],
+                element_cols: Sequence[str]):
+    """The group's sketch with this micro-batch folded in, stored back
+    into ``state``."""
+    if state.exists:
+        (blob,) = state.get
+        sketch = spec.from_bytes(bytes(blob))
+    else:
+        sketch = spec.make()
+    for pdf in pdfs:
+        if len(pdf):
+            spec.ingest(sketch, spec.prepare_arrow(
+                element_batch(pdf, element_cols), element_cols))
+    state.update((spec.to_bytes(sketch),))
+    return sketch
 
 
 def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequence[str],
@@ -66,21 +100,13 @@ def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequenc
     cast = float if isinstance(est_type, T.DoubleType) else int
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (blob,) = state.get
-            sketch = spec.from_bytes(bytes(blob))
-        else:
-            sketch = spec.make()
-        for pdf in pdfs:
-            if len(pdf):
-                spec.ingest(sketch, spec.prepare(pdf, element_cols))
-        state.update((spec.to_bytes(sketch),))
+        sketch = _fold_state(spec, state, pdfs, element_cols)
         yield pd.DataFrame(
             [list(key) + [cast(spec.estimate(sketch)),
                           int(getattr(sketch, "count_additions", 0))]],
             columns=group_cols + ["estimate", "count_additions"])
 
-    return (_drop_null_elements(stream_df, element_cols)
+    return (_element_rows(stream_df, element_cols)
             .groupBy(*group_cols)
             .applyInPandasWithState(update, out_schema, _STATE_SCHEMA,
                                     output_mode, GroupStateTimeout.NoTimeout))
@@ -89,8 +115,6 @@ def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequenc
 def streaming_distinct_count(stream_df: DataFrame, element_cols,
                              group_cols: Sequence[str], p: int = 14) -> DataFrame:
     """Streaming approximate COUNT(DISTINCT ...) per group via HLL state."""
-    from ..spark.aggregate import HllSpec
-
     return streaming_sketch_agg(stream_df, element_cols, group_cols, HllSpec(p=p))
 
 
@@ -193,15 +217,7 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
             if state.exists:
                 state.remove()
             return
-        if state.exists:
-            (blob,) = state.get
-            sketch = spec.from_bytes(bytes(blob))
-        else:
-            sketch = spec.make()
-        for pdf in pdfs:
-            if len(pdf):
-                spec.ingest(sketch, spec.prepare(pdf, element_cols))
-        state.update((spec.to_bytes(sketch),))
+        sketch = _fold_state(spec, state, pdfs, element_cols)
         state.setTimeoutTimestamp(end_ms)
         yield pd.DataFrame(
             [[window_start, window_end, *key[1:],
@@ -210,7 +226,7 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
             columns=(["window_start", "window_end"] + group_cols
                      + ["estimate", "count_additions"]))
 
-    return (_drop_null_elements(df, element_cols)
+    return (_element_rows(df, element_cols)
             .groupBy("__w", *group_cols)
             .applyInPandasWithState(update, out_schema, _STATE_SCHEMA,
                                     output_mode,
@@ -223,8 +239,6 @@ def windowed_distinct_count(stream_df: DataFrame, element_cols, ts_col: str,
                             p: int = 14) -> DataFrame:
     """Per-window approximate COUNT(DISTINCT ...) with watermark-bounded
     lateness and automatic state eviction for closed windows."""
-    from ..spark.aggregate import HllSpec
-
     return windowed_sketch_agg(stream_df, element_cols, ts_col,
                                window_duration, watermark_delay, HllSpec(p=p),
                                group_cols)

@@ -342,7 +342,7 @@ class TestBlobcacheSharedInfra:
         # two instances alive AT ONCE: the original test's temporaries
         # could be served the SAME reused address, so an address-based
         # default repr passed it by luck while defeating sharing for any
-        # caller that held specs alive (SpecRepr is the fix)
+        # caller that held specs alive (SketchSpec.__repr__ is the fix)
         s1, s2 = BloomSpec(), BloomSpec()
         assert blob_token(blob_digest(b), s1) == blob_token(blob_digest(b), s2)
         assert "object at 0x" not in repr(s1)

@@ -1,10 +1,12 @@
-"""Pandas-path vs Arrow-path encoding/hash parity.
+"""One element encoding for every path.
 
-build_partials has one stage-1 path (mapInArrow, hashing through
-``arrow_flat_bytes``); the pandas path (``hash_series``) remains only for
-streaming sketches, which must agree with batch sketches of the same column.
-Pin byte-level agreement per element type, and pin the scalar encodings
-against the reference's Add overloads."""
+Every sketch hashes its elements through ``arrow_flat_bytes``: the batch
+builder straight from ``mapInArrow`` batches, and the streaming state
+functions and driver-side frames (``hash_columns``) after rebuilding their
+pandas columns as Arrow arrays.  No pandas hashing path is left.  Pin that
+a pandas column hashes exactly as the Arrow column of the same values, per
+element type, and pin the scalar encodings against the reference's Add
+overloads."""
 
 import numpy as np
 import pandas as pd
@@ -21,9 +23,9 @@ def _hash_arrow(arr):
 
 
 def _hash_pandas(series):
-    from sketchlib.spark.aggregate import hash_series
+    from sketchlib.spark.aggregate import hash_columns
 
-    return hash_series(series)
+    return hash_columns(pd.DataFrame({"e": series}), ["e"])
 
 
 class TestPathParity:
@@ -83,6 +85,25 @@ class TestPathParity:
         a = _hash_arrow(pa.array(ts, type=pa.timestamp("us")))
         p = _hash_pandas(pd.Series(ts))
         assert np.array_equal(a, p)
+
+    @pytest.mark.parametrize("np_dtype", [np.float64, np.float32])
+    def test_nan_hashes_as_value(self, np_dtype):
+        """A float NaN is a value, not a NULL: it hashes as its IEEE-754
+        bytes on both paths instead of being rejected."""
+        vals = np.asarray([1.0, np.nan], dtype=np_dtype)
+        p = _hash_pandas(pd.Series(vals))
+        assert np.array_equal(p, _hash_arrow(pa.array(vals, from_pandas=False)))
+        assert p[1] == murmur3_64(vals[1:].tobytes())
+
+    def test_date_objects(self):
+        """A column of ``datetime.date`` objects (how Spark hands a DateType
+        column to pandas) hashes as the Arrow date32 day counts."""
+        import datetime
+
+        days = [datetime.date(1970, 1, 1), datetime.date(2026, 3, 8)]
+        p = _hash_pandas(pd.Series(days))
+        assert np.array_equal(p, _hash_arrow(pa.array(days, type=pa.date32())))
+        assert p[1] == murmur3_64((20520).to_bytes(8, "little"))
 
     def test_null_rejected(self):
         with pytest.raises(ValueError):

@@ -371,3 +371,83 @@ def test_null_element_keeps_int64_hashes(spark, tmp_path, windowed):
     [r] = collected
     assert r["estimate"] == 1
     assert r["count_additions"] == 51  # the NULL row carries no mass
+
+
+# element column of each type: 36 rows over 8 distinct values (k = id % 8);
+# the timestamps straddle the America/New_York DST fall-back hour, where
+# 05:20 and 06:20 UTC share the local wall clock 01:20
+_TYPED_ELEMENTS = {
+    "date": ("date", "date_from_unix_date(20000 + k)"),
+    "timestamp": ("timestamp",
+                  "timestamp_micros(1793509200000000 + k * 1200000000)"),
+    "timestamp_ntz": ("timestamp_ntz",
+                      "cast(timestamp_micros(1793509200000000"
+                      " + k * 1200000000) as timestamp_ntz)"),
+    "short": ("short", "cast(k * 1000 - 4000 as short)"),
+}
+
+
+@pytest.mark.parametrize("kind,windowed", [
+    ("date", False), ("timestamp", False), ("timestamp", True),
+    ("timestamp_ntz", False), ("short", False)])
+def test_typed_element_hashes_as_batch(spark, tmp_path, kind, windowed):
+    """A streaming state hashes every element as the batch path does, so
+    the two merge: a CMS point query for each distinct value, with the
+    probe hashed from the batch path's Arrow column, returns its true
+    count.  Timestamps run under a non-UTC session zone: the state
+    function must hash UTC microseconds, not the local wall clock."""
+    from datetime import datetime
+
+    import numpy as np
+    import pyarrow as pa
+
+    from sketchlib.spark.aggregate import hash_arrow_columns
+    from sketchlib.spark.specs import CmsSpec
+    from sketchlib.streaming import streaming_sketch_agg, windowed_sketch_agg
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    if kind == "timestamp":
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        spark_type, expr = _TYPED_ELEMENTS[kind]
+        df = (spark.range(36).select((F.col("id") % 8).alias("k"))
+              .select(F.expr(expr).alias("e"),
+                      F.lit("a").alias("g"),
+                      F.lit(datetime(2026, 1, 1, 0, 10)).alias("ts")))
+        counts = df.groupBy("e").count().toArrow().combine_chunks()
+        probes = hash_arrow_columns(counts.to_batches()[0], ["e"])
+        want = counts.column("count").to_numpy()
+        assert len(probes) == 8 and len(np.unique(probes)) == 8
+
+        class _ProbeSpec(CmsSpec):
+            def estimate(self, sk) -> int:
+                # how many probes' point estimates equal their true count
+                return int((sk.estimate_hashes(
+                    np.asarray(probes, "<u8")) == want).sum())
+
+        schema = f"e {spark_type}, g string, ts timestamp"
+        src = str(tmp_path / "src")
+        df.repartition(1).write.parquet(src)
+        stream = spark.readStream.schema(schema).parquet(src)
+        if windowed:
+            agg = windowed_sketch_agg(stream, "e", "ts", "1 hour",
+                                      "30 minutes", _ProbeSpec(),
+                                      group_cols=["g"])
+        else:
+            agg = streaming_sketch_agg(stream.select("e", "g"), "e", ["g"],
+                                       _ProbeSpec())
+        collected = []
+        q = (agg.writeStream
+             .foreachBatch(lambda bdf, _b: collected.extend(bdf.collect()))
+             .outputMode("update")
+             .option("checkpointLocation", str(tmp_path / "ckpt"))
+             .trigger(availableNow=True).start())
+        if not q.awaitTermination(120):
+            q.stop()
+            raise TimeoutError(
+                "availableNow streaming pass did not finish in 120s")
+        [r] = collected
+        assert r["count_additions"] == 36
+        assert r["estimate"] == 8
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
