@@ -552,7 +552,7 @@ def q_hll_salted_tree_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 salt_source=["l_suppkey", "l_linenumber"])
     spec = HllSpec()
     partials = build_partials(salted, "l_suppkey", ["l_orderkey"], spec)
-    merged = tree_merge_partials(partials, ["l_orderkey"], spec, fanout=4, levels=1)
+    merged = tree_merge_partials(partials, ["l_orderkey"], spec, fanout=4)
     return merged.select("l_orderkey",
                          estimate_col(spec).alias("distinct_suppliers"))
 

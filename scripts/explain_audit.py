@@ -676,6 +676,32 @@ def main() -> None:
     sections.append(("rolling_merge(daily[lang, d], d, window=3, [lang])",
                      p, checks))
 
+    # 37. salted merge tree: its depth follows the partial count — one
+    # salted round below the final merge at 16 partials and fanout 4, and
+    # the flat merge's plan at no more partials than the fanout
+    from sketchlib.spark.aggregate import build_partials
+    from sketchlib.spark.skew import tree_merge_partials
+
+    def no_ids(plan: str) -> str:
+        return re.sub(r"#\d+|\bpythonUDF\d+|\[plan_id=\d+\]", "#", plan)
+
+    partials16 = build_partials(pages.repartition(16), "url", ["lang"],
+                                spec).localCheckpoint(eager=True)
+    p = plan_of(tree_merge_partials(partials16, ["lang"], spec, fanout=4))
+    salted = re.findall(r"hashpartitioning\([^)]*__salt", p)
+    checks = [("two shuffles: one salted blob round, then the final merge",
+               n_shuffles(p) == 2),
+              ("exactly one exchange hashes on the salt", len(salted) == 1),
+              ("one merge UDF per round",
+               len(re.findall(r"\(\d+\) ArrowEvalPython\b", p)) == 2)]
+    partials4 = partials16.coalesce(4)
+    flat4 = plan_of(tree_merge_partials(partials4, ["lang"], spec, fanout=4))
+    checks.append(("4 partials at fanout 4: the flat merge_partials plan",
+                   no_ids(flat4) == no_ids(plan_of(
+                       merge_partials(partials4, ["lang"], spec)))))
+    sections.append(("tree_merge_partials(partials[16 partitions], [lang], "
+                     "fanout=4)", p, checks))
+
     out = ["# BENCH/PLANS — physical-plan audit",
            "",
            "Generated by `python scripts/explain_audit.py`. Each section is "

@@ -746,23 +746,3 @@ def fold_blobs(blobs) -> bytes:
     return fold_segments(b"".join(blobs), offsets, [0, len(blobs)],
                          np.arange(len(blobs)))[0]
 
-
-def estimate_blobs(data, offsets) -> np.ndarray:
-    """``HllSketch.from_bytes(blob).count()`` of every blob in an Arrow
-    binary buffer pair, as int64. A canonical direct blob (hashes strictly
-    increasing) reports its header count; every other blob goes through the
-    object."""
-    buf = np.frombuffer(data, dtype=np.uint8)
-    offsets = np.asarray(offsets, dtype=np.int64)
-    starts = offsets[:-1]
-    _p, kind, n, ok, _adds = _peek(buf, starts, np.diff(offsets))
-    d = np.flatnonzero(ok & (kind == _DIRECT))
-    h = buf[concat_ranges(starts[d] + _HEADER_BYTES, 8 * n[d])].view("<u8")
-    h_ref = np.repeat(d, n[d])
-    canonical = np.zeros(starts.shape[0], dtype=bool)
-    canonical[d] = True
-    canonical[h_ref[1:][(h[1:] <= h[:-1]) & (h_ref[1:] == h_ref[:-1])]] = False
-    est = np.where(canonical, n, 0)
-    for i in np.flatnonzero(~canonical).tolist():
-        est[i] = HllSketch.from_bytes(buf[starts[i]:offsets[i + 1]].tobytes()).count()
-    return est

@@ -11,8 +11,8 @@ two-phase aggregation explicitly (SURVEY.md §4):
   This caps shuffle volume at ``#partitions x #groups x sketch_size`` no
   matter how many raw rows went in, and removes data skew from the shuffle:
   a hot group contributes at most one partial per partition.
-* **stage 2 — final merge**: JVM-side ``groupBy().agg(collect_list(sketch))``
-  (map-side partial aggregation + one exchange of blobs) followed by ONE
+* **stage 2 — final merge**: a JVM-side ``collect_list`` of each group's
+  blobs (map-side partial aggregation + one exchange of blobs) followed by ONE
   Arrow UDF that fold-merges each group's blobs (register-wise max —
   associative & commutative, so any merge order yields bit-identical
   canonical bytes; a lone partial passes through untouched). For HLL the
@@ -146,8 +146,8 @@ class SketchSpec:
     Optional attributes, read with ``getattr``, route the build and fold
     paths: ``hash_dedup`` (stage 1 may dedup (group, hash) pairs and build
     through ``build_from_hashes`` / ``blob_from_hashes``), ``fold_segments``
-    / ``estimate_blobs`` (Arrow-native wire kernels), ``prehashed`` and
-    ``hash_name``.
+    (the Arrow-native wire kernel of the merge and estimate UDFs),
+    ``prehashed`` and ``hash_name``.
 
     The repr is parameter-based: two specs constructed with equal
     parameters repr identically (the default object repr embeds the
@@ -233,11 +233,10 @@ class HllSpec(HashSpec):
         return self.to_bytes(self.build_from_hashes(sorted_unique_hashes,
                                                     count_additions))
 
-    #: batch wire-level kernels over Arrow binary buffers; their presence
+    #: batch wire-level kernel over Arrow binary buffers; its presence
     #: routes the merge/estimate UDFs, rolling_merge and premerge_partials
     #: to one Arrow-native fold per batch
     fold_segments = staticmethod(hll.fold_segments)
-    estimate_blobs = staticmethod(hll.estimate_blobs)
 
     estimate_type = T.LongType()
 
@@ -625,9 +624,10 @@ def per_row_udf(return_type: T.DataType, fn):
 def merge_blobs_udf(spec) -> Column:
     """Vectorized fold-merge of an ``array<binary>`` column of serialized
     partial sketches into one blob per row.  Used after a JVM-side
-    ``groupBy().agg(collect_list(sketch))`` — the whole merge stage stays in
-    Spark's hash aggregate (map-side partial collect + shuffle), and Python is
-    entered once per Arrow batch of groups, not once per group.
+    ``collect_list`` of each group's blobs (:func:`_collect_fold`) — the
+    whole merge stage stays in Spark's hash aggregate (map-side partial
+    collect + shuffle), and Python is entered once per Arrow batch of
+    groups, not once per group.
 
     One Arrow UDF for every spec: a spec with a batch kernel
     (``fold_segments``: HLL) folds the whole batch of groups in one kernel
@@ -645,6 +645,27 @@ def merge_blobs_udf(spec) -> Column:
     return _fold
 
 
+def _estimate_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
+                    blob_idx: np.ndarray, fill, type_: pa.DataType) -> pa.Array:
+    """One estimate per segment, with :func:`_fold_arrow`'s segment
+    contract. NULL blobs carry no sketch mass and a segment with no blob
+    gives ``fill`` (None: NULL). The rest estimate in one
+    ``spec.fold_segments(..., estimate=True)`` call, or through the spec's
+    object merge and ``estimate``."""
+    blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
+    live = lens > 0
+    live_ptr = np.zeros(np.count_nonzero(live) + 1, dtype=np.int64)
+    np.cumsum(lens[live], out=live_ptr[1:])
+    kernel = getattr(spec, "fold_segments", None)
+    if kernel is not None:
+        est = kernel(*arrow_flat_bytes(blobs), live_ptr, blob_idx, estimate=True)
+    else:
+        values = blobs.take(pa.array(blob_idx)).to_pylist()
+        est = [spec.estimate(_object_merge(spec, values[a:b]))
+               for a, b in _segment_bounds(live_ptr)]
+    return _scatter(est, live, fill, type_)
+
+
 def merge_estimate_udf(spec) -> Column:
     """Fused fold-merge + estimate over an ``array<binary>`` column: one
     Python entry per Arrow batch of groups yielding the scalar estimates
@@ -657,33 +678,32 @@ def merge_estimate_udf(spec) -> Column:
     only to be shipped to Python a second time for estimation: for a
     per-group query that only wants the NUMBER, this removes one full
     JVM->Python->JVM round trip of every group's blob plus a serialize +
-    deserialize per group.  With a batch kernel (HLL) the whole Arrow
-    batch of groups is one ``fold_segments(..., estimate=True)`` call;
-    other specs estimate each group's merged object. An empty list
-    estimates as the empty sketch."""
+    deserialize per group.  Each row's list is one segment of
+    :func:`_estimate_arrow`; an empty list estimates as the empty
+    sketch."""
     from pyspark.sql.pandas.types import to_arrow_type
 
     empty_estimate = spec.estimate(spec.make())
     type_ = to_arrow_type(spec.estimate_type)
-    kernel = getattr(spec, "fold_segments", None)
 
     @F.arrow_udf(spec.estimate_type)
     def _fold_estimate(lists: pa.Array) -> pa.Array:
-        blobs, seg_ptr, blob_idx = _list_segments(lists)
-        blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
-        live = lens > 0
-        live_ptr = np.zeros(np.count_nonzero(live) + 1, dtype=np.int64)
-        np.cumsum(lens[live], out=live_ptr[1:])
-        if kernel is not None:
-            est = kernel(*arrow_flat_bytes(blobs), live_ptr, blob_idx,
-                         estimate=True)
-        else:
-            values = blobs.take(pa.array(blob_idx)).to_pylist()
-            est = [spec.estimate(_object_merge(spec, values[a:b]))
-                   for a, b in _segment_bounds(live_ptr)]
-        return _scatter(est, live, empty_estimate, type_)
+        return _estimate_arrow(spec, *_list_segments(lists), empty_estimate,
+                               type_)
 
     return _fold_estimate
+
+
+def _collect_fold(partials: DataFrame, keys: Sequence[str], sketch_col: str,
+                  fold, out_col: str) -> DataFrame:
+    """Stage 2's one shuffle: ``collect_list`` gathers each key's blobs
+    JVM-side (map-side partial collect + one exchange of blobs), then the
+    Arrow UDF ``fold`` turns every key's list into ``out_col``.  With no
+    keys this is the global aggregate, which yields one row even over zero
+    partials."""
+    return (partials.groupBy(*keys)
+            .agg(F.collect_list(sketch_col).alias("__blobs"))
+            .select(*keys, fold(F.col("__blobs")).alias(out_col)))
 
 
 def merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
@@ -692,15 +712,8 @@ def merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
 
     Register-wise max is associative & commutative, so any merge order yields
     bit-identical canonical bytes (CardinalityEstimator.cs:615-685)."""
-    group_cols = list(group_cols)
-    spec = spec or HllSpec()
-    merge = merge_blobs_udf(spec)
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    if group_cols:
-        agged = partials.groupBy(*group_cols).agg(collected)
-    else:
-        agged = partials.agg(collected)
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
+    return _collect_fold(partials, list(group_cols), sketch_col,
+                         merge_blobs_udf(spec or HllSpec()), sketch_col)
 
 
 def rollup_sketches(sketch_df: DataFrame, to_group_cols: Sequence[str],
@@ -811,39 +824,39 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
     return shuffled.mapInArrow(roll, schema)
 
 
-def estimate_col(spec: HllSpec | None = None, sketch_col: str | Column = "sketch") -> Column:
-    """Scalar estimate as one Arrow UDF over sketch blobs (one blob per
-    group — Python cost is per-group, not per-row). A spec with a batch
-    estimator (``estimate_blobs``: HLL) estimates the whole batch in one
-    call, other specs one deserialized blob at a time; NULL blobs estimate
-    to NULL."""
+def estimate_udf(spec) -> Column:
+    """Scalar estimate of every blob as one Arrow UDF (one blob per group —
+    Python cost is per-group, not per-row).  Each blob is its own segment
+    of :func:`_estimate_arrow`, so HLL estimates the whole batch in one
+    ``fold_segments`` call and other specs one deserialized blob at a time;
+    a NULL blob estimates to NULL."""
     from pyspark.sql.pandas.types import to_arrow_type
 
-    spec = spec or HllSpec()
-    col = sketch_col if isinstance(sketch_col, Column) else F.col(sketch_col)
     type_ = to_arrow_type(spec.estimate_type)
-    kernel = getattr(spec, "estimate_blobs", None)
 
     @F.arrow_udf(spec.estimate_type)
     def _estimate(blobs: pa.Array) -> pa.Array:
-        valid = blobs.is_valid().to_numpy(zero_copy_only=False)
-        live = blobs.drop_null()
-        est = (kernel(*arrow_flat_bytes(live)) if kernel is not None
-               else [spec.estimate(spec.from_bytes(b)) for b in live.to_pylist()])
-        return _scatter(est, valid, None, type_)
+        seg_ptr = np.arange(len(blobs) + 1, dtype=np.int64)
+        return _estimate_arrow(spec, blobs, seg_ptr, seg_ptr[:-1], None, type_)
 
-    return _estimate(col)
+    return _estimate
+
+
+def estimate_col(spec: HllSpec | None = None, sketch_col: str | Column = "sketch") -> Column:
+    """:func:`estimate_udf` of ``spec`` (default: HLL) applied to
+    ``sketch_col``."""
+    col = sketch_col if isinstance(sketch_col, Column) else F.col(sketch_col)
+    return estimate_udf(spec or HllSpec())(col)
 
 
 def sketch_agg(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
-               spec: HllSpec | None = None, sketch_col: str = "sketch",
-               tree_fanout: int | None = None) -> DataFrame:
+               spec: HllSpec | None = None, sketch_col: str = "sketch") -> DataFrame:
     """Full two-stage aggregation -> one sketch blob per group.
 
-    ``tree_fanout``: insert a salted pre-merge round (treeAggregate shape) —
-    use when #input partitions is large enough that a single group's
-    collect_list would gather thousands of blobs into one task (e.g. >1k
-    partitions with few groups).
+    For a very large input partition count with few groups, build the
+    partials with :func:`build_partials` and fold them with
+    :func:`sketchlib.spark.skew.tree_merge_partials`, so that no single
+    task gathers thousands of blobs.
 
     NULL-semantics caveat: NULL elements carry no sketch mass (matching
     SQL's COUNT(DISTINCT)), so a group whose elements are ALL NULL
@@ -853,11 +866,6 @@ def sketch_agg(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
     group universe afterwards if zero-rows for null-only groups matter."""
     spec = spec or HllSpec()
     partials = build_partials(df, element_cols, group_cols, spec, sketch_col)
-    if tree_fanout:
-        from .skew import tree_merge_partials
-
-        return tree_merge_partials(partials, group_cols, spec, sketch_col,
-                                   fanout=tree_fanout, levels=1)
     return merge_partials(partials, group_cols, spec, sketch_col)
 
 
@@ -865,10 +873,9 @@ def distinct_count(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
                    p: int = 14, hash_name: str = "murmur3",
                    estimate_name: str = "estimate",
                    spec: "HllSpec | None" = None,
-                   spec_factory=None, tree_fanout: int | None = None,
                    prehash64: bool = False) -> DataFrame:
     """Approximate ``COUNT(DISTINCT element_cols...)`` per group via HLL (or
-    any cardinality-estimating spec passed via ``spec``/``spec_factory``).
+    any cardinality-estimating spec passed via ``spec``).
 
     HLL: exact (direct-count mode) for groups with <= 100 distinct elements;
     within 1.04/sqrt(2^p) relative std-error beyond (README.md:58).
@@ -878,24 +885,13 @@ def distinct_count(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
     wide string elements at cluster scale.  Trade-offs documented at
     :func:`build_partials`.
     """
-    if spec is None:
-        spec = (spec_factory() if spec_factory is not None
-                else HllSpec(p=p, hash_name=hash_name, prehashed=prehash64))
+    spec = spec or HllSpec(p=p, hash_name=hash_name, prehashed=prehash64)
     group_cols = list(group_cols)
-    if tree_fanout:
-        merged = sketch_agg(df, element_cols, group_cols, spec,
-                            tree_fanout=tree_fanout)
-        return merged.select(*group_cols,
-                             estimate_col(spec).alias(estimate_name))
     # fused merge+estimate: the caller only wants the scalar, so the merged
     # blob never round-trips JVM->Python a second time (merge_estimate_udf)
     partials = build_partials(df, element_cols, group_cols, spec)
-    collected = F.collect_list("sketch").alias("__blobs")
-    agged = (partials.groupBy(*group_cols).agg(collected) if group_cols
-             else partials.agg(collected))
-    return agged.select(*group_cols,
-                        merge_estimate_udf(spec)(F.col("__blobs"))
-                        .alias(estimate_name))
+    return _collect_fold(partials, group_cols, "sketch",
+                         merge_estimate_udf(spec), estimate_name)
 
 
 def premerge_partials(partials: DataFrame, group_cols: Sequence[str],

@@ -76,13 +76,12 @@ def accuracy_audit(df: DataFrame, element_cols, group_cols: Sequence[str],
     ``sigmas`` standard errors; ``abs_slack`` absorbs integer rounding for
     tiny groups (direct-count mode is exact, so 2 is generous).
 
-    Extra keyword arguments are FORWARDED to :func:`distinct_count`
-    (``prehash64``, ``tree_fanout``, …) so the audit runs the exact
-    configuration the production job runs — except the three
-    ``HllSpec`` constructor keys (``p``/``hash_name``/``prehashed``),
-    which build the default spec when none is given.  Unknown keys reach
-    ``distinct_count`` and fail loudly there instead of being silently
-    dropped.
+    The three ``HllSpec`` constructor keys (``p``/``hash_name``/
+    ``prehashed``) build the default spec when none is given, so the audit
+    runs the exact configuration the production job runs (``prehashed``
+    is the spec form of ``distinct_count(prehash64=True)``).  Other
+    keyword arguments are FORWARDED to :func:`distinct_count`; unknown
+    keys fail loudly there instead of being silently dropped.
     """
     _SPEC_KEYS = ("p", "hash_name", "prehashed")
     if spec is None:

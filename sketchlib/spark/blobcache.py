@@ -79,15 +79,6 @@ def broadcast_blob(sc, blob: bytes):
     return bc
 
 
-def new_token() -> str:
-    """Driver-side: a one-off worker-cache token.  Prefer
-    :func:`blob_token` — a UUID token defeats cross-call reuse and can
-    thrash the capped worker cache when many probe UDFs are live."""
-    import uuid
-
-    return uuid.uuid4().hex
-
-
 def get_or_load(token: str, loader: Callable[[], object]) -> object:
     """Worker-side: deserialize once per worker process, LRU thereafter."""
     obj = _CACHE.get(token)

@@ -39,7 +39,6 @@ from pyspark.sql import functions as F
 
 from .aggregate import build_partials, merge_partials, per_row_udf
 from .concurrency import run_concurrently
-from .skew import tree_merge_partials
 
 
 class SketchCheckpoint:
@@ -198,18 +197,18 @@ class SketchCheckpoint:
 
     # -- finalize ----------------------------------------------------------------
 
-    def result(self, spark: SparkSession, tree_fanout: int | None = None) -> DataFrame:
-        """Final per-group merge over every committed unit's partials."""
+    def _committed_partials(self, spark: SparkSession) -> DataFrame:
+        """Every committed unit's partials, after the resume-config check."""
         self._check_resume_config()
         done = sorted(self.completed_units())
         if not done:
             raise ValueError(f"no completed units in checkpoint {self.dir}")
-        paths = [self._unit_path(u) for u in done]
-        partials = spark.read.parquet(*paths)
-        if tree_fanout:
-            return tree_merge_partials(partials, self.group_cols, self.spec,
-                                       fanout=tree_fanout, levels=1)
-        return merge_partials(partials, self.group_cols, self.spec)
+        return spark.read.parquet(*(self._unit_path(u) for u in done))
+
+    def result(self, spark: SparkSession) -> DataFrame:
+        """Final per-group merge over every committed unit's partials."""
+        return merge_partials(self._committed_partials(spark),
+                              self.group_cols, self.spec)
 
 
 class HeavyHittersCheckpoint(SketchCheckpoint):
@@ -237,13 +236,8 @@ class HeavyHittersCheckpoint(SketchCheckpoint):
                                        self.group_cols, self.spec,
                                        n_cand=max(4 * self.k, 64)), "cms")
 
-    def result(self, spark: SparkSession, tree_fanout: int | None = None) -> DataFrame:
+    def result(self, spark: SparkSession) -> DataFrame:
         from .heavy_hitters import heavy_hitters_from_partials
 
-        self._check_resume_config()
-        done = sorted(self.completed_units())
-        if not done:
-            raise ValueError(f"no completed units in checkpoint {self.dir}")
-        partials = spark.read.parquet(*(self._unit_path(u) for u in done))
-        return heavy_hitters_from_partials(partials, self.k, self.group_cols,
-                                           self.spec)
+        return heavy_hitters_from_partials(self._committed_partials(spark),
+                                           self.k, self.group_cols, self.spec)

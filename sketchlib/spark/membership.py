@@ -18,14 +18,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .aggregate import hash_arrow_columns, hash_columns, sketch_agg
+from .aggregate import build_partials, hash_arrow_columns, hash_columns, sketch_agg
 # broadcast reuse and the worker dedup cache are shared probe
 # infrastructure (heavy_hitters uses them too) — see blobcache
 from .blobcache import blob_digest, blob_token, broadcast_blob, get_or_load
+from .skew import tree_merge_partials
 from .specs import BloomSpec, CuckooSpec
-
-# compatibility alias for the old private name
-_broadcast_blob = broadcast_blob
 
 
 def bloom_build(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
@@ -42,39 +40,27 @@ def bloom_build_bytes(df: DataFrame, element_cols,
 
 
 def cuckoo_build(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
-                 spec: CuckooSpec | None = None,
-                 tree_fanout: int | None = 8) -> DataFrame:
+                 spec: CuckooSpec | None = None) -> DataFrame:
     """One cuckoo filter blob per group (two-stage: partial build, merge by
     fingerprint re-insertion).  Unlike Bloom, the result supports deletion
     (:func:`cuckoo_delete_bytes`).
 
     Cuckoo merge is O(stored fingerprints) per partial — NOT a cheap
     bitwise OR — so with P input partitions a flat fold does P full
-    re-insertions in one task.  The default ``tree_fanout=8`` inserts a
-    salted pre-merge tree (treeAggregate shape), with enough rounds that
-    no task ever folds more than ~``tree_fanout`` blobs even at 10^5
-    input partitions (measured: flat fold at 32 partials was SLOWER than
-    a 2-partition run; the tree restores the scaling).  Pass ``None`` for
-    the flat fold on small partition counts."""
+    re-insertions in one task.  The partials therefore fold through
+    :func:`sketchlib.spark.skew.tree_merge_partials` at fanout 8: no task
+    folds more than ~8 blobs even at 10^5 input partitions (measured: flat
+    fold at 32 partials was SLOWER than a 2-partition run; the tree
+    restores the scaling), and at P <= 8 it is the flat merge."""
     spec = spec or CuckooSpec()
-    if not tree_fanout:
-        return sketch_agg(df, element_cols, group_cols, spec)
-    from .aggregate import build_partials
-    from .skew import tree_merge_capped
-
-    p = df.rdd.getNumPartitions()
-    partials = build_partials(df, element_cols, list(group_cols), spec,
-                              "sketch")
-    return tree_merge_capped(partials, list(group_cols), spec, "sketch",
-                             fanout=tree_fanout, n_partials=p)
+    partials = build_partials(df, element_cols, list(group_cols), spec)
+    return tree_merge_partials(partials, group_cols, spec, fanout=8)
 
 
 def cuckoo_build_bytes(df: DataFrame, element_cols,
-                       spec: CuckooSpec | None = None,
-                       tree_fanout: int | None = 8) -> bytes:
+                       spec: CuckooSpec | None = None) -> bytes:
     """Global deletable filter as raw bytes (driver-side)."""
-    [row] = cuckoo_build(df, element_cols, (), spec,
-                         tree_fanout=tree_fanout).collect()
+    [row] = cuckoo_build(df, element_cols, (), spec).collect()
     return bytes(row["sketch"])
 
 

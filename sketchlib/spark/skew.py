@@ -17,9 +17,10 @@ with an explicit tool here:
    (register max is idempotent), which test_salting_exact pins.
 
 2. **Merge fan-in skew**: at 10k input partitions a single group's stage-2
-   ``collect_list`` holds 10k blobs (160 MB of dense HLLs) in one task.
-   ``tree_merge_partials`` inserts salted pre-merge levels —
-   ``groupBy(keys, pmod(partition_salt, fanout))`` then ``groupBy(keys)`` —
+   merge gathers 10k blobs (160 MB of dense HLLs) in one task.
+   ``tree_merge_partials`` inserts salted pre-merge rounds, as many as the
+   partial count needs —
+   ``groupBy(keys, pmod(salt, width))`` per round, then ``groupBy(keys)`` —
    the DataFrame form of ``treeAggregate`` (reference analog:
    ``ParallelMerge``, CardinalityEstimatorExtensions.cs:87-103).
 """
@@ -31,7 +32,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .aggregate import merge_blobs_udf
+from .aggregate import HllSpec, _collect_fold, merge_blobs_udf, merge_partials
 
 
 def salt_col(df: DataFrame, buckets: int, source_cols: Sequence[str] | None = None):
@@ -51,33 +52,29 @@ def salted_repartition(df: DataFrame, cols: Sequence[str], buckets: int,
     return df.repartition(n_partitions, *parts) if n_partitions else df.repartition(*parts)
 
 
-def tree_merge_capped(partials: DataFrame, group_cols: Sequence[str] = (),
-                      spec=None, sketch_col: str = "sketch",
-                      fanout: int = 8,
-                      n_partials: int | None = None) -> DataFrame:
-    """Fold-merge partial sketches so that NO task ever folds more than
-    ~``fanout`` blobs, whatever the partial count: salt width starts at
-    ``ceil(P / fanout)`` and shrinks by ``fanout`` each round
-    (:func:`tree_merge_partials` keeps a FIXED salt width, so its level-0
-    tasks still fold P/fanout blobs — fine for cheap bitwise merges like
-    HLL/Bloom, wrong for merges that are O(sketch size) per blob, e.g. the
-    cuckoo filter's fingerprint re-insertion).
+def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
+                        spec=None, sketch_col: str = "sketch",
+                        fanout: int = 64) -> DataFrame:
+    """Fold-merge partial sketches so that no task folds more than
+    ~``fanout`` blobs of a group, whatever the partial count P
+    (``partials.rdd.getNumPartitions()``): salted rounds start at width
+    ``ceil(P / fanout)`` and shrink by ``fanout`` each round, then
+    :func:`merge_partials` folds what is left.  At P <= ``fanout`` this IS
+    the flat merge.  Bounding the blobs per task matters for merges that
+    are O(sketch size) per blob, e.g. the cuckoo filter's fingerprint
+    re-insertion.
 
-    Set-level associativity+commutativity of the merge is the only
-    requirement; pass ``n_partials`` when the caller already knows P (one
-    ``getNumPartitions`` otherwise)."""
-    from .aggregate import HllSpec, merge_blobs_udf
-
-    group_cols = list(group_cols)
-    spec = spec or HllSpec()
-    merge = merge_blobs_udf(spec)
+    Correctness relies only on merge associativity+commutativity, which the
+    canonical-bytes tests pin; the result is bit-identical to a flat merge.
+    """
     if fanout < 2:
         raise ValueError("fanout must be >= 2 (1 can never shrink the "
                          "salt width and would loop forever)")
-    p = n_partials if n_partials is not None else \
-        partials.rdd.getNumPartitions()
+    group_cols = list(group_cols)
+    spec = spec or HllSpec()
+    merge = merge_blobs_udf(spec)
     df = partials
-    width = (max(p, 1) + fanout - 1) // fanout
+    width = (max(partials.rdd.getNumPartitions(), 1) + fanout - 1) // fanout
     level = 0
     while width > 1:
         # salt by (blob, SOURCE PARTITION, level) — all deterministic
@@ -92,43 +89,9 @@ def tree_merge_capped(partials: DataFrame, group_cols: Sequence[str] = (),
         salt = F.pmod(F.xxhash64(F.col(sketch_col),
                                  F.spark_partition_id().cast("long"),
                                  F.lit(level)), F.lit(width))
-        df = (df.withColumn("__salt", salt)
-                .groupBy(*group_cols, "__salt")
-                .agg(F.collect_list(sketch_col).alias("__blobs"))
-                .select(*group_cols, merge("__blobs").alias(sketch_col)))
+        df = _collect_fold(df.withColumn("__salt", salt),
+                           group_cols + ["__salt"], sketch_col, merge,
+                           sketch_col)
         width = (width + fanout - 1) // fanout
         level += 1
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    agged = (df.groupBy(*group_cols).agg(collected) if group_cols
-             else df.agg(collected))
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
-
-
-def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
-                        spec=None, sketch_col: str = "sketch",
-                        fanout: int = 64, levels: int = 1) -> DataFrame:
-    """Fold-merge partial sketches with ``levels`` salted pre-merge rounds
-    before the final per-group merge. With P partials per group, each task in
-    round i merges ~P/fanout^i blobs — no single task sees the full fan-in.
-
-    Correctness relies only on merge associativity+commutativity, which the
-    canonical-bytes tests pin; the result is bit-identical to a flat merge.
-    """
-    from .aggregate import HllSpec
-
-    group_cols = list(group_cols)
-    spec = spec or HllSpec()
-    merge = merge_blobs_udf(spec)
-    df = partials
-    for level in range(levels):
-        salt = F.pmod(F.xxhash64(F.col(sketch_col), F.lit(level)), F.lit(fanout))
-        df = (df.withColumn("__salt", salt)
-                .groupBy(*group_cols, "__salt")
-                .agg(F.collect_list(sketch_col).alias("__blobs"))
-                .select(*group_cols, merge("__blobs").alias(sketch_col)))
-    collected = F.collect_list(sketch_col).alias("__blobs")
-    if group_cols:
-        agged = df.groupBy(*group_cols).agg(collected)
-    else:
-        agged = df.agg(collected)
-    return agged.select(*group_cols, merge("__blobs").alias(sketch_col))
+    return merge_partials(df, group_cols, spec, sketch_col)

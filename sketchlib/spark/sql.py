@@ -26,7 +26,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .aggregate import HllSpec, _fold_arrow, _list_segments, per_row_udf
+from .aggregate import (HllSpec, _fold_arrow, _list_segments, estimate_udf,
+                        per_row_udf)
 
 
 def _merge_all_udf(spec):
@@ -47,32 +48,24 @@ def _point_estimate(sketch, h) -> int:
 
 def register_sql_functions(spark: SparkSession) -> None:
     from ..ams import AmsSketch
-    from ..bloom import BloomFilter
-    from ..cms import CountMinSketch
     from ..ddsketch import DDSketch
     from ..hll import HllSketch
     from ..kll import KllSketch
     from ..mg import MisraGriesSketch
     from ..tdigest import TDigest
     from ..theta import ThetaSketch
-    from .specs import AmsSpec, DdSpec, MgSpec, ThetaSpec
+    from .specs import AmsSpec, BloomSpec, CmsSpec, DdSpec, MgSpec, ThetaSpec
 
     long_, double = T.LongType(), T.DoubleType()
     per_row = {
-        "hll_estimate": (long_, lambda b: HllSketch.from_bytes(b).count()),
         "hll_count_additions": (
             long_, lambda b: HllSketch.from_bytes(b).count_additions),
-        "bloom_estimate": (
-            long_, lambda b: BloomFilter.from_bytes(b).estimate_cardinality()),
-        "cms_total": (
-            long_, lambda b: CountMinSketch.from_bytes(b).count_additions),
         "tdigest_quantile": (
             double, lambda b, q: float(TDigest.from_bytes(b).quantile(float(q)))),
         "kll_quantile": (
             double, lambda b, q: float(KllSketch.from_bytes(b).quantile(float(q)))),
         "ddsketch_quantile": (
             double, lambda b, q: float(DDSketch.from_bytes(b).quantile(float(q)))),
-        "theta_estimate": (long_, lambda b: ThetaSketch.from_bytes(b).count()),
         "theta_intersect_estimate": (
             long_, lambda a, b: ThetaSketch.from_bytes(a).intersect_count(
                 ThetaSketch.from_bytes(b))[0]),
@@ -83,14 +76,18 @@ def register_sql_functions(spark: SparkSession) -> None:
             long_, lambda b, h: _point_estimate(MisraGriesSketch.from_bytes(b), h)),
         "mg_error_bound": (
             long_, lambda b: MisraGriesSketch.from_bytes(b).error_bound()),
-        "ams_f2_estimate": (long_, lambda b: AmsSketch.from_bytes(b).estimate_f2()),
         "countsketch_point_estimate": (
             long_, lambda b, h: _point_estimate(AmsSketch.from_bytes(b), h)),
     }
+    estimate = {"hll_estimate": HllSpec(), "bloom_estimate": BloomSpec(),
+                "theta_estimate": ThetaSpec(), "ams_f2_estimate": AmsSpec(),
+                "cms_total": CmsSpec()}
     merge_all = {"hll_merge_all": HllSpec(), "ddsketch_merge_all": DdSpec(),
                  "theta_merge_all": ThetaSpec(), "mg_merge_all": MgSpec(),
                  "ams_merge_all": AmsSpec()}
     for name, (return_type, fn) in per_row.items():
         spark.udf.register(name, per_row_udf(return_type, fn))
+    for name, spec in estimate.items():
+        spark.udf.register(name, estimate_udf(spec))
     for name, spec in merge_all.items():
         spark.udf.register(name, _merge_all_udf(spec))

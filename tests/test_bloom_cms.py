@@ -164,7 +164,7 @@ class TestSparkOps:
         from pyspark.sql import functions as F
 
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        est = distinct_count(orders, "o_custkey", spec_factory=BloomSpec)
+        est = distinct_count(orders, "o_custkey", spec=BloomSpec())
         [row] = est.collect()
         want = orders.select(F.countDistinct("o_custkey")).first()[0]
         assert abs(row["estimate"] - want) / want < 0.05

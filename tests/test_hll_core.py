@@ -465,7 +465,7 @@ def test_fold_blobs_rejects_empty_and_truncated():
 
 
 # ---------------------------------------------------------------------------
-# fold_segments / estimate_blobs: the batch wire kernel behind every HLL merge
+# fold_segments: the batch wire kernel behind every HLL merge and estimate
 # ---------------------------------------------------------------------------
 
 def _sequential(blobs):
@@ -645,11 +645,11 @@ def test_fold_segments_precision_mismatch_raises():
 
 
 def test_estimate_blobs_matches_from_bytes_count():
-    """Canonical direct blobs report their header count; non-canonical
-    direct payloads (duplicate or unsorted hashes) and sparse/dense blobs
-    go through from_bytes().count()."""
+    """The estimate of one-blob segments equals from_bytes().count() for
+    canonical, unsorted, duplicate and empty direct blobs and for
+    sparse/dense blobs."""
     import numpy as np
-    from sketchlib.hll import HllSketch, direct_blob, estimate_blobs
+    from sketchlib.hll import HllSketch, direct_blob, fold_segments
 
     rng = np.random.default_rng(9)
     h = np.sort(rng.integers(0, 2**63, size=20, dtype=np.int64).astype(np.uint64))
@@ -663,7 +663,9 @@ def test_estimate_blobs_matches_from_bytes_count():
     ]
     offsets = np.zeros(len(blobs) + 1, dtype=np.int64)
     np.cumsum([len(b) for b in blobs], out=offsets[1:])
-    got = estimate_blobs(b"".join(blobs), offsets)
+    one_blob_segments = np.arange(len(blobs) + 1)
+    got = fold_segments(b"".join(blobs), offsets, one_blob_segments,
+                        one_blob_segments[:-1], estimate=True)
     assert got.tolist() == [HllSketch.from_bytes(b).count() for b in blobs]
     assert got[:4].tolist() == [20, 20, 5, 0]
 

@@ -2,9 +2,11 @@
 bit-identical canonical sketches, identical estimates."""
 
 import numpy as np
+import pytest
 
+from sketchlib import hll
 from sketchlib.hll import HllSketch
-from sketchlib.spark.aggregate import build_partials, merge_partials, sketch_agg
+from sketchlib.spark.aggregate import HllSpec, build_partials, merge_partials, sketch_agg
 from sketchlib.spark.skew import salted_repartition, tree_merge_partials
 
 
@@ -47,7 +49,7 @@ def test_tree_merge_bit_identical_to_flat(spark):
     flat = {r["lang"]: bytes(r["sketch"])
             for r in merge_partials(partials, ["lang"]).collect()}
     tree = {r["lang"]: bytes(r["sketch"])
-            for r in tree_merge_partials(partials, ["lang"], fanout=4, levels=2).collect()}
+            for r in tree_merge_partials(partials, ["lang"], fanout=4).collect()}
     assert flat == tree
     partials.unpersist()
 
@@ -56,9 +58,55 @@ def test_tree_merge_global(spark):
     df = _zipf_pages(spark, n=5_000).repartition(16)
     partials = build_partials(df, "url", ()).persist()
     [flat] = merge_partials(partials, ()).collect()
-    [tree] = tree_merge_partials(partials, (), fanout=4, levels=1).collect()
+    [tree] = tree_merge_partials(partials, (), fanout=4).collect()
     assert bytes(flat["sketch"]) == bytes(tree["sketch"])
     est = HllSketch.from_bytes(bytes(tree["sketch"])).count()
     exact = df.select("url").distinct().count()
     assert abs(est - exact) / exact <= 10 * 0.008125
     partials.unpersist()
+
+
+def test_tree_merge_spreads_identical_partials(spark):
+    """64 byte-identical partials of one group (one per partition): the
+    salt includes the partition id, so no fold ever sees more than a few
+    fanouts' worth of blobs, and the result equals the flat merge."""
+    from pyspark.sql import functions as F
+
+    fanout, bound = 4, 16
+
+    class _BoundedFoldHll(HllSpec):
+        def fold_segments(self, data, offsets, seg_ptr, blob_idx,
+                          estimate=False):
+            if (np.diff(seg_ptr) > bound).any():
+                raise ValueError(f"a segment folds more than {bound} blobs")
+            return hll.fold_segments(data, offsets, seg_ptr, blob_idx, estimate)
+
+    df = spark.range(64 * 3, numPartitions=64).select(
+        (F.col("id") % 3).cast("string").alias("x"))
+    partials = build_partials(df, "x", ()).persist()
+    assert len({bytes(r["sketch"]) for r in partials.collect()}) == 1
+    [flat] = merge_partials(partials, ()).collect()
+    [tree] = tree_merge_partials(partials, (), _BoundedFoldHll(),
+                                 fanout=fanout).collect()
+    assert bytes(tree["sketch"]) == bytes(flat["sketch"])
+    partials.unpersist()
+
+
+def _exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum("Exchange" in line for line in plan.splitlines())
+
+
+def test_tree_merge_flat_at_few_partials(spark):
+    """With no more partials than the fanout there is no salted round: the
+    plan shuffles exactly as often as the flat merge."""
+    partials = build_partials(_zipf_pages(spark, n=2_000).repartition(4),
+                              "url", ["lang"])
+    tree = tree_merge_partials(partials, ["lang"], fanout=4)
+    assert _exchanges(tree) == _exchanges(merge_partials(partials, ["lang"])) >= 1
+
+
+def test_tree_merge_rejects_fanout_one(spark):
+    partials = build_partials(_zipf_pages(spark, n=100), "url", ())
+    with pytest.raises(ValueError, match="fanout must be >= 2"):
+        tree_merge_partials(partials, (), fanout=1)

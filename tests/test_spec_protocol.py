@@ -29,9 +29,9 @@ class _ProbeCms(CmsSpec):
 
 
 ROUTED = ("hash_name", "prehashed", "hash_dedup", "blob_from_hashes",
-          "fold_segments", "estimate_blobs", "estimate_type")
+          "fold_segments", "estimate_type")
 HLL = {"hash_name", "prehashed", "hash_dedup", "blob_from_hashes",
-       "fold_segments", "estimate_blobs", "estimate_type"}
+       "fold_segments", "estimate_type"}
 THETA = {"hash_name", "prehashed", "hash_dedup", "blob_from_hashes",
          "estimate_type"}
 HASHED = {"hash_name", "hash_dedup", "estimate_type"}
