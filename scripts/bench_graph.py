@@ -40,20 +40,16 @@ def main() -> int:
                     help="append the results to BENCH/BASELINE.md")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from sketchlib.graph.hyperball import hyperball
     from sketchlib.graph.links import host_edges
+    from sketchlib.spark.session import build_session
 
-    spark = (SparkSession.builder.master(f"local[{args.cpus}]")
-             .config("spark.sql.shuffle.partitions", args.cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "24g")
-             .getOrCreate())
+    spark = build_session("sketchlib-bench-graph", local_cpus=args.cpus,
+                          extra_conf={"spark.ui.enabled": "false",
+                                      "spark.ui.showConsoleProgress": "false",
+                                      "spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.synth_only:

@@ -26,27 +26,18 @@ def main() -> int:
                     help="run just the named queries (skips the report append)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from sketchlib.spark.aggregate import HllSpec, distinct_count, estimate_col, sketch_agg
     from sketchlib.spark.heavy_hitters import heavy_hitters
     from sketchlib.spark.quantiles import approx_quantiles
+    from sketchlib.spark.session import build_session
     from sketchlib.spark.specs import CmsSpec, TDigestSpec
 
-    spark = (SparkSession.builder.master(f"local[{args.cpus}]")
-             .config("spark.sql.shuffle.partitions", args.cpus)
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false")
-             .config("spark.driver.memory", "24g")
-             # DISK_ONLY stage boundaries (corpus_clean_e2e) persist the
-             # text corpus; uncompressed serialized blocks are ~4-5x the
-             # parquet size and exhausted /tmp at 24M rows
-             .config("spark.rdd.compress", "true")
-             .getOrCreate())
+    spark = build_session("sketchlib-bench-pages", local_cpus=args.cpus,
+                          extra_conf={"spark.ui.enabled": "false",
+                                      "spark.ui.showConsoleProgress": "false",
+                                      "spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
     df = spark.read.parquet(args.data)
     n_rows = df.count()

@@ -34,21 +34,13 @@ def ensure_data(rows: int) -> str:
 
 def child(cpus: int, data: str, rows: int) -> None:
     """Run the flagship two-stage HLL job at local[cpus]; print JSON."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
     from sketchlib.spark.aggregate import distinct_count
+    from sketchlib.spark.session import build_session
 
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName(f"scaling-{cpus}")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", "24g")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    spark = build_session(f"scaling-{cpus}", local_cpus=cpus,
+                          extra_conf={"spark.ui.enabled": "false",
+                                      "spark.ui.showConsoleProgress": "false",
+                                      "spark.driver.memory": "24g"})
     spark.sparkContext.setLogLevel("ERROR")
 
     df = spark.read.parquet(data)

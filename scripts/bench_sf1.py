@@ -70,29 +70,10 @@ def main() -> int:
     if not os.path.isdir(SF1):
         print("sf1 missing — run scripts/make_sf1.py first", file=sys.stderr)
         return 1
-    from pyspark.sql import SparkSession, functions as F
+    from scripts.bench_common import build_session, warm_up
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("sketchlib-bench-sf1")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    _identity = F.pandas_udf(lambda s: s, "long")
-    (spark.range(int(CPUS) * 4).repartition(int(CPUS))
-     .select(_identity("id").alias("x")).selectExpr("sum(x)").collect())
-    (spark.range(int(CPUS) * 4).repartition(int(CPUS))
-     .mapInArrow(lambda it: it, "id long").count())
-    (spark.range(64).withColumn("g", F.col("id") % 4).groupBy("g")
-     .applyInPandas(lambda pdf: pdf, "id long, g long").count())
+    spark = build_session(CPUS, app="sketchlib-bench-sf1", driver_mem="24g")
+    warm_up(spark, CPUS)
 
     import __spark_entry__ as entrymod
 

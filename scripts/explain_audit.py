@@ -41,15 +41,12 @@ def n_shuffles(p: str) -> int:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (SparkSession.builder.master("local[4]")
-             .appName("sketchlib-plan-audit")
-             .config("spark.sql.shuffle.partitions", "4")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
+    from sketchlib.spark.session import build_session
+
+    spark = build_session("sketchlib-plan-audit", local_cpus=4,
+                          extra_conf={"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from sketchlib.data.pages import write_pages_parquet

@@ -27,14 +27,9 @@ from __future__ import annotations
 import argparse
 import json
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def build_session(app: str, cpus: str | None = None) -> SparkSession:
-    from sketchlib.spark.session import build_session as build
-
-    return build(app, local_cpus=cpus)
+from sketchlib.spark.session import build_session
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -64,7 +59,7 @@ def main(argv: list[str] | None = None) -> int:
     from sketchlib.graph.pagerank import pagerank
     from sketchlib.spark.aggregate import HllSpec
 
-    spark = build_session("sketchlib-graph-job", args.cpus)
+    spark = build_session("sketchlib-graph-job", local_cpus=args.cpus)
     pages = spark.read.parquet(args.input)
 
     edges_path = f"{args.output}/edges"

@@ -26,6 +26,8 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sketchlib.spark.session import build_session
+
 
 def _host(col):
     """Canonical host identity — sketchlib.text.urls.url_host (lowercase,
@@ -35,12 +37,6 @@ def _host(col):
     from sketchlib.text.urls import url_host
 
     return url_host(col)
-
-
-def build_session(app: str, cpus: str | None = None) -> SparkSession:
-    from sketchlib.spark.session import build_session as build
-
-    return build(app, local_cpus=cpus)
 
 
 def list_days(spark: SparkSession, input_dir: str) -> list[str]:
@@ -120,7 +116,7 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     preexisting = SparkSession.getActiveSession() is not None
-    spark = build_session(f"pages-{args.query}", args.local_cpus)
+    spark = build_session(f"pages-{args.query}", local_cpus=args.local_cpus)
     days = list_days(spark, args.input)
     ckpt = make_checkpoint(args.query, args.checkpoint)
     summary = ckpt.run(spark, day_source(spark, args.input, args.query), days)

@@ -884,8 +884,15 @@ def distinct_count(df: DataFrame, element_cols, group_cols: Sequence[str] = (),
     so only 8 bytes/row cross the Arrow boundary — the throughput path for
     wide string elements at cluster scale.  Trade-offs documented at
     :func:`build_partials`.
+
+    ``p``, ``hash_name`` and ``prehash64`` build the default ``HllSpec``;
+    given together with ``spec`` they raise instead of being ignored.
     """
-    spec = spec or HllSpec(p=p, hash_name=hash_name, prehashed=prehash64)
+    if spec is None:
+        spec = HllSpec(p=p, hash_name=hash_name, prehashed=prehash64)
+    elif p != 14 or hash_name != "murmur3" or prehash64:
+        raise ValueError("distinct_count: pass p/hash_name/prehash64 or "
+                         "spec, not both")
     group_cols = list(group_cols)
     # fused merge+estimate: the caller only wants the scalar, so the merged
     # blob never round-trips JVM->Python a second time (merge_estimate_udf)

@@ -76,22 +76,29 @@ def accuracy_audit(df: DataFrame, element_cols, group_cols: Sequence[str],
     ``sigmas`` standard errors; ``abs_slack`` absorbs integer rounding for
     tiny groups (direct-count mode is exact, so 2 is generous).
 
-    The three ``HllSpec`` constructor keys (``p``/``hash_name``/
-    ``prehashed``) build the default spec when none is given, so the audit
-    runs the exact configuration the production job runs (``prehashed``
-    is the spec form of ``distinct_count(prehash64=True)``).  Other
-    keyword arguments are FORWARDED to :func:`distinct_count`; unknown
-    keys fail loudly there instead of being silently dropped.
+    The ``HllSpec`` keys ``p``/``hash_name``/``prehashed`` (and
+    ``prehash64``, :func:`distinct_count`'s name for ``prehashed``) build
+    the default spec when none is given, so the audit runs the exact
+    configuration the production job runs; given together with ``spec``
+    they raise.  Other keyword arguments are FORWARDED to
+    :func:`distinct_count`; unknown keys fail loudly there instead of being
+    silently dropped.
     """
-    _SPEC_KEYS = ("p", "hash_name", "prehashed")
+    spec_keys = {"p": "p", "hash_name": "hash_name", "prehashed": "prehashed",
+                 "prehash64": "prehashed"}
+    given = [k for k in distinct_kwargs if k in spec_keys]
+    spec_kwargs = {spec_keys[k]: distinct_kwargs.pop(k) for k in given}
+    if len(spec_kwargs) < len(given):
+        raise ValueError("accuracy_audit: pass prehash64 or prehashed, "
+                         "not both")
     if spec is None:
-        spec = HllSpec(**{k: v for k, v in distinct_kwargs.items()
-                          if k in _SPEC_KEYS})
-    dc_kwargs = {k: v for k, v in distinct_kwargs.items()
-                 if k not in _SPEC_KEYS}
+        spec = HllSpec(**spec_kwargs)
+    elif spec_kwargs:
+        raise ValueError(f"accuracy_audit: pass {sorted(spec_kwargs)} or "
+                         "spec, not both")
     sampled = df.filter(sample_pred) if sample_pred is not None else df
     est = distinct_count(sampled, element_cols, list(group_cols), spec=spec,
-                         estimate_name="estimate", **dc_kwargs)
+                         estimate_name="estimate", **distinct_kwargs)
     elems = ([element_cols] if isinstance(element_cols, str)
              else list(element_cols))
     exact = (sampled.groupBy(*group_cols)

@@ -1,6 +1,9 @@
 """Tuned SparkSession builder for sketch workloads.
 
-Encodes the settings this repo measured to matter (BENCH/BASELINE.md):
+The one session recipe: the jobs in ``sketchlib/jobs/`` and the
+product-shaped scale scripts build their session here, so a measurement
+runs the config the product ships.  Encodes the settings this repo
+measured to matter (BENCH/BASELINE.md):
 
 * ``maxPartitionBytes`` 32 MB — mapInArrow tasks pay a fixed ~0.2 s
   JVM<->Python cost; tasks must carry >= ~300k rows to amortize it, but
@@ -12,6 +15,15 @@ Encodes the settings this repo measured to matter (BENCH/BASELINE.md):
   boundary is ~4-5x its parquet size and can exhaust local disk (measured:
   the 24M-row e2e bench ran out of /tmp without it).  LZ4 block compression
   costs ~nothing against the IO it saves.
+
+``local_cpus`` runs on ``local[N]`` with N shuffle partitions; omit it on
+a cluster.  ``extra_conf`` adds keys on top (a script's local-only UI and
+driver-memory keys).
+
+An already-active session is returned unchanged: ``getOrCreate`` would
+rewrite its SQL confs in place, so a job called from inside another
+application would silently retune the caller's session for every later
+query.  A joined job runs under the caller's settings.
 """
 
 from __future__ import annotations
@@ -20,14 +32,14 @@ from pyspark.sql import SparkSession
 
 
 def build_session(app: str, local_cpus: str | int | None = None,
-                  shuffle_partitions: int | None = None,
                   extra_conf: dict | None = None) -> SparkSession:
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     b = SparkSession.builder.appName(app)
     if local_cpus:
-        b = b.master(f"local[{local_cpus}]")
-        shuffle_partitions = shuffle_partitions or int(local_cpus)
-    if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        b = (b.master(f"local[{local_cpus}]")
+             .config("spark.sql.shuffle.partitions", str(local_cpus)))
     b = (b.config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")

@@ -49,11 +49,12 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 # Single-character necessary condition per class: the pattern cannot match a
 # string that lacks this literal (email needs '@', phone starts '+', the
 # SSN shape contains '-', dotted-quad contains '.').  A contains() guard on
-# it skips the full regex scan.  Measured (scripts/bench_pii_variants.py,
-# 1M docs, local[32]): 5.4x on counts / 3.1x on redaction on realistic
-# guard-char-DENSE text ('.' in every doc, '-' in half, '@'/'+' at a few
-# percent — the guard's worst case; the win survives because the expensive
-# email/phone char-class scans are the ones whose guards are rare), and
+# it skips the full regex scan.  Measured (BENCH/BASELINE.md, north-star
+# suite, round-3 scrub-operator notes; 1M docs, local[32]): 5.4x on counts
+# / 3.1x on redaction on realistic guard-char-DENSE text ('.' in every doc,
+# '-' in half, '@'/'+' at a few percent — the guard's worst case; the win
+# survives because the expensive email/phone char-class scans are the ones
+# whose guards are rare), and
 # 21x / 13x on the synthetic pages table whose text has no guard chars at
 # all (the all-skip ceiling).  A fused single-alternation pass measured
 # SLOWER than the guarded per-class passes on both tables and was

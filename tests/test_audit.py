@@ -4,6 +4,7 @@ groups vs the sketch estimate, with a published-bound verdict."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from sketchlib.spark.aggregate import HllSpec
@@ -63,3 +64,36 @@ def test_out_of_bound_detected_when_bound_is_zero(spark):
     assert r["exact_distinct"] == 3000
     assert not r["within_bound"]
     assert audit_summary(audit).collect()[0]["n_out_of_bound"] == 1
+
+
+def test_spec_keys_with_spec_raise(spark):
+    from sketchlib.spark.aggregate import distinct_count
+
+    df = _df(spark)
+    for kw in ({"p": 10}, {"hash_name": "fnv1a"}, {"prehash64": True}):
+        with pytest.raises(ValueError, match="not both"):
+            distinct_count(df, "v", ["g"], spec=HllSpec(p=12), **kw)
+    for kw in ({"p": 10}, {"prehashed": True}, {"prehash64": True}):
+        with pytest.raises(ValueError, match="not both"):
+            accuracy_audit(df, "v", ["g"], spec=HllSpec(p=12), **kw)
+    with pytest.raises(ValueError, match="not both"):
+        accuracy_audit(df, "v", ["g"], prehash64=True, prehashed=True)
+
+
+def test_audit_prehash64_audits_the_prehashed_path(spark):
+    """``prehash64`` reaches the audited estimate: on groups far past the
+    direct-count threshold the xxhash64 and murmur3 estimates differ, and
+    the audit must report the prehashed one."""
+    from sketchlib.spark.aggregate import distinct_count
+
+    df = spark.createDataFrame([(g, g * 100_000 + i) for g in range(3)
+                                for i in range(5000)], "g long, v long")
+
+    def estimates(d):
+        return {r["g"]: r["estimate"] for r in d.collect()}
+
+    prehashed = estimates(distinct_count(df, "v", ["g"], p=10,
+                                         prehash64=True))
+    assert prehashed != estimates(distinct_count(df, "v", ["g"], p=10))
+    assert estimates(accuracy_audit(df, "v", ["g"], p=10,
+                                    prehash64=True)) == prehashed
