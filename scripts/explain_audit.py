@@ -136,7 +136,7 @@ def main() -> None:
     p2 = plan_of(df2)
     checks2 = [("single Python stage (assignment fused into the scan pass; "
                 "no ArrowEvalPython)", "ArrowEvalPython" not in p2
-                and p2.count("MapInPandas (") == 1),  # tree line only;
+                and p2.count("MapInArrow (") == 1),  # tree line only;
                # formatted explain repeats each node in the detail section
                ("no cartesian product", "CartesianProduct" not in p2)]
     sections.append(("ivf_topk(embeddings, nprobe=2) — in-scan assignment",
@@ -153,7 +153,7 @@ def main() -> None:
     enc_df = pq_encode(emb, cb)
     p = plan_of(enc_df)
     checks = [("encode is map-only (no exchange)", "Exchange" not in p),
-              ("single vectorized Python stage (ArrowEvalPython pandas_udf)",
+              ("single vectorized Python stage (ArrowEvalPython arrow_udf)",
                p.count("ArrowEvalPython (") == 1)]
     sections.append(("pq_encode(embeddings, first_ids codebook)", p, checks))
 
@@ -206,7 +206,7 @@ def main() -> None:
                n_shuffles(p) == 1),
               ("no Python stage (pure JVM window/agg expressions)",
                not re.search(r"EvalPython|MapInPandas|MapInArrow"
-                             r"|FlatMapGroupsInPandas", p)),
+                             r"|FlatMapGroupsIn", p)),
               ("scan reads only user/ts",
                "event_type" not in p and "props" not in p)]
     sections.append(("session_stats(events, gap=30min)", p, checks))
@@ -317,7 +317,7 @@ def main() -> None:
                and "hashpartitioning(__blockkey" in p)]
     sections.append(("filter_blocked_domains(urls, blocklist)", p, checks))
 
-    # 13. LM scoring: zero-shuffle mapInPandas, JVM tokenization
+    # 13. LM scoring: zero-shuffle mapInArrow, JVM tokenization
     from sketchlib.text.lmscore import UnigramLM, score_docs
 
     lm = UnigramLM({"the": -1000}, -5000, 100, token_hashes={"the": 12345})
@@ -356,7 +356,7 @@ def main() -> None:
     sections.append(("remove_duplicate_spans(documents, n=5)", p, checks))
 
     # 16. SemDeDup: exactly one shuffle — the groupBy(cluster) feeding
-    # the applyInPandas kernel
+    # the applyInArrow kernel
     from sketchlib.similarity.semdedup import semantic_dedup
 
     lab = emb.withColumn("label", (F.col("vec_id") % 8).cast("int"))
@@ -366,11 +366,11 @@ def main() -> None:
                len(re.findall(r"\(\d+\) Exchange\b", p)) == 1
                and "BroadcastExchange" not in p),
               ("single grouped-map Python stage",
-               p.count("FlatMapGroupsInPandas (") == 1)]
+               p.count("FlatMapGroupsInArrow (") == 1)]
     sections.append(("semantic_dedup(embeddings, cluster_col=label)", p,
                      checks))
 
-    # 17. DSIR scoring: zero-shuffle mapInPandas over JVM-derived features
+    # 17. DSIR scoring: zero-shuffle mapInArrow over JVM-derived features
     from sketchlib.text.dsir import DsirModel, dsir_scores
 
     model = DsirModel(2, 64, np.zeros(64, dtype=np.int64), None, 0, 0.5)
@@ -403,7 +403,7 @@ def main() -> None:
               # stage — check for actual Python eval nodes
               ("no Python execution stage (JVM tokenizer + integer score)",
                not re.search(r"EvalPython|MapInPandas|MapInArrow"
-                             r"|FlatMapGroupsInPandas", p))]
+                             r"|FlatMapGroupsIn", p))]
     sections.append(("top_keywords(documents, idf_model, k=3)", p, checks))
 
     # 19. table profiler: melted sketch scan — fingerprints computed in

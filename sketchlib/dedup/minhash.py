@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import list_values
 from ..hashing import murmur3_64_flat
 
 
@@ -225,7 +226,6 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
 
     def sign(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         from ..encoding import arrow_flat_bytes
 
@@ -233,14 +233,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
             n = batch.num_rows
             if n == 0:
                 continue
-            col = batch.column("shingles")
-            lens = (pc.fill_null(pc.list_value_length(col), 0)
-                    .to_numpy(zero_copy_only=False).astype(np.int64))
-            bounds = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=bounds[1:])
-            flat_strings = pc.list_flatten(col)
-            flat, offsets = arrow_flat_bytes(flat_strings)
-            hashes = murmur3_64_flat(flat, offsets)
+            flat, bounds = list_values(batch.column("shingles"),
+                                       as_numpy=False)
+            lens = np.diff(bounds)
+            hashes = murmur3_64_flat(*arrow_flat_bytes(flat))
             nz = np.nonzero(lens > 0)[0]
             if method == "perm":
                 sig_rows = _min_sigs(hashes, bounds[nz], bounds[nz + 1], a, b)

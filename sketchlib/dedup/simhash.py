@@ -17,20 +17,20 @@ Tokenization is JVM-side (``split(lower(trim(text)), '\\s+')`` minus empty
 tokens — normative); Python never touches token strings on the near-dup
 path: ``simhash_signatures`` is ``mapInArrow`` and hashes token bytes
 straight from the Arrow list child buffers, accumulating the bit matrix
-with chunked ``np.add.reduceat``. ``simhash_col`` remains as a Column
-convenience for SQL pipelines (same tokens, pandas-materialized — use
-``simhash_signatures`` in bulk jobs).
+with chunked ``np.add.reduceat``. ``simhash_col`` is the same core as a
+Column expression (an Arrow UDF) for SQL pipelines.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..hashing import murmur3_64_flat, to_flat_bytes
+from .._arrow import list_values
+from ..hashing import murmur3_64_flat
 
 _BITS = np.uint64(1) << np.arange(64, dtype=np.uint64)
 
@@ -76,6 +76,22 @@ def _simhash_rows(hashes: np.ndarray, starts: np.ndarray,
     return out
 
 
+def _simhash_lists(col) -> np.ndarray:
+    """int64 SimHash per row of an Arrow ``list<string>`` token column,
+    token bytes hashed straight from the list's child buffers; a NULL or
+    empty list hashes to 0 (all-clear sign vector)."""
+    from ..encoding import arrow_flat_bytes
+
+    flat, bounds = list_values(col, as_numpy=False)
+    lens = np.diff(bounds)
+    hashes = murmur3_64_flat(*arrow_flat_bytes(flat))
+    out = np.zeros(len(col), dtype=np.uint64)
+    nz = np.nonzero(lens > 0)[0]
+    if nz.shape[0]:
+        out[nz] = _simhash_rows(hashes, bounds[nz], bounds[nz + 1])
+    return out.view(np.int64)
+
+
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """(id_col, simhash: long) per document — the bulk path.
@@ -88,28 +104,11 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
                                T.StructField("simhash", T.LongType(), False)])
 
     def sign(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from ..encoding import arrow_flat_bytes
-
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            col = batch.column("toks")
-            lens = (pc.fill_null(pc.list_value_length(col), 0)
-                    .to_numpy(zero_copy_only=False).astype(np.int64))
-            bounds = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(lens, out=bounds[1:])
-            flat, offsets = arrow_flat_bytes(pc.list_flatten(col))
-            hashes = murmur3_64_flat(flat, offsets)
-            out = np.zeros(n, dtype=np.uint64)
-            nz = np.nonzero(lens > 0)[0]
-            if nz.shape[0]:
-                out[nz] = _simhash_rows(hashes, bounds[nz], bounds[nz + 1])
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(out.view(np.int64))],
+                [batch.column(0), pa.array(_simhash_lists(batch.column(1)))],
                 schema=pa.schema([batch.schema.field(0),
                                   pa.field("simhash", pa.int64(), False)]))
 
@@ -118,27 +117,13 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
 
 def simhash_col(text_col: str | Column) -> Column:
     """64-bit SimHash of whitespace tokens (lowercased), as a signed long.
-    Column-expression convenience (tokens materialize through pandas); use
-    :func:`simhash_signatures` for bulk jobs."""
+    Column-expression form of :func:`simhash_signatures` (the same Arrow
+    core, as an Arrow UDF)."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
 
-    @F.pandas_udf(T.LongType())
-    def _simhash(token_lists: pd.Series) -> pd.Series:
-        lens = np.fromiter(
-            (0 if t is None else len(t) for t in token_lists),
-            dtype=np.int64, count=len(token_lists))
-        flat_tokens = [tok.encode("utf-8")
-                       for row in token_lists if row is not None
-                       for tok in row]
-        flat, offsets = to_flat_bytes(flat_tokens)
-        hashes = murmur3_64_flat(flat, offsets)
-        bounds = np.zeros(len(token_lists) + 1, dtype=np.int64)
-        np.cumsum(lens, out=bounds[1:])
-        out = np.zeros(len(token_lists), dtype=np.uint64)
-        nz = np.nonzero(lens > 0)[0]
-        if nz.shape[0]:
-            out[nz] = _simhash_rows(hashes, bounds[nz], bounds[nz + 1])
-        return pd.Series(out.astype(np.int64))
+    @F.arrow_udf(T.LongType())
+    def _simhash(token_lists: pa.Array) -> pa.Array:
+        return pa.array(_simhash_lists(token_lists))
 
     return _simhash(_tokens_col(c))
 

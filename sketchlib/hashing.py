@@ -12,7 +12,7 @@ Two code paths per hash:
   tiny inputs.
 * ``murmur3_64_batch`` / ``fnv1a_64_batch`` — vectorized numpy over a batch of
   variable-length byte strings (offsets + flat buffer, i.e. the Arrow layout).
-  This is the hot path inside Pandas UDFs: no per-row Python.
+  This is the hot path inside the Arrow kernels: no per-row Python.
 
 Golden vectors (reference ``Test/Hash/Murmur3Tests.cs:37-40``,
 ``Test/Hash/Fnv1ATests.cs:38-40``) are pinned in ``tests/test_hashing.py``.

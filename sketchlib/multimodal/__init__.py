@@ -1,5 +1,5 @@
 """Multimodal column plumbing: binary payload + typed metadata, batch decode
-/ feature-extract scaffolding over mapInPandas.  Real pure-numpy decoders
+/ feature-extract scaffolding over mapInArrow.  Real pure-numpy decoders
 for the uncompressed public formats (P6 PPM, 24-bit BMP, PCM-16 WAV);
 compressed codecs stubbed (environment-blocked)."""
 

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) columns as opaque binary + typed metadata.
 
 The Spark-side plumbing is real and tested: schemas, Arrow batch shapes,
-partition sizing, and the ``mapInPandas`` feature-extraction skeleton.
+partition sizing, and the ``mapInArrow`` feature-extraction skeleton.
 Codec coverage (round 3): the uncompressed public formats decode for REAL
 in pure numpy — binary PPM (P6), 24-bit BI_RGB BMP, and 16-bit PCM WAV —
 via :func:`decode_image` / :func:`decode_wav` magic-number dispatch.
@@ -15,8 +15,10 @@ Design rules encoded here (what matters at 100 TB):
 * payload stays ``BinaryType``; metadata is a narrow struct column so scans
   that only need (kind, width, height, n_bytes) never deserialize the blob
   (column pruning at the Parquet reader);
-* decode happens inside ``mapInPandas`` on Arrow batches — one Python worker
-  round-trip per batch, bounded memory via ``maxRecordsPerBatch``;
+* decode happens inside ``mapInArrow`` — one Python worker round-trip per
+  batch, bounded memory via ``maxRecordsPerBatch``; each input batch yields
+  one record batch of the kernel's output schema, ids taken from the
+  input's own Arrow array;
 * frame sampling is planned JVM-side (a ``sequence`` of timestamps) so the
   expensive decode touches only sampled frames.
 """
@@ -24,13 +26,13 @@ Design rules encoded here (what matters at 100 TB):
 from __future__ import annotations
 
 import struct
-from typing import Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .._wire import unpack
 
@@ -259,6 +261,29 @@ def encode_bmp(img: np.ndarray) -> bytes:
     return header + raster
 
 
+def _map_payloads(df: DataFrame, out_schema: T.StructType, rows_of):
+    """``mapInArrow`` over an ``(id, inputs...)`` frame: ``rows_of(*inputs)``
+    gives one input row's output rows, each led by the row's id, and every
+    input batch yields one record batch of ``out_schema``."""
+    def run(batches):
+        schema = to_arrow_schema(out_schema)
+        for batch in batches:
+            take, rows = [], []
+            for i, args in enumerate(zip(*(c.to_pylist()
+                                           for c in batch.columns[1:]))):
+                out = rows_of(*args)
+                take += [i] * len(out)
+                rows += out
+            cols = list(zip(*rows)) if rows else [()] * (len(schema) - 1)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pa.array(take, type=pa.int64()))]
+                + [pa.array(c, type=t)
+                   for c, t in zip(cols, schema.types[1:])],
+                schema=schema)
+
+    return df.mapInArrow(run, out_schema)
+
+
 def extract_media_features(df: DataFrame, payload_col: str = "payload",
                            id_col: str = "media_id",
                            resize_to: tuple[int, int] | None = (8, 8)) -> DataFrame:
@@ -277,32 +302,27 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload",
         T.StructField("phash", T.LongType()),
     ])
 
-    def run(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    img = decode_image(bytes(payload))
-                except ValueError:
-                    rows.append((mid, None, None, None, None))
-                    continue
-                h, w = img.shape[:2]
-                if resize_to:
-                    ys = np.linspace(0, h - 1, resize_to[1]).astype(int)
-                    xs = np.linspace(0, w - 1, resize_to[0]).astype(int)
-                    small = img[np.ix_(ys, xs)]
-                else:
-                    small = img
-                mean_rgb = small.reshape(-1, 3).mean(axis=0)
-                gray = small.mean(axis=2)
-                bits = (gray > gray.mean()).reshape(-1)[:64]
-                phash_u = (int(np.packbits(bits.astype(np.uint8)).view(">u8")[0])
-                           if bits.shape[0] == 64 else 0)
-                phash = phash_u - (1 << 64) if phash_u >= (1 << 63) else phash_u
-                rows.append((mid, int(w), int(h), mean_rgb.tolist(), phash))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def features(payload: bytes):
+        try:
+            img = decode_image(payload)
+        except ValueError:
+            return [(None, None, None, None)]
+        h, w = img.shape[:2]
+        if resize_to:
+            ys = np.linspace(0, h - 1, resize_to[1]).astype(int)
+            xs = np.linspace(0, w - 1, resize_to[0]).astype(int)
+            small = img[np.ix_(ys, xs)]
+        else:
+            small = img
+        mean_rgb = small.reshape(-1, 3).mean(axis=0)
+        gray = small.mean(axis=2)
+        bits = (gray > gray.mean()).reshape(-1)[:64]
+        phash_u = (int(np.packbits(bits.astype(np.uint8)).view(">u8")[0])
+                   if bits.shape[0] == 64 else 0)
+        phash = phash_u - (1 << 64) if phash_u >= (1 << 63) else phash_u
+        return [(int(w), int(h), mean_rgb.tolist(), phash)]
 
-    return df.select(id_col, payload_col).mapInPandas(run, out_schema)
+    return _map_payloads(df.select(id_col, payload_col), out_schema, features)
 
 
 #: longest video a sampling plan will enumerate (1000 h at 1 fps-equiv
@@ -407,25 +427,20 @@ def sample_frames(df: DataFrame, payload_col: str = "payload",
         id_col, payload_col,
         frame_sample_plan(meta["duration_ms"], every_ms).alias("__plan"))
 
-    def run(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for mid, payload, plan in zip(pdf[id_col], pdf[payload_col],
-                                          pdf["__plan"]):
-                if plan is None:  # bad header -> no duration -> skip video
-                    continue
-                payload = bytes(payload)
-                for ts in plan:
-                    try:
-                        frame = decode_frame_stub(payload, int(ts))
-                    except ValueError:
-                        continue
-                    h, w = frame.shape[:2]
-                    rows.append((mid, int(ts), int(w), int(h),
-                                 float(frame.mean())))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def frames(payload: bytes, plan):
+        if plan is None:  # bad header -> no duration -> skip video
+            return []
+        rows = []
+        for ts in plan:
+            try:
+                frame = decode_frame_stub(payload, int(ts))
+            except ValueError:
+                continue
+            h, w = frame.shape[:2]
+            rows.append((int(ts), int(w), int(h), float(frame.mean())))
+        return rows
 
-    return planned.mapInPandas(run, out_schema)
+    return _map_payloads(planned, out_schema, frames)
 
 
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
@@ -480,7 +495,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
 
 def extract_audio_features(df: DataFrame, payload_col: str = "payload",
                            id_col: str = "media_id") -> DataFrame:
-    """Batch WAV decode -> per-clip features, same mapInPandas shape as
+    """Batch WAV decode -> per-clip features, same mapInArrow shape as
     :func:`extract_media_features`: ``(id, sample_rate, n_samples,
     channels, rms, zero_crossing_rate)``; undecodable payloads yield NULL
     features."""
@@ -493,23 +508,16 @@ def extract_audio_features(df: DataFrame, payload_col: str = "payload",
         T.StructField("zero_crossing_rate", T.DoubleType()),
     ])
 
-    def run(batches: Iterable[pd.DataFrame]):
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    samples, rate = decode_wav(bytes(payload))
-                except ValueError:
-                    rows.append((mid, None, None, None, None, None))
-                    continue
-                mono = samples.mean(axis=1)
-                n = mono.shape[0]
-                rms = float(np.sqrt(np.mean(mono ** 2))) if n else 0.0
-                zcr = (float(np.mean(np.signbit(mono[1:])
-                                     != np.signbit(mono[:-1])))
-                       if n > 1 else 0.0)
-                rows.append((mid, int(rate), int(n), int(samples.shape[1]),
-                             rms, zcr))
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def features(payload: bytes):
+        try:
+            samples, rate = decode_wav(payload)
+        except ValueError:
+            return [(None, None, None, None, None)]
+        mono = samples.mean(axis=1)
+        n = mono.shape[0]
+        rms = float(np.sqrt(np.mean(mono ** 2))) if n else 0.0
+        zcr = (float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
+               if n > 1 else 0.0)
+        return [(int(rate), int(n), int(samples.shape[1]), rms, zcr)]
 
-    return df.select(id_col, payload_col).mapInPandas(run, out_schema)
+    return _map_payloads(df.select(id_col, payload_col), out_schema, features)

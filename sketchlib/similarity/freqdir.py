@@ -31,6 +31,7 @@ import struct
 import numpy as np
 from pyspark.sql import types as T
 
+from .._arrow import embedding_matrix
 from .._wire import read_array, unpack
 from ..spark.aggregate import SketchSpec
 
@@ -185,17 +186,10 @@ class FdSpec(SketchSpec):
         return FrequentDirections(ell=self.ell, d=self.d)
 
     def prepare_arrow(self, batch, element_cols):
-        """(n, d) float64 view of a list column's flat values buffer."""
-        import pyarrow.compute as pc
-
+        """(n, d) float64 matrix of the embedding column's values buffer."""
         if len(element_cols) != 1:
             raise ValueError("FD takes exactly one embedding column")
-        rows = batch.column(element_cols[0])
-        lens = pc.list_value_length(rows).to_numpy(zero_copy_only=False)
-        if lens.shape[0] and (lens != lens[0]).any():
-            raise ValueError("embedding rows have different lengths")
-        flat = rows.flatten().to_numpy(zero_copy_only=False)
-        return flat.astype(np.float64).reshape(len(rows), -1)
+        return embedding_matrix(batch.column(element_cols[0]))
 
     def ingest(self, sketch: FrequentDirections, prepared: np.ndarray) -> None:
         sketch.update(prepared)

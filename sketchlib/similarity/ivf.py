@@ -10,15 +10,18 @@ Spark-first:
    seeded spherical k-means (Lloyd's on L2-normalized vectors, cosine ==
    dot). The centroid matrix is tiny (n_clusters x dim) and ships in task
    closures.
-2. **Assign** — one ``mapInPandas`` scan: each batch is one BLAS matmul
-   against the centroid matrix; rows gain a ``cluster_id`` column. At 100 TB
-   you write this table ``partitionBy(cluster_id)`` so searches become
-   partition-pruned scans; the filter below pushes down to the parquet scan
-   either way (``PushedFilters: In(cluster_id, ...)``).
+2. **Assign** — one Arrow UDF: each batch's embeddings are read from the
+   Arrow values buffer into one BLAS matmul against the centroid matrix;
+   rows gain a ``cluster_id`` column. At 100 TB you write this table
+   ``partitionBy(cluster_id)`` so searches become partition-pruned scans;
+   the filter below pushes down to the parquet scan either way
+   (``PushedFilters: In(cluster_id, ...)``).
 3. **Search** — each query probes its ``nprobe`` nearest centroids; the scan
    touches only rows whose cluster is probed by some query (~nprobe/
    n_clusters of the data) and computes exact cosine within, masked per
-   query to the clusters it probes.
+   query to the clusters it probes, in one ``mapInArrow`` pass that keeps
+   every row tied at a batch's k-th score (the scan
+   :func:`sketchlib.similarity.search.cosine_topk` shares).
 
 Recall is the standard IVF trade-off (raise ``nprobe`` for recall, 1.0 when
 ``nprobe == n_clusters``); everything is deterministic given ``seed``.
@@ -27,10 +30,13 @@ Recall is the standard IVF trade-off (raise ``nprobe`` for recall, 1.0 when
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._arrow import embedding_matrix
+from .search import scan_topk
 
 _DEF_SEED = 0x1FF
 
@@ -53,8 +59,7 @@ def train_centroids(df: DataFrame, vec_col: str = "embedding",
     frac = min(1.0, (3.0 * sample_rows) / max(n_total, 1))
     sample = (df.select(vec_col).sample(fraction=frac, seed=seed)
               .limit(sample_rows).collect())
-    mat = _normalize(np.asarray([np.asarray(r[0], dtype=np.float64)
-                                 for r in sample]))
+    mat = _normalize(np.asarray([r[0] for r in sample], dtype=np.float64))
     n = mat.shape[0]
     if n < n_clusters:
         raise ValueError(f"sample ({n}) smaller than n_clusters ({n_clusters})")
@@ -88,13 +93,12 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     One BLAS matmul per Arrow batch; centroids ship in the closure (tiny)."""
     cmat = _normalize(np.asarray(centroids, dtype=np.float64))
 
-    @F.pandas_udf(T.IntegerType())
-    def _assign(vecs: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.IntegerType())
+    def _assign(vecs: pa.Array) -> pa.Array:
         if len(vecs) == 0:
-            return pd.Series(np.empty(0, dtype=np.int32))
-        mat = _normalize(np.asarray([np.asarray(v, dtype=np.float64)
-                                     for v in vecs]))
-        return pd.Series(np.argmax(mat @ cmat.T, axis=1).astype(np.int32))
+            return pa.array([], type=pa.int32())
+        mat = _normalize(embedding_matrix(vecs))
+        return pa.array(np.argmax(mat @ cmat.T, axis=1).astype(np.int32))
 
     return df.withColumn(cluster_col, _assign(F.col(vec_col)))
 
@@ -116,7 +120,7 @@ def ivf_topk(assigned: DataFrame, queries: list[tuple],
       clusters become a pushed-down ``IN`` predicate that prunes whole
       partitions — the 100 TB path.
     * ``assigned`` has NO ``cluster_col``: assignment happens inside the
-      same ``mapInPandas`` batch as the scan (one BLAS matmul each). This
+      same ``mapInArrow`` batch as the scan (one BLAS matmul each). This
       avoids the Catalyst duplicate-evaluation of an unmaterialized
       assignment UDF referenced by both a Filter and a Project (one Python
       pass instead of two), at the cost of scanning every row once —
@@ -125,64 +129,33 @@ def ivf_topk(assigned: DataFrame, queries: list[tuple],
     nprobe = min(nprobe, cmat.shape[0])
     qids = [int(q) for q, _ in queries]
     qmat = _normalize(np.asarray([v for _, v in queries], dtype=np.float64))
-    # per-query probed clusters; per-cluster boolean mask over queries
+    # per-query probed clusters; per-cluster boolean mask over queries,
+    # dense-indexed so the in-scan assignment can look clusters up
     order = np.argsort(-(qmat @ cmat.T), axis=1)[:, :nprobe]
-    probed = sorted({int(c) for row in order for c in row})
-    probes_of = {c: np.array([c in row for row in order]) for c in probed}
-
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField(id_col, assigned.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    has_cluster = cluster_col in assigned.columns
-    probed_set = set(probed)
-    # per-cluster boolean mask over queries, dense-indexed for in-scan assign
     mask_of = np.zeros((cmat.shape[0], len(qids)), dtype=bool)
-    for c in probed:
-        mask_of[c] = probes_of[c]
+    mask_of[order, np.arange(len(qids))[:, None]] = True
+    probed = [int(c) for c in np.flatnonzero(mask_of.any(axis=1))]
+    has_cluster = cluster_col in assigned.columns
 
-    def scan(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = _normalize(np.asarray([np.asarray(v, dtype=np.float64)
-                                         for v in pdf[vec_col]]))
-            if has_cluster:
-                cl = pdf[cluster_col].to_numpy()
-            else:
-                # assign in-scan: same batch, one extra (batch x clusters)
-                # matmul — no second Python pass over the table
-                cl = np.argmax(mat @ cmat.T, axis=1)
-                keep = np.fromiter((c in probed_set for c in cl),
-                                   dtype=bool, count=len(cl))
-                if not keep.any():
-                    continue
-                mat, cl = mat[keep], cl[keep]
-                pdf = pdf.iloc[keep]
-            sims = mat @ qmat.T  # (batch, n_queries)
-            # mask (row, query) pairs where the row's cluster isn't probed
-            sims = np.where(mask_of[cl], sims, -np.inf)
-            ids = pdf[id_col].to_numpy()
-            out = []
-            for j, qid in enumerate(qids):
-                col = sims[:, j]
-                live = np.flatnonzero(col > -np.inf)
-                if live.size == 0:
-                    continue
-                top = min(k, live.size)
-                idx = live[np.argpartition(-col[live], top - 1)[:top]]
-                for i in idx:
-                    out.append((qid, ids[i], float(col[i])))
-            yield pd.DataFrame(out, columns=["query_id", id_col, "cosine"])
+    def scores_of(batch):
+        mat = _normalize(embedding_matrix(batch.column(vec_col)))
+        ids = batch.column(id_col)
+        if has_cluster:
+            cl = batch.column(cluster_col).to_numpy(zero_copy_only=False)
+        else:
+            # assign in-scan: same batch, one extra (batch x clusters)
+            # matmul — no second Python pass over the table
+            cl = np.argmax(mat @ cmat.T, axis=1)
+            keep = mask_of[cl].any(axis=1)
+            if not keep.any():
+                return None
+            mat, cl, ids = mat[keep], cl[keep], ids.filter(pa.array(keep))
+        # mask (row, query) pairs where the row's cluster isn't probed
+        return np.where(mask_of[cl], mat @ qmat.T, -np.inf), ids
 
     if has_cluster:
         pruned = (assigned.filter(F.col(cluster_col).isin(probed))
                   .select(id_col, vec_col, cluster_col))
     else:
         pruned = assigned.select(id_col, vec_col)
-    local = pruned.mapInPandas(scan, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (local.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k))
+    return scan_topk(pruned, qids, k, id_col, "cosine", scores_of)

@@ -22,7 +22,7 @@ Spark shape:
   deterministic, ORDER-BY-reproducible codebook that any external engine
   (the DuckDB oracle) can derive with plain SQL; accuracy is below k-means
   but every downstream step is then machine-checkable end-to-end.
-* **encode** — one ``mapInPandas`` scan; each batch is one BLAS
+* **encode** — one Arrow UDF; each batch is one BLAS
   ``||x - c||^2 = x^2 + c^2 - 2xc`` per subspace; codes pack into a
   ``binary`` column (m bytes/row).  Encoding is stateless per row —
   partition-independent, re-runnable, and the natural thing to write next
@@ -42,18 +42,18 @@ so results are a deterministic total order.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._arrow import embedding_matrix
+from .search import cosine_topk, scan_topk
 
 _DEF_SEED = 0x90D
 
 __all__ = ["train_codebooks", "pq_encode", "adc_topk"]
-
-
-def _as_matrix(vecs) -> np.ndarray:
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
 
 
 def _subspaces(d: int, m: int) -> list[slice]:
@@ -109,7 +109,7 @@ def train_codebooks(df: DataFrame, vec_col: str = "embedding", m: int = 8,
             raise ValueError("method='first_ids' requires id_col")
         rows = (base.select(id_col, vec_col).orderBy(id_col).limit(ksub)
                 .collect())
-        mat = _as_matrix([r[vec_col] for r in rows])
+        mat = np.asarray([r[vec_col] for r in rows], dtype=np.float64)
         if mat.shape[0] < ksub:
             raise ValueError(f"table has {mat.shape[0]} rows < ksub={ksub}")
         subs = _subspaces(mat.shape[1], m)
@@ -120,7 +120,7 @@ def train_codebooks(df: DataFrame, vec_col: str = "embedding", m: int = 8,
     frac = min(1.0, (3.0 * sample_rows) / max(n_total, 1))
     sample = (base.select(vec_col).sample(fraction=frac, seed=seed)
               .limit(sample_rows).collect())
-    mat = _as_matrix([r[0] for r in sample])
+    mat = np.asarray([r[0] for r in sample], dtype=np.float64)
     if mat.shape[0] < ksub:
         raise ValueError(f"sample ({mat.shape[0]}) smaller than ksub ({ksub})")
     subs = _subspaces(mat.shape[1], m)
@@ -175,16 +175,17 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
     :func:`_encode_mat`)."""
     cb = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float64))
 
-    @F.pandas_udf(T.BinaryType())
-    def _enc(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series(np.empty(0, dtype=object))
-        mask = vecs.notna().to_numpy()
-        out = np.full(len(vecs), None, dtype=object)
-        if mask.any():
-            codes = _encode_mat(_as_matrix(vecs[mask]), cb, exact_distances)
-            out[mask] = [c.tobytes() for c in codes]
-        return pd.Series(out)
+    @F.arrow_udf(T.BinaryType())
+    def _enc(vecs: pa.Array) -> pa.Array:
+        live = vecs.is_valid()
+        codes = np.zeros((len(vecs), cb.shape[0]), dtype=np.uint8)
+        if live.true_count:
+            codes[live.to_numpy(zero_copy_only=False)] = _encode_mat(
+                embedding_matrix(vecs.filter(live)), cb, exact_distances)
+        fixed = pa.FixedSizeBinaryArray.from_buffers(
+            pa.binary(cb.shape[0]), len(vecs),
+            [None, pa.py_buffer(codes.tobytes())])
+        return pc.if_else(live, fixed, None).cast(pa.binary())
 
     return df.withColumn(code_col, _enc(F.col(vec_col)))
 
@@ -205,7 +206,7 @@ def adc_topk(encoded: DataFrame, queries: list[tuple], codebooks: np.ndarray,
     cb = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float64))
     m, ksub, dsub = cb.shape
     qids = [int(q) for q, _ in queries]
-    qmat = _as_matrix([v for _, v in queries])
+    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     if qmat.shape[1] != m * dsub:
         raise ValueError(f"query dim {qmat.shape[1]} != m*dsub {m * dsub}")
     # per-query LUTs: luts[q, j, c] = ||q_sub_j - codeword_jc||^2, computed
@@ -215,61 +216,37 @@ def adc_topk(encoded: DataFrame, queries: list[tuple], codebooks: np.ndarray,
 
     if rerank < -1:
         raise ValueError(f"rerank must be >= -1, got {rerank}")
-    # rerank == -1: exhaustive — no per-partition cut, every row survives
-    fetch = None if rerank == -1 else max(k, rerank)
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField(id_col, encoded.schema[id_col].dataType),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
 
-    def scan(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            live = pdf[pdf[code_col].notna()]
-            if live.empty:
-                continue
-            codes = np.frombuffer(b"".join(live[code_col]),
-                                  dtype=np.uint8).reshape(-1, m)
-            ids = live[id_col].to_numpy()
-            # dists[q, row] = sum_j luts[q, j, codes[row, j]]
-            dists = np.zeros((len(qids), codes.shape[0]))
-            for j in range(m):
-                dists += luts[:, j, :][:, codes[:, j]]
-            out = []
-            top = (codes.shape[0] if fetch is None
-                   else min(fetch, codes.shape[0]))
-            for qi, qid in enumerate(qids):
-                col = dists[qi]
-                # keep EVERY row tied at the cut distance: argpartition alone
-                # breaks boundary ties by partition order, which the global
-                # (adc_dist, id) window can't repair once a tied id is dropped
-                thr = np.partition(col, top - 1)[top - 1]
-                for i in np.flatnonzero(col <= thr):
-                    out.append((qid, ids[i], float(col[i])))
-            if out:  # empty all-NA frames poison concat dtype inference
-                yield pd.DataFrame(out, columns=["query_id", id_col, "adc_dist"])
+    def scores_of(batch):
+        batch = batch.filter(batch.column(code_col).is_valid())
+        n = batch.num_rows
+        if not n:
+            return None
+        fixed = batch.column(code_col).cast(pa.binary(m))
+        codes = np.frombuffer(fixed.buffers()[1], dtype=np.uint8, count=n * m,
+                              offset=fixed.offset * m).reshape(n, m)
+        # dists[row, q] = sum_j luts[q, j, codes[row, j]]
+        dists = np.zeros((n, len(qids)))
+        for j in range(m):
+            dists += luts[:, j, :][:, codes[:, j]].T
+        return dists, batch.column(id_col)
 
-    local = encoded.select(id_col, code_col).mapInPandas(scan, schema)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc(id_col))
-    if rerank == 0:
-        return (local.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k))
     source = rerank_df if rerank_df is not None else encoded
-    if fetch is None:
+    if rerank == -1:
         # exhaustive: candidates = every encoded id.  Derived from the
-        # codes frame directly — routing through `local` would run the
-        # full n_queries x n_rows ADC scan and a distinct shuffle just to
+        # codes frame directly — routing through the ADC scan would run
+        # the full n_queries x n_rows scan and a distinct shuffle just to
         # recover the id set it then discards
         cand_ids = (encoded.filter(F.col(code_col).isNotNull())
                     .select(id_col).distinct())
     else:
-        ranked = (local.withColumn("rnk", F.row_number().over(w))
-                  .filter(F.col("rnk") <= fetch))
+        ranked = scan_topk(encoded.select(id_col, code_col), qids,
+                           max(k, rerank), id_col, "adc_dist", scores_of,
+                           largest=False)
+        if rerank == 0:
+            return ranked
         cand_ids = ranked.select(id_col).distinct()
     cand = (source.select(id_col, vec_col)
             .join(F.broadcast(cand_ids), id_col, "semi"))
-    from .search import cosine_topk
     return cosine_topk(cand, [(q, list(v)) for q, v in zip(qids, qmat)], k=k,
                        vec_col=vec_col, id_col=id_col)

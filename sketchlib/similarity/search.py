@@ -3,9 +3,11 @@
 Two paths, per the training-pipeline playbook:
 
 * **Brute-force cosine top-k** — the exactness baseline. Queries (a small
-  set) are closure-shipped as a dense numpy matrix; one ``mapInPandas`` pass
-  over the base table computes an Arrow-batch x query matmul (BLAS) and keeps
-  each batch's local top-k per query; a final window takes the global top-k.
+  set) are closure-shipped as a dense numpy matrix; one ``mapInArrow`` pass
+  over the base table reads each batch's embeddings from the Arrow values
+  buffer, computes a batch x query matmul (BLAS) and keeps each batch's
+  local top-k per query, ties at the cut included; a final window takes the
+  global top-k (:func:`scan_topk`, which the IVF and PQ scans share).
   Scale: one full scan, zero shuffle of vectors — shuffle carries only
   ``batches x queries x k`` candidate rows.
 
@@ -19,10 +21,12 @@ Two paths, per the training-pipeline playbook:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._arrow import embedding_matrix
 
 _DEF_SEED = 0xE5D
 
@@ -30,6 +34,48 @@ _DEF_SEED = 0xE5D
 def _proj_matrix(dim: int, n_bits: int, seed: int = _DEF_SEED) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((dim, n_bits))
+
+
+def scan_topk(frame: DataFrame, qids: list[int], k: int, id_col: str,
+              score_name: str, scores_of, largest: bool = True) -> DataFrame:
+    """Top-``k`` rows per query, ranked ``rnk`` 1..k by (score, id asc),
+    from one ``mapInArrow`` scan of ``frame``.
+
+    ``scores_of(batch)`` gives a batch's (rows, queries) score matrix and
+    its rows' Arrow ids, or None to skip it; a score of -inf (+inf when
+    ``largest`` is False) takes the pair out of play. Each batch keeps
+    every row tied with its k-th score: a bare ``argpartition`` breaks
+    boundary ties by arrival order, which the global window cannot repair
+    once a tied smaller id was dropped (integer-grid embeddings tie
+    often)."""
+    schema = T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField(id_col, frame.schema[id_col].dataType),
+        T.StructField(score_name, T.DoubleType()),
+    ])
+    qid_arr = np.asarray(qids, dtype=np.int64)
+
+    def scan(batches):
+        for batch in batches:
+            got = scores_of(batch) if batch.num_rows else None
+            if got is None:
+                continue
+            scores, ids = got
+            worse = -scores if largest else scores  # ascending: better first
+            top = min(k, len(worse))
+            thr = np.partition(worse, top - 1, axis=0)[top - 1]
+            rows, cols = np.nonzero((worse < np.inf) & (worse <= thr))
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(qid_arr[cols]), ids.take(pa.array(rows)),
+                     pa.array(scores[rows, cols])],
+                    names=["query_id", id_col, score_name])
+
+    by = F.desc(score_name) if largest else F.asc(score_name)
+    w = Window.partitionBy("query_id").orderBy(by, F.asc(id_col))
+    return (frame.mapInArrow(scan, schema)
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k))
 
 
 def cosine_topk(base: DataFrame, queries: list[tuple], k: int = 10,
@@ -45,39 +91,14 @@ def cosine_topk(base: DataFrame, queries: list[tuple], k: int = 10,
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
 
-    schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField(id_col, base.schema[id_col].dataType),
-        T.StructField("cosine", T.DoubleType()),
-    ])
+    def scores_of(batch):
+        mat = embedding_matrix(batch.column(vec_col))
+        norms = np.linalg.norm(mat, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        return (mat / norms) @ qnorm.T, batch.column(id_col)
 
-    def scan(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ qnorm.T  # (batch, n_queries)
-            ids = pdf[id_col].to_numpy()
-            out = []
-            for j, qid in enumerate(qids):
-                col = sims[:, j]
-                top = min(k, col.shape[0])
-                # keep EVERY row tied at the cut similarity: argpartition
-                # alone breaks boundary ties by partition order, which the
-                # global (cosine desc, id asc) window can't repair once a
-                # tied id was dropped batch-side (same guard as the ADC
-                # scan in pq.py — integer-grid embeddings tie often)
-                thr = np.partition(-col, top - 1)[top - 1]
-                for i in np.flatnonzero(-col <= thr):
-                    out.append((qid, ids[i], float(col[i])))
-            yield pd.DataFrame(out, columns=["query_id", id_col, "cosine"])
-
-    local = base.select(id_col, vec_col).mapInPandas(scan, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (local.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k))
+    return scan_topk(base.select(id_col, vec_col), qids, k, id_col, "cosine",
+                     scores_of)
 
 
 def srp_signature_col(vec_col: str | Column, dim: int, n_bits: int = 16,
@@ -86,13 +107,13 @@ def srp_signature_col(vec_col: str | Column, dim: int, n_bits: int = 16,
     proj = _proj_matrix(dim, n_bits, seed)
     bits = (np.uint64(1) << np.arange(n_bits, dtype=np.uint64))
 
-    @F.pandas_udf(T.LongType())
-    def _sig(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+    @F.arrow_udf(T.LongType())
+    def _sig(vecs: pa.Array) -> pa.Array:
+        mat = embedding_matrix(vecs)
         if mat.size == 0:
-            return pd.Series(np.zeros(len(vecs), dtype=np.int64))
+            return pa.array(np.zeros(len(vecs), dtype=np.int64))
         signs = (mat @ proj) > 0
-        return pd.Series((signs @ bits).astype(np.int64))
+        return pa.array((signs @ bits).astype(np.int64))
 
     return _sig(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
 
@@ -132,16 +153,15 @@ def cosine_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
              .filter(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b", "v_a", "v_b").distinct())
 
-    @F.pandas_udf(T.DoubleType())
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.asarray([np.asarray(v, dtype=np.float64) for v in va])
-        mb = np.asarray([np.asarray(v, dtype=np.float64) for v in vb])
+    @F.arrow_udf(T.DoubleType())
+    def _cos(va: pa.Array, vb: pa.Array) -> pa.Array:
+        ma, mb = embedding_matrix(va), embedding_matrix(vb)
         if ma.size == 0:
-            return pd.Series(np.zeros(len(va)))
+            return pa.array(np.zeros(len(va)))
         num = (ma * mb).sum(axis=1)
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         den[den == 0] = 1.0
-        return pd.Series(num / den)
+        return pa.array(num / den)
 
     return (pairs.withColumn("cosine", _cos("v_a", "v_b"))
             .filter(F.col("cosine") >= threshold)

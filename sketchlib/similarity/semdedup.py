@@ -15,7 +15,7 @@ Spark-first shape (the paper's own recipe is embarrassingly parallel):
   sample k-means — and :func:`ivf_assign`, one BLAS matmul per Arrow
   batch).  Any precomputed integer cluster column works too — pass
   ``cluster_col`` and the k-means is skipped entirely.
-* **Within-cluster dedup** is one ``applyInPandas`` over
+* **Within-cluster dedup** is one ``applyInArrow`` over
   ``groupBy(cluster)``: the only shuffle, keyed by cluster id (clusters
   are the unit of parallelism; choose ``n_clusters ~ n/10^4`` so a
   cluster fits a task).  The kernel normalizes once, computes
@@ -41,9 +41,11 @@ re-run the (cheap, sampled) k-means with a larger k.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .._arrow import embedding_matrix
 
 _BLOCK = 4096  # rows per similarity block: 4096 x c doubles in flight
 
@@ -118,22 +120,20 @@ def semantic_dedup(df: DataFrame, vec_col: str = "embedding",
     out_schema = (f"{id_col} {id_field.simpleString()}, "
                   f"cluster {cluster_field.simpleString()}, keep boolean")
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
+    def kernel(table: pa.Table) -> pa.Table:
+        n = table.num_rows
         if n > max_cluster_rows:
             raise ValueError(
                 f"cluster of {n} rows exceeds max_cluster_rows="
                 f"{max_cluster_rows}; increase n_clusters (the sampled "
                 "k-means is cheap) or raise the cap")
-        ids = pdf[id_col].to_numpy()
-        V = np.asarray([np.asarray(v, dtype=np.float64)
-                        for v in pdf[vec_col]])
-        keep = (np.ones(n, dtype=bool) if n <= 1
-                else _cluster_keep_mask(V, ids, tau))
-        return pd.DataFrame({id_col: ids,
-                             "cluster": pdf[cluster_col].to_numpy(),
-                             "keep": keep})
+        ids = table.column(id_col)
+        keep = (np.ones(n, dtype=bool) if n <= 1 else _cluster_keep_mask(
+            embedding_matrix(table.column(vec_col).combine_chunks()),
+            ids.to_numpy(), tau))
+        return pa.table([ids, table.column(cluster_col), pa.array(keep)],
+                        names=[id_col, "cluster", "keep"])
 
     return (df.select(id_col, vec_col, cluster_col)
             .groupBy(cluster_col)
-            .applyInPandas(kernel, schema=out_schema))
+            .applyInArrow(kernel, schema=out_schema))

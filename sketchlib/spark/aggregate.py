@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import hll
+from .._arrow import list_values
 from ..encoding import arrow_flat_bytes
 from ..hashing import HASHES
 from ..hll import HllSketch, concat_ranges
@@ -581,9 +582,8 @@ def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
 def _list_segments(lists: pa.Array):
     """``(blobs, seg_ptr, blob_idx)`` of an ``array<binary>`` batch: segment
     ``s`` is row ``s``'s list (a NULL list is an empty segment)."""
-    offsets = lists.offsets.to_numpy().astype(np.int64)
-    return (lists.values, offsets - offsets[0],
-            np.arange(offsets[0], offsets[-1], dtype=np.int64))
+    blobs, offsets = list_values(lists, as_numpy=False)
+    return blobs, offsets, np.arange(len(blobs), dtype=np.int64)
 
 
 def _scatter(values, where: np.ndarray, fill, type_: pa.DataType) -> pa.Array:

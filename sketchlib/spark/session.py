@@ -18,7 +18,12 @@ measured to matter (BENCH/BASELINE.md):
 
 ``local_cpus`` runs on ``local[N]`` with N shuffle partitions; omit it on
 a cluster.  ``extra_conf`` adds keys on top (a script's local-only UI and
-driver-memory keys).
+driver-memory keys); a script run with plain ``python`` starts its JVM
+with them, so ``spark.driver.memory`` sizes the driver heap.
+
+The recipe's keys are defaults: a key the application was launched with —
+``spark-submit --conf`` or ``spark-defaults.conf`` — keeps its launch
+value, so an operator can retune a job without editing it.
 
 An already-active session is returned unchanged: ``getOrCreate`` would
 rewrite its SQL confs in place, so a job called from inside another
@@ -28,7 +33,16 @@ query.  A joined job runs under the caller's settings.
 
 from __future__ import annotations
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+_RECIPE = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024),
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "200000",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.rdd.compress": "true",
+}
 
 
 def build_session(app: str, local_cpus: str | int | None = None,
@@ -37,14 +51,21 @@ def build_session(app: str, local_cpus: str | int | None = None,
     if active is not None:
         return active
     b = SparkSession.builder.appName(app)
+    recipe = dict(_RECIPE)
     if local_cpus:
-        b = (b.master(f"local[{local_cpus}]")
-             .config("spark.sql.shuffle.partitions", str(local_cpus)))
-    b = (b.config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
-         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "200000")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.rdd.compress", "true"))
-    for k, v in (extra_conf or {}).items():
+        b = b.master(f"local[{local_cpus}]")
+        recipe["spark.sql.shuffle.partitions"] = str(local_cpus)
+    # the launch conf: spark-submit hands its --conf and spark-defaults.conf
+    # keys to the JVM as spark.* system properties, which SparkConf reads.
+    # A JVM started here (plain python) is launched with extra_conf, so a
+    # launch-time key such as spark.driver.memory sizes its heap
+    extra_conf = extra_conf or {}
+    SparkContext._ensure_initialized(
+        conf=SparkConf(loadDefaults=False).setAll(extra_conf.items()))
+    launch = SparkConf()
+    for k, v in recipe.items():
+        if not launch.contains(k):
+            b = b.config(k, v)
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -52,12 +52,36 @@ def salted_repartition(df: DataFrame, cols: Sequence[str], buckets: int,
     return df.repartition(n_partitions, *parts) if n_partitions else df.repartition(*parts)
 
 
+def _num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``, read from its physical plan where the plan
+    fixes it, so no job runs (``df.rdd`` under AQE runs every shuffle below
+    as a job of its own, which the query then runs again).  Under AQE the
+    plan fixes the count only when the chain of one-child nodes under the
+    root ends in a leaf or in a ``repartition(n, ...)`` shuffle, which AQE
+    does not coalesce.  Any other shape (a shuffle AQE may coalesce, a join
+    or union, a count the partitioning does not carry) reads the RDD, which
+    under AQE still runs the shuffles below it as a job."""
+    plan = df._jdf.queryExecution().executedPlan()
+    fixed = True
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # before any stage runs: the initial plan
+        node = plan
+        while (node.children().size() == 1
+               and node.getClass().getSimpleName() != "ShuffleExchangeExec"):
+            node = node.children().head()
+        fixed = (node.children().size() == 0
+                 or (node.getClass().getSimpleName() == "ShuffleExchangeExec"
+                     and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"))
+    n = plan.outputPartitioning().numPartitions() if fixed else 0
+    return n if n > 0 else df.rdd.getNumPartitions()
+
+
 def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
                         spec=None, sketch_col: str = "sketch",
                         fanout: int = 64) -> DataFrame:
     """Fold-merge partial sketches so that no task folds more than
     ~``fanout`` blobs of a group, whatever the partial count P
-    (``partials.rdd.getNumPartitions()``): salted rounds start at width
+    (:func:`_num_partitions`): salted rounds start at width
     ``ceil(P / fanout)`` and shrink by ``fanout`` each round, then
     :func:`merge_partials` folds what is left.  At P <= ``fanout`` this IS
     the flat merge.  Bounding the blobs per task matters for merges that
@@ -74,7 +98,7 @@ def tree_merge_partials(partials: DataFrame, group_cols: Sequence[str] = (),
     spec = spec or HllSpec()
     merge = merge_blobs_udf(spec)
     df = partials
-    width = (max(partials.rdd.getNumPartitions(), 1) + fanout - 1) // fanout
+    width = (max(_num_partitions(partials), 1) + fanout - 1) // fanout
     level = 0
     while width > 1:
         # salt by (blob, SOURCE PARTITION, level) — all deterministic

@@ -13,13 +13,15 @@ Spark-first shape:
    collect to the driver — at most ``total_lines / min_count`` entries,
    further bounded by ``max_lines`` (count-desc, hash-asc tie-break) so
    the broadcast is always sized: 1M hashes = 8 MB.
-2. **Strip** (:func:`strip_boilerplate`): zero-shuffle ``mapInPandas``.
+2. **Strip** (:func:`strip_boilerplate`): zero-shuffle ``mapInArrow``.
    Line splitting and hashing stay JVM-side (the Python kernel never
    touches line *content* for matching); the kernel does one
-   ``searchsorted`` membership test over the flattened int64 hash array
-   and rebuilds each document from its kept lines.  Blank lines can never
-   be removed (their hash is excluded from the frequency pass by the
-   ``norm != ''`` filter), so document structure survives.
+   ``searchsorted`` membership test over the hash column's values buffer,
+   filters the line column's values by it and joins each document's
+   kept lines with ``pyarrow.compute.binary_join`` — no per-row Python.
+   Blank lines can never be removed (their hash is excluded from the
+   frequency pass by the ``norm != ''`` filter), so document structure
+   survives.
 
 A cross-document false removal needs an xxhash64 collision between two
 distinct normalized lines where one is boilerplate — ~n_boilerplate x
@@ -28,9 +30,12 @@ n_lines / 2^64, immaterial at corpus scale.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._arrow import list_values, map_appending, segment_sums, sorted_lookup
 
 MAX_FREQUENT_LINES = 50_000_000  # 400 MB of hashes; broadcast sanity bound
 
@@ -47,8 +52,6 @@ def frequent_line_hashes(df: DataFrame, text_col: str = "text",
     ``min_count`` times corpus-wide (blank lines excluded).  If more than
     ``max_lines`` qualify, the most frequent win (hash-asc tie-break) —
     the cap bounds driver/broadcast memory at any corpus size."""
-    import numpy as np
-
     if min_count < 2:
         raise ValueError("min_count must be >= 2 (1 would flag every line)")
     if max_lines < 1 or max_lines > MAX_FREQUENT_LINES:
@@ -79,14 +82,8 @@ def strip_boilerplate(df: DataFrame, frequent_hashes,
     append ``out_col`` plus ``n_lines`` / ``n_removed`` counters.
 
     Map-only: the hash set rides a Spark broadcast; membership is one
-    vectorized ``searchsorted`` over the batch's flattened line hashes."""
-    import numpy as np
-    import pandas as pd
-
-    added = (out_col, "n_lines", "n_removed")
-    clash = [c for c in added if c in df.columns]
-    if clash:
-        raise ValueError(f"input already has column(s) {clash}")
+    vectorized ``searchsorted`` over the batch's flattened line hashes,
+    and every input column passes through as its own Arrow array."""
     lcol, hcol = "__lines", "__lhash"
     while lcol in df.columns:
         lcol += "_"
@@ -95,58 +92,32 @@ def strip_boilerplate(df: DataFrame, frequent_hashes,
 
     fh = np.sort(np.asarray(frequent_hashes, dtype=np.int64))
     bc = df.sparkSession.sparkContext.broadcast(fh)
-    in_cols = df.columns
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.StringType()),
-           T.StructField("n_lines", T.LongType()),
-           T.StructField("n_removed", T.LongType())])
 
-    def kernel(batches):
-        fhv = bc.value
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                yield pdf[in_cols].assign(
-                    **{out_col: pd.Series([], dtype=object)},
-                    n_lines=np.array([], dtype=np.int64),
-                    n_removed=np.array([], dtype=np.int64))
-                continue
-            lines = pdf[lcol]
-            lens = np.fromiter((len(x) for x in lines), dtype=np.int64,
-                               count=n)
-            flat_h = (np.concatenate(
-                [np.asarray(x, dtype=np.int64) for x in pdf[hcol]])
-                if lens.sum() else np.array([], dtype=np.int64))
-            if len(fhv):
-                idx = np.searchsorted(fhv, flat_h)
-                idx_c = np.minimum(idx, len(fhv) - 1)
-                rm = fhv[idx_c] == flat_h
-            else:
-                rm = np.zeros(len(flat_h), dtype=bool)
-            ends = np.cumsum(lens)
-            starts = ends - lens
-            crm = np.concatenate([[0], np.cumsum(rm)])
-            n_removed = crm[ends] - crm[starts]
-            out = []
-            for i in range(n):
-                ls = lines.iloc[i]
-                seg = rm[starts[i]:ends[i]]
-                out.append("\n".join(
-                    l for l, r in zip(ls, seg) if not r))
-            yield pdf[in_cols].assign(
-                **{out_col: out},
-                n_lines=lens, n_removed=n_removed)
+    def strip(batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-    # NULL text coalesces to zero lines (the kernel's len(x) would
-    # TypeError on a Python None): such a doc strips to "" with
+        h, offsets = list_values(batch.column(hcol))
+        rm = sorted_lookup(bc.value, h)[1]
+        lines = list_values(batch.column(lcol), as_numpy=False)[0]
+        n_lines = np.diff(offsets)
+        n_removed = segment_sums(rm, offsets)
+        kept_offsets = np.zeros(len(offsets), dtype=np.int32)
+        np.cumsum(n_lines - n_removed, out=kept_offsets[1:])
+        kept = pa.ListArray.from_arrays(pa.array(kept_offsets),
+                                        lines.filter(pa.array(~rm)))
+        return pc.binary_join(kept, "\n"), n_lines, n_removed
+
+    # NULL text coalesces to zero lines: such a doc strips to "" with
     # n_lines = n_removed = 0, mirroring frequent_line_hashes which
     # silently skips NULL rows in the counting pass
     lines_c = F.coalesce(F.split(F.col(text_col), "\n"),
                          F.array().cast("array<string>"))
-    return (df.withColumn(lcol, lines_c)
-            .withColumn(hcol, F.transform(F.col(lcol), line_hash_expr))
-            .mapInPandas(kernel, schema=out_schema))
+    proj = (df.withColumn(lcol, lines_c)
+            .withColumn(hcol, F.transform(F.col(lcol), line_hash_expr)))
+    return map_appending(proj, [lcol, hcol], {
+        out_col: T.StringType(), "n_lines": T.LongType(),
+        "n_removed": T.LongType()}, strip)
 
 
 def remove_boilerplate(df: DataFrame, text_col: str = "text",

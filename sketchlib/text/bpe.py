@@ -51,13 +51,16 @@ has no tokenizer; this module serves the graft's LLM-pipeline surface
 from __future__ import annotations
 
 import json
+from itertools import chain
 from typing import Iterable, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._arrow import list_values
 
 # GPT-2 pre-tokenizer minus the RE2-incompatible trailing-space lookahead
 # (module docstring).  Works identically under Java regex (Spark) and RE2
@@ -251,9 +254,10 @@ def train_bpe(df: DataFrame, text_col: str = "text", n_merges: int = 256,
 def token_ids_col(col: Column, model: BpeModel) -> Column:
     """array<int> of BPE token ids for a text column.
 
-    Pre-tokenization stays in the JVM; the pandas UDF sees arrays of
-    pre-tokens and encodes each DISTINCT pre-token once per worker (memo),
-    so the Python cost on Zipf text is ~O(types), not O(tokens)."""
+    Pre-tokenization stays in the JVM; the Arrow UDF reads each batch's
+    pre-tokens from the list column's values buffer and encodes each
+    DISTINCT pre-token once per worker (memo), so the Python cost on Zipf
+    text is ~O(types), not O(tokens)."""
     # model + memo live in the UDF closure: each Python worker unpickles
     # them ONCE and reuses them across every Arrow batch it serves, so a
     # distinct pre-token is encoded once per worker lifetime — not once
@@ -262,20 +266,19 @@ def token_ids_col(col: Column, model: BpeModel) -> Column:
     memo: dict[str, list[int]] = {}
     enc = m.encode_word
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def _encode(words: pd.Series) -> pd.Series:
-        def doc(ws):
-            if ws is None:  # NULL text: conditional wrappers (F.when) still
-                return None  # feed every row through the batch
-            out: list[int] = []
-            for w in ws:
-                ids = memo.get(w)
-                if ids is None:
-                    ids = memo[w] = enc(w)
-                out.extend(ids)
-            return out
-
-        return words.map(doc)
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def _encode(words: pa.Array) -> pa.Array:
+        flat, offsets = list_values(words)
+        encoded = [memo[w] if w in memo else memo.setdefault(w, enc(w))
+                   for w in flat]
+        # a row's token offset is the token count before its first word;
+        # NULL text stays NULL (F.when wrappers still feed every row
+        # through the batch)
+        ends = np.cumsum([0] + [len(ids) for ids in encoded], dtype=np.int32)
+        return pa.ListArray.from_arrays(
+            pa.array(ends[offsets]),
+            pa.array(list(chain.from_iterable(encoded)), type=pa.int32()),
+            mask=words.is_null())
 
     return _encode(pretokens_col(col))
 

@@ -46,15 +46,16 @@ Spark-first shape
   ``JVM_SCORE_MAX_BUCKETS`` the weight table is an ``array<bigint>``
   plan literal and the score is a pure codegen
   ``aggregate``/``element_at`` gather — nothing crosses into Python
-  (measured 4.3x over the pandas kernel at 24M docs; the pandas path's
+  (measured 4.3x over the Python kernel at 24M docs; the Python path's
   cost is the ~10^10 feature ints through Arrow, not the kernel).
   Larger tables broadcast once per executor and score in a
-  ``mapInPandas`` ``np.take`` + segmented-sum kernel, with
-  ``keep_text=False`` dropping the text before the Arrow exchange
-  (``dsir_scores`` contract).  (Why the fallback is not a scalar
-  ``pandas_udf`` that would keep even the passthrough columns
-  JVM-side: see the implementation note on :func:`quality_scores` —
-  PySpark 4.1.2 has an extraction bug for that shape.)
+  ``mapInArrow`` ``np.take`` + segmented-sum kernel over the feature
+  column's values buffer, with ``keep_text=False`` dropping the text
+  before the Arrow exchange (``dsir_scores`` contract).  (Why the
+  fallback is not a scalar Arrow UDF that would keep even the
+  passthrough columns JVM-side: see the implementation note on
+  :func:`quality_scores` — PySpark 4.1.2 has an extraction bug for that
+  shape.)
 * **Filter** — ``quality_filter`` filters on the scored column; the
   whole path is map-only (no shuffle at any corpus size), pure
   whole-stage codegen in the JVM-engine regime, and the result schema
@@ -71,6 +72,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import list_values, map_appending, segment_sums
 from .decontaminate import tokens_col
 
 MAX_BUCKETS = 5_000_000  # driver weight-table sanity bound (40 MB int64)
@@ -242,7 +244,7 @@ def fit_quality_classifier(df: DataFrame, label_col: str,
 
 # above this the weight table is inlined as a plan literal and scoring
 # never leaves whole-stage codegen; beyond it the literal would bloat the
-# plan, so scoring falls back to the broadcast-table mapInPandas kernel
+# plan, so scoring falls back to the broadcast-table mapInArrow kernel
 JVM_SCORE_MAX_BUCKETS = 1 << 16
 
 
@@ -259,28 +261,30 @@ def quality_scores(df: DataFrame, model: QualityModel,
       ``prior + aggregate(features, 0L, (acc, b) -> acc +
       element_at(w, b+1))`` — the whole path (tokenize, hash, gather,
       sum) stays inside whole-stage codegen and NOTHING crosses into
-      Python.  Measured 4.3x over the pandas kernel at 24M docs
-      (55.7 s vs ~237 s incl. fit): the pandas path's cost is shipping
+      Python.  Measured 4.3x over the Python kernel at 24M docs
+      (55.7 s vs ~237 s incl. fit): the Python path's cost is shipping
       ~10^10 feature int64s through Arrow, not the Python kernel.
-    * ``engine="pandas"`` (the ``auto`` choice for larger tables): the
-      table broadcasts once per executor and a ``mapInPandas`` kernel
-      does a vectorized gather + segmented sum; with
-      ``keep_text=False`` the text column is dropped BEFORE the Arrow
-      exchange (the :func:`sketchlib.text.dsir.dsir_scores` contract).
+    * ``engine="arrow"`` (the ``auto`` choice for larger tables): the
+      table broadcasts once per executor and a ``mapInArrow`` kernel
+      does a vectorized gather + segmented sum over the feature
+      column's values buffer, passing every other column through as its
+      own Arrow array; with ``keep_text=False`` the text column is
+      dropped BEFORE the Arrow exchange (the
+      :func:`sketchlib.text.dsir.dsir_scores` contract).
 
-    Implementation note on the pandas engine: a scalar struct-returning
-    ``pandas_udf`` over the feature expression would be even narrower,
+    Implementation note on the arrow engine: a scalar struct-returning
+    Arrow UDF over the feature expression would be even narrower,
     but PySpark 4.1.2 fails to extract that UDF into an
     ``ArrowEvalPython`` node for any DataFrame other than the session's
     first local relation when the input is this module's feature
     expression (``[INTERNAL_ERROR] Cannot evaluate expression:
     score_of(...)`` at task time — reproduced across UDF objects,
     closures, and both hash kernels), so the fallback uses the
-    repo-proven ``mapInPandas`` shape;
+    repo-proven ``mapInArrow`` shape;
     ``tests/test_classifier.py::test_scores_across_fresh_dataframes``
     pins the multi-DataFrame session shape that exposed it."""
-    if engine not in ("auto", "jvm", "pandas"):
-        raise ValueError("engine must be 'auto', 'jvm' or 'pandas'")
+    if engine not in ("auto", "jvm", "arrow"):
+        raise ValueError("engine must be 'auto', 'jvm' or 'arrow'")
     added = ("n_feats", "score_milli")
     clash = [c for c in added if c in df.columns]
     if clash:
@@ -295,7 +299,7 @@ def quality_scores(df: DataFrame, model: QualityModel,
             raise ValueError(
                 f"engine='jvm' supports at most {JVM_SCORE_MAX_BUCKETS} "
                 "buckets (the table is a plan literal); use "
-                "engine='pandas'")
+                "engine='arrow'")
         w_lit = F.lit([int(x) for x in model.w])
         out_cols = [c for c in df.columns if keep_text or c != text_col]
         proj = df.withColumn(
@@ -309,42 +313,21 @@ def quality_scores(df: DataFrame, model: QualityModel,
             F.size(fcol).cast("long").alias("n_feats"),
             score.alias("score_milli"))
 
-    out_fields = [f for f in df.schema.fields
-                  if keep_text or f.name != text_col]
-    out_schema = T.StructType(
-        out_fields + [T.StructField(c, T.LongType()) for c in added])
-    spark = df.sparkSession
-    table_bc = spark.sparkContext.broadcast((model.w, model.prior_milli))
+    table_bc = df.sparkSession.sparkContext.broadcast(
+        (model.w, model.prior_milli))
 
-    def kernel(batches):
+    def score(batch):
         w, prior = table_bc.value
-        for pdf in batches:
-            feats = pdf[fcol]
-            n_rows = len(pdf)
-            out = pdf.drop(columns=[fcol])
-            if n_rows == 0:
-                yield out.assign(
-                    n_feats=np.array([], dtype=np.int64),
-                    score_milli=np.array([], dtype=np.int64))
-                continue
-            lens = np.fromiter((len(f) for f in feats), dtype=np.int64,
-                               count=n_rows)
-            flat = (np.concatenate(
-                [np.asarray(f, dtype=np.int64) for f in feats])
-                if lens.sum() else np.array([], dtype=np.int64))
-            ends = np.cumsum(lens)
-            starts = ends - lens
-            cs = np.concatenate([[0], np.cumsum(w[flat])])
-            yield out.assign(
-                n_feats=lens,
-                score_milli=prior + (cs[ends] - cs[starts]))
+        flat, offsets = list_values(batch.column(fcol))
+        return np.diff(offsets), prior + segment_sums(w[flat], offsets)
 
     proj = df.withColumn(
         fcol, quality_features(F.col(text_col), model.buckets,
                                model.bucket_hash))
     if not keep_text:
         proj = proj.drop(text_col)
-    return proj.mapInPandas(kernel, schema=out_schema)
+    return map_appending(proj, [fcol],
+                         dict.fromkeys(added, T.LongType()), score)
 
 
 def quality_filter(df: DataFrame, model: QualityModel,
@@ -356,7 +339,7 @@ def quality_filter(df: DataFrame, model: QualityModel,
     Map-only at any corpus size.  Up to ``JVM_SCORE_MAX_BUCKETS`` the
     whole filter is pure whole-stage codegen — no row ever enters
     Python; beyond that the rows round-trip the Arrow boundary once
-    (the :func:`quality_scores` pandas engine), which is still the
+    (the :func:`quality_scores` arrow engine), which is still the
     right 100 TB shape: scoring a narrow (id, text) projection and
     semi-joining back would trade the Arrow round-trip for a
     full-corpus shuffle."""

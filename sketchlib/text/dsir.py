@@ -24,9 +24,12 @@ Spark-first shape:
   (``round(1000 * (ln p_t - ln p_r))``, Laplace-``alpha`` smoothed) so
   every per-doc sum is integer and order-independent — the same
   bit-reproducibility contract as :mod:`sketchlib.text.lmscore`.
-* **Score** is zero-shuffle ``mapInPandas``: only int64 feature arrays
-  cross the Arrow boundary; the kernel is ``np.take`` (bucket mode) or
-  ``searchsorted`` (exact mode) + a cumsum-diff segmented sum.
+* **Score** is zero-shuffle ``mapInArrow``: only int64 feature arrays
+  cross the Arrow boundary, read from their values buffer; the kernel is
+  ``np.take`` (bucket mode) or ``searchsorted`` (exact mode) + a
+  cumsum-diff segmented sum (the :mod:`sketchlib._arrow` kernels shared
+  with :mod:`sketchlib.text.lmscore`), and every other column passes
+  through as its own Arrow array.
 * **Select** is ``orderBy(score desc, id).limit(k)`` — Spark plans
   ``TakeOrderedAndProject`` (per-partition top-k, merged on the driver),
   NOT a global sort shuffle.
@@ -41,13 +44,13 @@ folding — the mode the SQL oracle re-derives gram-by-gram.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import list_values, map_appending, segment_sums, sorted_lookup
 from .decontaminate import ngram_hashes_from_tokens, tokens_col
 
 MAX_FEATURES = 5_000_000  # exact-mode driver-table sanity bound
@@ -173,55 +176,20 @@ def dsir_scores(df: DataFrame, model: DsirModel, text_col: str = "text",
     derived JVM-side, and with ``keep_text=False`` the text itself never
     crosses the Arrow boundary (same contract as
     :func:`sketchlib.text.lmscore.score_docs`)."""
-    import pandas as pd
-
-    added = ("n_grams", "score_milli")
-    clash = [c for c in added if c in df.columns]
-    if clash:
-        raise ValueError(f"input already has column(s) {clash}")
     fcol = "__feats"
     while fcol in df.columns:
         fcol += "_"
 
-    out_fields = [f for f in df.schema.fields
-                  if keep_text or f.name != text_col]
-    out_schema = T.StructType(
-        out_fields + [T.StructField(c, T.LongType()) for c in added])
     spark = df.sparkSession
     table_bc = spark.sparkContext.broadcast(
         (model.lam, model.feat_hashes, model.default_lam, model.buckets))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batch):
         lam, fh, default, buckets = table_bc.value
-        for pdf in batches:
-            feats = pdf[fcol]
-            n_rows = len(pdf)
-            out = pdf.drop(columns=[fcol])
-            if n_rows == 0:
-                yield out.assign(
-                    n_grams=np.array([], dtype=np.int64),
-                    score_milli=np.array([], dtype=np.int64))
-                continue
-            lens = np.fromiter((len(f) for f in feats), dtype=np.int64,
-                               count=n_rows)
-            flat = (np.concatenate(
-                [np.asarray(f, dtype=np.int64) for f in feats])
-                if lens.sum() else np.array([], dtype=np.int64))
-            if buckets is not None:
-                lpv = lam[flat]
-            elif len(fh):
-                idx = np.searchsorted(fh, flat)
-                idx_c = np.minimum(idx, len(fh) - 1)
-                hit = fh[idx_c] == flat
-                lpv = np.where(hit, lam[idx_c], default)
-            else:
-                lpv = np.full(len(flat), default, dtype=np.int64)
-            ends = np.cumsum(lens)
-            starts = ends - lens
-            cs = np.concatenate([[0], np.cumsum(lpv)])
-            yield out.assign(
-                n_grams=lens,
-                score_milli=cs[ends] - cs[starts])
+        flat, offsets = list_values(batch.column(fcol))
+        lpv = (lam[flat] if buckets is not None
+               else sorted_lookup(fh, flat, lam, default)[0])
+        return np.diff(offsets), segment_sums(lpv, offsets)
 
     tcol = fcol + "_t"
     while tcol in df.columns:  # the fcol probe does not cover "_t" names
@@ -238,7 +206,8 @@ def dsir_scores(df: DataFrame, model: DsirModel, text_col: str = "text",
         fcol, F.coalesce(F.col(fcol), F.array().cast("array<long>")))
     if not keep_text:
         proj = proj.drop(text_col)
-    return proj.mapInPandas(kernel, schema=out_schema)
+    return map_appending(proj, [fcol], dict.fromkeys(
+        ("n_grams", "score_milli"), T.LongType()), score)
 
 
 def dsir_select(scored: DataFrame, k: int, score_col: str = "score_milli",

@@ -14,14 +14,16 @@ arithmetic contract so results are bit-reproducible across engines:
   order-independent (float summation order would otherwise make the score
   depend on partitioning).  OOV tokens get the Laplace-ish
   ``round(1000 * ln(0.5 / total))``.
-* **Score** (:func:`score_docs`): zero-shuffle ``mapInPandas`` — tokens
+* **Score** (:func:`score_docs`): zero-shuffle ``mapInArrow`` — tokens
   are derived AND ``xxhash64``-fingerprinted JVM-side
   (:func:`sketchlib.text.decontaminate.tokens_col` + a ``transform``
   lambda), so only an int64 array per doc crosses the Arrow boundary and
-  the kernel is a flatten → ``searchsorted`` membership against the
-  sorted vocab-hash array → cumsum-diff segmented sum.  No Python string
-  work at all: a fixed 8 B/token crosses the boundary regardless of token
-  length, and the kernel never materializes object arrays.  (On the
+  the kernel is the list column's values buffer → ``searchsorted``
+  membership against the sorted vocab-hash array → cumsum-diff segmented
+  sum (the :mod:`sketchlib._arrow` kernels); every other column passes
+  through as its own Arrow array.  No Python string work at all: a fixed
+  8 B/token crosses the boundary regardless of token length, and the
+  kernel never materializes object arrays.  (On the
   synthetic bench table — short tokens, 660-word vocabulary — this
   measures neutral vs a dict-map-on-strings kernel, 60 vs 63 s warm at
   24M docs; the transfer and allocation advantage grows with real
@@ -40,12 +42,13 @@ with only the O(vocab) dict crossing to each worker once.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import list_values, map_appending, segment_sums, sorted_lookup
 from .decontaminate import tokens_col
 
 MAX_VOCAB = 5_000_000  # broadcast-dict sanity bound (~hundreds of MB)
@@ -66,8 +69,6 @@ class UnigramLM:
 
     def _hash_table(self):
         """(sorted int64 hash array, parallel logp array) for scoring."""
-        import numpy as np
-
         if not self.logp_milli:
             return (np.array([], dtype=np.int64),
                     np.array([], dtype=np.int64))
@@ -90,8 +91,6 @@ def train_unigram_lm(df: DataFrame, text_col: str = "text",
     ``ln`` runs in numpy on the driver (glibc ``log``) over the collected
     counts — never in the JVM — so an oracle recomputing the same quantity
     with another glibc-backed engine matches bit-for-bit."""
-    import numpy as np
-
     if vocab_size < 1 or vocab_size > MAX_VOCAB:
         raise ValueError(f"vocab_size must be in [1, {MAX_VOCAB}]")
     counts = (df.select(F.explode(tokens_col(F.col(text_col))).alias("tok"))
@@ -126,74 +125,33 @@ def score_docs(df: DataFrame, lm: UnigramLM,
     is then consumed by the JVM tokenizer and never crosses the Arrow
     boundary at all (at web scale the text IS the row; only the 8 B/token
     hash arrays and the narrow metadata columns transfer)."""
-    import numpy as np
-    import pandas as pd
-
-    added = ("n_tokens", "n_oov", "sum_logp_milli")
-    clash = [c for c in added if c in df.columns]
-    if clash:
-        raise ValueError(f"input already has column(s) {clash}")
     tcol = "__tokens"
     while tcol in df.columns:
         tcol += "_"
 
-    out_fields = [f for f in df.schema.fields
-                  if keep_text or f.name != text_col]
-    out_schema = T.StructType(
-        out_fields + [T.StructField(c, T.LongType()) for c in added])
     spark = df.sparkSession
-    vh, vlp = lm._hash_table()
-    table_bc = spark.sparkContext.broadcast((vh, vlp))
+    table_bc = spark.sparkContext.broadcast(lm._hash_table())
     oov_lp = lm.oov_logp_milli
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vhv, vlpv = table_bc.value
-        for pdf in batches:
-            toks = pdf[tcol]
-            n = len(pdf)
-            out = pdf.drop(columns=[tcol])
-            if n == 0:
-                yield out.assign(
-                    n_tokens=np.array([], dtype=np.int64),
-                    n_oov=np.array([], dtype=np.int64),
-                    sum_logp_milli=np.array([], dtype=np.int64))
-                continue
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64,
-                               count=n)
-            flat = (np.concatenate(
-                [np.asarray(t, dtype=np.int64) for t in toks])
-                if lens.sum() else np.array([], dtype=np.int64))
-            if len(vhv):
-                idx = np.searchsorted(vhv, flat)
-                idx_c = np.minimum(idx, len(vhv) - 1)
-                hit = vhv[idx_c] == flat
-                lpv = np.where(hit, vlpv[idx_c], oov_lp)
-                oov = (~hit).astype(np.int64)
-            else:
-                lpv = np.full(len(flat), oov_lp, dtype=np.int64)
-                oov = np.ones(len(flat), dtype=np.int64)
-            # cumsum-diff segmented sums: exact integers, empty-doc safe
-            ends = np.cumsum(lens)
-            starts = ends - lens
-            cs = np.concatenate([[0], np.cumsum(lpv)])
-            co = np.concatenate([[0], np.cumsum(oov)])
-            yield out.assign(
-                n_tokens=lens,
-                n_oov=co[ends] - co[starts],
-                sum_logp_milli=cs[ends] - cs[starts])
+    def score(batch):
+        vh, vlp = table_bc.value
+        flat, offsets = list_values(batch.column(tcol))
+        lpv, hit = sorted_lookup(vh, flat, vlp, oov_lp)
+        return (np.diff(offsets), segment_sums(~hit, offsets),
+                segment_sums(lpv, offsets))
 
     # tokens are hashed INSIDE the JVM: only int64 arrays cross to Python.
-    # NULL text coalesces to an empty array here (the kernel's len(t) would
-    # TypeError on a Python None): a NULL doc scores 0 tokens / 0 logp,
-    # matching the other scrub operators' null handling
+    # NULL text coalesces to an empty array here: a NULL doc scores
+    # 0 tokens / 0 logp, matching the other scrub operators' null handling
     toks_hashed = F.coalesce(
         F.transform(tokens_col(F.col(text_col)), lambda t: F.xxhash64(t)),
         F.array().cast("array<long>"))
     proj = df.withColumn(tcol, toks_hashed)
     if not keep_text:
-        # drop the text BEFORE mapInPandas so it never crosses to Python
+        # drop the text BEFORE mapInArrow so it never crosses to Python
         proj = proj.drop(text_col)
-    return proj.mapInPandas(kernel, schema=out_schema)
+    return map_appending(proj, [tcol], dict.fromkeys(
+        ("n_tokens", "n_oov", "sum_logp_milli"), T.LongType()), score)
 
 
 def lm_quality_filter(df: DataFrame, lm: UnigramLM, text_col: str = "text",

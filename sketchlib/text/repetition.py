@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._arrow import list_values
+
 #: Gopher A1.1 thresholds on the derived character fractions
 MAX_TOP_2GRAM_CHAR_FRAC = 0.20
 MAX_DUP_5GRAM_CHAR_FRAC = 0.15
@@ -230,10 +232,8 @@ def _doc_segments(run_doc: np.ndarray) -> np.ndarray:
 
 
 def _batch_stats(n: int, ncs: np.ndarray, tok_col) -> list[np.ndarray]:
-    import pyarrow.compute as pc
-    lens = (pc.fill_null(pc.list_value_length(tok_col), 0)
-            .to_numpy(zero_copy_only=False).astype(np.int64))
-    flat = pc.list_flatten(tok_col)
+    flat, offsets = list_values(tok_col, as_numpy=False)
+    lens = np.diff(offsets)
     total = len(flat)
     n2 = np.zeros(n, dtype=np.int64)
     top_cnt = np.zeros(n, dtype=np.int64)

@@ -230,7 +230,7 @@ def test_scores_across_fresh_dataframes(spark):
                                    bucket_hash="md5")
     first = {r.doc_id: r.score_milli
              for r in quality_scores(df1, model).collect()}
-    for engine in ("jvm", "pandas"):
+    for engine in ("jvm", "arrow"):
         for _ in range(2):
             dfn = spark.createDataFrame(rows, schema)
             refit = fit_quality_classifier(dfn, "label", buckets=B,
@@ -243,7 +243,7 @@ def test_scores_across_fresh_dataframes(spark):
 
 
 def test_engine_parity_and_schema(spark, docs_df):
-    """The codegen engine and the pandas kernel must agree value-for-
+    """The codegen engine and the Arrow kernel must agree value-for-
     value and column-for-column on every doc (nulls, empties, \\x0B)."""
     model = fit_quality_classifier(docs_df, "label", buckets=B,
                                    bucket_hash="md5")
@@ -251,7 +251,7 @@ def test_engine_parity_and_schema(spark, docs_df):
         jvm = quality_scores(docs_df, model, keep_text=keep_text,
                              engine="jvm")
         pdk = quality_scores(docs_df, model, keep_text=keep_text,
-                             engine="pandas")
+                             engine="arrow")
         assert jvm.columns == pdk.columns
         assert sorted(map(tuple, jvm.collect())) == \
             sorted(map(tuple, pdk.collect()))
@@ -261,7 +261,7 @@ def test_engine_parity_and_schema(spark, docs_df):
                        np.zeros(1 << 17, dtype=np.int64), 0, 0.5)
     with pytest.raises(ValueError, match="buckets"):
         quality_scores(docs_df, big, engine="jvm")
-    # auto beyond the literal bound must route to pandas, not raise
+    # auto beyond the literal bound must route to arrow, not raise
     assert quality_scores(docs_df, big).count() == len(DOCS)
 
 

@@ -73,7 +73,7 @@ def test_target_docs_score_higher(spark, docs_df):
 
 def test_bucket_mode_kernel_roundtrip(spark, docs_df):
     """Bucket-mode scores == summing the model table over the JVM-computed
-    bucket arrays (pins the mapInPandas kernel against the JVM features)."""
+    bucket arrays (pins the mapInArrow kernel against the JVM features)."""
     target = docs_df.filter(F.col("doc_id").isin(list(TARGET_IDS)))
     model = fit_dsir(target, docs_df, n=2, buckets=64)
     got = {r.doc_id: (r.n_grams, r.score_milli)

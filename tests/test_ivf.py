@@ -95,7 +95,7 @@ def test_inscan_assignment_matches_materialized(vec_df, trained):
     plan = res._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE echoes both plans
     assert "ArrowEvalPython" not in final  # no per-row assignment UDF at all
-    assert final.count("MapInPandas") == 1
+    assert final.count("MapInArrow") == 1
 
 
 def test_train_raises_when_sample_too_small(spark):
@@ -103,3 +103,24 @@ def test_train_raises_when_sample_too_small(spark):
                                "vec_id long, embedding array<double>")
     with pytest.raises(ValueError):
         train_centroids(df, n_clusters=8, sample_rows=2000)
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_ties_at_the_cut_match_brute_force(spark, k):
+    """Ten rows tied with the query, arriving in unsorted id order in one
+    partition, with every cluster probed: the per-batch cut must keep all
+    tied rows so the global (cosine desc, id asc) window picks the
+    smallest ids, exactly as the brute-force scan does."""
+    ids = [7, 3, 9, 0, 5, 1, 8, 2, 6, 4]
+    df = spark.createDataFrame([(i, [1.0, 0.0, 0.0, 0.0]) for i in ids],
+                               "vec_id long, embedding array<double>"
+                               ).coalesce(1)
+    cents = np.eye(4)[:2]
+    q = [(0, [1.0, 0.0, 0.0, 0.0])]
+
+    def top(frame):
+        return [r["vec_id"] for r in frame.orderBy("rnk").collect()]
+
+    want = top(cosine_topk(df, q, k=k))
+    assert want == list(range(k))
+    assert top(ivf_topk(df, q, cents, k=k, nprobe=2)) == want

@@ -63,9 +63,9 @@ def test_score_keep_text_false_drops_text_jvm_side(spark, docs_df):
     got = {r.doc_id: r.sum_logp_milli for r in out.collect()}
     assert got == want
     # the text column is projected away BEFORE the Python stage: the
-    # ArrowEvalPython/mapInPandas input carries only id + token hashes
+    # mapInArrow input carries only id + token hashes
     plan = out._jdf.queryExecution().executedPlan().toString()
-    [mip_line] = [ln for ln in plan.split("\n") if "MapInPandas" in ln]
+    [mip_line] = [ln for ln in plan.split("\n") if "MapInArrow" in ln]
     assert "text#" not in mip_line
 
 

@@ -544,7 +544,7 @@ class TestMultimodal:
             "media_id", media_meta_col("payload").alias("m")).collect()}
         assert meta[2]["codec"] == "bmp"
         assert meta[2]["width"] == 5 and meta[2]["height"] == 4
-        # audio: WAV features through the same mapInPandas shape
+        # audio: WAV features through the same mapInArrow shape
         tone = (np.sin(np.arange(400) / 5.0) * 10000).astype(np.int16)
         adf = spark.createDataFrame(
             [(0, bytearray(encode_wav(tone[:, None], 16000))),

@@ -110,3 +110,50 @@ def test_tree_merge_rejects_fanout_one(spark):
     partials = build_partials(_zipf_pages(spark, n=100), "url", ())
     with pytest.raises(ValueError, match="fanout must be >= 2"):
         tree_merge_partials(partials, (), fanout=1)
+
+
+def test_tree_merge_plans_without_running_a_job(spark):
+    """The partial count P comes from the plan: building the tree over a
+    shuffled input submits no job before the query's own action, and the
+    merged blobs equal the flat merge's."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(2_000).select((F.col("id") % 7).alias("g"),
+                                   F.col("id").cast("string").alias("x"))
+    partials = build_partials(df.repartition(16, "g", "x"), "x", ["g"])
+    sc = spark.sparkContext
+    sc.setJobGroup("tree-plan-only", "tree_merge_partials planning")
+    try:
+        tree = tree_merge_partials(partials, ["g"], fanout=4)
+        assert sc.statusTracker().getJobIdsForGroup("tree-plan-only") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    flat = {r["g"]: bytes(r["sketch"])
+            for r in merge_partials(partials, ["g"]).collect()}
+    assert {r["g"]: bytes(r["sketch"]) for r in tree.collect()} == flat
+
+
+def test_tree_merge_adds_no_round_over_a_coalesced_shuffle(spark):
+    """Over a shuffle AQE may coalesce, P is the coalesced count, not the
+    planned one: 64 planned partitions that AQE coalesces to a few build no
+    salted round at fanout 8, so the tree plans as many shuffles as the flat
+    merge."""
+    from pyspark.sql import functions as F
+
+    def shuffles(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("Exchange hashpartitioning")
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        df = spark.range(0, 2_000, 1, 64).select(
+            (F.col("id") % 7).alias("g"), F.col("id").cast("string").alias("x"))
+        partials = build_partials(df.groupBy("g", "x").count(), "x", ["g"])
+        tree = tree_merge_partials(partials, ["g"], fanout=8)
+        flat = merge_partials(partials, ["g"])
+        assert shuffles(tree) == shuffles(flat) == 2
+        assert ({r["g"]: bytes(r["sketch"]) for r in tree.collect()}
+                == {r["g"]: bytes(r["sketch"]) for r in flat.collect()})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
