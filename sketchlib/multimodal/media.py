@@ -217,6 +217,8 @@ def decode_image(payload: bytes) -> np.ndarray:
     real cluster image that makes this module complete; in this container
     (no Pillow/libjpeg, verified) they raise the declared
     environment-blocked error."""
+    if payload is None:
+        raise ValueError("NULL payload")
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     if payload[:2] == b"BM":
@@ -292,7 +294,8 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload",
     Output: (id, width, height, mean_rgb array<double>, phash bigint).
     Decode dispatches per payload via :func:`decode_image`: REAL for
     P6 PPM / 24-bit BMP, deterministic fake for the fixture container;
-    compressed codecs stay environment-blocked.
+    compressed codecs stay environment-blocked. An undecodable payload
+    (NULL included) yields NULL features.
     """
     out_schema = T.StructType([
         T.StructField(id_col, df.schema[id_col].dataType),
@@ -449,6 +452,8 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     LIST/fact are skipped), returns ``(samples[n, channels] int16,
     sample_rate)``.  Compressed audio (MP3/AAC/Opus) remains
     environment-blocked and would dispatch from here."""
+    if payload is None:
+        raise ValueError("NULL payload")
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
     pos, fmt, data = 12, None, None

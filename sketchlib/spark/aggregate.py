@@ -6,8 +6,10 @@ two-phase aggregation explicitly (SURVEY.md §4):
 * **stage 1 — partial build** (``mapInArrow``): each input partition streams
   through a Python worker as Arrow record batches; element bytes hash
   straight from Arrow buffers (no pandas string materialization), group keys
-  factorize via Arrow dictionary encoding, and per (group, partition) one
-  partial sketch is emitted — ``(group_cols..., sketch: binary)``.
+  factorize via Arrow dictionary encoding (:func:`arrow_group_codes`) and
+  leave as the input's own Arrow values, so NULL and int64 keys stay exact,
+  and per (group, partition) one partial sketch is emitted —
+  ``(group_cols..., sketch: binary)``.
   This caps shuffle volume at ``#partitions x #groups x sketch_size`` no
   matter how many raw rows went in, and removes data skew from the shuffle:
   a hot group contributes at most one partial per partition.
@@ -37,9 +39,11 @@ from typing import Sequence
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import hll
 from .._arrow import list_values
@@ -70,46 +74,35 @@ def hash_arrow_columns(batch, cols: Sequence[str], hash_name: str = "murmur3") -
     return flat_fn(flat, offsets)
 
 
-def arrow_group_codes(batch, group_cols: Sequence[str]) -> tuple[np.ndarray, tuple]:
-    """Per-row group codes + unique-key *column arrays* from Arrow dictionary
-    encoding — vectorized factorize, zero per-key Python.
+def _flat(col) -> pa.Array:
+    """A table or batch column as one contiguous Arrow array."""
+    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
 
-    NULL group keys get a dedicated dictionary slot (mirroring the pandas
-    path's ``factorize(use_na_sentinel=False)``): ``dictionary_encode`` emits
-    null *indices* for null values, which would otherwise cast to INT64_MIN
-    and silently fold the NULL group into an arbitrary real group."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
-    idx_arrays = []
-    dicts = []
+def arrow_group_codes(batch, group_cols: Sequence[str]) -> tuple[np.ndarray, np.ndarray]:
+    """The one group-key contract of the Arrow passes: ``(codes, first)``
+    for a record batch or table. ``codes`` is a dense int64 group code per
+    row and ``first`` holds each group's first row index, in code order.
+    The keys are the group columns of ``batch.take(first)``: the input's
+    own Arrow values, so NULL keys and int64 keys above 2^53 stay exact.
+    With no group columns every row is one group.
+
+    Codes come from Arrow dictionary encoding, with no per-key Python.
+    NULL keys get a dedicated dictionary slot: ``dictionary_encode`` emits
+    null *indices* for null values, which would otherwise cast to
+    INT64_MIN and silently fold the NULL group into an arbitrary real
+    group."""
+    combined = np.zeros(batch.num_rows, dtype=np.int64)
     for c in group_cols:
-        enc = pc.dictionary_encode(batch.column(c))
-        idx, d = enc.indices, enc.dictionary
+        enc = pc.dictionary_encode(_flat(batch.column(c)))
+        idx, size = enc.indices, len(enc.dictionary)
         if idx.null_count:
-            idx = pc.fill_null(idx, len(d))
-            d = pa.concat_arrays([d, pa.nulls(1, type=d.type)])
-        idx_arrays.append(idx.to_numpy(zero_copy_only=False).astype(np.int64))
-        dicts.append(d)
-    codes = idx_arrays[0].copy()
-    sizes = [len(d) for d in dicts]
-    for idx, k in zip(idx_arrays[1:], sizes[1:]):
-        codes *= k
-        codes += idx
-    uniq = np.unique(codes)
-    remap = np.searchsorted(uniq, codes)
-    # decode each unique combined code back into per-column values (take on
-    # the dictionary arrays — vectorized)
-    key_cols = []
-    rem = uniq
-    for d, k in zip(reversed(dicts), reversed(sizes)):
-        key_cols.append(np.asarray(d.take(rem % k).to_pandas()))
-        rem = rem // k
-    return remap, tuple(reversed(key_cols))
-
-
-def _keys_as_tuples(key_cols: tuple) -> list[tuple]:
-    return list(zip(*[c.tolist() for c in key_cols]))
+            idx = pc.fill_null(idx, size)
+            size += 1
+        combined *= size
+        combined += idx.to_numpy(zero_copy_only=False)
+    _, first, codes = np.unique(combined, return_index=True, return_inverse=True)
+    return codes.astype(np.int64, copy=False), first
 
 
 def element_batch(pdf: pd.DataFrame, cols: Sequence[str]) -> pa.RecordBatch:
@@ -258,89 +251,72 @@ class _PairAccumulator:
     ``#small-groups x spill_threshold x 16B + #big-groups x sketch_size``
     regardless of partition row count.
 
-    Per-row AND per-group work is vectorized: batches arrive with batch-local
-    codes plus their unique-key *column arrays*; codes globalize lazily in one
-    pandas factorize over the concatenated key columns (no per-key Python),
-    and per-group blob emission at partition end uses a direct-blob fast path
-    for small groups. This is what makes millions of tiny groups (e.g.
-    per-host distincts) cheap."""
+    Per-row AND per-group work is vectorized: batches arrive with
+    batch-local codes plus their groups' key rows; codes globalize lazily
+    in one :func:`arrow_group_codes` pass over the concatenated key rows
+    (no per-key Python), and per-group blob emission at partition end uses
+    a direct-blob fast path for small groups. This is what makes millions
+    of tiny groups (e.g. per-host distincts) cheap."""
 
-    def __init__(self, spec, compact_threshold: int = 1 << 23,
+    def __init__(self, spec, group_cols: Sequence[str],
+                 compact_threshold: int = 1 << 23,
                  spill_threshold: int = 1 << 12) -> None:
         self.spec = spec
+        self.group_cols = list(group_cols)
         self.compact_threshold = compact_threshold
         self.spill_threshold = spill_threshold
-        # pending batches: (key_cols tuple[np.ndarray], local codes, hashes)
-        self.batches: list[tuple[tuple, np.ndarray, np.ndarray]] = []
+        # pending batches: (key rows, local codes, hashes)
+        self.batches: list[tuple[pa.Table, np.ndarray, np.ndarray]] = []
         self.pending = 0
-        # globalized state
-        self.gkey_cols: tuple | None = None
+        # globalized state: one key row per global group code
+        self.keys: pa.Table | None = None
         self.gcodes = np.zeros(0, dtype=np.int64)
         self.ghashes = np.zeros(0, dtype=np.uint64)
         self.gadds = np.zeros(0, dtype=np.int64)
         self.spilled: dict[int, object] = {}
 
-    def add_batch(self, local_codes: np.ndarray, key_cols: tuple,
-                  hashes: np.ndarray) -> None:
-        self.batches.append((key_cols,
-                             np.ascontiguousarray(local_codes, dtype=np.int64),
-                             np.ascontiguousarray(hashes, dtype=np.uint64)))
-        self.pending += local_codes.shape[0]
+    def add(self, codes: np.ndarray, keys, prepared: np.ndarray) -> None:
+        self.batches.append((pa.table(keys),
+                             np.ascontiguousarray(codes, dtype=np.int64),
+                             np.ascontiguousarray(prepared, dtype=np.uint64)))
+        self.pending += codes.shape[0]
         if self.pending > self.compact_threshold:
             self._globalize()
 
-    @staticmethod
-    def _factorize_cols(cols: tuple) -> tuple[np.ndarray, tuple]:
-        if len(cols) == 1:
-            codes, uniq = pd.factorize(cols[0], use_na_sentinel=False)
-            return codes.astype(np.int64), (np.asarray(uniq),)
-        mi = pd.MultiIndex.from_arrays(list(cols))
-        codes, uniq = mi.factorize(use_na_sentinel=False)
-        return codes.astype(np.int64), tuple(
-            np.asarray(uniq.get_level_values(i)) for i in range(len(cols)))
-
     def _globalize(self) -> None:
-        """One vectorized pass: re-factorize all known keys (existing globals
-        + every pending batch's uniques), remap codes through per-source LUTs,
-        accumulate additions, sort-dedup pairs, spill huge groups."""
-        if not self.batches and self.gkey_cols is not None:
+        """One vectorized pass: re-code all known keys (existing globals
+        + every pending batch's key rows), remap codes through per-source
+        LUTs, accumulate additions, sort-dedup pairs, spill huge groups."""
+        if not self.batches:
             return
-        parts = []
-        if self.gkey_cols is not None:
-            parts.append(self.gkey_cols)
-        for key_cols, _codes, _hashes in self.batches:
-            parts.append(key_cols)
-        if not parts:
-            return
-        ncols = len(parts[0])
-        cat = tuple(np.concatenate([p[i] for p in parts]) for i in range(ncols))
-        all_codes, uniq_cols = self._factorize_cols(cat)
-        n_uniq = uniq_cols[0].shape[0]
+        parts = [k for k, _codes, _hashes in self.batches]
+        if self.keys is not None:
+            parts.insert(0, self.keys)
+        cat = pa.concat_tables(parts)
+        all_codes, first = arrow_group_codes(cat, self.group_cols)
+        n_uniq = first.shape[0]
 
         # split the lut back per source
-        offs = np.cumsum([0] + [p[0].shape[0] for p in parts])
+        offs = np.cumsum([0] + [p.num_rows for p in parts])
         luts = [all_codes[offs[i]:offs[i + 1]] for i in range(len(parts))]
 
         new_adds = np.zeros(n_uniq, dtype=np.int64)
         codes_list = []
         hashes_list = []
-        li = 0
-        if self.gkey_cols is not None:
-            lut = luts[0]
-            li = 1
+        if self.keys is not None:
+            lut = luts.pop(0)
             codes_list.append(lut[self.gcodes])
             hashes_list.append(self.ghashes)
             np.add.at(new_adds, lut, self.gadds)
             if self.spilled:
                 self.spilled = {int(lut[c]): sk for c, sk in self.spilled.items()}
-        for (key_cols, codes, hashes), lut in zip(self.batches, luts[li:]):
+        for (keys, codes, hashes), lut in zip(self.batches, luts):
             codes_list.append(lut[codes])
             hashes_list.append(hashes)
-            np.add.at(new_adds, lut,
-                      np.bincount(codes, minlength=key_cols[0].shape[0]))
+            np.add.at(new_adds, lut, np.bincount(codes, minlength=keys.num_rows))
         self.batches = []
         self.pending = 0
-        self.gkey_cols = uniq_cols
+        self.keys = cat.take(pa.array(first))
         self.gadds = new_adds
 
         codes = np.concatenate(codes_list)
@@ -371,20 +347,19 @@ class _PairAccumulator:
         self.gcodes = codes
         self.ghashes = hashes
 
-    def finalize(self, group_cols: Sequence[str], sketch_col: str):
+    def finalize(self):
+        """Yields the partition's ``(key rows, blobs)`` once (nothing for an
+        empty partition)."""
         self._globalize()
-        if self.gkey_cols is None:
+        if self.keys is None:
             return
-        codes = self.gcodes
         hashes = self.ghashes
-        n = self.gkey_cols[0].shape[0]
-        starts = np.searchsorted(codes, np.arange(n), side="left")
-        ends = np.searchsorted(codes, np.arange(n), side="right")
+        bounds = np.searchsorted(self.gcodes, np.arange(self.keys.num_rows + 1))
         fast_blob = getattr(self.spec, "blob_from_hashes", None)
         blobs = []
         adds = self.gadds
-        for c in range(n):
-            seg = hashes[starts[c]:ends[c]]
+        for c, (s, e) in enumerate(zip(bounds[:-1].tolist(), bounds[1:].tolist())):
+            seg = hashes[s:e]
             sk = self.spilled.get(c)
             if sk is None:
                 if fast_blob is not None:
@@ -396,19 +371,61 @@ class _PairAccumulator:
                     self.spec.ingest(sk, seg)
                 sk.count_additions = int(adds[c])
             blobs.append(self.spec.to_bytes(sk))
-        if group_cols:
-            out = pd.DataFrame({g: col for g, col in zip(group_cols, self.gkey_cols)})
-        else:
-            out = pd.DataFrame(index=range(len(blobs)))
-        out[sketch_col] = blobs
-        yield out
+        yield self.keys, pa.array(blobs, type=pa.binary())
+
+
+class _SketchAccumulator:
+    """Stage-1 state for the sketches that cannot dedup (CMS, t-digest,
+    KLL, FD): one live sketch per group. A batch's groups find their
+    partition-wide id through a dict on the exact Python key tuple
+    (``to_pylist`` values, so NULLs and int64 keys above 2^53 stay
+    distinct): key work per batch is O(groups in the batch), and the key
+    row of each new group is kept as Arrow."""
+
+    def __init__(self, spec, group_cols: Sequence[str]) -> None:
+        self.spec = spec
+        self.group_cols = list(group_cols)
+        self.ids: dict[tuple, int] = {}
+        self.keys: list[pa.Table] = []  # key rows of the new groups, per batch
+        self.sketches: list = []
+
+    def groups(self, codes: np.ndarray, keys) -> list[tuple[int, np.ndarray]]:
+        """``(id, row indices)`` of each group of a batch, its rows in batch
+        order; a new group gets an empty sketch."""
+        order = np.argsort(codes, kind="stable")
+        bounds = np.searchsorted(codes[order], np.arange(keys.num_rows + 1))
+        gids, new = [], []
+        for i, row in enumerate(keys.select(self.group_cols).to_pylist()):
+            key = tuple(row.values())
+            gid = self.ids.get(key)
+            if gid is None:
+                gid = self.ids[key] = len(self.sketches)
+                self.sketches.append(self.spec.make())
+                new.append(i)
+            gids.append(gid)
+        if new:
+            self.keys.append(pa.table(keys.take(pa.array(new))))
+        return [(g, order[s:e]) for g, s, e in
+                zip(gids, bounds[:-1].tolist(), bounds[1:].tolist())]
+
+    def add(self, codes: np.ndarray, keys, prepared) -> None:
+        # one ingest per (group, batch) slice, in row order: t-digest and
+        # KLL bytes depend on it
+        for gid, rows in self.groups(codes, keys):
+            self.spec.ingest(self.sketches[gid], prepared[rows])
+
+    def finalize(self):
+        """Yields the partition's ``(key rows, blobs)`` once (nothing for an
+        empty partition)."""
+        if self.sketches:
+            yield (pa.concat_tables(self.keys),
+                   pa.array([self.spec.to_bytes(s) for s in self.sketches],
+                            type=pa.binary()))
 
 
 def _element_batches(batches, element_cols: Sequence[str]):
     """The non-empty Arrow batches of a partition with every row that has a
     NULL element dropped (NULL elements carry no sketch mass)."""
-    import pyarrow.compute as pc
-
     for batch in batches:
         mask = None
         for c in element_cols:
@@ -422,13 +439,26 @@ def _element_batches(batches, element_cols: Sequence[str]):
             yield batch
 
 
+def _with_keys(keys, group_cols: Sequence[str], arrays: list,
+               schema: pa.Schema) -> pa.RecordBatch:
+    """A record batch of ``schema``: the group columns of ``keys``, then
+    ``arrays``."""
+    return pa.RecordBatch.from_arrays(
+        [_flat(keys.column(c)) for c in group_cols] + list(arrays),
+        schema=schema)
+
+
 def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
                    group_cols: Sequence[str] = (), spec: HllSpec | None = None,
                    sketch_col: str = "sketch") -> DataFrame:
     """Stage 1: one partial sketch per (group, input partition).
 
     Only ``group_cols + element_cols`` are selected, so Catalyst prunes every
-    other column at the scan (never deserializes e.g. an ``html`` payload)."""
+    other column at the scan (never deserializes e.g. an ``html`` payload).
+    Element bytes hash straight from Arrow buffers; dedup-able specs
+    (``hash_dedup``) build through the vectorized pair accumulator, the
+    others through one live sketch per group. Group keys leave as the
+    input's own Arrow values."""
     if isinstance(element_cols, str):
         element_cols = [element_cols]
     element_cols = list(element_cols)
@@ -455,70 +485,23 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
     out_schema = T.StructType(
         [_group_field(df, g) for g in group_cols] + [T.StructField(sketch_col, T.BinaryType(), False)]
     )
+    accumulator = (_PairAccumulator if getattr(spec, "hash_dedup", False)
+                   else _SketchAccumulator)
 
-    def _arrow_out_schema():
-        """Arrow schema matching ``out_schema`` — the yielded batches are
-        built from pandas frames, where a NULL key in an int64/date group
-        column surfaces as NaN in a float64 array; from_pandas with an
-        explicit schema converts that back to a typed null."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(out_schema)
-
-    def build_arrow(batches):
-        """Dedup-able sketches (HLL/Bloom/Theta/Cuckoo): element bytes are
-        hashed straight from Arrow buffers and group keys factorize via
-        dictionary encoding into the vectorized pair accumulator; per-group
-        Python cost is one sketch materialization per group per partition,
-        at partition end."""
-        pa_schema = _arrow_out_schema()
-        acc = _PairAccumulator(spec)
+    def build(batches):
+        # a batch's key rows are its groups' first rows, whole: the element
+        # columns keep their row count even with no group column (a
+        # zero-column Arrow table drops its rows under take and concat)
+        acc = accumulator(spec, group_cols)
         for batch in _element_batches(batches, element_cols):
-            prepared = spec.prepare_arrow(batch, element_cols)
-            if group_cols:
-                local_codes, key_cols = arrow_group_codes(batch, group_cols)
-            else:
-                local_codes = np.zeros(batch.num_rows, dtype=np.int64)
-                key_cols = (np.zeros(1, dtype=np.int64),)
-            acc.add_batch(local_codes, key_cols, prepared)
-        for pdf in acc.finalize(group_cols, sketch_col):
-            yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
-                                             preserve_index=False)
-
-    def build_stream_arrow(batches):
-        """Streaming build for non-dedup sketches (CMS, t-digest, KLL, FD):
-        one live sketch per group; per batch the rows are ordered by group
-        code once and each group's slice is ingested vectorized."""
-        pa_schema = _arrow_out_schema()
-        sketches: dict[tuple, object] = {}
-        for batch in _element_batches(batches, element_cols):
-            prepared = spec.prepare_arrow(batch, element_cols)
-            if group_cols:
-                codes, key_cols = arrow_group_codes(batch, group_cols)
-                keys = _keys_as_tuples(key_cols)
-            else:
-                codes = np.zeros(batch.num_rows, dtype=np.int64)
-                keys = [()]
-            order = np.argsort(codes, kind="stable")
-            sorted_codes = codes[order]
-            starts = np.searchsorted(sorted_codes, np.arange(len(keys)), side="left")
-            ends = np.searchsorted(sorted_codes, np.arange(len(keys)), side="right")
-            for k, s, e in zip(keys, starts.tolist(), ends.tolist()):
-                if s == e:
-                    continue
-                sk = sketches.get(k)
-                if sk is None:
-                    sk = spec.make()
-                    sketches[k] = sk
-                spec.ingest(sk, prepared[order[s:e]])
-        if sketches:
-            rows = [list(k) + [spec.to_bytes(s)] for k, s in sketches.items()]
-            pdf = pd.DataFrame(rows, columns=group_cols + [sketch_col])
-            yield pa.RecordBatch.from_pandas(pdf, schema=pa_schema,
-                                             preserve_index=False)
+            codes, first = arrow_group_codes(batch, group_cols)
+            acc.add(codes, batch.take(pa.array(first)),
+                    spec.prepare_arrow(batch, element_cols))
+        for keys, blobs in acc.finalize():
+            yield _with_keys(keys, group_cols, [blobs],
+                             to_arrow_schema(out_schema))
 
     needed = list(dict.fromkeys(group_cols + element_cols))  # dedupe overlap
-    build = build_arrow if getattr(spec, "hash_dedup", False) else build_stream_arrow
     return df.select(*needed).mapInArrow(build, out_schema)
 
 
@@ -743,12 +726,6 @@ def _concat_batches(batches) -> "pa.RecordBatch | None":
     return pa.Table.from_batches(batches).combine_chunks().to_batches()[0]
 
 
-def _group_codes(batch, group_cols: Sequence[str]) -> np.ndarray:
-    if not group_cols:
-        return np.zeros(batch.num_rows, dtype=np.int64)
-    return arrow_group_codes(batch, group_cols)[0]
-
-
 def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
                   spec: HllSpec | None = None,
                   group_cols: Sequence[str] = (),
@@ -782,9 +759,6 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
 
     ``order_col`` must be integer-like (for dates, pass e.g.
     ``F.datediff(day, lit(epoch))`` first)."""
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     spec = spec or HllSpec()
     group_cols = list(group_cols)
     narrowed = sketch_df.select(*group_cols, order_col, sketch_col)
@@ -798,7 +772,7 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
         batch = batch.filter(pc.is_valid(batch.column(order_col)))
         if batch.num_rows == 0:
             return
-        codes = _group_codes(batch, group_cols)
+        codes, _first = arrow_group_codes(batch, group_cols)
         order = batch.column(order_col).to_numpy().astype(np.int64)
         perm = np.lexsort((order, codes))
         codes, order = codes[perm], order[perm]
@@ -814,10 +788,9 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
         np.cumsum(hi - lo, out=seg_ptr[1:])
         sketches = _fold_arrow(spec, batch.column(sketch_col), seg_ptr,
                                perm[concat_ranges(lo, hi - lo)], empty)
-        keys = batch.take(pa.array(perm[anchors]))
-        yield pa.RecordBatch.from_arrays(
-            [keys.column(c) for c in group_cols + [order_col]] + [sketches],
-            schema=to_arrow_schema(schema))
+        yield _with_keys(batch.take(pa.array(perm[anchors])),
+                         group_cols + [order_col], [sketches],
+                         to_arrow_schema(schema))
 
     shuffled = (narrowed.repartition(*group_cols) if group_cols
                 else narrowed.repartition(1))
@@ -928,15 +901,13 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
     Associativity + commutativity of the merge (canonical-bytes pinned)
     makes the final result bit-identical with or without this pass.
     Worker memory is O(blobs in the partition) — the shuffle input it
-    replaces.  Group keys factorize through ``arrow_group_codes``
-    (dictionary encoding) and leave as the input's own key values, so NULL
-    keys and full-range int64 keys round-trip exactly; rows are grouped by
-    one stable sort of the codes and every group of the partition folds in
+    replaces.  Group keys factorize through :func:`arrow_group_codes` and
+    leave as the input's own key values, so NULL keys and full-range int64
+    keys round-trip exactly; rows are grouped by one stable sort of the
+    codes and every group of the partition folds in
     one :func:`sketchlib.hll.fold_segments` call (HLL), singleton groups
     passing their canonical blob through untouched.
     """
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     spec = spec or HllSpec()
     group_cols = list(group_cols)
     narrowed = partials.select(*group_cols, sketch_col)
@@ -946,15 +917,12 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
         batch = _concat_batches(batches)
         if batch is None:
             return
-        codes = _group_codes(batch, group_cols)
+        codes, first = arrow_group_codes(batch, group_cols)
         perm = np.argsort(codes, kind="stable")
-        sorted_codes = codes[perm]
-        heads = np.flatnonzero(np.r_[True, sorted_codes[1:] != sorted_codes[:-1]])
-        sketches = _fold_arrow(spec, batch.column(sketch_col),
-                               np.r_[heads, perm.shape[0]], perm, None)
-        keys = batch.take(pa.array(perm[heads]))
-        yield pa.RecordBatch.from_arrays(
-            [keys.column(c) for c in group_cols] + [sketches],
-            schema=to_arrow_schema(schema))
+        seg_ptr = np.searchsorted(codes[perm], np.arange(first.shape[0] + 1))
+        sketches = _fold_arrow(spec, batch.column(sketch_col), seg_ptr, perm,
+                               None)
+        yield _with_keys(batch.take(pa.array(first)), group_cols, [sketches],
+                         to_arrow_schema(schema))
 
     return narrowed.mapInArrow(combine, schema)

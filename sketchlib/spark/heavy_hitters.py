@@ -19,7 +19,11 @@ emits each partition's locally-frequent values as candidates:
   frequent in at least one partition holding >= its fair share, so the
   candidate union covers the true heavy hitters with the standard
   oversampling argument; the MG decrement only *undercounts* survivors, so
-  ``local_count`` stays a valid lower bound.
+  ``local_count`` stays a valid lower bound.  Stage 1 stays on Arrow:
+  groups split through :func:`sketchlib.spark.aggregate.arrow_group_codes`,
+  each candidate table is an Arrow ``(value, count)`` table, and group keys
+  and candidate values leave as the input's own Arrow values (exact for
+  int64 above 2^53).
 * stage 2 (one shuffle, grouped ``applyInArrow``): per group, candidate
   local counts sum exactly, CMS partials fold cell-wise, every candidate is
   estimated against the merged CMS (upper-biased, overcount <= eps*N
@@ -39,51 +43,65 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .aggregate import _group_field, _object_merge, hash_arrow_columns
+from .aggregate import (_element_batches, _flat, _group_field, _object_merge,
+                        _SketchAccumulator, _with_keys, arrow_group_codes,
+                        hash_arrow_columns)
 from .blobcache import col_type as _col_type
 from .specs import CmsSpec
 
 
-def _int_weights(w: pd.Series) -> np.ndarray:
-    """Validate a weight column: non-negative integral values only.
+def _int_weights(w: pa.Array) -> pa.Array:
+    """Validate a weight column: non-negative integral values only, as
+    int64.
 
-    Fractional weights used to be silently truncated by the int64 cast and
-    negative weights wrapped through uint64 in the CMS cells — reject both
-    loudly instead (weights are counts: bytes, occurrences, ...)."""
-    arr = w.to_numpy()
-    if np.issubdtype(arr.dtype, np.floating):
-        if not np.isfinite(arr).all():
-            raise ValueError("weight_col contains NaN/inf")
-        if (arr != np.rint(arr)).any():
-            raise ValueError("weight_col must hold integral values "
-                             "(fractional weights would be truncated)")
-        arr = arr.astype(np.int64)
-    else:
-        arr = arr.astype(np.int64)
-    if (arr < 0).any():
+    A safe Arrow cast rejects every value an int64 cast would truncate
+    (fractional floats and decimals, NaN/inf), and negative weights would
+    wrap through uint64 in the CMS cells — reject both loudly (weights are
+    counts: bytes, occurrences, ...)."""
+    if w.null_count:
+        raise ValueError("weight_col contains NULL")
+    try:
+        w = pc.cast(w, pa.int64())
+    except pa.ArrowInvalid as e:
+        raise ValueError("weight_col must hold integral values "
+                         f"(fractional weights would be truncated): {e}") from e
+    if pc.min(w).as_py() < 0:
         raise ValueError("weight_col must be non-negative")
-    return arr
+    return w
 
 
-def _mg_update(cur: pd.Series | None, s: pd.Series, cap: int) -> pd.Series:
-    """Fold a batch's (value -> count) sums into the bounded candidate table.
+def _mg_update(cur: pa.Table | None, s: pa.Table, cap: int) -> pa.Table:
+    """Fold a batch's ``(value, count)`` sums into the bounded candidate
+    table, an Arrow ``(value, count)`` table.
 
     Misra–Gries decrement, vectorized: past ``2*cap`` entries, subtract the
     (cap+1)-th largest count and keep the positive remainder (<= cap rows).
     Each survivor is undercounted by at most the sum of decrements, so the
     counts remain lower bounds; the table never exceeds ``2*cap`` entries."""
-    cur = s if cur is None else cur.add(s, fill_value=0)
-    if len(cur) > 2 * cap:
-        a = cur.to_numpy()
+    if cur is not None:
+        s = (pa.concat_tables([cur, s]).group_by("value", use_threads=False)
+             .aggregate([("count", "sum")]).rename_columns(["value", "count"]))
+    if s.num_rows > 2 * cap:
+        a = s.column("count").to_numpy()
         thr = np.partition(a, len(a) - cap - 1)[len(a) - cap - 1]
-        cur = cur[a > thr] - thr
-    return cur
+        keep = a > thr
+        s = pa.table({"value": s.column("value").filter(pa.array(keep)),
+                      "count": a[keep] - thr})
+    return s
+
+
+def _top(table: pa.Table, count_col: str, n: int) -> pa.Table:
+    """The ``n`` rows with the largest ``count_col``, ties by ascending
+    ``value``: the order of stage 1's candidate cut and stage 2's top k."""
+    return table.take(pc.sort_indices(table, sort_keys=[
+        (count_col, "descending"), ("value", "ascending")])[:n])
 
 
 def heavy_hitters_partials(df: DataFrame, value_col: str,
@@ -103,7 +121,8 @@ def heavy_hitters_partials(df: DataFrame, value_col: str,
     Candidate state is capacity-bounded (Misra–Gries decrement at
     ``cap = max(4*n_cand, 256)``); the CMS absorbs the full stream, so
     stage-2 estimates are unaffected — only ``local_count`` lower bounds
-    shrink for values that survive a compaction."""
+    shrink for values that survive a compaction.  Group keys and candidate
+    values leave as the input's own Arrow values."""
     group_cols = list(group_cols)
     spec = spec or CmsSpec()
     cap = max(4 * n_cand, 256)
@@ -117,71 +136,43 @@ def heavy_hitters_partials(df: DataFrame, value_col: str,
 
     def build(batches):
         # Arrow-native stage 1: the per-batch (value -> weight-sum) reduction
-        # runs in Arrow's C++ hash aggregation and values hash straight from
-        # the Arrow buffers — raw rows are NEVER materialized as pandas
-        # objects (measured 6.8x on the 200k-row batch reduction alone).
-        # Only the <= uniques-sized aggregate crosses into pandas for the
-        # MG table.
-        import pyarrow.compute as pc
-
-        from ..encoding import arrow_flat_bytes
-        from ..hashing import HASHES
-
-        flat_fn = HASHES[spec.hash_name][1]
-        cands: dict[tuple, pd.Series] = {}   # <= 2*cap entries per group
-        sketches: dict[tuple, object] = {}
-
-        def ingest(kt: tuple, values_arr, counts: np.ndarray) -> None:
-            sk = sketches.get(kt)
-            if sk is None:
-                sk = spec.make()
-                sketches[kt] = sk
-            flat, offsets = arrow_flat_bytes(values_arr)
-            sk.add_hashes(flat_fn(flat, offsets), counts=counts)
-            s = pd.Series(counts, index=values_arr.to_pandas().to_numpy())
-            cands[kt] = _mg_update(cands.get(kt), s, cap)
-
-        for batch in batches:
+        # runs in Arrow's C++ hash aggregation, values hash straight from
+        # the Arrow buffers, and each group's candidates are an Arrow
+        # (value, count) table — raw rows and values never leave Arrow.
+        acc = _SketchAccumulator(spec, group_cols)  # the live CMS per group
+        cands: dict[int, pa.Table] = {}  # <= 2*cap entries per group
+        for batch in _element_batches(batches, [value_col]):
             tbl = pa.Table.from_batches([batch])
-            tbl = tbl.filter(pc.is_valid(tbl[value_col]))
-            if tbl.num_rows == 0:
-                continue
             if weight_col is None:
                 w = pa.array(np.ones(tbl.num_rows, dtype=np.int64))
             else:
-                w = pa.array(_int_weights(pd.Series(
-                    tbl[weight_col].to_numpy(zero_copy_only=False))))
-            tbl = tbl.append_column("__w", w)
-            agg = (tbl.group_by(group_cols + [value_col], use_threads=False)
+                w = _int_weights(_flat(tbl.column(weight_col)))
+            agg = (tbl.append_column("__w", w)
+                   .group_by(group_cols + [value_col], use_threads=False)
                    .aggregate([("__w", "sum")]))
-            vals = agg[value_col].combine_chunks()
-            counts = agg["__w_sum"].to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            if group_cols:
-                # group split on the <= uniques-sized aggregate only
-                adf = agg.select(group_cols).to_pandas()
-                adf["__i"] = np.arange(len(adf))
-                for key, sub in adf.groupby(group_cols, sort=False,
-                                            dropna=False):
-                    kt = key if isinstance(key, tuple) else (key,)
-                    idx = sub["__i"].to_numpy()
-                    ingest(kt, vals.take(pa.array(idx)), counts[idx])
-            else:
-                ingest((), vals, counts)
-        if not sketches:
-            return
-        out_rows = []
-        for key, sk in sketches.items():
-            top = cands[key].sort_values(ascending=False, kind="stable").head(n_cand)
-            for v, c in top.items():
-                out_rows.append(list(key) + [v, int(c), None])
-            out_rows.append(list(key) + [None, None, spec.to_bytes(sk)])
-        out = pd.DataFrame(out_rows,
-                           columns=group_cols + ["value", "local_count", "cms"])
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        yield pa.RecordBatch.from_pandas(out, schema=to_arrow_schema(part_schema),
-                                         preserve_index=False)
+            values = _flat(agg.column(value_col))
+            counts = _flat(agg.column("__w_sum"))
+            hashes = hash_arrow_columns(pa.record_batch([values], names=["value"]),
+                                        ["value"], spec.hash_name)
+            weights = counts.to_numpy(zero_copy_only=False)
+            codes, first = arrow_group_codes(agg, group_cols)
+            for gid, rows in acc.groups(codes, agg.take(pa.array(first))):
+                acc.sketches[gid].add_hashes(hashes[rows], counts=weights[rows])
+                take = pa.array(rows)
+                cands[gid] = _mg_update(cands.get(gid), pa.table(
+                    {"value": values.take(take), "count": counts.take(take)}), cap)
+        for keys, blobs in acc.finalize():
+            tops = [_top(cands[g], "count", n_cand) for g in range(len(blobs))]
+            cand = pa.concat_tables(tops)
+            owner = np.concatenate([np.repeat(np.arange(len(blobs)),
+                                              [t.num_rows for t in tops]),
+                                    np.arange(len(blobs))])
+            value, count = _flat(cand.column("value")), _flat(cand.column("count"))
+            yield _with_keys(keys.take(pa.array(owner)), group_cols, [
+                pa.concat_arrays([value, pa.nulls(len(blobs), value.type)]),
+                pa.concat_arrays([count, pa.nulls(len(blobs), pa.int64())]),
+                pa.concat_arrays([pa.nulls(cand.num_rows, pa.binary()), blobs])],
+                to_arrow_schema(part_schema))
 
     needed = list(dict.fromkeys(group_cols + [value_col]
                                 + ([weight_col] if weight_col else [])))
@@ -197,9 +188,6 @@ def heavy_hitters_from_partials(partials: DataFrame,
     top k.  Candidates are hashed from their Arrow buffers with
     :func:`hash_arrow_columns`, the encoding stage 1 built the CMS with.
     Consumes the partials exactly once (no persist)."""
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     group_cols = list(group_cols)
     spec = spec or CmsSpec()
 
@@ -226,8 +214,7 @@ def heavy_hitters_from_partials(partials: DataFrame,
         top = pa.table({"value": values.column(0),
                         "est_count": pa.array(est.astype(np.int64)),
                         "lower_bound": lower.column("local_count_sum")})
-        top = top.take(pc.sort_indices(top, sort_keys=[
-            ("est_count", "descending"), ("value", "ascending")])[:k])
+        top = _top(top, "est_count", k)
         first = pa.array(np.zeros(top.num_rows, dtype=np.int64))
         keys = [table.column(g).take(first) for g in group_cols]
         return pa.Table.from_arrays(keys + top.columns, schema=pa_schema)

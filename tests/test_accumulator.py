@@ -3,7 +3,7 @@ memory-bounding path that only triggers past ~8M pending pairs in production
 (so Spark-level tests never exercise it)."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from sketchlib.hll import HllSketch
 from sketchlib.spark.aggregate import HllSpec, _PairAccumulator
@@ -13,12 +13,19 @@ def _feed(acc, rng, n_batches=10, rows=500, n_groups=7, dup_space=300):
     all_pairs = []
     for _ in range(n_batches):
         codes = rng.integers(0, n_groups, size=rows)
-        keys = tuple([np.asarray([f"g{i}" for i in range(n_groups)], dtype=object)])
+        keys = pa.table({"g": [f"g{i}" for i in range(n_groups)]})
         hashes = rng.integers(0, dup_space, size=rows).astype(np.uint64) * np.uint64(
             0x9E3779B97F4A7C15)
-        acc.add_batch(codes, keys, hashes)
+        acc.add(codes, keys, hashes)
         all_pairs.extend(zip(codes.tolist(), hashes.tolist()))
     return all_pairs
+
+
+def _finalize(acc, cols):
+    """``{key tuple: blob}`` of the accumulator's one output."""
+    [(keys, blobs)] = list(acc.finalize())
+    return dict(zip(zip(*(keys.column(c).to_pylist() for c in cols)),
+                    blobs.to_pylist()))
 
 
 def _expected_blobs(all_pairs, n_groups=7):
@@ -33,10 +40,10 @@ def _expected_blobs(all_pairs, n_groups=7):
 
 def test_forced_compaction_matches_unbounded():
     rng = np.random.default_rng(3)
-    tight = _PairAccumulator(HllSpec(), compact_threshold=600, spill_threshold=4096)
+    tight = _PairAccumulator(HllSpec(), ["g"], compact_threshold=600,
+                             spill_threshold=4096)
     pairs = _feed(tight, rng)
-    [df] = list(tight.finalize(["g"], "sketch"))
-    got = dict(zip(df["g"], df["sketch"]))
+    got = {g: blob for (g,), blob in _finalize(tight, ["g"]).items()}
     assert got == _expected_blobs(pairs)
 
 
@@ -45,16 +52,17 @@ def test_forced_spill_matches_unbounded():
     spill path; blobs must still match the unbounded build (mode transitions
     are order-independent)."""
     rng = np.random.default_rng(4)
-    spilly = _PairAccumulator(HllSpec(), compact_threshold=600, spill_threshold=16)
+    spilly = _PairAccumulator(HllSpec(), ["g"], compact_threshold=600,
+                              spill_threshold=16)
     pairs = _feed(spilly, rng, dup_space=5000)
-    [df] = list(spilly.finalize(["g"], "sketch"))
-    got = dict(zip(df["g"], df["sketch"]))
+    got = {g: blob for (g,), blob in _finalize(spilly, ["g"]).items()}
     assert got == _expected_blobs(pairs)
 
 
 def test_spill_bounds_pending_memory():
     rng = np.random.default_rng(5)
-    acc = _PairAccumulator(HllSpec(), compact_threshold=400, spill_threshold=32)
+    acc = _PairAccumulator(HllSpec(), ["g"], compact_threshold=400,
+                           spill_threshold=32)
     _feed(acc, rng, n_batches=20, rows=400, n_groups=2, dup_space=10_000)
     # after spilling, retained pairs per group never exceed spill_threshold
     assert acc.gcodes.shape[0] <= 2 * 32 + 400  # groups*threshold + last batch
@@ -62,13 +70,28 @@ def test_spill_bounds_pending_memory():
 
 def test_multicolumn_keys_and_empty_batches():
     spec = HllSpec()
-    acc = _PairAccumulator(spec, compact_threshold=100)
-    k1 = (np.asarray(["a", "b"], dtype=object), np.asarray([1, 2], dtype=np.int64))
-    acc.add_batch(np.array([0, 1, 0]), k1, np.array([10, 20, 10], dtype=np.uint64))
-    k2 = (np.asarray(["b", "a"], dtype=object), np.asarray([2, 1], dtype=np.int64))
-    acc.add_batch(np.array([0, 1]), k2, np.array([30, 11], dtype=np.uint64))
-    [df] = list(acc.finalize(["s", "i"], "sketch"))
-    rows = {(r.s, r.i): HllSketch.from_bytes(r.sketch) for r in df.itertuples()}
+    acc = _PairAccumulator(spec, ["s", "i"], compact_threshold=100)
+    k1 = pa.table({"s": ["a", "b"], "i": [1, 2]})
+    acc.add(np.array([0, 1, 0]), k1, np.array([10, 20, 10], dtype=np.uint64))
+    k2 = pa.table({"s": ["b", "a"], "i": [2, 1]})
+    acc.add(np.array([0, 1]), k2, np.array([30, 11], dtype=np.uint64))
+    rows = {k: HllSketch.from_bytes(b)
+            for k, b in _finalize(acc, ["s", "i"]).items()}
     assert rows[("a", 1)].count() == 2          # hashes {10, 11}
     assert rows[("a", 1)].count_additions == 3  # 10 added twice + 11
     assert rows[("b", 2)].count() == 2          # hashes {20, 30}
+
+
+def test_int64_keys_above_2_53_globalize_exactly():
+    """Two batches of int64 keys above 2^53, only one of them with a NULL:
+    the globalize pass must keep 2^60+1, 2^60+3 and NULL apart (a float64
+    round trip would fold both big keys into 2^60)."""
+    big1, big3 = (1 << 60) + 1, (1 << 60) + 3
+    acc = _PairAccumulator(HllSpec(), ["k"], compact_threshold=1)
+    acc.add(np.array([0, 1, 2]), pa.table({"k": pa.array([big1, big3, None])}),
+            np.array([10, 20, 30], dtype=np.uint64))
+    acc.add(np.array([0, 1]), pa.table({"k": pa.array([big3, big1])}),
+            np.array([40, 50], dtype=np.uint64))
+    got = {k: HllSketch.from_bytes(b).count()
+           for (k,), b in _finalize(acc, ["k"]).items()}
+    assert got == {big1: 2, big3: 2, None: 1}

@@ -225,7 +225,7 @@ class TestBoundedCandidates:
         bounds on the true counts (regression: stage 1 used to keep an
         exact unbounded value->count dict)."""
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
         from sketchlib.spark.heavy_hitters import _mg_update
 
         rng = np.random.default_rng(7)
@@ -237,15 +237,17 @@ class TestBoundedCandidates:
             uniq = np.arange(b * 20_000, (b + 1) * 20_000)
             heavy = rng.integers(0, 5, size=5_000) - 10  # ids -10..-6
             vals, cnts = np.unique(np.concatenate([uniq, heavy]), return_counts=True)
-            s = pd.Series(cnts.astype(np.int64), index=vals)
-            for v, c in s.items():
+            s = pa.table({"value": vals, "count": cnts.astype(np.int64)})
+            for v, c in zip(vals.tolist(), cnts.tolist()):
                 true[v] = true.get(v, 0) + int(c)
             cur = _mg_update(cur, s, cap)
-            assert len(cur) <= 2 * cap
+            assert cur.num_rows <= 2 * cap
         # heavies survive and their counts are valid lower bounds
+        got = dict(zip(cur.column("value").to_pylist(),
+                       cur.column("count").to_pylist()))
         for hid in range(-10, -5):
-            assert hid in cur.index
-            assert 0 < cur[hid] <= true[hid]
+            assert hid in got
+            assert 0 < got[hid] <= true[hid]
 
     def test_heavy_hitters_high_cardinality_partition(self, spark):
         """End-to-end: a single partition with ~300k distinct values still

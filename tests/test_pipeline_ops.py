@@ -554,6 +554,34 @@ class TestMultimodal:
         assert af[0]["rms"] > 0 and 0 < af[0]["zero_crossing_rate"] < 1
         assert af[1]["sample_rate"] is None
 
+    @pytest.mark.parametrize("kernel", ["image", "audio", "frames"])
+    def test_null_payload_is_undecodable(self, spark, kernel):
+        """A NULL payload is undecodable, not fatal: NULL features next to
+        a good row's, and sample_frames skips the video."""
+        from sketchlib.multimodal.media import (
+            encode_ppm, encode_wav, extract_audio_features,
+            extract_media_features, pack_fake_video, sample_frames)
+
+        good, run = {
+            "image": (encode_ppm(np.full((4, 4, 3), 9, dtype=np.uint8)),
+                      extract_media_features),
+            "audio": (encode_wav(np.arange(16, dtype=np.int16), 8000),
+                      extract_audio_features),
+            "frames": (pack_fake_video(4, 4, 1000, seed=1), sample_frames),
+        }[kernel]
+        df = spark.createDataFrame([(0, bytearray(good)), (1, None)],
+                                   "media_id long, payload binary").coalesce(1)
+        rows = run(df).collect()
+        if kernel == "frames":
+            assert sorted((r["media_id"], r["ts_ms"]) for r in rows) == [
+                (0, 0), (0, 1000)]
+            return
+        got = {r["media_id"]: r for r in rows}
+        assert set(got) == {0, 1}
+        assert all(v is not None for v in got[0].asDict().values())
+        assert all(v is None for k, v in got[1].asDict().items()
+                   if k != "media_id")
+
     def test_frame_sample_plan(self, spark):
         from sketchlib.multimodal import frame_sample_plan
 

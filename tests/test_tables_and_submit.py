@@ -2,12 +2,15 @@
 
 import json
 import os
+import pathlib
 import subprocess
 
 import pytest
 
 from sketchlib.data.pages import generate_pages
 from sketchlib.data.tables import PagesTable
+
+REPO = pathlib.Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -43,15 +46,15 @@ def test_spark_submit_pyfiles(table_dir, tmp_path):
     sketchlib.zip, submit pages_job from an empty cwd so only the zip
     provides the library."""
     zip_path = str(tmp_path / "sketchlib.zip")
-    subprocess.run(["bash", "/root/repo/scripts/make_pyfiles.sh", zip_path],
-                   check=True, capture_output=True, cwd="/root/repo")
+    subprocess.run(["bash", str(REPO / "scripts" / "make_pyfiles.sh"), zip_path],
+                   check=True, capture_output=True, cwd=REPO)
     workdir = tmp_path / "empty"
     workdir.mkdir()
     out = tmp_path / "out"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
         ["spark-submit", "--master", "local[4]", "--py-files", zip_path,
-         "/root/repo/sketchlib/jobs/pages_job.py",
+         str(REPO / "sketchlib" / "jobs" / "pages_job.py"),
          "--input", table_dir, "--checkpoint", str(tmp_path / "ckpt"),
          "--output", str(out), "--query", "distinct-urls"],
         capture_output=True, text=True, timeout=420, env=env, cwd=str(workdir))
@@ -129,8 +132,7 @@ def test_iceberg_catalog_write_read_roundtrip(tmp_path):
     writeTo/createOrReplace, append, pruned read, and the flagship
     distinct_count over the catalog table.  Runs in a subprocess so the
     jar-bearing session cannot leak into the shared test session."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = _ICEBERG_CHILD.format(repo=repo, jar=_ICEBERG_JAR,
+    code = _ICEBERG_CHILD.format(repo=str(REPO), jar=_ICEBERG_JAR,
                                  warehouse=str(tmp_path / "warehouse"))
     import sys
     r = subprocess.run([sys.executable, "-c", code], capture_output=True,
