@@ -101,6 +101,11 @@ def correct_bias(value: float, p: int) -> float:
     return max(value - b, 0.0)
 
 
+def sparse_max_elements(p: int) -> int:
+    """Sparse-representation bound of precision ``p`` (CardinalityEstimator.cs:290)."""
+    return max(0, (1 << p) // 15 - 10)
+
+
 def get_sigma_batch(hashes: np.ndarray, bits_to_count: int) -> np.ndarray:
     """Vectorized rank: leading zeros of the low ``bits_to_count`` bits of each
     hash (within that bit width), plus one; hash==0 -> bits_to_count+1
@@ -141,7 +146,7 @@ class HllSketch:
         self.p = p
         self.m = 1 << p
         self.bits_for_hll = 64 - p
-        self.sparse_max_elements = max(0, self.m // 15 - 10)  # CardinalityEstimator.cs:290
+        self.sparse_max_elements = sparse_max_elements(p)
         self.count_additions = count_additions
         if direct is None and use_direct_counting and registers is None:
             direct = np.zeros(0, dtype=np.uint64)
@@ -437,7 +442,7 @@ def direct_blob(p: int, sorted_unique_hashes: np.ndarray,
     array — byte-identical to ``HllSketch(direct=...).to_bytes()`` but with
     no sketch object, for the millions-of-tiny-groups emit loop."""
     n = sorted_unique_hashes.shape[0]
-    sparse_flag = 2 if max(0, (1 << p) // 15 - 10) > 0 else 0
+    sparse_flag = 2 if sparse_max_elements(p) > 0 else 0
     return (struct.pack("<HHiBi", WIRE_MAJOR, WIRE_MINOR, p, sparse_flag | 1, n)
             + sorted_unique_hashes.astype("<u8").tobytes()
             + struct.pack("<Q", count_additions & ((1 << 64) - 1)))
@@ -504,9 +509,8 @@ def concat_ranges(starts, lengths) -> np.ndarray:
     return np.arange(int(lengths.sum()), dtype=np.int64) + np.repeat(shift, lengths)
 
 
-def _sparse_max(p):
-    """Sparse-representation bound per precision (CardinalityEstimator.cs:290)."""
-    return np.maximum(0, np.left_shift(1, p) // 15 - 10)
+#: :func:`sparse_max_elements` by precision, for the vectorized kernels
+_SPARSE_MAX = np.array([sparse_max_elements(p) for p in range(17)])
 
 
 def _peek(buf: np.ndarray, starts: np.ndarray, lens: np.ndarray):
@@ -690,7 +694,7 @@ def fold_segments(data, offsets, seg_ptr, blob_idx, estimate: bool = False):
         # (distinct top-p bits of the sorted union) against the sparse bound
         reg_idx = h >> (64 - seg_p[h_seg]).astype(np.uint64)
         nnz = np.bincount(h_seg[_run_heads(reg_idx, h_seg)], minlength=n_seg)[ds]
-        smax = _sparse_max(seg_p[ds])
+        smax = _SPARSE_MAX[seg_p[ds]]
         flags = 1 | np.where((smax > 0) & (nnz <= smax), 2, 0)
         blobs = _emit(seg_p[ds], flags, size[ds], h.view(np.uint8), 8 * size[ds],
                       seg_adds[ds])
@@ -702,7 +706,7 @@ def fold_segments(data, offsets, seg_ptr, blob_idx, estimate: bool = False):
         rs = np.flatnonzero(reg & (seg_p == pv))
         row = np.full(n_seg, -1, dtype=np.int64)
         row[rs] = np.arange(rs.shape[0])
-        smax = int(_sparse_max(pv))
+        smax = sparse_max_elements(pv)
         for c0, regs in _register_chunks(buf, starts, kind, n, row[seg],
                                          (e_ref, e_idx, e_rank), pv,
                                          rs.shape[0]):

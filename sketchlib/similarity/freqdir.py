@@ -175,7 +175,6 @@ class FdSpec(SketchSpec):
 
     name = "freqdir"
     sketch_type = FrequentDirections
-    hash_dedup = False
     estimate_type = T.DoubleType()
 
     def __init__(self, ell: int, d: int) -> None:

@@ -17,10 +17,10 @@ two-phase aggregation explicitly (SURVEY.md §4):
   blobs (map-side partial aggregation + one exchange of blobs) followed by ONE
   Arrow UDF that fold-merges each group's blobs (register-wise max —
   associative & commutative, so any merge order yields bit-identical
-  canonical bytes; a lone partial passes through untouched). For HLL the
-  whole batch of groups folds in one call of the wire kernel
-  :func:`sketchlib.hll.fold_segments`; other specs fold each group's
-  blobs in list order.
+  canonical bytes; a lone partial passes through untouched). The whole
+  batch of groups folds in one ``spec.fold_segments`` call: HLL's wire
+  kernel :func:`sketchlib.hll.fold_segments`, or by default each group's
+  blobs in list order through ``from_bytes``/``merge``.
 
 This is the DataFrame-native equivalent of the reference's build-then-Merge
 pipeline (``CardinalityEstimator.cs:704-730``, ``CardinalityEstimatorExtensions.cs:87-103``)
@@ -43,7 +43,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from .. import hll
 from .._arrow import list_values
@@ -120,11 +120,24 @@ def hash_columns(pdf: pd.DataFrame, cols: Sequence[str], hash_name: str = "murmu
     return hash_arrow_columns(element_batch(pdf, cols), cols, hash_name)
 
 
+def _object_merge(spec, blobs):
+    """Sequential from_bytes/merge over a non-empty list of blobs: the
+    library's one object fold."""
+    merged = None
+    for b in blobs:
+        sk = spec.from_bytes(b)
+        merged = sk if merged is None else spec.merge(merged, sk)
+    return merged
+
+
 class SketchSpec:
     """The protocol that binds one sketch type into the two-stage
     aggregation, the SQL functions and the streaming state.  A spec is a
-    small picklable value object (UDF closures ship it to executors):
+    small picklable value object (UDF closures ship it to executors).  The
+    whole protocol is declared here, each member with its default, and the
+    build, fold and streaming paths call it directly:
 
+    * ``name`` (``"sketch"``): the family label of checkpoints and audits;
     * ``make()`` -> an empty sketch;
     * ``prepare_arrow(batch, element_cols)`` -> the array ``ingest`` takes
       from an Arrow batch of element columns: 64-bit element hashes
@@ -135,21 +148,29 @@ class SketchSpec:
     * ``to_bytes`` / ``from_bytes`` / ``merge`` — by default the
       ``sketch_type`` class's wire format and in-place merge;
     * ``estimate(sketch)`` -> the scalar summary, of Spark type
-      ``estimate_type``.
-
-    Optional attributes, read with ``getattr``, route the build and fold
-    paths: ``hash_dedup`` (stage 1 may dedup (group, hash) pairs and build
-    through ``build_from_hashes`` / ``blob_from_hashes``), ``fold_segments``
-    (the Arrow-native wire kernel of the merge and estimate UDFs),
-    ``prehashed`` and ``hash_name``.
+      ``estimate_type`` (``LongType()``);
+    * ``fold_segments(data, offsets, seg_ptr, blob_idx, estimate=False)``
+      -> one merged blob (or estimate) per segment, with the contract of
+      :func:`sketchlib.hll.fold_segments`: every fold of the library.  By
+      default each segment folds through ``from_bytes`` / ``merge``;
+    * ``hash_dedup`` (False): stage 1 may dedup (group, hash) pairs and
+      build each group through ``blob_from_hashes`` (:class:`HashSpec`);
+    * ``hash_name`` (None: elements are not hashed) and ``prehashed``
+      (False: see :class:`HashSpec`).
 
     The repr is parameter-based: two specs constructed with equal
     parameters repr identically (the default object repr embeds the
     instance address — under which ``blobcache.blob_token`` would mint a
     fresh worker-cache token per spec INSTANCE, defeating cross-call
-    deserialization reuse for the common ``spec or BloomSpec()`` pattern)."""
+    deserialization reuse for the common ``spec or BloomSpec()`` pattern);
+    the class-level defaults stay out of it."""
 
     sketch_type: type
+    name = "sketch"
+    hash_name: str | None = None
+    prehashed = False
+    hash_dedup = False
+    estimate_type: T.DataType = T.LongType()
 
     def __repr__(self) -> str:
         args = ", ".join(f"{k}={v!r}" for k, v in sorted(vars(self).items()))
@@ -165,6 +186,23 @@ class SketchSpec:
         a.merge(b)
         return a
 
+    def fold_segments(self, data, offsets, seg_ptr, blob_idx,
+                      estimate: bool = False) -> list:
+        """Blob ``i`` is ``data[offsets[i]:offsets[i + 1]]`` and segment
+        ``s`` folds the blobs ``blob_idx[seg_ptr[s]:seg_ptr[s + 1]]``, in
+        that order, through :func:`_object_merge`.  Returns one
+        ``to_bytes`` per segment, or with ``estimate`` one ``estimate``."""
+        buf = np.frombuffer(data, dtype=np.uint8)
+        offsets = np.asarray(offsets).tolist()
+        blob_idx = np.asarray(blob_idx).tolist()
+        bounds = np.asarray(seg_ptr).tolist()
+        out = []
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            merged = _object_merge(self, [buf[offsets[i]:offsets[i + 1]].tobytes()
+                                          for i in blob_idx[a:b]])
+            out.append(self.estimate(merged) if estimate else self.to_bytes(merged))
+        return out
+
 
 class HashSpec(SketchSpec):
     """Base of the hash families: elements hash to 64-bit values through
@@ -175,7 +213,7 @@ class HashSpec(SketchSpec):
     instead."""
 
     def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        if getattr(self, "prehashed", False):
+        if self.prehashed:
             return np.ascontiguousarray(
                 batch.column(element_cols[0]).to_numpy(zero_copy_only=False)
             ).view(np.uint64)
@@ -183,6 +221,20 @@ class HashSpec(SketchSpec):
 
     def ingest(self, sketch, prepared: np.ndarray) -> None:
         sketch.add_hashes(prepared)
+
+    def build_from_hashes(self, unique_hashes: np.ndarray, count_additions: int):
+        """The sketch of one group's unique element hashes."""
+        sk = self.make()
+        sk.add_hashes(unique_hashes)
+        sk.count_additions = count_additions
+        return sk
+
+    def blob_from_hashes(self, sorted_unique_hashes: np.ndarray,
+                         count_additions: int) -> bytes:
+        """The serialized :meth:`build_from_hashes`: the per-group build of
+        a ``hash_dedup`` stage 1."""
+        return self.to_bytes(self.build_from_hashes(sorted_unique_hashes,
+                                                    count_additions))
 
 
 class HllSpec(HashSpec):
@@ -194,6 +246,8 @@ class HllSpec(HashSpec):
     #: hashes -> stage 1 may dedup (group, hash) pairs and batch-build
     #: (the vectorized many-tiny-groups fast path).
     hash_dedup = True
+    #: the wire kernel: every fold of a batch of groups is one call
+    fold_segments = staticmethod(hll.fold_segments)
 
     def __init__(self, p: int = 14, hash_name: str = "murmur3",
                  use_direct_counting: bool = True,
@@ -217,22 +271,11 @@ class HllSpec(HashSpec):
                          count_additions: int) -> bytes:
         """Serialized sketch straight from a group's sorted unique hashes;
         direct-mode groups skip sketch-object construction entirely."""
-        from ..hll import DIRECT_COUNTER_MAX_ELEMENTS, direct_blob
-
         n = sorted_unique_hashes.shape[0]
-        sparse_max = max(0, (1 << self.p) // 15 - 10)
-        if (self.use_direct_counting and n <= DIRECT_COUNTER_MAX_ELEMENTS
-                and n <= sparse_max):
-            return direct_blob(self.p, sorted_unique_hashes, count_additions)
-        return self.to_bytes(self.build_from_hashes(sorted_unique_hashes,
-                                                    count_additions))
-
-    #: batch wire-level kernel over Arrow binary buffers; its presence
-    #: routes the merge/estimate UDFs, rolling_merge and premerge_partials
-    #: to one Arrow-native fold per batch
-    fold_segments = staticmethod(hll.fold_segments)
-
-    estimate_type = T.LongType()
+        if (self.use_direct_counting and n <= hll.DIRECT_COUNTER_MAX_ELEMENTS
+                and n <= hll.sparse_max_elements(self.p)):
+            return hll.direct_blob(self.p, sorted_unique_hashes, count_additions)
+        return super().blob_from_hashes(sorted_unique_hashes, count_additions)
 
     def estimate(self, sketch: HllSketch) -> int:
         return sketch.count()
@@ -355,23 +398,23 @@ class _PairAccumulator:
             return
         hashes = self.ghashes
         bounds = np.searchsorted(self.gcodes, np.arange(self.keys.num_rows + 1))
-        fast_blob = getattr(self.spec, "blob_from_hashes", None)
         blobs = []
         adds = self.gadds
         for c, (s, e) in enumerate(zip(bounds[:-1].tolist(), bounds[1:].tolist())):
             seg = hashes[s:e]
             sk = self.spilled.get(c)
             if sk is None:
-                if fast_blob is not None:
-                    blobs.append(fast_blob(seg, int(adds[c])))
-                    continue
-                sk = self.spec.build_from_hashes(seg, int(adds[c]))
+                blobs.append(self.spec.blob_from_hashes(seg, int(adds[c])))
             else:
                 if seg.shape[0]:
                     self.spec.ingest(sk, seg)
                 sk.count_additions = int(adds[c])
-            blobs.append(self.spec.to_bytes(sk))
+                blobs.append(self.spec.to_bytes(sk))
         yield self.keys, pa.array(blobs, type=pa.binary())
+
+
+#: the dict key of every NaN group value (``nan != nan``)
+_NAN_KEY = object()
 
 
 class _SketchAccumulator:
@@ -379,8 +422,9 @@ class _SketchAccumulator:
     KLL, FD): one live sketch per group. A batch's groups find their
     partition-wide id through a dict on the exact Python key tuple
     (``to_pylist`` values, so NULLs and int64 keys above 2^53 stay
-    distinct): key work per batch is O(groups in the batch), and the key
-    row of each new group is kept as Arrow."""
+    distinct, and every NaN is one key, as in Arrow's dictionary encoding):
+    key work per batch is O(groups in the batch), and the key row of each
+    new group is kept as Arrow."""
 
     def __init__(self, spec, group_cols: Sequence[str]) -> None:
         self.spec = spec
@@ -396,7 +440,7 @@ class _SketchAccumulator:
         bounds = np.searchsorted(codes[order], np.arange(keys.num_rows + 1))
         gids, new = [], []
         for i, row in enumerate(keys.select(self.group_cols).to_pylist()):
-            key = tuple(row.values())
+            key = tuple(_NAN_KEY if v != v else v for v in row.values())
             gid = self.ids.get(key)
             if gid is None:
                 gid = self.ids[key] = len(self.sketches)
@@ -439,13 +483,31 @@ def _element_batches(batches, element_cols: Sequence[str]):
             yield batch
 
 
+#: the most binary and string bytes one emitted record batch carries: the
+#: JVM reads each Arrow batch into one direct-memory buffer
+_BATCH_BYTES = 64 << 20
+
+
 def _with_keys(keys, group_cols: Sequence[str], arrays: list,
-               schema: pa.Schema) -> pa.RecordBatch:
-    """A record batch of ``schema``: the group columns of ``keys``, then
-    ``arrays``."""
-    return pa.RecordBatch.from_arrays(
+               schema: pa.Schema):
+    """The one emitter of the ``mapInArrow`` passes: record batches of
+    ``schema``, the group columns of ``keys`` then ``arrays``, cut into
+    row slices of at most ``_BATCH_BYTES`` binary and string bytes.  A
+    larger single row leaves alone; zero rows yield nothing."""
+    batch = pa.RecordBatch.from_arrays(
         [_flat(keys.column(c)) for c in group_cols] + list(arrays),
         schema=schema)
+    size = np.zeros(batch.num_rows, dtype=np.int64)
+    for col in batch.columns:
+        if pa.types.is_binary(col.type) or pa.types.is_string(col.type):
+            size += pc.binary_length(col).fill_null(0).to_numpy(zero_copy_only=False)
+    end = np.cumsum(size)
+    start = 0
+    while start < batch.num_rows:
+        stop = max(start + 1, int(np.searchsorted(
+            end, end[start] - size[start] + _BATCH_BYTES, side="right")))
+        yield batch.slice(start, stop - start)
+        start = stop
 
 
 def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
@@ -465,7 +527,7 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
     group_cols = list(group_cols)
     spec = spec or HllSpec()
 
-    if getattr(spec, "prehashed", False):
+    if spec.prehashed:
         # JVM-side prehash fast path: the element hash is computed inside
         # whole-stage codegen (xxhash64) and only 8 bytes/row cross the
         # Arrow boundary instead of the raw element bytes — this lifts the
@@ -485,8 +547,7 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
     out_schema = T.StructType(
         [_group_field(df, g) for g in group_cols] + [T.StructField(sketch_col, T.BinaryType(), False)]
     )
-    accumulator = (_PairAccumulator if getattr(spec, "hash_dedup", False)
-                   else _SketchAccumulator)
+    accumulator = _PairAccumulator if spec.hash_dedup else _SketchAccumulator
 
     def build(batches):
         # a batch's key rows are its groups' first rows, whole: the element
@@ -498,25 +559,11 @@ def build_partials(df: DataFrame, element_cols: Sequence[str] | str,
             acc.add(codes, batch.take(pa.array(first)),
                     spec.prepare_arrow(batch, element_cols))
         for keys, blobs in acc.finalize():
-            yield _with_keys(keys, group_cols, [blobs],
-                             to_arrow_schema(out_schema))
+            yield from _with_keys(keys, group_cols, [blobs],
+                                  to_arrow_schema(out_schema))
 
     needed = list(dict.fromkeys(group_cols + element_cols))  # dedupe overlap
     return df.select(*needed).mapInArrow(build, out_schema)
-
-
-def _object_merge(spec, blobs):
-    """Sequential from_bytes/merge over a non-empty list of blobs: the fold
-    of every spec without a batch kernel."""
-    merged = None
-    for b in blobs:
-        sk = spec.from_bytes(b)
-        merged = sk if merged is None else spec.merge(merged, sk)
-    return merged
-
-
-def _segment_bounds(seg_ptr: np.ndarray):
-    return zip(seg_ptr[:-1].tolist(), seg_ptr[1:].tolist())
 
 
 def _drop_null_blobs(blobs: pa.Array, lens: np.ndarray, blob_idx: np.ndarray):
@@ -539,21 +586,14 @@ def _fold_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
     NULL blobs carry no sketch mass. A lone blob passes through
     byte-for-byte (canonical serialization: it IS the merge result), a
     segment with no blob yields ``empty``, and the rest fold in one
-    ``spec.fold_segments`` call, or in segment order through the spec's
-    object merge."""
+    ``spec.fold_segments`` call."""
     blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
     first = np.cumsum(lens) - lens
     multi = np.flatnonzero(lens > 1)
     sub_idx = blob_idx[concat_ranges(first[multi], lens[multi])]
     sub_ptr = np.zeros(multi.shape[0] + 1, dtype=np.int64)
     np.cumsum(lens[multi], out=sub_ptr[1:])
-    kernel = getattr(spec, "fold_segments", None)
-    if kernel is not None:
-        folded = kernel(*arrow_flat_bytes(blobs), sub_ptr, sub_idx)
-    else:
-        values = blobs.take(pa.array(sub_idx)).to_pylist()
-        folded = [spec.to_bytes(_object_merge(spec, values[a:b]))
-                  for a, b in _segment_bounds(sub_ptr)]
+    folded = spec.fold_segments(*arrow_flat_bytes(blobs), sub_ptr, sub_idx)
     pick = np.full(lens.shape[0], len(blobs) + multi.shape[0], dtype=np.int64)
     single = lens == 1
     pick[single] = blob_idx[first[single]]
@@ -585,8 +625,6 @@ def per_row_udf(return_type: T.DataType, fn):
     of every row whose arguments are all non-NULL and not NaN; any other
     row gives NULL. Integer arguments keep their type with or without NULLs
     in the batch."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
     type_ = to_arrow_type(return_type)
 
     @F.arrow_udf(return_type)
@@ -612,12 +650,10 @@ def merge_blobs_udf(spec) -> Column:
     collect + shuffle), and Python is entered once per Arrow batch of
     groups, not once per group.
 
-    One Arrow UDF for every spec: a spec with a batch kernel
-    (``fold_segments``: HLL) folds the whole batch of groups in one kernel
-    call; other specs fold each group in list order through
-    ``from_bytes``/``merge``/``to_bytes``. A lone partial passes through
-    byte-for-byte, NULL blobs carry no sketch mass, and an empty list
-    (global agg over zero rows) gives the empty sketch, so
+    One Arrow UDF for every spec: the whole batch of groups folds in one
+    ``spec.fold_segments`` call (:func:`_fold_arrow`). A lone partial
+    passes through byte-for-byte, NULL blobs carry no sketch mass, and an
+    empty list (global agg over zero rows) gives the empty sketch, so
     COUNT(DISTINCT <empty>) estimates 0 like SQL."""
     empty = spec.to_bytes(spec.make())
 
@@ -633,19 +669,13 @@ def _estimate_arrow(spec, blobs: pa.Array, seg_ptr: np.ndarray,
     """One estimate per segment, with :func:`_fold_arrow`'s segment
     contract. NULL blobs carry no sketch mass and a segment with no blob
     gives ``fill`` (None: NULL). The rest estimate in one
-    ``spec.fold_segments(..., estimate=True)`` call, or through the spec's
-    object merge and ``estimate``."""
+    ``spec.fold_segments(..., estimate=True)`` call."""
     blobs, lens, blob_idx = _drop_null_blobs(blobs, np.diff(seg_ptr), blob_idx)
     live = lens > 0
     live_ptr = np.zeros(np.count_nonzero(live) + 1, dtype=np.int64)
     np.cumsum(lens[live], out=live_ptr[1:])
-    kernel = getattr(spec, "fold_segments", None)
-    if kernel is not None:
-        est = kernel(*arrow_flat_bytes(blobs), live_ptr, blob_idx, estimate=True)
-    else:
-        values = blobs.take(pa.array(blob_idx)).to_pylist()
-        est = [spec.estimate(_object_merge(spec, values[a:b]))
-               for a, b in _segment_bounds(live_ptr)]
+    est = spec.fold_segments(*arrow_flat_bytes(blobs), live_ptr, blob_idx,
+                             estimate=True)
     return _scatter(est, live, fill, type_)
 
 
@@ -664,8 +694,6 @@ def merge_estimate_udf(spec) -> Column:
     deserialize per group.  Each row's list is one segment of
     :func:`_estimate_arrow`; an empty list estimates as the empty
     sketch."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
     empty_estimate = spec.estimate(spec.make())
     type_ = to_arrow_type(spec.estimate_type)
 
@@ -743,8 +771,7 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
     into one task, where a ``mapInArrow`` factorizes the group keys,
     lexsorts rows by (group, order) and folds every distinct (group, o)
     anchor's rows with order in ``(o - window, o]`` — all windows of the
-    partition in one :func:`sketchlib.hll.fold_segments` call for HLL,
-    through the object merge otherwise. Task memory is
+    partition in one ``spec.fold_segments`` call. Task memory is
     O(blobs in the partition), like the ``collect_list`` buffer of a
     grouped merge. Associativity makes the result bit-identical to
     building each window from raw rows; a one-blob window passes its blob
@@ -788,9 +815,9 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
         np.cumsum(hi - lo, out=seg_ptr[1:])
         sketches = _fold_arrow(spec, batch.column(sketch_col), seg_ptr,
                                perm[concat_ranges(lo, hi - lo)], empty)
-        yield _with_keys(batch.take(pa.array(perm[anchors])),
-                         group_cols + [order_col], [sketches],
-                         to_arrow_schema(schema))
+        yield from _with_keys(batch.take(pa.array(perm[anchors])),
+                              group_cols + [order_col], [sketches],
+                              to_arrow_schema(schema))
 
     shuffled = (narrowed.repartition(*group_cols) if group_cols
                 else narrowed.repartition(1))
@@ -800,11 +827,8 @@ def rolling_merge(sketch_df: DataFrame, order_col: str, window: int,
 def estimate_udf(spec) -> Column:
     """Scalar estimate of every blob as one Arrow UDF (one blob per group —
     Python cost is per-group, not per-row).  Each blob is its own segment
-    of :func:`_estimate_arrow`, so HLL estimates the whole batch in one
-    ``fold_segments`` call and other specs one deserialized blob at a time;
-    a NULL blob estimates to NULL."""
-    from pyspark.sql.pandas.types import to_arrow_type
-
+    of :func:`_estimate_arrow`, so the whole batch estimates in one
+    ``spec.fold_segments`` call; a NULL blob estimates to NULL."""
     type_ = to_arrow_type(spec.estimate_type)
 
     @F.arrow_udf(spec.estimate_type)
@@ -904,9 +928,9 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
     replaces.  Group keys factorize through :func:`arrow_group_codes` and
     leave as the input's own key values, so NULL keys and full-range int64
     keys round-trip exactly; rows are grouped by one stable sort of the
-    codes and every group of the partition folds in
-    one :func:`sketchlib.hll.fold_segments` call (HLL), singleton groups
-    passing their canonical blob through untouched.
+    codes and every group of the partition folds in one
+    ``spec.fold_segments`` call, singleton groups passing their canonical
+    blob through untouched.
     """
     spec = spec or HllSpec()
     group_cols = list(group_cols)
@@ -922,7 +946,7 @@ def premerge_partials(partials: DataFrame, group_cols: Sequence[str],
         seg_ptr = np.searchsorted(codes[perm], np.arange(first.shape[0] + 1))
         sketches = _fold_arrow(spec, batch.column(sketch_col), seg_ptr, perm,
                                None)
-        yield _with_keys(batch.take(pa.array(first)), group_cols, [sketches],
-                         to_arrow_schema(schema))
+        yield from _with_keys(batch.take(pa.array(first)), group_cols,
+                              [sketches], to_arrow_schema(schema))
 
     return narrowed.mapInArrow(combine, schema)

@@ -50,7 +50,7 @@ def published_rse(spec) -> float:
     """
     if hasattr(spec, "rse"):
         return float(spec.rse)
-    name = getattr(spec, "name", "")
+    name = spec.name
     if name == "hll" or (hasattr(spec, "p") and not hasattr(spec, "k")):
         return 1.04 / math.sqrt(float(1 << spec.p))
     if name == "theta":

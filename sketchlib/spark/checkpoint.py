@@ -86,7 +86,7 @@ class SketchCheckpoint:
             os.fsync(f.fileno())
 
     def _sketch_label(self) -> str:
-        return getattr(self.spec, "name", "sketch")
+        return self.spec.name
 
     def _config_record(self) -> dict:
         """The aggregation identity stamped into every lineage record and
@@ -227,7 +227,7 @@ class HeavyHittersCheckpoint(SketchCheckpoint):
         self.k = k
 
     def _sketch_label(self) -> str:
-        return getattr(self.spec, "name", "sketch") + "+candidates"
+        return self.spec.name + "+candidates"
 
     def _build_unit_partials(self, df_unit: DataFrame) -> tuple[DataFrame, str]:
         from .heavy_hitters import heavy_hitters_partials

@@ -168,7 +168,7 @@ def heavy_hitters_partials(df: DataFrame, value_col: str,
                                               [t.num_rows for t in tops]),
                                     np.arange(len(blobs))])
             value, count = _flat(cand.column("value")), _flat(cand.column("count"))
-            yield _with_keys(keys.take(pa.array(owner)), group_cols, [
+            yield from _with_keys(keys.take(pa.array(owner)), group_cols, [
                 pa.concat_arrays([value, pa.nulls(len(blobs), value.type)]),
                 pa.concat_arrays([count, pa.nulls(len(blobs), pa.int64())]),
                 pa.concat_arrays([pa.nulls(cand.num_rows, pa.binary()), blobs])],

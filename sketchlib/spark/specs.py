@@ -2,8 +2,9 @@
 :mod:`sketchlib.spark.aggregate`.
 
 A spec adapts one pure-numpy sketch to the partial-build / shuffle-merge /
-estimate pipeline; the protocol is documented once, on
-:class:`~sketchlib.spark.aggregate.SketchSpec`. ``HllSpec`` lives in
+estimate pipeline.  The protocol is declared once, with its defaults, on
+:class:`~sketchlib.spark.aggregate.SketchSpec` and ``HashSpec``; a spec
+here sets only what differs from them.  ``HllSpec`` lives in
 :mod:`sketchlib.spark.aggregate` for historical reasons; the sibling
 sketches bind here.
 
@@ -18,14 +19,16 @@ wall-clock microseconds and a date as its int64 day count.
 
 from __future__ import annotations
 
+import struct
 from typing import Sequence
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from ..ams import AmsSketch
 from ..bloom import BloomFilter
-from ..cuckoo import CuckooFilter
+from ..cuckoo import DUP_CAP, CuckooFilter, optimal_params
 from ..mg import MisraGriesSketch
 from ..cms import CountMinSketch
 from ..ddsketch import DDSketch
@@ -41,7 +44,6 @@ class BloomSpec(HashSpec):
     name = "bloom"
     sketch_type = BloomFilter
     hash_dedup = True
-    estimate_type = T.LongType()
 
     def __init__(self, m_bits: int = 1 << 20, k: int = 7,
                  hash_name: str = "murmur3") -> None:
@@ -51,13 +53,6 @@ class BloomSpec(HashSpec):
 
     def make(self) -> BloomFilter:
         return BloomFilter(m_bits=self.m_bits, k=self.k)
-
-    def build_from_hashes(self, unique_hashes: np.ndarray,
-                          count_additions: int) -> BloomFilter:
-        bf = self.make()
-        bf.add_hashes(unique_hashes)
-        bf.count_additions = count_additions
-        return bf
 
     def estimate(self, sketch: BloomFilter) -> int:
         return sketch.estimate_cardinality()
@@ -80,7 +75,6 @@ class CuckooSpec(HashSpec):
     name = "cuckoo"
     sketch_type = CuckooFilter
     hash_dedup = True
-    estimate_type = T.LongType()
 
     def __init__(self, n_buckets: int | None = None,
                  hash_name: str = "murmur3",
@@ -95,8 +89,6 @@ class CuckooSpec(HashSpec):
             # 64Ki default — an easy way to build a filter 1000x too small
             raise ValueError(f"expected_n must be >= 1, got {expected_n}")
         if n_buckets is None:
-            from ..cuckoo import DUP_CAP, optimal_params
-
             # a distributed build stores up to DUP_CAP copies per key
             # (stage-1 dedup is per-partition; a key spanning partitions
             # or accumulator flushes lands once per source, capped) — size
@@ -108,13 +100,6 @@ class CuckooSpec(HashSpec):
     def make(self) -> CuckooFilter:
         return CuckooFilter(n_buckets=self.n_buckets)
 
-    def build_from_hashes(self, unique_hashes: np.ndarray,
-                          count_additions: int) -> CuckooFilter:
-        cf = self.make()
-        cf.add_hashes(unique_hashes)
-        cf.count_additions = count_additions
-        return cf
-
     def estimate(self, sketch: CuckooFilter) -> int:
         return sketch.size()
 
@@ -125,8 +110,6 @@ class CmsSpec(HashSpec):
 
     name = "cms"
     sketch_type = CountMinSketch
-    hash_dedup = False
-    estimate_type = T.LongType()
 
     def __init__(self, width: int = 1 << 12, depth: int = 5,
                  hash_name: str = "murmur3") -> None:
@@ -150,8 +133,6 @@ class AmsSpec(HashSpec):
 
     name = "ams"
     sketch_type = AmsSketch
-    hash_dedup = False
-    estimate_type = T.LongType()
 
     def __init__(self, width: int = 1 << 12, depth: int = 7,
                  hash_name: str = "murmur3") -> None:
@@ -176,8 +157,6 @@ class MgSpec(HashSpec):
 
     name = "mg"
     sketch_type = MisraGriesSketch
-    hash_dedup = False
-    estimate_type = T.LongType()
 
     def __init__(self, k: int = 64, hash_name: str = "murmur3") -> None:
         self.k = k
@@ -196,12 +175,9 @@ class _QuantileSpecBase(SketchSpec):
     one live sketch per group (``hash_dedup = False`` — multiplicity and
     magnitude matter)."""
 
-    hash_dedup = False
     estimate_type = T.DoubleType()
 
     def prepare_arrow(self, batch, element_cols: Sequence[str]) -> np.ndarray:
-        import pyarrow as pa
-
         if len(element_cols) != 1:
             raise ValueError("quantile sketches take exactly one value column")
         return (batch.column(element_cols[0]).cast(pa.float64())
@@ -275,7 +251,6 @@ class ComboSpec(SketchSpec):
     """
 
     name = "combo"
-    hash_dedup = False
 
     _WIRE_MAGIC = b"CB"
     _WIRE_VERSION = 1
@@ -284,7 +259,7 @@ class ComboSpec(SketchSpec):
         specs = tuple(specs)
         if not specs:
             raise ValueError("ComboSpec needs at least one sub-spec")
-        hash_names = [getattr(s, "hash_name", None) for s in specs]
+        hash_names = [s.hash_name for s in specs]
         n_hash = sum(h is not None for h in hash_names)
         if n_hash not in (0, len(specs)):
             raise ValueError(
@@ -294,7 +269,7 @@ class ComboSpec(SketchSpec):
             raise ValueError(
                 f"ComboSpec sub-specs must share one hash_name, got "
                 f"{sorted(set(hash_names))}")
-        if any(getattr(s, "prehashed", False) for s in specs):
+        if any(s.prehashed for s in specs):
             raise ValueError("ComboSpec does not support prehashed sub-specs")
         self.specs = specs
         self.hash_name = hash_names[0]
@@ -314,8 +289,6 @@ class ComboSpec(SketchSpec):
             spec.ingest(sk, prepared)
 
     def to_bytes(self, sketches: list) -> bytes:
-        import struct
-
         parts = [self._WIRE_MAGIC,
                  struct.pack("<BBH", self._WIRE_VERSION, 0, len(self.specs))]
         for spec, sk in zip(self.specs, sketches):
@@ -326,8 +299,6 @@ class ComboSpec(SketchSpec):
 
     def split_blob(self, blob: bytes) -> list[bytes]:
         """The per-family blobs inside a combo blob (validated)."""
-        import struct
-
         if blob[:2] != self._WIRE_MAGIC:
             raise ValueError("not a combo-sketch blob")
         if len(blob) < 6:
@@ -373,7 +344,6 @@ class ThetaSpec(HashSpec):
     name = "theta"
     sketch_type = ThetaSketch
     hash_dedup = True
-    estimate_type = T.LongType()
 
     def __init__(self, k: int = 4096, hash_name: str = "murmur3",
                  prehashed: bool = False) -> None:
@@ -388,15 +358,9 @@ class ThetaSpec(HashSpec):
 
     def build_from_hashes(self, unique_hashes: np.ndarray,
                           count_additions: int) -> ThetaSketch:
+        # sorted unique hashes ARE the theta state: an O(k) slice, no add loop
         return ThetaSketch.from_unique_hashes(unique_hashes, k=self.k,
                                               count_additions=count_additions)
-
-    def blob_from_hashes(self, sorted_unique_hashes: np.ndarray,
-                         count_additions: int) -> bytes:
-        # sorted unique hashes ARE the theta state: an O(k) slice, no object
-        return ThetaSketch.from_unique_hashes(
-            sorted_unique_hashes, k=self.k,
-            count_additions=count_additions).to_bytes()
 
     def estimate(self, sketch: ThetaSketch) -> int:
         return sketch.count()

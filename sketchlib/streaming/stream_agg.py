@@ -91,7 +91,7 @@ def streaming_sketch_agg(stream_df: DataFrame, element_cols, group_cols: Sequenc
     element_cols = list(element_cols)
     group_cols = list(group_cols)
 
-    est_type = getattr(spec, "estimate_type", T.LongType())
+    est_type = spec.estimate_type
     out_schema = T.StructType(
         [stream_df.schema[g] for g in group_cols]
         + [T.StructField("estimate", est_type),
@@ -165,7 +165,7 @@ def windowed_sketch_agg(stream_df: DataFrame, element_cols, ts_col: str,
                                       slide_duration or window_duration))
           .select("__w", *group_cols, *element_cols))
 
-    est_type = getattr(spec, "estimate_type", T.LongType())
+    est_type = spec.estimate_type
     # the output window bounds carry the SAME timestamp flavor as the
     # input event-time column (F.window over TIMESTAMP_NTZ yields an NTZ
     # struct; declaring tz-aware TimestampType for it would shift the

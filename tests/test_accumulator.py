@@ -1,12 +1,17 @@
-"""_PairAccumulator internals under forced compaction and spill — the
-memory-bounding path that only triggers past ~8M pending pairs in production
-(so Spark-level tests never exercise it)."""
+"""Stage-1 internals: _PairAccumulator under forced compaction and spill —
+the memory-bounding path that only triggers past ~8M pending pairs in
+production (so Spark-level tests never exercise it) — the two accumulators'
+shared group keys, and the byte-budgeted emitter."""
 
 import numpy as np
 import pyarrow as pa
 
 from sketchlib.hll import HllSketch
-from sketchlib.spark.aggregate import HllSpec, _PairAccumulator
+from sketchlib.spark import aggregate
+from sketchlib.spark.aggregate import (HllSpec, _PairAccumulator,
+                                       _SketchAccumulator, _with_keys,
+                                       arrow_group_codes)
+from sketchlib.spark.specs import CmsSpec
 
 
 def _feed(acc, rng, n_batches=10, rows=500, n_groups=7, dup_space=300):
@@ -95,3 +100,55 @@ def test_int64_keys_above_2_53_globalize_exactly():
     got = {k: HllSketch.from_bytes(b).count()
            for (k,), b in _finalize(acc, ["k"]).items()}
     assert got == {big1: 2, big3: 2, None: 1}
+
+
+def test_nan_keys_group_alike_in_both_accumulators():
+    """``nan != nan``: a NaN group key must find its group in every batch,
+    in the live-sketch accumulator as in the pair accumulator (one partial
+    per key, not one per batch)."""
+    batch = pa.record_batch({"g": pa.array([float("nan"), 1.0, float("nan"), None])})
+    codes, first = arrow_group_codes(batch, ["g"])
+    hashes = np.array([1, 2, 3, 4], dtype=np.uint64)
+    got = []
+    for acc in (_SketchAccumulator(CmsSpec(width=16, depth=2), ["g"]),
+                _PairAccumulator(HllSpec(), ["g"])):
+        for _ in range(2):
+            acc.add(codes, batch.take(pa.array(first)), hashes)
+        [(keys, blobs)] = list(acc.finalize())
+        assert len(blobs) == keys.num_rows
+        got.append(sorted(map(repr, keys.column("g").to_pylist())))
+    assert got[0] == got[1] == ["1.0", "None", "nan"]
+
+
+def _emit(sizes, budget, monkeypatch):
+    monkeypatch.setattr(aggregate, "_BATCH_BYTES", budget)
+    keys = pa.table({"g": pa.array(range(len(sizes)), pa.int64())})
+    blobs = pa.array([b"x" * n for n in sizes], type=pa.binary())
+    schema = pa.schema([("g", pa.int64()), ("sketch", pa.binary())])
+    return keys, blobs, list(_with_keys(keys, ["g"], [blobs], schema))
+
+
+def test_emitter_slices_within_the_byte_budget(monkeypatch):
+    sizes = [30, 40, 50, 250, 10, 10, 90, 0, 100, 1]
+    keys, blobs, out = _emit(sizes, 100, monkeypatch)
+    assert len(out) > 1
+    for b in out:
+        payload = sum(len(v) for v in b.column(1).to_pylist())
+        assert payload <= 100 or b.num_rows == 1
+    whole = pa.Table.from_batches(out)
+    assert whole.column("g").to_pylist() == keys.column("g").to_pylist()
+    assert whole.column("sketch").to_pylist() == blobs.to_pylist()
+    # greedy: no slice could have taken its successor's first row
+    for b, nxt in zip(out, out[1:]):
+        assert (sum(map(len, b.column(1).to_pylist()))
+                + len(nxt.column(1)[0].as_py()) > 100)
+
+
+def test_emitter_keeps_a_small_partition_whole(monkeypatch):
+    _, _, out = _emit([5] * 40, 64 << 20, monkeypatch)
+    assert [b.num_rows for b in out] == [40]
+
+
+def test_emitter_yields_nothing_for_zero_rows(monkeypatch):
+    _, _, out = _emit([], 100, monkeypatch)
+    assert out == []
